@@ -4,7 +4,7 @@
 set -e
 SF="${1:-/root/testdata/sf0.01}"
 OUT="${2:-/tmp/graft_verify}"
-cd /root/repo
+cd "$(dirname "$0")/.."
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF $OUT" 2>&1 | grep -Ev '^\[info\] (welcome|loading|set|Executing|running)' | tail -20
 python3 dev/check.py "$SF" "$OUT"

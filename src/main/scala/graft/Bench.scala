@@ -67,9 +67,14 @@ object Bench {
       // plan this way, and even min-of-2 still showed ±15% run-to-run
       // drift on box-level noise in r4. The min is the steady-state
       // cost of the plan; +1 sample costs ~30 s per bench run.
+      // a run that throws is not a time: its query gets an err field
+      // on its jsonl line and stays out of the summary and the total
+      var err: String = null
       val t = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+          if (err == null) err = s"${e.getClass.getSimpleName}: ${e.getMessage}"
+        }
         (System.nanoTime() - t0) / 1e9
       }.min
       // the checkpointing queries (LSH clustering, corpus_pipeline,
@@ -100,20 +105,22 @@ object Bench {
       // a take() applied post-escaping can cut mid-escape-pair and
       // leave a lone trailing backslash — a malformed jsonl line on
       // exactly the runs where the ledger matters most
-      val warmErrJson = if (warmErr == null) ""
-        else "," + "\"warm_err\":\"" +
-          warmErr.take(200).replace("\\", "\\\\").replace("\"", "\\\"")
+      def errJson(field: String, msg: String): String =
+        if (msg == null) ""
+        else s""","$field":"""" +
+          msg.take(200).replace("\\", "\\\\").replace("\"", "\\\"")
             .replaceAll("[\\r\\n\\t]", " ") + "\""
-      val qline =
-        s"""{"q":"$name","sec":${fmt(t)},"warm_sec":${fmt(warmSec)}$warmErrJson}"""
+      val sec = if (err == null) fmt(t) else "null"
+      val qline = s"""{"q":"$name","sec":$sec,"warm_sec":${fmt(warmSec)}""" +
+        errJson("warm_err", warmErr) + errJson("err", err) + "}"
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_queries.jsonl"),
         (qline + "\n").getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
       println(qline)
-      name -> t
-    }
+      if (err == null) Some(name -> t) else None
+    }.flatten.toMap
     // 4-decimal times keep the summary line compact (~25 chars/query
     // instead of ~40) — the r3 truncation was a line-length problem
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }

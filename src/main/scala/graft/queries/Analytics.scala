@@ -1197,8 +1197,12 @@ object Analytics extends QueryGroup {
         // same sum(pa·pb) div 1e6 per squaring (products ≤1e12, ≤37
         // terms — no overflow), same ≥0 clamp and zero-total fence.
         // The ONLY corpus-scale stage left is the one window pass.
-        val grid = tc.collect()
+        // the grid's bound, enforced: one row past it fails fast
+        // instead of collecting an unbounded grid to the driver
+        val grid = tc.limit(65).collect()
           .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+        require(grid.length <= 64,
+          "attribution_markov: transition grid exceeds 64 cells")
         val ns = grid.groupBy(_._1).map { case (s, rs) =>
           s -> rs.map(_._3).sum }
         val bm = grid.map { case (s, t, n) => (s, t, n * 1000000L / ns(s)) } ++

@@ -40,12 +40,15 @@ object SourceOps extends QueryGroup {
     * local filesystem — at 100 TB the sink dir lives on HDFS/S3 and
     * a local listFiles() returns null. Path.getFileSystem resolves
     * the scheme, so the same gate works on file://, hdfs:// and
-    * s3a:// alike. */
+    * s3a:// alike. A missing dir counts 0 part files, as sessionSink's
+    * dirOk reads it: the gate then reports a wrong count instead of
+    * throwing. */
   def countPartFiles(spark: org.apache.spark.sql.SparkSession,
       dir: String): Int = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).count(_.getPath.getName.startsWith("part-"))
+    if (!fs.exists(p)) 0
+    else fs.listStatus(p).count(_.getPath.getName.startsWith("part-"))
   }
 
   val FixtureDir = "/tmp/graft_passages_fixture"

@@ -27,10 +27,18 @@ object Streams {
   case class UserState(user_id: Long, last_ts: java.sql.Timestamp,
       last_event_id: Long, last_type: String, last_value: Double)
 
+  /** Every builder's input passes through here first: it puts the
+    * engine's fork-free `file:` filesystem ([[graft.engine.NioLocalFs]])
+    * under the query's offset/commit logs and state-store files. */
+  private def localFs[T](in: Dataset[T]): Dataset[T] = {
+    graft.engine.NioLocalFs.install(in.sparkSession)
+    in
+  }
+
   /** Per-hour tumbling counts/sums, append-mode after watermark —
     * the polling-cycle rollup. Batch twin: ts_tumbling. */
   def tumbling(events: DataFrame): DataFrame =
-    events
+    localFs(events)
       .withWatermark("ts", "10 minutes")
       // group on the window column itself — projecting .start inside
       // the grouping key severs watermark propagation (append mode
@@ -41,7 +49,7 @@ object Streams {
 
   /** 1h windows sliding every 15min — each event lands in 4 windows. */
   def sliding(events: DataFrame): DataFrame =
-    events
+    localFs(events)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour", "15 minutes"))
       .agg(count(lit(1)).as("n_events"))
@@ -50,7 +58,7 @@ object Streams {
   /** 30-min-gap session windows per user — trip segmentation.
     * Batch twin: ts_session (lag+cumsum islands). */
   def session(events: DataFrame): DataFrame =
-    events
+    localFs(events)
       .withWatermark("ts", "10 minutes")
       .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
@@ -59,7 +67,7 @@ object Streams {
 
   /** Exactly-once per event_id within the watermark horizon. */
   def dedup(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "10 minutes").dropDuplicates("event_id")
+    localFs(events).withWatermark("ts", "10 minutes").dropDuplicates("event_id")
 
   /** Latest record per user with explicit state — the reference's
     * "current station board" upsert kept in a streaming state store
@@ -83,7 +91,7 @@ object Streams {
       ttl: String = "30 minutes",
       watermarkDelay: String = "1 hour"): Dataset[UserState] = {
     import events.sparkSession.implicits._
-    events
+    localFs(events)
       .withWatermark("ts", watermarkDelay)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update,
@@ -163,7 +171,7 @@ object Streams {
     * of a timeout. */
   def scd2Stream(events: Dataset[Event]): Dataset[Scd2Closed] = {
     import events.sparkSession.implicits._
-    events
+    localFs(events)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
@@ -200,7 +208,7 @@ object Streams {
   def scd2StreamOoO(events: Dataset[Event],
       watermarkDelay: String = "1 hour"): Dataset[Scd2Closed] = {
     import events.sparkSession.implicits._
-    events
+    localFs(events)
       .withWatermark("ts", watermarkDelay)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
@@ -251,7 +259,7 @@ object Streams {
       watermarkDelay: String = "1 hour"): Dataset[FunnelHit] = {
     import events.sparkSession.implicits._
     val withinMs = withinHours * 3600L * 1000
-    events
+    localFs(events)
       .withWatermark("ts", watermarkDelay)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
@@ -308,7 +316,7 @@ object Streams {
   def anomaly(events: Dataset[Event]): Dataset[AnomalyRow] = {
     import events.sparkSession.implicits._
     val hourMs = 3600L * 1000
-    events
+    localFs(events)
       .groupByKey(_ => 0)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
@@ -366,7 +374,7 @@ object Streams {
   def retention(events: Dataset[Event]): Dataset[RetentionDelta] = {
     import events.sparkSession.implicits._
     val dayMs = 86400L * 1000
-    events
+    localFs(events)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
@@ -405,7 +413,7 @@ object Streams {
   def ewma(events: Dataset[Event]): Dataset[EwmaRow] = {
     import events.sparkSession.implicits._
     val dayMs = 86400L * 1000
-    events
+    localFs(events)
       .groupByKey(_.event_type)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
@@ -470,7 +478,7 @@ object Streams {
     import events.sparkSession.implicits._
     val dayMs = 86400L * 1000
     def d5(v: Long): Long = { val r = ((v % 5) + 5) % 5; (v - r) / 5 }
-    events
+    localFs(events)
       .groupByKey(_.event_type)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
@@ -530,7 +538,7 @@ object Streams {
     import events.sparkSession.implicits._
     val dayMs = 86400L * 1000
     def d5(v: Long): Long = { val r = ((v % 5) + 5) % 5; (v - r) / 5 }
-    events
+    localFs(events)
       .groupByKey(_.event_type)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
@@ -593,7 +601,7 @@ object Streams {
     * mis-merging. */
   def intervalMerge(events: Dataset[Event]): Dataset[IslandRow] = {
     import events.sparkSession.implicits._
-    events
+    localFs(events)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
@@ -639,7 +647,7 @@ object Streams {
   def calendarGaps(events: Dataset[Event]): Dataset[GapRow] = {
     import events.sparkSession.implicits._
     val hourMs = 3600L * 1000
-    events
+    localFs(events)
       .groupByKey(_.event_type)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
@@ -677,7 +685,7 @@ object Streams {
     * [P match_ids.py]: each micro-batch joins against the broadcast
     * static side with no streaming state. */
   def joinStatic(events: DataFrame, dim: DataFrame): DataFrame =
-    events.join(broadcast(dim), Seq("user_id"), "left")
+    localFs(events).join(broadcast(dim), Seq("user_id"), "left")
 
   /** One polling-cycle passage record (batch delay_board's input row). */
   case class Passage(station_id: String, num: String, miss: String,
@@ -724,7 +732,7 @@ object Streams {
     * however long the feed runs. */
   def delayBoard(passages: Dataset[Passage], sched: DataFrame): Dataset[BoardRow] = {
     import passages.sparkSession.implicits._
-    val cand = passages.toDF()
+    val cand = localFs(passages).toDF()
       .join(broadcast(sched),
         col("trip_id").contains(col("num")) &&
           col("station7") === substring(col("station_id"), 1, 7),
@@ -789,7 +797,7 @@ object Streams {
     * scale. Output columns are renamed up-front: a self-join of one
     * source stream would otherwise produce ambiguous attributes. */
   def joinStreamStream(clicks: DataFrame, purchases: DataFrame): DataFrame = {
-    val c = clicks.select(col("event_id").as("click_id"),
+    val c = localFs(clicks).select(col("event_id").as("click_id"),
       col("user_id"), col("ts").as("click_ts"))
       .withWatermark("click_ts", "10 minutes")
     val p = purchases.select(col("event_id").as("purchase_id"),
@@ -844,7 +852,7 @@ object Streams {
   def heavyHitters(events: Dataset[Event], k: Int): Dataset[HHRow] = {
     import events.sparkSession.implicits._
     val mg = new graft.functions.MisraGries(k)
-    events
+    localFs(events)
       .groupByKey(_ => 0)
       .flatMapGroupsWithState(OutputMode.Update,
         GroupStateTimeout.NoTimeout) {
@@ -886,7 +894,7 @@ object Streams {
   def attribution(events: Dataset[Event]): Dataset[Attribution] = {
     import events.sparkSession.implicits._
     val windowMs = 7L * 24 * 3600 * 1000
-    events
+    localFs(events)
       .filter(e => e.event_type == "purchase" || e.event_type == "view" ||
         e.event_type == "click")
       .groupByKey(_.user_id)
@@ -929,7 +937,7 @@ object Streams {
     * per touched user (Update mode — the live uptime/SLA counter). */
   def coverage(events: Dataset[Event]): Dataset[CoverRow] = {
     import events.sparkSession.implicits._
-    events
+    localFs(events)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update,
         GroupStateTimeout.NoTimeout) {
@@ -973,7 +981,7 @@ object Streams {
         (slope, icept)
       }
     }
-    events
+    localFs(events)
       .groupByKey(_.event_type)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
@@ -1022,7 +1030,7 @@ object Streams {
     * never of arrival or partition order. */
   def qualityGate(docs: Dataset[Doc]): DataFrame = {
     val ws = split(col("text"), " ")
-    docs.toDF()
+    localFs(docs).toDF()
       .select(col("doc_id"), ws.as("ws"))
       .withColumn("n_words", size(col("ws")).cast("long"))
       .withColumn("n_word_chars",
@@ -1067,7 +1075,7 @@ object Streams {
     val syms = Seq("{", "}", "(", ")", ";", "=").map(s =>
       length(col("text")) - length(expr(s"replace(text, '$s', '')")))
       .reduce(_ + _).cast("long")
-    docs.toDF()
+    localFs(docs).toDF()
       .select(col("source"), col("n_chars"), syms.as("syms"),
         expr("CAST(size(filter(split(text, ' '), t -> t IN " +
           "('def','return','import','class','void','func','var','const'))) AS BIGINT)")
@@ -1104,7 +1112,7 @@ object Streams {
     val flesch = lit(206.835) -
       lit(1.015) * (w.cast("double") / s.cast("double")) -
       lit(84.6) * (y.cast("double") / w.cast("double"))
-    docs.toDF()
+    localFs(docs).toDF()
       .select(col("lang"), w.cast("long").as("w"), y.cast("long").as("y"),
         floor(flesch * lit(100.0)).cast("long").as("centi"))
       .groupBy("lang")
@@ -1135,7 +1143,7 @@ object Streams {
     * audit's cells (parity-proven, with a mid-replay monotonicity
     * pin: a feed's last-seen time never goes backward). */
   def freshness(events: Dataset[Event]): DataFrame =
-    events.toDF()
+    localFs(events).toDF()
       .select(col("event_type"),
         unix_micros(col("ts").cast("timestamp")).as("us"))
       .groupBy("event_type")
@@ -1154,7 +1162,7 @@ object Streams {
     * expression (parity-proven after full replay). */
   def freshnessSla(events: Dataset[Event],
       manifest: Seq[(String, Long)]): DataFrame = {
-    val s = events.sparkSession
+    val s = localFs(events).sparkSession
     import s.implicits._
     val sla = manifest.toDF("event_type", "sla_s")
     events.toDF()
@@ -1179,7 +1187,7 @@ object Streams {
     * sit inside the batch op's 2+10 % tolerance of the exact
     * distincts. */
   def dqProfile(events: Dataset[Event]): DataFrame =
-    events.toDF().agg(
+    localFs(events).toDF().agg(
       count(lit(1)).as("n_rows"),
       sum(when(col("value").isNull, 1L).otherwise(0L)).as("n_null_value"),
       approx_count_distinct(col("event_id"), 0.02).as("ad_event_id"),
@@ -1206,7 +1214,7 @@ object Streams {
     * char seen so far — a drifting crawler moves this panel long
     * before per-language doc counts look alarming). */
   def mixKl(docs: Dataset[LangDoc]): DataFrame =
-    docs.toDF()
+    localFs(docs).toDF()
       .select(col("lang"), length(col("text")).cast("long").as("chars"))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum(col("chars")).as("chars"))
@@ -1234,7 +1242,7 @@ object Streams {
       array(keys.map(k => lit(wMicro(k))): _*))
     val bucket = (w: org.apache.spark.sql.Column) =>
       conv(substring(md5(w), 9, 8), 16, 10).cast("long") % 64
-    docs.toDF()
+    localFs(docs).toDF()
       .select(col("lang"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"),
         aggregate(split(col("text"), " "), lit(0L),
@@ -1268,7 +1276,7 @@ object Streams {
     * that reformulation top-50-limited and symbol-keyed; rounds ≥ 2
     * need the merged symbol state and are the batch trainer's job. */
   def pairCounts(docs: Dataset[LangDoc]): DataFrame =
-    docs.toDF()
+    localFs(docs).toDF()
       .select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) >= 2)
       .select(explode(expr(
@@ -1300,7 +1308,7 @@ object Streams {
     * conservation + the planted-OOV fallback proven in
     * StreamingSpec. */
   def bpeApply(docs: Dataset[LangDoc], vocab: DataFrame): DataFrame =
-    docs.toDF()
+    localFs(docs).toDF()
       .select(col("lang"), explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) >= 2)
       .join(vocab.select(col("word"), col("sym")), Seq("word"), "left")
@@ -1330,7 +1338,7 @@ object Streams {
     * exactly as the batch edge expression. Parity + conservation +
     * the snapshot-differencing identity proven in StreamingSpec. */
   def psiCounts(events: Dataset[Event]): DataFrame =
-    events.toDF()
+    localFs(events).toDF()
       .select(col("event_type"),
         expr(graft.queries.PipelineOps.PsiBinCase).cast("long").as("bin"))
       .groupBy("event_type", "bin")
@@ -1347,7 +1355,7 @@ object Streams {
     * (every chart cell and alarm bit) proven in StreamingSpec after
     * full replay, with mid-replay count conservation pinned. */
   def cusumDaily(events: Dataset[Event]): DataFrame =
-    events.toDF()
+    localFs(events).toDF()
       .groupBy(col("event_type"),
         date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("n"))
@@ -1365,7 +1373,7 @@ object Streams {
     * expression — parity-proven against ab_test_srm's cells after
     * full replay. */
   def srm(events: Dataset[Event]): DataFrame =
-    events.toDF()
+    localFs(events).toDF()
       .filter(col("event_type") === "view")
       .select(col("user_id"))
       .dropDuplicates("user_id")
@@ -1383,7 +1391,7 @@ object Streams {
     * EXACTLY the batch op's moment aggregate, so the parity test
     * recomposes the batch MDE bit-for-bit from the streamed cells. */
   def powerMoments(events: Dataset[Event]): DataFrame =
-    events.toDF()
+    localFs(events).toDF()
       .filter(col("event_type") === "purchase")
       .select((col("user_id") % 2).as("variant"),
         floor(col("value") * 100).cast("long").as("v"))
@@ -1402,7 +1410,7 @@ object Streams {
     * Σn_train over the rows), so a model server can refresh its
     * encoding table from the panel without a batch job. */
   def targetEncodeMoments(events: Dataset[Event]): DataFrame =
-    events.toDF()
+    localFs(events).toDF()
       .select(concat(col("event_type"), lit("_"),
           pmod(col("user_id"), lit(4))).as("category"),
         floor(col("value") * 100).cast("long").as("cents"),
@@ -1435,7 +1443,7 @@ object Streams {
       .when(col("u16") < 64291, 3L).when(col("u16") < 65296, 4L)
       .when(col("u16") < 65497, 5L).when(col("u16") < 65530, 6L)
       .otherwise(7L)
-    events.toDF()
+    localFs(events).toDF()
       .filter(col("event_type") === "purchase")
       .select(col("event_id"),
         floor(col("value") * 100).cast("long").as("v"))
@@ -1538,7 +1546,7 @@ object Streams {
     // field, so the silent stream≠batch divergence has a runtime
     // signal (UI metric + frozenBucketDrops) and a persisted trace
     // (state survives restarts with the bucket)
-    val frozen = docs.sparkSession.sparkContext
+    val frozen = localFs(docs).sparkSession.sparkContext
       .longAccumulator("graft.stream_dedup_near.frozen_bucket_drops")
     frozenAcc = frozen
     docs
@@ -1607,7 +1615,7 @@ object Streams {
       thresholds: Seq[Int] = Seq(2500, 5000, 7500, 9000, 9500)): Dataset[CurveRow] = {
     import pairs.sparkSession.implicits._
     val thr = thresholds.toArray
-    pairs
+    localFs(pairs)
       .flatMap(p => thr.iterator
         .filter(t => p.jac >= t.toDouble / 10000.0)
         .map(t => (t, p.id1, p.id2)))
@@ -1645,7 +1653,7 @@ object Streams {
       "page INT, station STRING, num STRING, delay_min INT, " +
         "_corrupt_record STRING")
     val bad = col("r").isNull || col("r._corrupt_record").isNotNull
-    lines
+    localFs(lines)
       .select(col("line"), from_json(col("line"), schema).as("r"))
       .select(
         when(bad, lit("quarantine")).otherwise(lit("ok")).as("kind"),

@@ -2917,6 +2917,26 @@ class OperatorPropertiesSpec extends SparkSpec {
     assert(got.forall(_.getLong(2) <= pBase))
   }
 
+  test("attribution_markov fails fast when the transition grid passes its 64-cell bound") {
+    // 10 event types, one two-event journey per ordered pair: 90
+    // (s, t) step cells alone, past the 64-cell driver collect bound
+    val s = spark
+    import s.implicits._
+    val types = (0 until 10).map(i => s"type$i")
+    val pairs = for (a <- types; b <- types if a != b) yield (a, b)
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val events = pairs.zipWithIndex.flatMap { case ((a, b), u) =>
+      Seq(a, b).zipWithIndex.map { case (t, k) =>
+        (u * 2L + k, new java.sql.Timestamp(t0 + k * 60000L), u.toLong, t, 1.0)
+      }
+    }.toDF("event_id", "ts", "user_id", "event_type", "value")
+    val dir = java.nio.file.Files.createTempDirectory("markov-overflow").toString
+    events.write.parquet(s"$dir/events.parquet")
+    val e = intercept[IllegalArgumentException](
+      Registry.byName("attribution_markov").build(spark, dir).collect())
+    assert(e.getMessage.contains("64 cells"))
+  }
+
   test("eval_pr_curve: cumulative cells, ratios, and AP replay from the margins") {
     val perc = run("text_classifier_perceptron").collect()
       .find(_.getInt(0) == 3).get

@@ -11,6 +11,11 @@ class SourcesSpec extends SparkSpec {
 
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
 
+  test("countPartFiles reads a missing sink dir as 0 part files") {
+    assert(graft.queries.SourceOps.countPartFiles(spark, java.nio.file.Files
+      .createTempDirectory("sink-gone").resolve("missing").toString) == 0)
+  }
+
   test("GTFS CSV bundle reads with explicit schemas and feeds the domain pipeline") {
     val dir = tmp("gtfs")
     def w(name: String, content: String): Unit =
