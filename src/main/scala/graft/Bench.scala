@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.engine.LocalSession
 object Bench {
   // Locale.ROOT: the f-interpolator honors the default locale, and a
   // decimal-comma locale would render 0,1234 — invalid JSON
@@ -8,14 +8,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // BASELINE.md's envelope is defined per-query AFTER warmup; whole-
     // stage codegen compiles once per plan shape, so warm each query at
     // the smallest scale factor (same shape, negligible data) before

@@ -1,14 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.engine.LocalSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val name = args(0); val sfDir = args(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val fn = SparkEntry.queries(name)
     val t0 = System.nanoTime(); val n = fn(spark, sfDir).count()
     val cold = (System.nanoTime() - t0) / 1e9

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.engine.LocalSession
 /** Prints formatted physical plans for representative queries — the
   * "is this the plan you'd want at 100 TB" audit loop. */
 object PlanAudit {
@@ -7,10 +7,7 @@ object PlanAudit {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("filter_basic", "join_star", "agg_sum_group", "win_topk_group")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===== $n =====")

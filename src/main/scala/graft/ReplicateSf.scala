@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.LocalSession
 
 /** Builds a K× replica of a driver scale factor for SCALING
   * measurements ONLY (correctness oracles always run on the driver's
@@ -33,12 +34,7 @@ object ReplicateSf {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // every shifted column carries an EXPLICIT span, and an FK's span
     // comes from its PARENT's key domain — a per-table max would

@@ -1,14 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.engine.LocalSession
 /** Measures warm wall-time for representative operators across scale
   * factors — evidence that the plans scale linearly (SCALING.md). */
 object ScalingCurve {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     val sfs = Seq("sf0.001", "sf0.01", "sf0.1")
     val queries = Seq("agg_sum_group", "join_star", "win_rank", "join_asof",

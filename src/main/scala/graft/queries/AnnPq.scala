@@ -94,7 +94,7 @@ object AnnPq extends QueryGroup {
 
   /** Train all M codebooks jointly (`iters` Lloyd rounds) — the
     * distributed form, kept as the reference implementation
-    * AnnPqSpec/AnnPqProbe compare [[trainLocalBooks]] against. */
+    * AnnPqSpec compares [[trainLocalBooks]] against. */
   def train(sub: DataFrame, iters: Int = Iters): DataFrame =
     (1 to iters).foldLeft(seed(sub)) { (books, _) =>
       update(sub, encode(sub, books))

@@ -34,11 +34,11 @@ object GraphOps extends QueryGroup {
     * localCheckpoint, so an iterative loop that multiplies the
     * loop-carried sizeInBytes per round (joins do) compounds it
     * exponentially until Catalyst's size-only stats visitor grinds
-    * in BigInteger arithmetic (CheckpointProbe measures the cliff).
-    * Re-wrapping the checkpointed RDD in a fresh DataFrame resets
-    * stats to the session default — constant planning cost per
-    * round at any depth. */
-  private def freshDf(df: DataFrame): DataFrame = {
+    * in BigInteger arithmetic (FreshDfSpec pins the growth against
+    * a plain localCheckpoint). Re-wrapping the checkpointed RDD in a
+    * fresh DataFrame resets stats to the session default — constant
+    * planning cost per round at any depth. */
+  private[graft] def freshDf(df: DataFrame): DataFrame = {
     val ck = df.localCheckpoint(true)
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
@@ -62,7 +62,7 @@ object GraphOps extends QueryGroup {
   val Iters = 3
 
   /** Measured final-round L1 rank movement of graph_pagerank at
-    * sf0.01 (GraphFixpointProbe) — the literal the oracle pins the
+    * sf0.01 — the literal the oracle pins graph_pagerank's gated
     * delta_micro certificate column against.
     *
     * sf0.01-ONLY CONTRACT (r10, ADVICE): this literal (and
@@ -71,12 +71,15 @@ object GraphOps extends QueryGroup {
     * graph_reachability fails BY CONSTRUCTION at any other sf passed
     * to check.py — that loud failure is the house pin-the-certificate
     * discipline working, not a regression. A multi-SF oracle run must
-    * re-measure via GraphFixpointProbe and key the literals by sf. */
+    * re-measure each pinned literal and key it by sf: `sbt "runMain
+    * graft.Verify <sf> <out> <key>"` writes the Spark side's value of
+    * the gated column (delta_micro here; rounds, bfs_rounds or
+    * n_unstable for the fixpoint keys) to `<out>/<key>`. */
   val PagerankDeltaSf001 = 1719555218L
 
   /** Measured BFS rounds-to-exhaustion of graph_reachability's seed
-    * set at sf0.01 (GraphFixpointProbe) — the oracle unrolls ≥ this
-    * many level CTEs and pins this literal in its rounds column.
+    * set at sf0.01 — the oracle unrolls ≥ this many level CTEs and
+    * pins this literal in graph_reachability's gated rounds column.
     * Same sf0.01-only contract as [[PagerankDeltaSf001]]. */
   val ReachRoundsSf001 = 3L
 
@@ -1380,9 +1383,8 @@ object GraphOps extends QueryGroup {
   }
 
   /** Checkpointed edges + the house 8-seed sample + the σ-carrying
-    * forward wave — the state graph_betweenness and its sizing probe
-    * (BetweennessProbe) share, so the probe measures EXACTLY the
-    * operator's magnitudes. */
+    * forward wave — the state [[brandesDeps]] materializes for
+    * graph_betweenness and its edge-granular consumers. */
   def brandesForward(spark: SparkSession, sf: String)
       : (DataFrame, DataFrame, Int) = {
     val e = edges(spark, sf).localCheckpoint(false)
@@ -1450,10 +1452,10 @@ object GraphOps extends QueryGroup {
   val OracleCloseUnroll = 5
 
   /** Measured σ-wave exhaustion depth of graph_betweenness's seed
-    * sample at sf0.01 (BetweennessProbe: 3/4/4 rounds at
-    * sf0.001/0.01/0.1; max backward product 7.8e9 ≪ 2^62 —
-    * BIGINT-safe) — same sf0.01-only contract as
-    * [[PagerankDeltaSf001]]. */
+    * sample at sf0.01 (3/4/4 rounds at sf0.001/0.01/0.1; max
+    * backward product 7.8e9 ≪ 2^62 — BIGINT-safe), gated by
+    * graph_betweenness's rounds column — same sf0.01-only contract
+    * and re-measure recipe as [[PagerankDeltaSf001]]. */
   val BetwRoundsSf001 = 4L
 
   /** Forward/backward level CTEs the betweenness oracle unrolls —
@@ -1480,9 +1482,10 @@ object GraphOps extends QueryGroup {
 
   /** Measured σ-wave exhaustion depth of the 8-seed Brandes pass ON
     * the top-500 split subgraph at sf0.01, both divisive rounds
-    * (GirvanRoundsProbe: 4/4 at sf0.001, 14/14 at sf0.01, 3/3 at
-    * sf0.1; max backward term 3.9e8 ≪ 2^63) — same sf0.01-only
-    * contract as [[BetwRoundsSf001]]. */
+    * (4/4 at sf0.001, 14/14 at sf0.01, 3/3 at sf0.1; max backward
+    * term 3.9e8 ≪ 2^63), gated by graph_girvan_rounds' bfs_rounds
+    * column — same sf0.01-only contract and re-measure recipe as
+    * [[PagerankDeltaSf001]]. */
   val GirvanBfsRoundsSf001 = 14L
 
   /** Forward/backward level CTEs the girvan-rounds oracle unrolls
@@ -1590,11 +1593,12 @@ object GraphOps extends QueryGroup {
           max(col("rounds")).as("rounds"))
     }
 
-  /** Bucket-count literal for the three r17 BFS-family sinks —
-    * their file-count gates (1 bucket: each table is |V|-bounded —
-    * ≤ |reachable| rows — so a single writer is the right layout;
-    * at 100 TB the bucket count scales with |V| like
-    * sink_bucketed's dial). */
+  /** Bucket-count literal for the five r17 graph sinks
+    * (sink_reach_levels, sink_bf_dist, sink_close_levels,
+    * sink_coreness, sink_tri_counts) — their file-count gates (1
+    * bucket: each table is |V|-bounded — ≤ |reachable| rows — so a
+    * single writer is the right layout; at 100 TB the bucket count
+    * scales with |V| like sink_bucketed's dial). */
   val BfsSinkBuckets = 1
 
   /** The merged-frontier BFS level table (node, h) + the rounds
@@ -2016,8 +2020,8 @@ object GraphOps extends QueryGroup {
           // pandas fetch renders as float — pin the emitted rank to BIGINT
           " SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type, " +
           "node // 2 AS key, CAST(r AS BIGINT) AS rank_micro, " +
-          // measured final-round L1 movement at sf0.01 (GraphFixpoint-
-          // Probe) — the literal the delta certificate gates against
+          // measured final-round L1 movement at sf0.01 — the literal
+          // the delta certificate gates against
           s"CAST($PagerankDeltaSf001 AS BIGINT) AS delta_micro FROM r3 ORDER BY node_type, key"
       },
       scaleNote = "The Pregel message-passing shape in plain DataFrame ops, measured " +
@@ -2233,7 +2237,7 @@ object GraphOps extends QueryGroup {
           s"lv AS (SELECT node, 0 AS h FROM r0 UNION ALL $lv) " +
           "SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type, " +
           "node // 2 AS key, CAST(min(h) AS BIGINT) AS hops, " +
-          // measured exhaustion depth at sf0.01 (GraphFixpointProbe);
+          // measured exhaustion depth at sf0.01 ([[ReachRoundsSf001]]);
           // the unroll count above is ≥ it, so min(h) IS the BFS level
           s"CAST($ReachRoundsSf001 AS INT) AS rounds FROM lv " +
           "GROUP BY node ORDER BY node_type, key"
@@ -2431,8 +2435,8 @@ object GraphOps extends QueryGroup {
     // division (σ_u·(1e6+δ_w)) div σ_w (truncating = floor on these
     // positive operands, identical both engines), so the sums are
     // order-independent and the whole table is hash-stable at any
-    // partitioning. Probe-sized FIRST (house rule —
-    // BetweennessProbe): 4 rounds at sf0.01, max product 7.8e9
+    // partitioning. Sized FIRST (house rule — [[BetwRoundsSf001]]):
+    // 4 rounds at sf0.01, max product 7.8e9
     // (≪ 2^62), integer-vs-float drift ≤ 3e-1 micro-δ absolute at
     // sf0.1. The gated rounds certificate pins traversal depth
     // (graph_reachability's loud-failure contract); δ excludes the
@@ -2967,7 +2971,7 @@ object GraphOps extends QueryGroup {
         "term two floor divisions against the uncut graph's edge " +
         "total), so 'cut until Q drops' is an integer comparison. " +
         "The per-round BFS depth is MEASURED and gated against the " +
-        "pinned sf0.01 literal (14/14 — GirvanRoundsProbe); a " +
+        "pinned sf0.01 literal (14/14, the bfs_rounds column); a " +
         "deeper remainder fails loudly rather than truncating the " +
         "wave. At 100 TB the backbone fence is the honest contract " +
         "(production GN runs on strongest-edge subgraphs — O(E²·V) " +
@@ -3137,7 +3141,7 @@ object GraphOps extends QueryGroup {
           rel("d0", "d1") + ", " + rel("d1", "d2") + ", " +
           rel("d2", "d3") + ", " + rel("d3", "d4") + " " +
           // 4 unrolled rounds ≥ the measured sf0.01 convergence depth
-          // (3 changing rounds — GraphFixpointProbe), so d4 IS the
+          // (3 changing rounds, the gated rounds column), so d4 IS the
           // fixpoint; the literal 3 gates the Spark loop's depth
           "SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type, " +
           "node // 2 AS key, d AS dist, 3 AS rounds FROM d4 ORDER BY node_type, key"
@@ -3236,7 +3240,7 @@ object GraphOps extends QueryGroup {
           prune("e0", "e1") + ", " + prune("e1", "e2") + ", " +
           prune("e2", "e3") + " " +
           // 3 unrolled prune rounds ≥ the measured sf0.01 peel depth
-          // (1 changing round — GraphFixpointProbe), so e3 IS the
+          // (1 changing round, the gated rounds column), so e3 IS the
           // fixpoint; the literal 1 gates the Spark loop's depth
           "SELECT CASE WHEN src % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type, " +
           "src // 2 AS key, count(*) AS deg, 1 AS rounds FROM e3 GROUP BY src ORDER BY node_type, key"
@@ -3299,7 +3303,7 @@ object GraphOps extends QueryGroup {
           round("l2", "c3", "n3", "l3") + " " +
           "SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type, " +
           // 3 unrolled rounds ≥ the measured sf0.01 spread depth
-          // (2 changing rounds — GraphFixpointProbe), so l3 IS the
+          // (2 changing rounds, the gated rounds column), so l3 IS the
           // fixpoint; the literal 2 gates the Spark loop's depth
           "node // 2 AS key, lbl, 2 AS rounds FROM l3 ORDER BY node_type, key"
       },
@@ -3901,7 +3905,7 @@ object GraphOps extends QueryGroup {
     // 2 bipartite sides = every node offered exactly one move),
     // labels eagerly checkpointed per round (graph_components'
     // fixpoint discipline). One sweep is the measured sweet spot
-    // (LouvainSweepProbe): Q climbs monotonically through it at both
+    // (r10): Q climbs monotonically through it at both
     // fixtures (sf0.01: −0.0029 → +0.0600 over the 16 rounds, 1441
     // moves) while a SECOND sweep oscillates around the plateau —
     // synchronous scheduled moves convert the remaining gain into
@@ -3911,7 +3915,7 @@ object GraphOps extends QueryGroup {
     // moved-from-initial count per community; the oracle replays all
     // 16 rounds (machine-generated CTE chain — nothing pinned).
     //
-    // STATS-CARRY TRAP (found here, CheckpointProbe reproduces it):
+    // STATS-CARRY TRAP (found here, FreshDfSpec reproduces it):
     // localCheckpoint truncates the logical PLAN but LogicalRDD
     // copies the optimized plan's STATS snapshot through the
     // checkpoint, so a loop whose round multiplies the loop-carried
@@ -3920,7 +3924,7 @@ object GraphOps extends QueryGroup {
     // minutes in BigInteger stats arithmetic while every plan stays
     // flat. freshDf re-wraps the checkpointed RDD in a new DataFrame,
     // resetting stats to the default; rounds then cost O(1) planning
-    // forever (probe: 95 s round 13 → 0.3 s flat).
+    // forever (measured: 95 s round 13 → 0.3 s flat).
     QueryDef(
       "graph_louvain_sweep",
       (spark, sf) => {
@@ -3994,8 +3998,8 @@ object GraphOps extends QueryGroup {
     // self-loop weight (total degree is preserved under contraction)
     // and E_{U,c} runs over cross edges only (a self-loop is internal
     // wherever U goes, so it shifts every candidate equally and drops
-    // out of the argmax). Schedule MEASURED FIRST (GraphCoarsenProbe,
-    // the r10 lesson): on the ≤|communities|-node contracted graph,
+    // out of the argmax). Schedule MEASURED FIRST (r11, the r10
+    // lesson): on the ≤|communities|-node contracted graph,
     // 8 rounds of (2 hash sides × 4 slices) climb Q monotonically and
     // stay monotone through a second sweep at BOTH fixtures (sf0.001:
     // 0.004909 → 0.008851, converged by round 4; sf0.01: 0.060020 →
@@ -4077,7 +4081,7 @@ object GraphOps extends QueryGroup {
         "(38,0) partials past it, the house fence). The level-2 " +
         "schedule is probe-measured like level 1's (8 rounds, 2 " +
         "sides × 4 slices, monotone through a second sweep at both " +
-        "fixtures — GraphCoarsenProbe's ledger); deeper hierarchies " +
+        "fixtures; the oracle replays all 24 rounds); deeper hierarchies " +
         "repeat the same contraction on blab8, each level strictly " +
         "smaller. Labels checkpoint/stats-reset per round " +
         "(freshDf), so 24 total rounds plan in O(1) each — and the " +
@@ -4874,8 +4878,8 @@ object GraphOps extends QueryGroup {
     // monotonically, with NO sequential peeling (the textbook
     // peel-min-degree loop is inherently serial; the h-index form is
     // one synchronous relational round, which is why it is THE
-    // distributed coreness algorithm). Rounds MEASURED first
-    // (CorenessProbe): exact fixpoint in 1 round at sf0.001, 3 at
+    // distributed coreness algorithm). Rounds MEASURED first (r11):
+    // exact fixpoint in 1 round at sf0.001, 3 at
     // sf0.01, 5 at sf0.1 (max core 10 / 47 / 59), +1 no-change proof
     // round; the operator unrolls EIGHT rounds (margin 2 over the
     // deepest measurement) and emits n_unstable = |{v : c₇(v) ≠

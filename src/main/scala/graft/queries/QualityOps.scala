@@ -234,13 +234,11 @@ object QualityOps extends QueryGroup {
       "dedup_shingle_stats",
       (spark, sf) => {
         val ws = split(col("text"), " ")
-        // r17 (guide §2.3 "narrower types", this key's own scaleNote):
-        // the (doc, shingle) distinct and the df groupBy shuffled raw
-        // ~25-byte shingle STRINGS; hashing first (xxhash64 — the
-        // ngram_jaccard/containment 8-byte basis, collision odds
-        // ~2^-64 the accepted cross-engine risk) shuffles 8-byte keys
-        // instead. df counts are identical because the hash is applied
-        // BEFORE the distinct — same (doc, shingle) multiset.
+        // r17 (guide §2.3 "narrower types"): hashing the shingle
+        // (xxhash64, the ngram_jaccard 8-byte basis) BEFORE the
+        // (doc, shingle) distinct shuffles 8-byte keys, not ~25-byte
+        // strings; df counts are identical while no two shingles
+        // collide (~2^-64, QualityOpsSpec's certificate).
         Tables.documents(spark, sf)
           .filter(size(ws) >= 3)
           .select(col("doc_id"), ws.as("ws"))
@@ -262,10 +260,11 @@ object QualityOps extends QueryGroup {
         "inside codegen on the split array), the (doc, shingle) " +
         "distinct and both aggregates are map-side combinable, and " +
         "the output is |distinct df values| rows — bounded by max " +
-        "df, essentially constant. At 100 TB hash the shingle " +
-        "strings first (ngram_jaccard's xxhash64 trick) so the " +
-        "distinct exchange carries 8-byte keys instead of text; the " +
-        "histogram is the same two aggregates over hashes. This is " +
+        "df, essentially constant. Shingles are hashed first at " +
+        "every scale (xxhash64, ngram_jaccard's 8-byte basis), so " +
+        "the distinct exchange carries 8-byte keys, not text — exact " +
+        "while no two shingles collide (~2^-64 per pair; " +
+        "QualityOpsSpec certifies none at sf0.001/sf0.01). This is " +
         "the measurement behind every df-cap in the dedup family: " +
         "MaxBucketDocs=64 is defensible exactly because the df tail " +
         "above 64 is boilerplate, and THIS query is how you check " +

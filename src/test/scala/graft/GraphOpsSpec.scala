@@ -766,7 +766,7 @@ class GraphOpsSpec extends SparkSpec {
     // intra-community edges (positives) against community-to-
     // background non-edges (negatives) with the same rank-sum AUC
     // the gated op uses. The fixture shape is load-bearing (swept
-    // in PlantedProbe): with only 4 power iterations from all-ones,
+    // when it was chosen): with only 4 power iterations from all-ones,
     // v₁ localizes on a block only when that block's SPPMI row sums
     // dominate — the clique gives ~23 co-occurrence partners per
     // node vs 3 in a 4-cycle, so λ_clique ≫ λ_background and the

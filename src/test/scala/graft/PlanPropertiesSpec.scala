@@ -261,9 +261,9 @@ class PlanPropertiesSpec extends SparkSpec {
     // and ann_pq EMBED that same baseline in their recall verdicts
     // (the <100-query set and the ≤128-row codebooks are bounded by
     // construction, but they sit behind localCheckpoint `Scan
-    // ExistingRDD` leaves the structural walker cannot see through —
-    // probed in BnljProbe; every 1-row-aggregate BNLJ in those same
-    // plans IS structurally proven).
+    // ExistingRDD` leaves the structural walker cannot see through;
+    // every 1-row-aggregate BNLJ in those same plans IS structurally
+    // proven).
     // rank_ndcg embeds ann_topk's brute-force baseline verbatim (the
     // fixed 16-query broadcast against every candidate is the exact
     // ranker its NDCG is defined over — same semantics exemption).

@@ -79,18 +79,33 @@ class QualityOpsSpec extends SparkSpec {
     assert(lastRate < firstRate, s"no saturation: $lastRate >= $firstRate")
   }
 
-  test("dedup_shingle_stats: df mass equals the distinct (doc, shingle) count") {
-    val hist = run("dedup_shingle_stats").collect()
-    val mass = hist.map(r => r.getLong(0) * r.getLong(1)).sum
+  /** dedup_shingle_stats' raw (doc_id, sh) word-3-gram rows, before
+    * the query hashes sh. */
+  private def shingles(sfDir: String) = {
     val ws = split(col("text"), " ")
-    val direct = engine.Tables.documents(spark, sf)
+    engine.Tables.documents(spark, sfDir)
       .filter(size(ws) >= 3)
       .select(col("doc_id"), ws.as("ws"))
       .select(col("doc_id"), explode(expr(
         "transform(sequence(1, size(ws) - 2), " +
           "i -> concat_ws(' ', ws[i-1], ws[i], ws[i+1]))")).as("sh"))
-      .distinct().count()
+  }
+
+  test("dedup_shingle_stats: df mass equals the distinct (doc, shingle) count") {
+    val hist = run("dedup_shingle_stats").collect()
+    val mass = hist.map(r => r.getLong(0) * r.getLong(1)).sum
+    val direct = shingles(sf).distinct().count()
     assert(mass === direct, s"histogram mass $mass != $direct pairs")
+  }
+
+  test("dedup_shingle_stats: xxhash64 of the shingle is collision-free at sf0.001 and sf0.01") {
+    for (s <- Seq(sf, new java.io.File(sf).getParent + "/sf0.01")) {
+      val c = shingles(s).withColumn("h", xxhash64(col("sh")))
+        .agg(countDistinct(col("doc_id"), col("sh")), countDistinct(col("doc_id"), col("h")),
+          countDistinct(col("sh")), countDistinct(col("h"))).head()
+      assert(c.getLong(0) > 0L && c.getLong(0) === c.getLong(1) &&
+        c.getLong(2) === c.getLong(3), s"hash collisions at $s: $c")
+    }
   }
 
   test("corpus_curriculum: stages partition the corpus with disjoint, ordered score ranges") {

@@ -1,22 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.engine.LocalSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared single-JVM session for all suites (SURVEY.md §5). */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = LocalSession(4) // plan-shape specs depend on 4 partitions
     // Streaming teardown races a final metric read against query
     // stop: DAGScheduler then WARNs a full accessNonExistentAccumulator
     // stack trace per late read (benign — the query is already down).
