@@ -137,8 +137,8 @@ object Transit {
   /** delay = observed (mode=R) − scheduled, in seconds; cancellations
     * (`etat = 'Supprimé'`) flagged, not dropped.
     *
-    * UTC-session requirement (asserted): [[Gtfs.parseFrDatetime]]
-    * interprets the feed's wall-clock string in the SESSION time zone
+    * UTC-session requirement (asserted): [[graft.sources.dsv2.PassagesSource]]
+    * reads the feed's wall-clock times in the SESSION time zone
     * while [[scheduledTs]] anchors the service day to UTC — in a
     * non-UTC session delay_sec would silently shift by the zone
     * offset. All bundled mains/tests pin spark.sql.session.timeZone=
@@ -147,7 +147,7 @@ object Transit {
     val tz = matched.sparkSession.conf.get("spark.sql.session.timeZone")
     require(tz == "UTC",
       s"computeDelays requires spark.sql.session.timeZone=UTC, got '$tz' " +
-        "(parseFrDatetime parses in session TZ; scheduledTs anchors to UTC)")
+        "(passages are read in session TZ; scheduledTs anchors to UTC)")
     matched
       .filter(col("mode") === "R" && col("departure_secs").isNotNull)
       .withColumn("scheduled_ts", scheduledTs(day, col("departure_secs")))

@@ -3,14 +3,14 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.types._
 
 /** Domain scalar/UDx surface — SURVEY.md §2.4.
   *
   * Reference analog: the Paris service-day conversion with GTFS
   * past-midnight times (`DateConverter`-style logic [P utils_misc.py]),
-  * UIC station-id normalization [P match_ids.py], and the XML passage
-  * parser [P extract_api.py `xml_to_json_item_list`].
+  * and UIC station-id normalization [P match_ids.py]. The XML passage
+  * parser [P extract_api.py `xml_to_json_item_list`] is the DSv2
+  * connector [[graft.sources.dsv2.PassagesSource]].
   *
   * Everything here is pure Column composition (codegen'd) except the
   * typed Aggregator — no Scala UDFs in scalar paths.
@@ -39,16 +39,6 @@ object Gtfs {
   def serviceDay(ts: Column, cutoverHour: Int = 3): Column =
     to_date(ts - expr(s"INTERVAL $cutoverHour HOURS"))
 
-  /** `dd/mm/yyyy HH:MM` (the passage feed's date format) → timestamp.
-    *
-    * NOTE: to_timestamp interprets the wall-clock string in the
-    * SESSION time zone. The domain pipeline anchors service days to
-    * UTC ([[graft.domain.Transit.scheduledTs]]), so delay math is only
-    * coherent in a UTC session — Transit.computeDelays asserts this
-    * (all bundled mains/tests pin spark.sql.session.timeZone=UTC). */
-  def parseFrDatetime(c: Column): Column =
-    to_timestamp(c, "dd/MM/yyyy HH:mm")
-
   /** Luhn check digit over a digit string (deterministic; the classic
     * self-check scheme for station-id normalization — documented
     * assumption, see UdxSpec). */
@@ -72,40 +62,6 @@ object Gtfs {
   /** UIC-7 → UIC-8: append the check digit. */
   def uic8(uic7: Column): Column =
     concat(uic7, luhnCheckDigit(uic7).cast("string"))
-
-  /** Schema of the Transilien-style departures XML:
-    * {{{
-    * <passages gare="87393009">
-    *   <train><date mode="R">20/05/2017 12:09</date><num>135140</num>
-    *          <miss>POPI</miss><term>87384008</term><etat>Retardé</etat></train>
-    * </passages>
-    * }}} */
-  val passagesSchema: StructType = StructType(Seq(
-    StructField("_gare", StringType),
-    StructField("train", ArrayType(StructType(Seq(
-      StructField("date", StructType(Seq(
-        StructField("_VALUE", StringType),
-        StructField("_mode", StringType)))),
-      StructField("num", StringType),
-      StructField("miss", StringType),
-      StructField("term", StringType),
-      StructField("etat", StringType)))))))
-
-  /** XML passages document → array of typed passage structs
-    * (station, train num, mission, terminus, mode R/T, observed ts,
-    * optional état). Explode downstream to get one row per train call. */
-  def parsePassages(xml: Column): Column = {
-    val doc = from_xml(xml, passagesSchema)
-    transform(doc.getField("train"), t =>
-      struct(
-        doc.getField("_gare").as("station"),
-        t.getField("num").as("num"),
-        t.getField("miss").as("miss"),
-        t.getField("term").as("term"),
-        t.getField("date").getField("_mode").as("mode"),
-        parseFrDatetime(t.getField("date").getField("_VALUE")).as("passage_ts"),
-        t.getField("etat").as("etat")))
-  }
 
   /** Typed Aggregator demo (§2.4): geometric mean via exact log-space
     * accumulation — merges associatively across partitions. */

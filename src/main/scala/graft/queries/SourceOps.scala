@@ -6,8 +6,8 @@ import graft.engine.{QueryDef, QueryGroup}
 
 /** Declared demonstration of the DSv2 ingest path: the Transilien-style
   * passage XML feed [P extract_api.py] read through
-  * [[graft.sources.dsv2.PassagesSource]] (TableProvider → Scan → one
-  * partition per document → executor-side DOM parse) and folded into
+  * [[graft.sources.dsv2.PassagesSource]] (TableProvider → Scan → files
+  * packed into partitions → executor-side StAX parse) and folded into
   * the departure-board shape the domain layer serves
   * (domain/Transit.scala stationBoard's ordering + cancellation rule,
   * applied per station over the whole feed).
@@ -341,7 +341,7 @@ object SourceOps extends QueryGroup {
           .orderBy("station_id", "rank")
       },
       Some("SELECT station_id, rank, num, miss, term, expected_ts, mode, etat FROM (SELECT *, row_number() OVER (PARTITION BY station_id ORDER BY expected_ts, num) AS rank FROM (VALUES " + OracleValues + ") AS t(station_id, num, miss, term, expected_ts, mode, etat) WHERE etat IS NULL OR etat <> 'Supprime') ORDER BY station_id, rank"),
-      scaleNote = "The connector plans ONE InputPartition per feed document driver-side and parses in executors — ingest parallelism = document count (a real deployment shards by station × polling slice, the same planInputPartitions hook). The board is win_topk_group's shape: one shuffle on station_id, rank inside the window; the fleet-wide board at any feed size is |stations|-bounded output. Pushdown hooks (SupportsPushDownFilters) are where a station filter would prune documents before parse."),
+      scaleNote = "The connector packs the feed documents driver-side by their bytes into Spark's file-split budget, min(maxPartitionBytes, max(openCostInBytes, bytes / cores)), and parses them in executors with StAX — a polling cycle of small documents is one task, a large feed spreads over the cores (a real deployment shards by station × polling slice, the same planInputPartitions hook). The board is win_topk_group's shape: one shuffle on station_id, rank inside the window; the fleet-wide board at any feed size is |stations|-bounded output. Pushdown hooks (SupportsPushDownFilters) are where a station filter would prune documents before parse."),
 
     // JSON-lines API-page ingestion — the OTHER feed format a polled
     // REST API returns (one JSON object per poll response, records

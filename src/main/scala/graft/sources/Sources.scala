@@ -64,30 +64,18 @@ object GtfsCsv {
     schemas.keys.map(n => n -> readTable(spark, dir, n)).toMap
 }
 
-/** XML passages: one XML document per file/line → typed passage rows
-  * (the EP1 parse step, distributed — each partition parses its own
-  * documents, no driver-side XML). */
+/** XML passages (the EP1 parse step): one polling cycle's directory of
+  * `<passages>` documents, read by the DSv2 connector in executors, as
+  * rows matching FIXTURES.md §2.2 (one per train call), with UIC-8
+  * station ids and the request day and time. */
 object XmlPassages {
-
-  /** Parse a DataFrame with an `xml` string column into passage rows
-    * matching FIXTURES.md §2.2 (one row per train call). */
-  def parse(docs: DataFrame, requestDay: String, requestTime: String): DataFrame =
-    docs
-      .select(explode(Gtfs.parsePassages(col("xml"))).as("p"))
-      .select(
-        Gtfs.uic8(graft.domain.Transit.uic7(col("p.station"))).as("station_id"),
-        col("p.num").as("num"), col("p.miss").as("miss"),
-        col("p.term").as("term"), col("p.passage_ts").as("expected_ts"),
-        col("p.mode").as("mode"), col("p.etat").as("etat"),
-        lit(requestDay).as("request_day"), lit(requestTime).as("request_time"),
-        concat(regexp_replace(lit(requestDay), "-", ""), lit("_"), col("p.num"))
-          .as("day_train_num"))
-
-  /** Read a directory of XML files (wholetext — one doc per file). */
   def read(spark: SparkSession, dir: String, requestDay: String,
       requestTime: String): DataFrame =
-    parse(spark.read.option("wholetext", "true").text(dir)
-      .withColumnRenamed("value", "xml"), requestDay, requestTime)
+    spark.read.format("graft.sources.dsv2.PassagesSource").load(dir)
+      .withColumn("station_id", Gtfs.uic8(graft.domain.Transit.uic7(col("station_id"))))
+      .withColumn("request_day", lit(requestDay))
+      .withColumn("request_time", lit(requestTime))
+      .withColumn("day_train_num", concat(lit(requestDay.replace("-", "") + "_"), col("num")))
 }
 
 /** JSON documents (the Mongo-store analog): explicit schema, ingested

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.Gtfs
 
 /** Domain UDx surface (SURVEY.md §2.4): GTFS past-midnight times,
-  * service days, UIC normalization, XML passage parsing, typed
-  * Aggregator. */
+  * service days, UIC normalization, XML passage parsing (through the
+  * passage connector), typed Aggregator. */
 class UdxSpec extends SparkSpec {
 
   private def one(c: org.apache.spark.sql.Column): org.apache.spark.sql.Row =
@@ -50,9 +50,12 @@ class UdxSpec extends SparkSpec {
         |<train><date mode="R">20/05/2017 12:09</date><num>135140</num><miss>POPI</miss><term>87384008</term></train>
         |<train><date mode="T">20/05/2017 12:14</date><num>134683</num><miss>PEBU</miss><term>87384008</term><etat>Retardé</etat></train>
         |</passages>""".stripMargin
-    val rows = spark.range(1).select(lit(xml).as("x"))
-      .select(explode(Gtfs.parsePassages(col("x"))).as("p"))
-      .select("p.station", "p.num", "p.miss", "p.mode", "p.passage_ts", "p.etat")
+    // the one passage parser is the DSv2 connector: one file, one
+    // partition, rows in document order
+    val dir = java.nio.file.Files.createTempDirectory("udx-xml")
+    java.nio.file.Files.writeString(dir.resolve("doc.xml"), xml)
+    val rows = spark.read.format("graft.sources.dsv2.PassagesSource").load(dir.toString)
+      .select("station_id", "num", "miss", "mode", "expected_ts", "etat")
       .collect()
     assert(rows.length == 2)
     assert(rows(0).getString(0) == "87393009")
@@ -86,11 +89,11 @@ class UdxSpec extends SparkSpec {
   }
 
   test("delay computation composes: observed − scheduled in seconds") {
-    // the reference's core analytic, from the UDx primitives
+    // the reference's core analytic, over the feed's wall-clock format
     val df = spark.sql(
       """SELECT '20/05/2017 12:14' AS observed, '20/05/2017 12:09' AS scheduled""")
-      .select((unix_timestamp(Gtfs.parseFrDatetime(col("observed"))) -
-        unix_timestamp(Gtfs.parseFrDatetime(col("scheduled")))).as("delay_sec"))
+      .select((unix_timestamp(to_timestamp(col("observed"), "dd/MM/yyyy HH:mm")) -
+        unix_timestamp(to_timestamp(col("scheduled"), "dd/MM/yyyy HH:mm"))).as("delay_sec"))
     assert(df.head().getLong(0) == 300L)
   }
 }
