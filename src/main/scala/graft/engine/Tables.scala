@@ -1,7 +1,11 @@
 package graft.engine
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RelationBridge
 
 /** Schema-checked loaders for the driver testdata
   * (`/root/testdata/sf{0.001,0.01,0.1}/<table>.parquet`).
@@ -16,6 +20,16 @@ import org.apache.spark.sql.functions._
   * at scale the same code reads a partitioned directory tree
   * (`lineitem/ship_month=yyyy-MM/part-N.parquet`) and partition pruning +
   * predicate pushdown apply unchanged. No driver-side materialization.
+  * A path is resolved once per session: the first load lists it and
+  * infers the schema from the parquet footers (a Spark job), and every
+  * later load in that session reuses that relation, so a catalog query
+  * pays neither again. The listing is a snapshot taken at that first
+  * load. A path whose modification time or length has changed since
+  * (a file rewritten, a directory overwritten) is resolved afresh; a
+  * part file replaced in place under an unchanged directory is not
+  * seen. Resolution-time settings, such as the parquet type mapping
+  * (`nanosAsLong`), apply as of the first load; a session that needs
+  * others is a `newSession()`, which resolves on its own.
   */
 object Tables {
 
@@ -23,9 +37,25 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Plain parquet scan of one table. */
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Parquet scan of one table, resolved once per session and path
+    * (see the design note above); each call's columns carry fresh
+    * attribute ids, as a new `spark.read` would. A missing path raises
+    * the reader's own error. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    RelationBridge.once(spark, path, stamp(spark, path))(spark.read.parquet(path))
+  }
+
+  /** Modification time and length of `path`: one status call, no
+    * listing and no child process. A missing path stamps as such, and
+    * its read raises (a failed resolution is not kept). */
+  private def stamp(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    try {
+      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+      s"${st.getModificationTime}:${st.getLen}"
+    } catch { case _: FileNotFoundException => "missing" }
+  }
 
   /** `events.ts` has shipped in two physical encodings across driver
     * testdata generations: parquet TIMESTAMP(NANOS) — which Spark 4.1

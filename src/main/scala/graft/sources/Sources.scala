@@ -10,7 +10,9 @@ import graft.functions.Gtfs
   * documents [P extract_api.py], JSON document stores
   * [P utils_mongo.py]. Every reader declares an explicit schema —
   * schema inference at 100 TB means reading the data twice and trusting
-  * sampled types.
+  * sampled types. The parquet testdata tables, whose footers carry
+  * their schema, are the one inferred read; `graft.engine.Tables` does
+  * it once per session and path (see its design note).
   */
 object GtfsCsv {
 
