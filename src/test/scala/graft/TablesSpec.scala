@@ -168,7 +168,7 @@ class TablesSpec extends SparkSpec {
     }
     // a parquet read: spark.read[.option(..)|.schema(..)]*.parquet(args)
     // or .format("parquet").load(args), with its argument text
-    val read = ("""\bread((?:\s*\.\s*(?:option|options|schema)\s*\([^()]*\))*)""" +
+    val read = ("""\bread(?:\s*\.\s*(?:option|options|schema)\s*\([^()]*\))*""" +
       """\s*\.\s*(?:parquet|format\s*\(\s*"parquet"\s*\)\s*\.\s*load)\s*\(([^()]*(?:\([^()]*\))?[^()]*)\)""").r
     // the argument names the scale-factor directory or a testdata table
     val testdata = ("""\bsf\b|sfDir|testdata|(?:""" + Tables.names.mkString("|") + """)\.parquet""").r
@@ -177,7 +177,7 @@ class TablesSpec extends SparkSpec {
       name = p.getFileName.toString
       m <- read.findAllMatchIn(Files.readString(p))
       // SourceOps reads back the files it wrote itself; those are exempt
-      if name != "SourceOps.scala" || testdata.findFirstIn(m.group(2)).isDefined
+      if name != "SourceOps.scala" || testdata.findFirstIn(m.group(1)).isDefined
     } yield s"$name: ${m.matched}"
     assert(hits.isEmpty, "read the table with graft.engine.Tables instead")
     // the pattern does find SourceOps's own read-backs
