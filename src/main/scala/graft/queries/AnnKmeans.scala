@@ -260,8 +260,6 @@ object AnnKmeans extends QueryGroup {
       "sink_kmeans_model",
       (spark, sf) => {
         val m = kmeansModel(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_kmeans_model")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         val byIter = m.groupBy("iter")
           .agg(sum(col("n_vec")).as("nv"), sum(col("wcss_c")).as("w"),
             sum(when(col("n_vec") > 0, 1).otherwise(0)).as("live"))
@@ -276,7 +274,7 @@ object AnnKmeans extends QueryGroup {
             (col("nvmin") === col("nvmax")).as("assigned_closed"),
             (col("w2") <= col("w0")).as("wcss_nonincreasing"),
             (col("live2") === K).as("cells_live"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_kmeans_model"))
       },
       Some("SELECT count(*) AS n_vectors, 3 AS n_iters, TRUE AS assigned_closed, TRUE AS wcss_nonincreasing, TRUE AS cells_live, " +
         s"$KmeansModelBuckets AS n_files FROM embeddings"),

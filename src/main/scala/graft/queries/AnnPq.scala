@@ -430,8 +430,6 @@ object AnnPq extends QueryGroup {
       "sink_pq_codebook",
       (spark, sf) => {
         val b = pqCodebook(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_pq_codebook")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         val n = AnnKmeans.quantized(spark, sf)
           .agg(count(lit(1)).as("n_vectors"))
         b.agg(countDistinct(col("m")).as("n_subspaces"),
@@ -442,7 +440,7 @@ object AnnPq extends QueryGroup {
           .select(col("n_vectors"), col("n_subspaces"),
             (col("n_codewords") === M * Kc).as("books_full"),
             (col("n_badwidth") === 0).as("dims_ok"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_pq_codebook"))
       },
       Some(s"SELECT count(*) AS n_vectors, $M AS n_subspaces, TRUE AS books_full, TRUE AS dims_ok, " +
         s"$PqCodebookBuckets AS n_files FROM embeddings"),

@@ -1416,15 +1416,13 @@ object CorpusOps extends QueryGroup {
       "sink_bpe_history",
       (spark, sf) => {
         val h = bpeHistory(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_bpe_history")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         h.groupBy("round")
           .agg(count(lit(1)).as("n_words"),
             sum(col("f")).as("f_total"),
             sum(col("f") * size(split(col("sym"), " ")))
               .as("n_tokens_bpe"),
             sum(length(col("sym")).cast("long")).as("sym_len_checksum"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_bpe_history"))
           .orderBy("round")
       },
       Some {

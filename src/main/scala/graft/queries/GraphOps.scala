@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.{QueryDef, QueryGroup, Tables}
@@ -286,15 +286,10 @@ object GraphOps extends QueryGroup {
       spark.sparkContext.applicationId).replaceAll("[^a-zA-Z0-9]", "_")
     val t = s"graft_${op}_$sfx"
     val dir = SourceOps.sinkDir(spark, sf, op)
-    def dirOk = {
-      // Hadoop FileSystem API, not java.io.File (r17, VERDICT r16
-      // #9): the idempotency re-check must work wherever the sink
-      // dir lives (file://, hdfs://, s3a://)
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p) && fs.listStatus(p)
-        .exists(_.getPath.getName.startsWith("part-"))
-    }
+    // Hadoop FileSystem API, not java.io.File (r17, VERDICT r16 #9):
+    // the idempotency re-check must work wherever the sink dir lives
+    // (file://, hdfs://, s3a://)
+    def dirOk = SourceOps.countPartFiles(spark, dir) > 0
     if (!spark.catalog.tableExists(t) || !dirOk) {
       if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE `$t`")
       build.repartition(buckets, col(bucketCol))
@@ -1184,8 +1179,8 @@ object GraphOps extends QueryGroup {
   /** pagerank PLUS its convergence certificate (r9, VERDICT r8 #6):
     * the final-round L1 rank movement Σ_v |r_k(v) − r_{k−1}(v)| in
     * exact micro-units. Fixed-iteration power iteration is standard,
-    * but the house fixpoint discipline (kCoreEdges / bellmanFord /
-    * labelSpread / bfsLevels) is that iterative DEPTH must be
+    * but the house fixpoint discipline (wave / kCoreEdges /
+    * bellmanFord / labelSpread) is that iterative DEPTH must be
     * observable under the hash — emitting this delta as a gated
     * column means a data change that converges slower fails the
     * oracle compare loudly instead of silently under-converging.
@@ -1266,119 +1261,60 @@ object GraphOps extends QueryGroup {
     (r, prev)
   }
 
-  /** BFS to FRONTIER EXHAUSTION (r9, VERDICT r8 #1 — the last
-    * fixed-round graph op lifted to a true fixpoint): per round, the
-    * frontier's neighbors are anti-joined against the reached set, so
-    * each round's join is |frontier|-sized and the loop stops when a
-    * round reaches nothing — O(eccentricity) rounds, the transitive
-    * closure the operator's name promises (the fixed 3-hop level-set
-    * form silently truncated deeper graphs; GraphOpsSpec's planted
-    * chain proves it). Reached nodes never re-enter the frontier, so
-    * each node's level is final when first assigned — no min() fold
-    * needed. Certificate: rounds-that-reached-something (= max hops),
-    * one count() per round over the checkpointed new-frontier table
-    * (the kCoreEdges probe discipline). Returns (levels(node, h),
-    * rounds). Seeds carries (node); e carries (src, dst). */
-  def bfsLevels(e: DataFrame, seeds: DataFrame): (DataFrame, Int) = {
-    var reached = seeds.select(col("node"), lit(0L).as("h"))
+  /** BFS to FRONTIER EXHAUSTION over (source, node) — the one wave
+    * behind reachability, closeness and Brandes/Girvan. Per round, the
+    * frontier's neighbors are anti-joined against the per-source
+    * reached set, so each round's join is |frontier|-sized and the
+    * loop stops when a round reaches nothing: O(eccentricity) rounds,
+    * the transitive closure the operators promise (a fixed 3-hop
+    * level-set form silently truncates deeper graphs; GraphOpsSpec's
+    * planted chain proves it). Reached nodes never re-enter the
+    * frontier, so each level is final when first assigned. `source`
+    * names each seed's wave: `col("node")` tracks every seed
+    * independently (|seeds|·|V| worst-case state, so the seed set must
+    * be a bounded SAMPLE, the standard approximate-closeness
+    * construction); a constant merges all seeds into one level set.
+    *
+    * `sigma` also carries shortest-path COUNTS (σ in Brandes'
+    * notation): a node first reached at round t gets σ(s, w) =
+    * Σ_{u ∈ frontier, (u,w) ∈ E} σ(s, u), one sum folded into the
+    * frontier aggregate in place of the distinct (the edge list is a
+    * distinct pair set, so the sum is over distinct predecessors).
+    * Only the Brandes readers ask for it: σ grows with the number of
+    * shortest paths, and under ANSI mode a Long overflow in a sum
+    * nobody reads would fail the plain wave on large graphs.
+    *
+    * Certificate: the reached row count (only ever grows, so an
+    * unchanged count is an empty frontier), one count() per round that
+    * also materializes the round's frontier and reached checkpoints;
+    * rounds = rounds that reached something = max hops. Returns
+    * ((s, node, h[, sig]), rounds). Seeds carries (node); e carries
+    * (src, dst). */
+  def wave(e: DataFrame, seeds: DataFrame, source: Column, sigma: Boolean)
+      : (DataFrame, Int) = {
+    val sig = if (sigma) Seq(col("sig")) else Nil
+    val start = seeds.select(Seq(source.as("s"), col("node"), lit(0L).as("h")) ++
+        (if (sigma) Seq(lit(1L).as("sig")) else Nil): _*)
       .localCheckpoint(false)
-    var frontier = reached.select("node").localCheckpoint(false)
-    var rounds = 0
-    var done = frontier.count() == 0
-    while (!done) {
-      val next = e
-        .join(broadcast(frontier.select(col("node").as("src"))), "src")
-        .select(col("dst").as("node")).distinct()
-        .join(broadcast(reached.select("node")), Seq("node"), "left_anti")
-        .localCheckpoint(false)
-      val c = next.count()
-      if (c == 0) done = true
-      else {
-        rounds += 1
-        reached = reached
-          .unionAll(next.select(col("node"), lit(rounds.toLong).as("h")))
-          .localCheckpoint(false)
-        frontier = next
+    // state: (reached, frontier, the level this round stamps)
+    val ((reached, _, _), rounds) =
+      Fixpoint((start, start, 1L), start.count())(_._1.count()) {
+        case (reached, frontier, h) =>
+          val hop = e.join(broadcast(frontier.select(
+            Seq(col("s"), col("node").as("src")) ++ sig: _*)), "src")
+          val stepped =
+            if (sigma) hop.groupBy(col("s"), col("dst").as("node"))
+              .agg(sum(col("sig")).as("sig"))
+            else hop.select(col("s"), col("dst").as("node")).distinct()
+          val next = stepped
+            .join(broadcast(reached.select("s", "node")), Seq("s", "node"),
+              "left_anti")
+            .localCheckpoint(false)
+          val grown = reached.unionAll(next.select(
+              Seq(col("s"), col("node"), lit(h).as("h")) ++ sig: _*))
+            .localCheckpoint(false)
+          (grown, next, h + 1)
       }
-    }
-    (reached, rounds)
-  }
-
-  /** Per-SOURCE BFS to frontier exhaustion — [[bfsLevels]] with the
-    * seed identity carried through the wave, for operators that need
-    * distances PER seed (closeness centrality) rather than the merged
-    * level set. State is (s, node, h); each round joins the edge list
-    * against the new per-source frontier and anti-joins the per-source
-    * reached set, so a node reached by several sources is tracked
-    * independently per source (|seeds|·|V| worst-case state — which is
-    * why the seed set must be a bounded SAMPLE, the standard
-    * approximate-closeness construction). Same per-round checkpoint +
-    * count probe discipline. */
-  def bfsLevelsPerSource(e: DataFrame, seeds: DataFrame): (DataFrame, Int) = {
-    var reached = seeds.select(col("node").as("s"), col("node"),
-        lit(0L).as("h"))
-      .localCheckpoint(false)
-    var frontier = reached.select("s", "node").localCheckpoint(false)
-    var rounds = 0
-    var done = frontier.count() == 0
-    while (!done) {
-      val next = e
-        .join(broadcast(frontier.select(col("s"), col("node").as("src"))),
-          "src")
-        .select(col("s"), col("dst").as("node")).distinct()
-        .join(broadcast(reached.select("s", "node")), Seq("s", "node"),
-          "left_anti")
-        .localCheckpoint(false)
-      val c = next.count()
-      if (c == 0) done = true
-      else {
-        rounds += 1
-        reached = reached
-          .unionAll(next.select(col("s"), col("node"),
-            lit(rounds.toLong).as("h")))
-          .localCheckpoint(false)
-        frontier = next
-      }
-    }
-    (reached, rounds)
-  }
-
-  /** [[bfsLevelsPerSource]] with shortest-path COUNTS carried through
-    * the wave (σ in Brandes' notation) — the forward pass of
-    * betweenness centrality. A node first reached at round t gets
-    * σ(s, w) = Σ_{u ∈ frontier, (u,w) ∈ E} σ(s, u): one sum folded
-    * into the frontier join's aggregate, so the σ-carrying wave costs
-    * exactly the closeness wave plus one map-side-combined sum. The
-    * edge list is a distinct pair set by construction (no
-    * multi-edges), so the sum is over distinct predecessors. Returns
-    * ((s, node, h, sig), rounds). */
-  def bfsSigmaPerSource(e: DataFrame, seeds: DataFrame): (DataFrame, Int) = {
-    var reached = seeds.select(col("node").as("s"), col("node"),
-        lit(0L).as("h"), lit(1L).as("sig"))
-      .localCheckpoint(false)
-    var frontier = reached.select("s", "node", "sig").localCheckpoint(false)
-    var rounds = 0
-    var done = frontier.count() == 0
-    while (!done) {
-      val next = e
-        .join(broadcast(frontier.select(col("s"), col("node").as("src"),
-          col("sig"))), "src")
-        .groupBy(col("s"), col("dst").as("node"))
-        .agg(sum(col("sig")).as("sig"))
-        .join(broadcast(reached.select("s", "node")), Seq("s", "node"),
-          "left_anti")
-        .localCheckpoint(false)
-      val c = next.count()
-      if (c == 0) done = true
-      else {
-        rounds += 1
-        reached = reached
-          .unionAll(next.select(col("s"), col("node"),
-            lit(rounds.toLong).as("h"), col("sig")))
-          .localCheckpoint(false)
-        frontier = next.select("s", "node", "sig")
-      }
-    }
     (reached, rounds)
   }
 
@@ -1390,7 +1326,7 @@ object GraphOps extends QueryGroup {
     val e = edges(spark, sf).localCheckpoint(false)
     val seeds = e.select(col("src").as("node")).distinct()
       .filter(col("node") % 2 === 0 && col("node") < 16) // custkey < 8
-    val (lv, rounds) = bfsSigmaPerSource(e, seeds)
+    val (lv, rounds) = wave(e, seeds, col("node"), sigma = true)
     (e, lv, rounds)
   }
 
@@ -1616,8 +1552,8 @@ object GraphOps extends QueryGroup {
       val e = edges(spark, sf).localCheckpoint(false)
       val seeds = e.select(col("src").as("node")).distinct()
         .filter(col("node") % 2 === 0 && col("node") < 20) // custkey < 10
-      val (levels, rounds) = bfsLevels(e, seeds)
-      levels.withColumn("rounds", lit(rounds))
+      val (levels, rounds) = wave(e, seeds, lit(0L), sigma = false)
+      levels.drop("s").withColumn("rounds", lit(rounds))
     }
 
   /** The Bellman–Ford distance table (node, d) + rounds, same
@@ -1648,7 +1584,7 @@ object GraphOps extends QueryGroup {
       val e = edges(spark, sf).localCheckpoint(false)
       val seeds = e.select(col("src").as("node")).distinct()
         .filter(col("node") % 2 === 0 && col("node") < 16) // custkey < 8
-      val (levels, rounds) = bfsLevelsPerSource(e, seeds)
+      val (levels, rounds) = wave(e, seeds, col("node"), sigma = false)
       levels.withColumn("rounds", lit(rounds))
     }
 
@@ -1764,7 +1700,7 @@ object GraphOps extends QueryGroup {
     for (r <- 1 to 2) {
       val e = bidir(rest).localCheckpoint(false)
       val seeds = seedsOf(rest).localCheckpoint(false)
-      val (lv, rounds) = bfsSigmaPerSource(e, seeds)
+      val (lv, rounds) = wave(e, seeds, col("node"), sigma = true)
       val (_, eacc) = brandesBackward(e, lv, rounds)
       val ebc = eacc
         .groupBy(least(col("node"), col("wnode")).as("u"),
@@ -1889,25 +1825,17 @@ object GraphOps extends QueryGroup {
     * over the checkpointed, monotonically shrinking edge table.
     * Returns (surviving edges, rounds-that-removed-something). */
   def kCoreEdges(e0: DataFrame, k: Int): (DataFrame, Int) = {
-    var e = e0.localCheckpoint(false)
-    var cnt = e.count()
-    var rounds = 0
-    var done = cnt == 0
-    while (!done) {
+    val e = e0.localCheckpoint(false)
+    Fixpoint(e, e.count())(_.count()) { e =>
       val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("node"))
         .localCheckpoint(false)
-      val ne = e
-        .join(broadcast(keep.select(col("node").as("src"))),
+      e.join(broadcast(keep.select(col("node").as("src"))),
           Seq("src"), "left_semi")
         .join(broadcast(keep.select(col("node").as("dst"))),
           Seq("dst"), "left_semi")
         .localCheckpoint(false)
-      val c = ne.count()
-      if (c == cnt) done = true
-      else { rounds += 1; cnt = c; e = ne; if (c == 0) done = true }
     }
-    (e, rounds)
   }
 
   /** Bellman-Ford to STABILITY (r8, same verdict item): relax-all +
@@ -1931,28 +1859,21 @@ object GraphOps extends QueryGroup {
     * either validate w ≥ 0 up front or swap the certificate sum to
     * sum(d cast decimal(38,0)) — the loop shape is unchanged. */
   def bellmanFord(e: DataFrame, seeds: DataFrame): (DataFrame, Int) = {
-    var dist = seeds.select(col("node"), lit(0L).as("d"))
+    val dist = seeds.select(col("node"), lit(0L).as("d"))
       .localCheckpoint(false)
     def stat(df: DataFrame): (Long, Long) = {
       val r = df.agg(count(lit(1)).cast("long"),
         coalesce(sum(col("d")), lit(0L))).collect()(0)
       (r.getLong(0), r.getLong(1))
     }
-    var cur = stat(dist)
-    var rounds = 0
-    var done = false
-    while (!done) {
+    Fixpoint(dist, stat(dist))(stat) { dist =>
       val relax = e
         .join(broadcast(dist.select(col("node").as("src"), col("d"))), "src")
         .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
-      val next = dist.unionAll(relax)
+      dist.unionAll(relax)
         .groupBy("node").agg(min(col("d")).as("d"))
         .localCheckpoint(false)
-      val ns = stat(next)
-      if (ns == cur) done = true
-      else { rounds += 1; cur = ns; dist = next }
     }
-    (dist, rounds)
   }
 
   /** Clamped label spreading to the FIXPOINT (r8 — completes the
@@ -1962,11 +1883,8 @@ object GraphOps extends QueryGroup {
     * fixpoint — one count() per round. Returns (labeled(node, lbl),
     * rounds-that-labeled-something). */
   def labelSpread(e: DataFrame, seeds: DataFrame): (DataFrame, Int) = {
-    var labeled = seeds.localCheckpoint(false)
-    var cnt = labeled.count()
-    var rounds = 0
-    var done = false
-    while (!done) {
+    val labeled = seeds.localCheckpoint(false)
+    Fixpoint(labeled, labeled.count())(_.count()) { labeled =>
       val cand = e
         .join(broadcast(labeled.select(col("node").as("src"), col("lbl"))), "src")
         .select(col("dst").as("node"), col("lbl"))
@@ -1976,12 +1894,8 @@ object GraphOps extends QueryGroup {
         .partitionBy("node").orderBy(col("c").desc, col("lbl").asc)
       val newly = cand.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1).select("node", "lbl")
-      val next = labeled.unionAll(newly).localCheckpoint(false)
-      val c = next.count()
-      if (c == cnt) done = true
-      else { rounds += 1; cnt = c; labeled = next }
+      labeled.unionAll(newly).localCheckpoint(false)
     }
-    (labeled, rounds)
   }
 
   def defs: Seq[QueryDef] = Seq(
@@ -2159,14 +2073,12 @@ object GraphOps extends QueryGroup {
       "sink_tri_counts",
       (spark, sf) => {
         val t = triCountTable(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_tri_counts")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         t.agg(count(lit(1)).as("n_nodes"),
             sum(col("node")).as("node_checksum"),
             sum(col("deg")).as("deg_total"),
             sum(col("n_tri")).as("tri_corner_total"),
             max(col("n_tri")).as("tri_max"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_tri_counts"))
       },
       Some("WITH e AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v " +
         "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey), " +
@@ -2269,14 +2181,12 @@ object GraphOps extends QueryGroup {
       "sink_reach_levels",
       (spark, sf) => {
         val t = reachLevels(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_reach_levels")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         t.agg(count(lit(1)).as("n_nodes"),
             sum(col("node")).as("node_checksum"),
             sum(col("h")).as("hops_total"),
             max(col("h")).as("max_hops"),
             max(col("rounds")).as("rounds"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_reach_levels"))
       },
       Some {
         val nbr = (prev: String, cur: String) =>
@@ -2317,7 +2227,7 @@ object GraphOps extends QueryGroup {
     // |V| BFS waves — intractable; the standard estimator runs a
     // bounded seed SAMPLE (8 smallest customer keys here —
     // deterministic), which is exact for the sampled rows. Distances
-    // ride bfsLevelsPerSource (frontier exhaustion, per-round
+    // ride the per-source wave (frontier exhaustion, per-round
     // checkpoint); the gated rounds column pins the measured depth
     // against the oracle literal, so a deeper graph fails LOUDLY
     // instead of truncating (graph_reachability's contract).
@@ -2384,14 +2294,12 @@ object GraphOps extends QueryGroup {
       "sink_close_levels",
       (spark, sf) => {
         val t = closeLevels(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_close_levels")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         t.agg(count(lit(1)).as("n_rows"),
             sum(col("s")).as("s_checksum"),
             sum(col("node")).as("node_checksum"),
             sum(col("h")).as("hops_total"),
             max(col("rounds")).as("rounds"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_close_levels"))
       },
       Some {
         val nbr = (prev: String, cur: String) =>
@@ -2427,7 +2335,7 @@ object GraphOps extends QueryGroup {
     // (Brandes–Pich) runs the sampled seed set, exact per seed.
     // Forward pass = graph_closeness's synchronized multi-seed BFS
     // with shortest-path COUNTS folded into the wave
-    // (bfsSigmaPerSource — σ costs one extra sum in the frontier
+    // (wave with sigma — σ costs one extra sum in the frontier
     // join); backward pass = Brandes' dependency accumulation over
     // the same round-stamped level table, level by level from the
     // deepest: δ(u) = Σ_{succ w} σ_u·(1 + δ_w)/σ_w, kept EXACT in
@@ -2574,8 +2482,6 @@ object GraphOps extends QueryGroup {
       "sink_brandes_deps",
       (spark, sf) => {
         val deps = brandesDeps(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_brandes_deps")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         deps.groupBy("h")
           .agg(count(lit(1)).as("n_rows"),
             sum(when(col("wnode").isNull, 1L).otherwise(0L))
@@ -2583,7 +2489,7 @@ object GraphOps extends QueryGroup {
             sum(col("c")).as("c_checksum"),
             sum(col("node")).as("node_checksum"),
             max(col("rounds")).as("rounds"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_brandes_deps"))
           .orderBy("h")
       },
       Some {
@@ -2628,8 +2534,6 @@ object GraphOps extends QueryGroup {
       "sink_ebc",
       (spark, sf) => {
         val t = ebcRollup(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_ebc")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         t.agg(count(lit(1)).as("n_pairs"),
             countDistinct(col("node")).as("n_src"),
             sum(col("node")).as("node_checksum"),
@@ -2637,7 +2541,7 @@ object GraphOps extends QueryGroup {
             sum(col("ebc_micro")).as("ebc_checksum"),
             sum(col("n_seeds")).as("seed_rows"),
             max(col("rounds")).as("rounds"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_ebc"))
       },
       Some {
         val H = OracleBetwUnroll
@@ -2681,8 +2585,6 @@ object GraphOps extends QueryGroup {
       "sink_backbone",
       (spark, sf) => {
         val bb = backboneTable(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_backbone")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         bb.agg(count(lit(1)).as("n_edges"),
             countDistinct(col("c")).as("n_cust"),
             countDistinct(col("s")).as("n_supp"),
@@ -2691,7 +2593,7 @@ object GraphOps extends QueryGroup {
             sum(col("m")).as("m_total"),
             min(col("m")).as("m_min"),
             max(col("m")).as("m_max"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_backbone"))
       },
       Some(s"WITH strong3 AS ($BackboneSql) " +
         "SELECT count(*) AS n_edges, count(DISTINCT c) AS n_cust, " +
@@ -2724,15 +2626,13 @@ object GraphOps extends QueryGroup {
       "sink_part_pairs",
       (spark, sf) => {
         val t = partPairTable(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_part_pairs")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         t.agg(count(lit(1)).as("n_pairs"),
             countDistinct(col("u")).as("n_u"),
             sum(col("u")).as("u_checksum"),
             sum(col("v")).as("v_checksum"),
             max(when(col("u") >= col("v"), 1L).otherwise(0L))
               .as("order_violations"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_part_pairs"))
       },
       Some("WITH e AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v " +
         "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey) " +
@@ -2764,8 +2664,6 @@ object GraphOps extends QueryGroup {
       "sink_edges",
       (spark, sf) => {
         val t = edgesTable(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_edges")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         t.agg(count(lit(1)).as("n_edges_directed"),
             countDistinct(col("src")).as("n_nodes"),
             sum(col("src")).as("src_checksum"),
@@ -2773,7 +2671,7 @@ object GraphOps extends QueryGroup {
           .select(col("n_edges_directed"), col("n_nodes"),
             col("src_checksum"), col("dst_checksum"),
             (col("src_checksum") === col("dst_checksum")).as("symmetric"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_edges"))
       },
       Some(s"WITH bp AS ($EdgesSql), " +
         "e AS (SELECT c AS src, s AS dst FROM bp UNION ALL SELECT s, c FROM bp) " +
@@ -2928,7 +2826,7 @@ object GraphOps extends QueryGroup {
     // top-500 backbone: per round, the 8-seed sampled Brandes pass
     // (seeds = the 8 smallest even node ids of the CURRENT remainder
     // — re-drawn as cuts isolate nodes, deterministic both engines)
-    // runs via the same bfsSigmaPerSource + brandesBackward the
+    // runs via the same σ wave + brandesBackward the
     // full-graph operators use, ranks both-direction dependency sums
     // per canonical pair, cuts the top-8 with (ebc, u, v) tiebreaks,
     // and the modularity TRACE — exact integer q_micro per round on
@@ -2995,8 +2893,6 @@ object GraphOps extends QueryGroup {
       "sink_girvan_trace",
       (spark, sf) => {
         val t = girvanTrace(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_girvan_trace")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         t.agg(count(lit(1)).as("n_rounds"),
             sum(col("n_cut")).as("cut_total"),
             sum(col("n_comms")).as("comms_checksum"),
@@ -3004,7 +2900,7 @@ object GraphOps extends QueryGroup {
             min(col("q_micro")).as("q_min"),
             max(col("q_micro")).as("q_max"),
             sum(col("bfs_rounds")).as("bfs_total"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_girvan_trace"))
       },
       Some(s"$GirvanTraceSqlCtes " +
         "SELECT count(*) AS n_rounds, " +
@@ -3172,14 +3068,12 @@ object GraphOps extends QueryGroup {
       "sink_bf_dist",
       (spark, sf) => {
         val t = bfDist(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_bf_dist")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         t.agg(count(lit(1)).as("n_nodes"),
             sum(col("node")).as("node_checksum"),
             sum(col("d")).as("dist_total"),
             max(col("d")).as("max_dist"),
             max(col("rounds")).as("rounds"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_bf_dist"))
       },
       Some {
         val rel = (prev: String, cur: String) =>
@@ -4105,12 +3999,10 @@ object GraphOps extends QueryGroup {
       "sink_louvain_labels",
       (spark, sf) => {
         val lab = louvainLabels(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_louvain_labels")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         lab.groupBy("nc")
           .agg(count(lit(1)).as("n_nodes"),
             sum(col("node")).as("node_checksum"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_louvain_labels"))
           .orderBy("nc")
       },
       Some(s"WITH $louvainL1Sql " +
@@ -4146,14 +4038,12 @@ object GraphOps extends QueryGroup {
       "sink_louvain_l2",
       (spark, sf) => {
         val labc = louvainL2Labels(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_louvain_l2")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         labc.groupBy("nc2")
           .agg(count(lit(1)).as("n_nodes"),
             sum(col("node")).as("node_checksum"),
             countDistinct(col("nc")).as("n_l1"),
             sum(col("nc")).as("l1_checksum"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_louvain_l2"))
           .orderBy("nc2")
       },
       Some(s"WITH $louvainL2Sql " +
@@ -4303,13 +4193,11 @@ object GraphOps extends QueryGroup {
       "sink_walk_corpus",
       (spark, sf) => {
         val walks = walkCorpus(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_walk_corpus")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         walks.groupBy("step")
           .agg(count(lit(1)).as("n_rows"),
             countDistinct(col("node")).as("n_nodes"),
             sum(col("node")).as("node_checksum"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_walk_corpus"))
           .orderBy("step")
       },
       Some(s"WITH $WalksSql SELECT step, count(*) AS n_rows, " +
@@ -4958,14 +4846,12 @@ object GraphOps extends QueryGroup {
       "sink_coreness",
       (spark, sf) => {
         val t = corenessTable(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_coreness")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         t.agg(count(lit(1)).as("n_nodes"),
             sum(col("node")).as("node_checksum"),
             sum(col("c")).as("c_total"),
             sum(col("cp")).as("cp_total"),
             max(col("c")).as("c_max"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_coreness"))
       },
       Some {
         def round(k: Int): String = {
@@ -5055,13 +4941,11 @@ object GraphOps extends QueryGroup {
       "sink_walk_biased",
       (spark, sf) => {
         val walks = biasedWalkCorpus(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_walk_biased")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         walks.groupBy("step")
           .agg(count(lit(1)).as("n_rows"),
             countDistinct(col("node")).as("n_nodes"),
             sum(col("node")).as("node_checksum"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_walk_biased"))
           .orderBy("step")
       },
       Some(s"WITH $BiasedWalksSql SELECT step, count(*) AS n_rows, " +

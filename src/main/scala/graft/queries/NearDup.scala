@@ -271,7 +271,7 @@ object NearDup extends QueryGroup {
     val edges = pairs.select(col("id1").as("src"), col("id2").as("dst"))
       .union(pairs.select(col("id2").as("src"), col("id1").as("dst")))
       .localCheckpoint(false)
-    var lab = edges.select(col("src").as("v")).distinct()
+    val lab0 = edges.select(col("src").as("v")).distinct()
       .select(col("v"), col("v").as("lab"))
     // Convergence-checked propagation: min-label is MONOTONE (each
     // vertex's label can only decrease, because the old label stays in
@@ -281,30 +281,25 @@ object NearDup extends QueryGroup {
     // fixed 6-round unroll, which silently assumed component diameter
     // ≤ 6 (a deeper dup-chain would have failed the recursive-CTE
     // oracle loudly, but failed nonetheless). DECIMAL(38,0) sum can't
-    // overflow at any corpus size. The eager checkpoint each round
-    // both flattens the doubling lineage and makes the convergence
-    // probe read cached partitions instead of re-running the round
-    // (lazy checkpoints measured unstable for per-round loop state —
-    // see SCALING.md's iterative-loop recipe).
-    var prevSum: java.math.BigDecimal = null
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      rounds += 1
-      require(rounds <= 64,
-        "dedup_clusters: label propagation did not converge in 64 rounds")
+    // overflow at any corpus size, and its fixed scale 0 makes
+    // BigDecimal equality a numeric compare. The eager checkpoint each
+    // round both flattens the doubling lineage and makes the
+    // convergence probe read cached partitions instead of re-running
+    // the round (lazy checkpoints measured unstable for per-round loop
+    // state — see SCALING.md's iterative-loop recipe). The first
+    // round compares with null: a null sum means the label table is
+    // empty (no near-dup pairs at all — clean corpus / high tau / tiny
+    // SF), which IS the fixpoint and must converge on round 1, not
+    // spin to the cap; any real sum differs from null, so the initial
+    // table pays no probe.
+    val (lab, _) = Fixpoint(lab0, null: java.math.BigDecimal, 64,
+        "dedup_clusters: label propagation")(
+        _.agg(sum(col("lab").cast("decimal(38,0)"))).head.getDecimal(0)) { lab =>
       val prop = edges
         .join(lab.withColumnRenamed("v", "src"), "src")
         .select(col("dst").as("v"), col("lab"))
-      lab = lab.union(prop).groupBy("v").agg(min(col("lab")).as("lab"))
+      lab.union(prop).groupBy("v").agg(min(col("lab")).as("lab"))
         .localCheckpoint(true)
-      val s = lab.agg(sum(col("lab").cast("decimal(38,0)"))).head.getDecimal(0)
-      // s == null ⟺ the label table is empty (no near-dup pairs at
-      // all — clean corpus / high tau / tiny SF): that IS the fixpoint,
-      // and it must converge on round 1, not spin to the 64-round cap
-      if (s == null || (prevSum != null && s.compareTo(prevSum) == 0))
-        converged = true
-      prevSum = s
     }
     lab.select(col("v").as("doc_id"), col("lab").as("cluster_id"),
       (col("v") === col("lab")).as("is_canonical"))
@@ -337,14 +332,14 @@ object NearDup extends QueryGroup {
     * normalized (u < v) edge list — factored out so [[clustersAuto]]
     * can reuse it above its size threshold. */
   def starContract(e0: DataFrame): DataFrame = {
-    var e = e0
-    var fp: (Long, Long) = null
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      rounds += 1
-      require(rounds <= 48,
-        "dedup_clusters_star: star contraction did not converge in 48 rounds")
+    // the first round compares with null, which no fingerprint equals:
+    // one round always runs, and the input pays no probe
+    val (e, _) = Fixpoint(e0, null: (Long, Long), 48,
+        "dedup_clusters_star: star contraction")({ ss =>
+      val f = ss.agg(count(lit(1)),
+        coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L))).head()
+      (f.getLong(0), f.getLong(1))
+    }) { e =>
       val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
       val mLarge = sym.groupBy("u").agg(min(col("v")).as("mn"))
         .select(col("u"), least(col("mn"), col("u")).as("m"))
@@ -357,18 +352,12 @@ object NearDup extends QueryGroup {
         .filter(col("u") =!= col("v"))
       val symS = ls.select(col("v").as("u"), col("u").as("v")) // v < u side
       val mSmall = symS.groupBy("u").agg(min(col("v")).as("m"))
-      val ss = symS.join(mSmall, "u")
+      symS.join(mSmall, "u")
         .select(col("m").as("u"), col("v"))
         .unionAll(mSmall.select(col("m").as("u"), col("u").as("v")))
         .filter(col("u") =!= col("v"))
         .distinct()
         .localCheckpoint(true)
-      val f = ss.agg(count(lit(1)),
-        coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L))).head()
-      val nf = (f.getLong(0), f.getLong(1))
-      if (fp != null && fp == nf) converged = true
-      fp = nf
-      e = ss
     }
     val members = e.select(col("v").as("doc_id"), col("u").as("cluster_id"),
       lit(false).as("is_canonical"))
@@ -721,14 +710,12 @@ object NearDup extends QueryGroup {
       "sink_neardup_pairs",
       (spark, sf) => {
         val p = corpusPairs(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_neardup_pairs")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         p.agg(count(lit(1)).as("n_pairs"),
             sum(col("id1")).as("id1_checksum"),
             sum(col("id2")).as("id2_checksum"),
             sum(round(col("jac") * 10000, 0).cast("long"))
               .as("jac_bp_total"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_neardup_pairs"))
       },
       Some(s"WITH $TruthPairCtes, " +
         "pr AS (SELECT id1, id2, round(CAST(ni AS DOUBLE)/(n1+n2-ni), 4) AS jac " +
@@ -762,15 +749,13 @@ object NearDup extends QueryGroup {
       "sink_shingle_pairs",
       (spark, sf) => {
         val p = shinglePairTable(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_shingle_pairs")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         p.agg(count(lit(1)).as("n_pairs"),
             sum(col("id1")).as("id1_checksum"),
             sum(col("id2")).as("id2_checksum"),
             sum(col("ni")).as("ni_total"),
             sum(col("n1")).as("n1_total"),
             sum(col("n2")).as("n2_total"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_shingle_pairs"))
       },
       Some(s"WITH $ShingleCtes, " +
         "df AS (SELECT g, count(*) AS df FROM s GROUP BY 1), " +
@@ -804,15 +789,13 @@ object NearDup extends QueryGroup {
       "sink_portable_pairs",
       (spark, sf) => {
         val p = portablePairTable(spark, sf)
-        val dir = SourceOps.sinkDir(spark, sf, "sink_portable_pairs")
-        val nFiles = SourceOps.countPartFiles(spark, dir)
         p.agg(count(lit(1)).as("n_pairs"),
             sum(col("id1")).as("id1_checksum"),
             sum(col("id2")).as("id2_checksum"),
             sum(col("ni")).as("ni_total"),
             sum(col("n1")).as("n1_total"),
             sum(col("n2")).as("n2_total"))
-          .withColumn("n_files", lit(nFiles))
+          .transform(SourceOps.partFileGate(spark, sf, "sink_portable_pairs"))
       },
       Some(s"WITH $PortableShingleSql, " +
         s"okh AS (SELECT h FROM (SELECT h, count(*) AS df FROM s GROUP BY 1) WHERE df <= $MaxBucketDocs), " +

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.{QueryDef, QueryGroup}
@@ -30,7 +31,7 @@ object SourceOps extends QueryGroup {
     * each session a single writer by construction; specs that inspect
     * the written tree (LayoutSinkSpec, CompactionSinkSpec) recompute
     * the same path from their own session. */
-  def sinkDir(spark: org.apache.spark.sql.SparkSession, sf: String,
+  def sinkDir(spark: SparkSession, sf: String,
       name: String): String =
     s"/tmp/graft_${name}_" + new java.io.File(sf).getName +
       "_" + spark.sparkContext.applicationId
@@ -43,12 +44,23 @@ object SourceOps extends QueryGroup {
     * s3a:// alike. A missing dir counts 0 part files, as sessionSink's
     * dirOk reads it: the gate then reports a wrong count instead of
     * throwing. */
-  def countPartFiles(spark: org.apache.spark.sql.SparkSession,
+  def countPartFiles(spark: SparkSession,
       dir: String): Int = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) 0
     else fs.listStatus(p).count(_.getPath.getName.startsWith("part-"))
+  }
+
+  /** The sink layout gate every sink QueryDef applies with
+    * `.transform`: the frame plus an `n_files` column holding the
+    * part-file count of sink `op`'s directory, listed once, when the
+    * gate is built (after the sink itself). The oracles pin the
+    * count as a literal, so a layout change fails the hash. */
+  def partFileGate(spark: SparkSession, sf: String, op: String)
+      : DataFrame => DataFrame = {
+    val n = countPartFiles(spark, sinkDir(spark, sf, op))
+    _.withColumn("n_files", lit(n))
   }
 
   val FixtureDir = "/tmp/graft_passages_fixture"
@@ -300,7 +312,7 @@ object SourceOps extends QueryGroup {
     * the real writer every run (mode=overwrite — the stale-file
     * rationale of [[ensureFixture]]), partition-style dirnames so
     * discovery reconstructs `drop`. */
-  def ensureSchemaEvoFixture(spark: org.apache.spark.sql.SparkSession): String = synchronized {
+  def ensureSchemaEvoFixture(spark: SparkSession): String = synchronized {
     val session = spark
     import session.implicits._
     Seq(("87384008", "165109", 12), ("87384008", "134683", 0),
@@ -459,7 +471,7 @@ object SourceOps extends QueryGroup {
         val b = graft.sources.GtfsCsv.readBundle(spark, dir)
         val trips = b("trips")
         val st = b("stop_times")
-        def one(name: String, df: org.apache.spark.sql.DataFrame) =
+        def one(name: String, df: DataFrame) =
           df.agg(count(lit(1)).as("n_bad"))
             .select(lit(name).as("check_name"), col("n_bad"))
         val svc = b("calendar").select("service_id")
@@ -787,7 +799,7 @@ object SourceOps extends QueryGroup {
     * didn't actually change the file count — flips the hash.
     * CompactionSinkSpec adds the file-level assertions (exact counts,
     * per-file row floor: packed files carry real row groups). */
-  def compactDirs(spark: org.apache.spark.sql.SparkSession,
+  def compactDirs(spark: SparkSession,
       sf: String): (String, String) = {
     val base = sinkDir(spark, sf, "sink_compact")
     (base + "/fragmented", base + "/compacted")
@@ -851,7 +863,7 @@ object SourceOps extends QueryGroup {
         "under the hash) is exactly what a production OPTIMIZE " +
         "emits to its transaction log.")
 
-  def versionedDirs(spark: org.apache.spark.sql.SparkSession,
+  def versionedDirs(spark: SparkSession,
       sf: String): (String, String) = {
     val base = sinkDir(spark, sf, "sink_versioned")
     (base + "/data", base + "/manifests")
@@ -881,7 +893,7 @@ object SourceOps extends QueryGroup {
     * manifests are stable per invocation, and the builder is the
     * single writer for both sink_versioned (snapshot reads) and
     * source_version_diff (incremental reads). */
-  def buildVersioned(spark: org.apache.spark.sql.SparkSession,
+  def buildVersioned(spark: SparkSession,
       sf: String): (String, String) = {
     val (dataDir, manDir) = versionedDirs(spark, sf)
     val ev = graft.engine.Tables.loadEvents(spark, sf)
@@ -1084,7 +1096,7 @@ object SourceOps extends QueryGroup {
     * key, sorted within buckets — the layout every fact⋈fact
     * scaleNote in this repo names as the shuffle eliminator. Session-
     * scoped names (in-memory catalog) + session-unique external paths. */
-  def bucketedTables(spark: org.apache.spark.sql.SparkSession,
+  def bucketedTables(spark: SparkSession,
       sf: String): (String, String) = {
     val sfx = (new java.io.File(sf).getName + "_" +
       spark.sparkContext.applicationId).replaceAll("[^a-zA-Z0-9]", "_")

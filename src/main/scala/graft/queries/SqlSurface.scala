@@ -746,7 +746,7 @@ object SqlSurface extends QueryGroup {
         "per step — the same discipline every DataFrame loop in this " +
         "engine follows (frontier joins against checkpointed edges). " +
         "Unbounded-depth recursions over fact-sized state belong in " +
-        "the explicit loops (dedup_clusters, bfsLevels) where " +
+        "the explicit loops (dedup_clusters, the BFS wave) where " +
         "convergence is certificated per round."),
 
     QueryDef(

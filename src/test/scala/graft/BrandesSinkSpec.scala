@@ -87,7 +87,7 @@ class BrandesSinkSpec extends SparkSpec {
     import spark.implicits._
     val e = Seq.empty[(Long, Long)].toDF("src", "dst")
     val seeds = Seq(1L).toDF("node")
-    val (lv, rounds) = queries.GraphOps.bfsSigmaPerSource(e, seeds)
+    val (lv, rounds) = queries.GraphOps.wave(e, seeds, col("node"), sigma = true)
     assert(rounds == 0)
     val (acc, eacc) = queries.GraphOps.brandesBackward(e, lv, rounds)
     assert(eacc.columns.toSeq == Seq("s", "node", "wnode", "c", "h"))

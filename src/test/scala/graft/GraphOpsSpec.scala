@@ -175,11 +175,12 @@ class GraphOpsSpec extends SparkSpec {
     assert(rounds > 3, s"chain needs > 3 spread rounds, got $rounds")
   }
 
-  test("bfsLevels exhausts a planted chain — the 3-hop level-set form would truncate it") {
+  test("one-source wave exhausts a planted chain — a 3-hop level set would truncate it") {
     val s = spark
     import s.implicits._
     val seeds = Seq(0L).toDF("node")
-    val (lv, rounds) = graft.queries.GraphOps.bfsLevels(chain(12), seeds)
+    val (w, rounds) = graft.queries.GraphOps.wave(chain(12), seeds, lit(0L), sigma = false)
+    val lv = w.drop("s")
     val m = lv.as[(Long, Long)].collect().toMap
     assert(m.size == 12, s"all 12 chain nodes must be reached, got ${m.size}")
     assert(m(11L) == 11L, s"far end is 11 hops out, got ${m.get(11L)}")
@@ -188,14 +189,14 @@ class GraphOpsSpec extends SparkSpec {
     assert((0L to 11L).forall(i => m(i) == i), "each chain node's level = its index")
   }
 
-  test("bfsLevelsPerSource: per-seed exact distances on a planted chain; middle node is closest") {
+  test("wave per source: exact per-seed distances on a planted chain; middle is closest") {
     val s = spark
     import s.implicits._
     // seeds at both ends and the middle of a 9-node path: per-source
     // distances must be exact per seed (not merged), and the MIDDLE
     // node must win closeness — the defining property of the measure
     val seeds = Seq(0L, 4L, 8L).toDF("node")
-    val (lv, rounds) = graft.queries.GraphOps.bfsLevelsPerSource(chain(9), seeds)
+    val (lv, rounds) = graft.queries.GraphOps.wave(chain(9), seeds, col("node"), sigma = false)
     val m = lv.as[(Long, Long, Long)].collect()
       .map { case (src, node, h) => (src, node) -> h }.toMap
     assert(m.size == 27, s"3 seeds × 9 nodes, got ${m.size}")
@@ -209,6 +210,24 @@ class GraphOpsSpec extends SparkSpec {
     val sums = Seq(0L, 4L, 8L).map(src =>
       src -> (0L to 8L).map(v => m((src, v))).sum).toMap
     assert(sums(4L) == 20 && sums(0L) == 36 && sums(8L) == 36)
+  }
+
+  test("wave with sigma counts both shortest paths through a planted diamond") {
+    val s = spark
+    import s.implicits._
+    // 0—1—3 and 0—2—3: node 3 is two hops out along two shortest paths
+    val p = Seq((0L, 1L), (0L, 2L), (1L, 3L), (2L, 3L))
+    val e = (p ++ p.map(_.swap)).toDF("src", "dst")
+    val seeds = Seq(0L).toDF("node")
+    val (lv, rounds) = GraphOps.wave(e, seeds, col("node"), sigma = true)
+    val m = lv.as[(Long, Long, Long, Long)].collect()
+      .map { case (src, node, h, sig) => (src, node) -> (h, sig) }.toMap
+    assert(m === Map((0L, 0L) -> (0L, 1L), (0L, 1L) -> (1L, 1L),
+      (0L, 2L) -> (1L, 1L), (0L, 3L) -> (2L, 2L)))
+    assert(rounds == 2)
+    // without sigma the wave carries no σ column to overflow
+    val (plain, _) = GraphOps.wave(e, seeds, col("node"), sigma = false)
+    assert(plain.columns.toSeq === Seq("s", "node", "h"))
   }
 
   test("pagerankDelta: exact L1 movement on the path fixture; zero at a regular fixpoint") {
