@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.{Dsl, QueryDef, QueryGroup, Tables}
@@ -66,26 +67,31 @@ object CorpusOps extends QueryGroup {
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     for (r <- 1 to nRounds) {
       val ws = split(col("sym"), " ")
-      val best = sym
+      val top = sym
         .select(explode(zip_with(
           slice(ws, lit(1), size(ws) - 1),
           slice(ws, lit(2), size(ws) - 1),
           (x, y) => concat_ws(" ", x, y))).as("pair"), col("f"))
         .groupBy("pair").agg(sum(col("f")).as("cnt"))
         .orderBy(col("cnt").desc, col("pair").asc)
-        .limit(1).collect()(0)
+        .limit(1).collect()
+      require(top.nonEmpty, s"BPE round $r: no adjacent symbol pair left to merge")
+      val best = top(0)
       val bp = best.getAs[String]("pair")
       val bm = bp.replace(" ", "")
       merges += ((r, bp, bm, best.getAs[Long]("cnt")))
-      var changed = true
-      while (changed) {
-        val step = sym.withColumn("sym2",
+      // each replace that fires removes one space, so Σ length(sym)
+      // falls exactly when some row changed; the first pass always
+      // fires (the crowned pair occurs), so no initial probe. The sum
+      // is a map-side reduce: one job per pass, no shuffle stage
+      sym = Fixpoint(sym, -1L, what = s"BPE round $r replace")(
+          _.select(length(col("sym")).cast("long")).as(Encoders.scalaLong)
+            .reduce(_ + _)) {
+        _.select(col("word"),
           trim(replace(concat(lit(" "), col("sym"), lit(" ")),
-            lit(s" $bp "), lit(s" $bm "))))
+            lit(s" $bp "), lit(s" $bm "))).as("sym"), col("f"))
           .localCheckpoint(false)
-        changed = !step.filter(col("sym2") =!= col("sym")).isEmpty
-        sym = step.select(col("word"), col("sym2").as("sym"), col("f"))
-      }
+      }._1
       // post-fixpoint hook: tokenizer_merge_curve snapshots each
       // round's symbol table for its token-count rollup (a plan
       // reference, not an action — nothing runs unless consumed)

@@ -818,94 +818,196 @@ object GraphOps extends QueryGroup {
       "greatest(CAST(0 AS BIGINT), CAST(floor(ln(CAST(n_pairs * t_pairs AS DOUBLE) / CAST(n_center * n_context * 4 AS DOUBLE)) * 1000000.0) AS BIGINT)) AS sppmi_micro " +
       "FROM pairs JOIN nc USING (center) JOIN nx USING (context) CROSS JOIN t)"
 
+  /** The natural geographic partition of the customer/supplier graph,
+    * (node, comm): every node labelled by its nation key, which both
+    * node types share. The starting partition of the Louvain family
+    * and the one graph_modularity and graph_conductance score. */
+  private def nationComm(spark: SparkSession, sf: String): DataFrame =
+    Tables.customer(spark, sf)
+        .select((col("c_custkey") * 2).as("node"), col("c_nationkey").as("comm"))
+      .unionAll(Tables.supplier(spark, sf)
+        .select((col("s_suppkey") * 2 + 1).as("node"), col("s_nationkey").as("comm")))
+
+  /** [[nationComm]] in DuckDB SQL, as a CTE body. */
+  private val NationCommSql =
+    "SELECT c_custkey*2 AS node, c_nationkey AS comm FROM customer " +
+      "UNION ALL SELECT s_suppkey*2+1, s_nationkey FROM supplier"
+
+  /** The directed edge list e (src, dst, …) with both ends labelled by
+    * the node-sized map lab (node, comm): (src, dst, sc, dc). */
+  private def labelled(e: DataFrame, lab: DataFrame): DataFrame =
+    e.join(bcastNodeState(lab.select(col("node").as("src"),
+        col("comm").as("sc"))), Seq("src"))
+      .join(bcastNodeState(lab.select(col("node").as("dst"),
+        col("comm").as("dc"))), Seq("dst"))
+      .select("src", "dst", "sc", "dc")
+
+  /** [[labelled]] in DuckDB SQL: the edge CTE `e` with both ends
+    * labelled by column `c` of the label CTE `lab`, as (src, sc, dc). */
+  private def labelledSql(e: String, lab: String, c: String): String =
+    s"SELECT $e.src, ls.$c AS sc, ld.$c AS dc FROM $e " +
+      s"JOIN $lab ls ON $e.src = ls.node JOIN $lab ld ON $e.dst = ld.node"
+
+  /** The Newman-Girvan modularity rollup of a labelled directed edge
+    * list j (src, sc, dc) against the 1-row total tot (t): per
+    * community (comm, n_nodes, deg_sum, internal_edges, mod_term). e
+    * appears both ways, so e_c/m = internal_directed/t and d_c/2m =
+    * deg_sum/t; every input to the two divisions is an exact integer. */
+  private def modularityTerms(j: DataFrame, tot: DataFrame): DataFrame =
+    j.groupBy(col("sc").as("comm"))
+      .agg(count(lit(1)).as("deg_sum"),
+        sum(when(col("dc") === col("sc"), 1L).otherwise(0L))
+          .as("internal2"),
+        countDistinct(col("src")).as("n_nodes"))
+      .crossJoin(broadcast(tot))
+      .select(col("comm"), col("n_nodes"), col("deg_sum"),
+        expr("internal2 div 2").as("internal_edges"),
+        round(col("internal2").cast("double") / col("t") -
+          (col("deg_sum").cast("double") / col("t")) *
+          (col("deg_sum").cast("double") / col("t")), 6)
+          .as("mod_term"))
+
+  /** [[modularityTerms]] in DuckDB SQL, as a CTE body over the
+    * labelled-edge CTE `j` and the 1-row total CTE `tot` (t). */
+  private def modularitySql(j: String, tot: String): String =
+    "SELECT comm, n_nodes, deg_sum, internal2 // 2 AS internal_edges, " +
+      "round(CAST(internal2 AS DOUBLE) / t.t - (CAST(deg_sum AS DOUBLE)/t.t) * (CAST(deg_sum AS DOUBLE)/t.t), 6) AS mod_term " +
+      "FROM (SELECT sc AS comm, count(DISTINCT src) AS n_nodes, count(*) AS deg_sum, " +
+      "CAST(sum(CASE WHEN dc = sc THEN 1 ELSE 0 END) AS BIGINT) AS internal2 " +
+      s"FROM $j GROUP BY 1) CROSS JOIN $tot t"
+
+  /** One scheduled Louvain move round on the weighted directed edge
+    * list e (src, dst, w), with weighted degrees deg (node, d), the
+    * 1-row total tot (t) and the current labels lab (node, nc). Per
+    * node the candidates are its neighbour communities plus its own
+    * (a 0-weight self row, so a node with no edge into its own
+    * community still evaluates staying); the score is the exact
+    * integer gain t·e_uc − d·(dc − [c = nc]·d), argmax with min-c
+    * tiebreak. Only nodes on bipartite `side` in hash `slice` of
+    * `slices` move to their winner; returns the next labels (node, nc). */
+  private def louvainMove(e: DataFrame, deg: DataFrame, tot: DataFrame,
+      lab: DataFrame, side: Int, slice: Int, slices: Int): DataFrame = {
+    val dct = lab.join(deg, Seq("node"), "left")
+      .groupBy(col("nc").as("c"))
+      .agg(sum(coalesce(col("d"), lit(0L))).as("dc"))
+    val euc = e
+      .join(bcastNodeState(lab.select(col("node").as("dst"),
+        col("nc").as("c"))), Seq("dst"))
+      .groupBy(col("src").as("node"), col("c"))
+      .agg(sum(col("w")).as("e_uc"))
+    val cand = euc.unionByName(
+        deg.join(bcastNodeState(lab), Seq("node"))
+          .select(col("node"), col("nc").as("c"), lit(0L).as("e_uc")))
+      .groupBy("node", "c").agg(sum(col("e_uc")).as("e_uc"))
+    val w = Window.partitionBy("node")
+      .orderBy(col("score").desc, col("c").asc)
+    val winner = cand
+      .join(bcastNodeState(lab), Seq("node"))
+      .join(broadcast(dct), Seq("c"))
+      .join(bcastNodeState(deg), Seq("node"))
+      .crossJoin(broadcast(tot))
+      .withColumn("score", col("t") * col("e_uc") -
+        col("d") * (col("dc") -
+          when(col("c") === col("nc"), col("d")).otherwise(0L)))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1 && col("node") % 2 === side &&
+        pmod(expr("node div 2"), lit(slices)) === slice)
+      .select(col("node"), col("c").as("nc0"))
+    lab.join(winner, Seq("node"), "left")
+      .select(col("node"), coalesce(col("nc0"), col("nc")).as("nc"))
+  }
+
+  /** Round k of a scheduled Louvain sweep in DuckDB SQL — one
+    * [[louvainMove]] plus the label update, as the CTEs
+    * `${p}dct$k` … `${p}lab$k`. Reads the labels `${p}lab${k-1}`
+    * (node, nc), the weighted edge CTE `e` (src, dst, w), the degree
+    * CTE `deg` (node, d) and `tot` (t); round k moves side (k−1) mod 2
+    * in slice ((k−1) div 2) mod `slices`, as [[louvainSweep]] does. */
+  private def louvainRoundSql(p: String, e: String, deg: String,
+      slices: Int)(k: Int): String = {
+    val l = s"${p}lab${k - 1}"
+    val Seq(dct, euc, cand, scored, win) =
+      Seq("dct", "euc", "cand", "scored", "win").map(n => s"$p$n$k")
+    val side = (k - 1) % 2
+    val slice = ((k - 1) / 2) % slices
+    s"$dct AS (SELECT $l.nc AS c, CAST(sum(coalesce($deg.d, 0)) AS BIGINT) AS dc " +
+      s"FROM $l LEFT JOIN $deg ON $l.node = $deg.node GROUP BY 1), " +
+    s"$euc AS (SELECT $e.src AS node, l2.nc AS c, CAST(sum($e.w) AS BIGINT) AS e_uc " +
+      s"FROM $e JOIN $l l2 ON $e.dst = l2.node GROUP BY 1, 2), " +
+    s"$cand AS (SELECT node, c, CAST(sum(e_uc) AS BIGINT) AS e_uc FROM (" +
+      s"SELECT * FROM $euc UNION ALL SELECT $deg.node, $l.nc AS c, 0 AS e_uc " +
+      s"FROM $deg JOIN $l ON $deg.node = $l.node) GROUP BY 1, 2), " +
+    s"$scored AS (SELECT $cand.node, $cand.c, " +
+      s"t.t * $cand.e_uc - $deg.d * ($dct.dc - CASE WHEN $cand.c = $l.nc THEN $deg.d ELSE 0 END) AS score " +
+      s"FROM $cand JOIN $l ON $cand.node = $l.node " +
+      s"JOIN $dct ON $cand.c = $dct.c JOIN $deg ON $cand.node = $deg.node CROSS JOIN tot t), " +
+    s"$win AS (SELECT node, c AS nc0 FROM (SELECT *, " +
+      s"row_number() OVER (PARTITION BY node ORDER BY score DESC, c ASC) AS rn FROM $scored) " +
+      s"WHERE rn = 1 AND node % 2 = $side AND ((node // 2) % $slices) = $slice), " +
+    s"${p}lab$k AS MATERIALIZED (SELECT $l.node, coalesce($win.nc0, $l.nc) AS nc " +
+      s"FROM $l LEFT JOIN $win ON $l.node = $win.node)"
+  }
+
+  /** `rounds` scheduled move rounds from the labels lab0 (node, nc):
+    * round r moves side r mod 2 in slice (r div 2) mod `slices`, and
+    * each round's labels are checkpointed with their stats reset
+    * ([[freshDf]]), so every round plans in O(1). */
+  private def louvainSweep(e: DataFrame, deg: DataFrame, tot: DataFrame,
+      lab0: DataFrame, rounds: Int, slices: Int): DataFrame =
+    (0 until rounds).foldLeft(freshDf(lab0)) { (lab, r) =>
+      freshDf(louvainMove(e, deg, tot, lab, r % 2, (r / 2) % slices, slices))
+    }
+
+  /** The Louvain family's report on labels lab (node, nc): the
+    * modularity rollup of the partition over the edge list e, plus
+    * n_moved_in, the nodes per community whose label is no longer
+    * their nation ([[nationComm]]). */
+  private def movedInReport(spark: SparkSession, sf: String,
+      e: DataFrame, tot: DataFrame, lab: DataFrame): DataFrame = {
+    val movedIn = lab.join(nationComm(spark, sf), Seq("node"))
+      .filter(col("nc") =!= col("comm"))
+      .groupBy(col("nc").as("comm")).agg(count(lit(1)).as("mi"))
+    modularityTerms(labelled(e, lab.select(col("node"), col("nc").as("comm"))), tot)
+      .join(broadcast(movedIn), Seq("comm"), "left")
+      .withColumn("n_moved_in", coalesce(col("mi"), lit(0L)))
+      .drop("mi")
+  }
+
+  /** [[movedInReport]] in DuckDB SQL on the label CTE `lab` (reads the
+    * `e`, `comm` and `tot` CTEs), as the CTEs j2, mi, mt and `rep`. */
+  private def movedInReportSql(lab: String): String =
+    s"j2 AS (${labelledSql("e", lab, "nc")}), " +
+      s"mi AS (SELECT $lab.nc AS comm, count(*) AS mi FROM $lab " +
+      s"JOIN comm ON $lab.node = comm.node WHERE $lab.nc <> comm.comm GROUP BY 1), " +
+      s"mt AS (${modularitySql("j2", "tot")}), " +
+      "rep AS (SELECT mt.comm, n_nodes, deg_sum, internal_edges, mod_term, " +
+      "CAST(coalesce(mi.mi, 0) AS BIGINT) AS n_moved_in " +
+      "FROM mt LEFT JOIN mi ON mt.comm = mi.comm)"
+
   /** Bucket count of the materialized Louvain label table —
     * sink_louvain_labels' file-count gate literal. */
   val LouvainBuckets = 8
 
-  /** The 16-round scheduled level-1 Louvain sweep (graph_louvain_
-    * sweep's loop), factored so graph_louvain_coarsen continues from
-    * the EXACT same labels. Returns (edges, comm0, deg, tot, final
-    * label table) — all checkpointed/stats-reset per the sweep's
-    * discipline. r13 (VERDICT r12 #5): the label table itself reads
-    * from the session sink — the 16 rounds run ONCE per (session,
-    * sf) instead of once per family member (sweep, coarsen and the
-    * sink gate each re-ran them; coarsen alone re-ran all 16 inside
-    * its own build — ~30.9 s family total, 13 % of the r12 bench).
-    * The cheap inputs (one edge distinct + two dim scans + two tiny
-    * aggs) are rebuilt per query; only the round loop is sinked. */
-  private def louvainSweepState(spark: SparkSession, sf: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val e = edges(spark, sf).localCheckpoint(true)
-    val comm0 = Tables.customer(spark, sf)
-        .select((col("c_custkey") * 2).as("node"),
-          col("c_nationkey").as("cu"))
-      .unionAll(Tables.supplier(spark, sf)
-        .select((col("s_suppkey") * 2 + 1).as("node"),
-          col("s_nationkey").as("cu")))
-      .localCheckpoint(true)
-    val deg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("d")).localCheckpoint(true)
-    val tot = e.agg(count(lit(1)).as("t"))
-    (e, comm0, deg, tot, louvainLabels(spark, sf))
-  }
-
   /** The materialized final label table — the 16-round loop body,
     * written once per (session, sf) via sessionSink and read back
-    * bucketed by node. */
+    * bucketed by node. r13 (VERDICT r12 #5): the 16 rounds run ONCE
+    * per (session, sf) instead of once per family member (sweep,
+    * coarsen and the sink gate each re-ran them). */
   def louvainLabels(spark: SparkSession, sf: String): DataFrame =
     sessionSink(spark, sf, "sink_louvain_labels", LouvainBuckets,
       "node", Seq("node"))(louvainSweepLoop(spark, sf))
 
-  /** The raw 16-round loop (pre-sink) — the exact r12
-    * louvainSweepState body. */
+  /** The raw 16-round level-1 sweep (pre-sink): unit-weight edges,
+    * nation labels, 8 slices × 2 sides. */
   private[graft] def louvainSweepLoop(spark: SparkSession, sf: String)
       : DataFrame = {
     val e = edges(spark, sf).localCheckpoint(true)
-    val comm0 = Tables.customer(spark, sf)
-        .select((col("c_custkey") * 2).as("node"),
-          col("c_nationkey").as("cu"))
-      .unionAll(Tables.supplier(spark, sf)
-        .select((col("s_suppkey") * 2 + 1).as("node"),
-          col("s_nationkey").as("cu")))
-      .localCheckpoint(true)
     val deg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("d")).localCheckpoint(true)
     val tot = e.agg(count(lit(1)).as("t"))
-    var lab = freshDf(comm0.select(col("node"), col("cu").as("nc")))
-    for (r <- 0 until 16) {
-      val side = r % 2
-      val slice = (r / 2) % 8
-      val dct = lab.join(deg, Seq("node"), "left")
-        .groupBy(col("nc").as("c"))
-        .agg(sum(coalesce(col("d"), lit(0L))).as("dc"))
-      val euc = e
-        .join(bcastNodeState(lab.select(col("node").as("dst"),
-          col("nc").as("c"))), Seq("dst"))
-        .groupBy(col("src").as("node"), col("c"))
-        .agg(count(lit(1)).as("e_uc"))
-      val cand = euc.unionByName(
-          deg.join(bcastNodeState(lab), Seq("node"))
-            .select(col("node"), col("nc").as("c"),
-              lit(0L).as("e_uc")))
-        .groupBy("node", "c").agg(sum(col("e_uc")).as("e_uc"))
-      val w = Window.partitionBy("node")
-        .orderBy(col("score").desc, col("c").asc)
-      val winner = cand
-        .join(bcastNodeState(lab), Seq("node"))
-        .join(broadcast(dct), Seq("c"))
-        .join(deg, Seq("node"))
-        .crossJoin(broadcast(tot))
-        .withColumn("score", col("t") * col("e_uc") -
-          col("d") * (col("dc") -
-            when(col("c") === col("nc"), col("d")).otherwise(0L)))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1 && col("node") % 2 === side &&
-          pmod(expr("node div 2"), lit(8)) === slice)
-        .select(col("node"), col("c").as("nc0"))
-      lab = freshDf(lab.join(winner, Seq("node"), "left")
-        .select(col("node"), coalesce(col("nc0"), col("nc")).as("nc")))
-    }
-    lab
+    louvainSweep(e.withColumn("w", lit(1L)), deg, tot,
+      nationComm(spark, sf).select(col("node"), col("comm").as("nc")),
+      16, 8)
   }
 
   /** Bucket count of the materialized level-2 composed label table —
@@ -930,59 +1032,26 @@ object GraphOps extends QueryGroup {
       "node", Seq("node"))(louvainL2Loop(spark, sf))
 
   /** The raw contraction + 8-round level-2 sweep + composition
-    * (pre-sink) — the exact r11-r15 graph_louvain_coarsen body up to
-    * (but not including) the modularity rollup. Level 1 reads
-    * sink_louvain_labels; the contracted graph is |communities|-sized
-    * so every per-round table below is tiny by construction. */
+    * (pre-sink). Level 1 reads sink_louvain_labels; the contracted
+    * graph is |communities|-sized so every per-round table below is
+    * tiny by construction. */
   private[graft] def louvainL2Loop(spark: SparkSession, sf: String)
       : DataFrame = {
-    val (e, _, _, tot, lab) = louvainSweepState(spark, sf)
+    val e = edges(spark, sf).localCheckpoint(true)
+    val tot = e.agg(count(lit(1)).as("t"))
+    val lab = louvainLabels(spark, sf)
     // contraction: directed weighted supernode edges (incl. self)
-    val wAll = e
-      .join(bcastNodeState(lab.select(col("node").as("src"),
-        col("nc").as("u"))), Seq("src"))
-      .join(bcastNodeState(lab.select(col("node").as("dst"),
-        col("nc").as("v"))), Seq("dst"))
-      .groupBy("u", "v").agg(count(lit(1)).as("w"))
+    val wAll = labelled(e, lab.select(col("node"), col("nc").as("comm")))
+      .groupBy(col("sc").as("u"), col("dc").as("v"))
+      .agg(count(lit(1)).as("w"))
       .localCheckpoint(true)
     val dw = wAll.groupBy(col("u").as("node"))
       .agg(sum(col("w")).as("d")).localCheckpoint(true)
     val wx = wAll.filter(col("u") =!= col("v"))
       .select(col("u").as("src"), col("v").as("dst"), col("w"))
       .localCheckpoint(true)
-    var lab2 = freshDf(dw.select(col("node"), col("node").as("nc")))
-    for (r <- 0 until 8) {
-      val side = r % 2
-      val slice = (r / 2) % 4
-      val dct = lab2.join(dw, Seq("node"))
-        .groupBy(col("nc").as("c")).agg(sum(col("d")).as("dc"))
-      val euc = wx
-        .join(broadcast(lab2.select(col("node").as("dst"),
-          col("nc").as("c"))), Seq("dst"))
-        .groupBy(col("src").as("node"), col("c"))
-        .agg(sum(col("w")).as("e_uc"))
-      val cand = euc.unionByName(
-          dw.join(broadcast(lab2), Seq("node"))
-            .select(col("node"), col("nc").as("c"),
-              lit(0L).as("e_uc")))
-        .groupBy("node", "c").agg(sum(col("e_uc")).as("e_uc"))
-      val w = Window.partitionBy("node")
-        .orderBy(col("score").desc, col("c").asc)
-      val winner = cand
-        .join(broadcast(lab2), Seq("node"))
-        .join(broadcast(dct), Seq("c"))
-        .join(broadcast(dw), Seq("node"))
-        .crossJoin(broadcast(tot))
-        .withColumn("score", col("t") * col("e_uc") -
-          col("d") * (col("dc") -
-            when(col("c") === col("nc"), col("d")).otherwise(0L)))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1 && col("node") % 2 === side &&
-          pmod(expr("node div 2"), lit(4)) === slice)
-        .select(col("node"), col("c").as("nc0"))
-      lab2 = freshDf(lab2.join(winner, Seq("node"), "left")
-        .select(col("node"), coalesce(col("nc0"), col("nc")).as("nc")))
-    }
+    val lab2 = louvainSweep(wx, dw, tot,
+      dw.select(col("node"), col("node").as("nc")), 8, 4)
     // compose node → level-1 comm → level-2 comm (inner join: a
     // level-1 community is in the contracted graph iff one of its
     // nodes has an edge — the same membership the rollup sees)
@@ -991,40 +1060,23 @@ object GraphOps extends QueryGroup {
       .select(col("node"), col("nc"), col("nc2"))
   }
 
-  /** Level-1 sweep oracle chain (bp, e, comm, deg, tot, lab0 and the
-    * 16 machine-generated rounds, ending at lab16) — shared between
-    * graph_louvain_sweep's oracle and graph_louvain_coarsen's. */
-  private def louvainL1Sql: String = {
-    def round(k: Int): String = {
-      val p = s"lab${k - 1}"
-      val side = (k - 1) % 2
-      val slice = ((k - 1) / 2) % 8
-      s"dct$k AS (SELECT $p.nc AS c, CAST(sum(coalesce(deg.d, 0)) AS BIGINT) AS dc " +
-        s"FROM $p LEFT JOIN deg ON $p.node = deg.node GROUP BY 1), " +
-      s"euc$k AS (SELECT e.src AS node, l2.nc AS c, count(*) AS e_uc " +
-        s"FROM e JOIN $p l2 ON e.dst = l2.node GROUP BY 1, 2), " +
-      s"cand$k AS (SELECT node, c, CAST(sum(e_uc) AS BIGINT) AS e_uc FROM (" +
-        s"SELECT * FROM euc$k UNION ALL SELECT deg.node, $p.nc AS c, 0 AS e_uc " +
-        s"FROM deg JOIN $p ON deg.node = $p.node) GROUP BY 1, 2), " +
-      s"scored$k AS (SELECT cand$k.node, cand$k.c, " +
-        s"t.t * cand$k.e_uc - deg.d * (dct$k.dc - CASE WHEN cand$k.c = $p.nc THEN deg.d ELSE 0 END) AS score " +
-        s"FROM cand$k JOIN $p ON cand$k.node = $p.node " +
-        s"JOIN dct$k ON cand$k.c = dct$k.c JOIN deg ON cand$k.node = deg.node CROSS JOIN tot t), " +
-      s"win$k AS (SELECT node, c AS nc0 FROM (SELECT *, " +
-        s"row_number() OVER (PARTITION BY node ORDER BY score DESC, c ASC) AS rn FROM scored$k) " +
-        s"WHERE rn = 1 AND node % 2 = $side AND ((node // 2) % 8) = $slice), " +
-      s"lab$k AS MATERIALIZED (SELECT $p.node, coalesce(win$k.nc0, $p.nc) AS nc " +
-        s"FROM $p LEFT JOIN win$k ON $p.node = win$k.node)"
-    }
+  /** Level-1 Louvain inputs in DuckDB SQL: bp, the unit-weight edge
+    * list e (src, dst, w), comm, deg, tot and the nation labels lab0 —
+    * graph_louvain_round runs round 1 on them, [[louvainL1Sql]] all 16. */
+  private val LouvainL1InputsSql =
     s"bp AS MATERIALIZED ($EdgesSql), " +
-      "e AS MATERIALIZED (SELECT c AS src, s AS dst FROM bp UNION ALL SELECT s, c FROM bp), " +
-      "comm AS MATERIALIZED (SELECT c_custkey*2 AS node, c_nationkey AS cu FROM customer " +
-      "UNION ALL SELECT s_suppkey*2+1, s_nationkey FROM supplier), " +
+      "e AS MATERIALIZED (SELECT c AS src, s AS dst, 1 AS w FROM bp UNION ALL SELECT s, c, 1 FROM bp), " +
+      s"comm AS MATERIALIZED ($NationCommSql), " +
       "deg AS MATERIALIZED (SELECT src AS node, count(*) AS d FROM e GROUP BY 1), " +
       "tot AS MATERIALIZED (SELECT count(*) AS t FROM e), " +
-      "lab0 AS MATERIALIZED (SELECT node, cu AS nc FROM comm), " +
-      (1 to 16).map(round).mkString(", ")
-  }
+      "lab0 AS MATERIALIZED (SELECT node, comm AS nc FROM comm)"
+
+  /** Level-1 sweep oracle chain (the inputs and the 16 machine-generated
+    * rounds, ending at lab16) — shared between graph_louvain_sweep's
+    * oracle, sink_louvain_labels' and [[louvainL2Sql]]. */
+  private def louvainL1Sql: String =
+    s"$LouvainL1InputsSql, " +
+      (1 to 16).map(louvainRoundSql("", "e", "deg", 8)).mkString(", ")
 
   /** Level-2 oracle chain — [[louvainL1Sql]] plus the contraction
     * (wall/dw/wx), the 8 machine-generated level-2 rounds (blab8),
@@ -1032,38 +1084,15 @@ object GraphOps extends QueryGroup {
     * shared between graph_louvain_coarsen's oracle and
     * sink_louvain_l2's gate so both replay the IDENTICAL 24-round
     * unroll. */
-  private def louvainL2Sql: String = {
-    def round2(k: Int): String = {
-      val p = s"blab${k - 1}"
-      val side = (k - 1) % 2
-      val slice = ((k - 1) / 2) % 4
-      s"bdct$k AS (SELECT $p.nc AS c, CAST(sum(dw.d) AS BIGINT) AS dc " +
-        s"FROM $p JOIN dw ON $p.node = dw.node GROUP BY 1), " +
-      s"beuc$k AS (SELECT wx.u AS node, l2.nc AS c, CAST(sum(wx.w) AS BIGINT) AS e_uc " +
-        s"FROM wx JOIN $p l2 ON wx.v = l2.node GROUP BY 1, 2), " +
-      s"bcand$k AS (SELECT node, c, CAST(sum(e_uc) AS BIGINT) AS e_uc FROM (" +
-        s"SELECT * FROM beuc$k UNION ALL SELECT dw.node, $p.nc AS c, 0 AS e_uc " +
-        s"FROM dw JOIN $p ON dw.node = $p.node) GROUP BY 1, 2), " +
-      s"bscored$k AS (SELECT bcand$k.node, bcand$k.c, " +
-        s"t.t * bcand$k.e_uc - dw.d * (bdct$k.dc - CASE WHEN bcand$k.c = $p.nc THEN dw.d ELSE 0 END) AS score " +
-        s"FROM bcand$k JOIN $p ON bcand$k.node = $p.node " +
-        s"JOIN bdct$k ON bcand$k.c = bdct$k.c JOIN dw ON bcand$k.node = dw.node CROSS JOIN tot t), " +
-      s"bwin$k AS (SELECT node, c AS nc0 FROM (SELECT *, " +
-        s"row_number() OVER (PARTITION BY node ORDER BY score DESC, c ASC) AS rn FROM bscored$k) " +
-        s"WHERE rn = 1 AND node % 2 = $side AND ((node // 2) % 4) = $slice), " +
-      s"blab$k AS MATERIALIZED (SELECT $p.node, coalesce(bwin$k.nc0, $p.nc) AS nc " +
-        s"FROM $p LEFT JOIN bwin$k ON $p.node = bwin$k.node)"
-    }
+  private def louvainL2Sql: String =
     s"$louvainL1Sql, " +
-      "wall AS MATERIALIZED (SELECT ls.nc AS u, ld.nc AS v, count(*) AS w FROM e " +
-      "JOIN lab16 ls ON e.src = ls.node JOIN lab16 ld ON e.dst = ld.node GROUP BY 1, 2), " +
+      s"wall AS MATERIALIZED (SELECT sc AS u, dc AS v, count(*) AS w FROM (${labelledSql("e", "lab16", "nc")}) GROUP BY 1, 2), " +
       "dw AS MATERIALIZED (SELECT u AS node, CAST(sum(w) AS BIGINT) AS d FROM wall GROUP BY 1), " +
-      "wx AS MATERIALIZED (SELECT u, v, w FROM wall WHERE u <> v), " +
+      "wx AS MATERIALIZED (SELECT u AS src, v AS dst, w FROM wall WHERE u <> v), " +
       "blab0 AS MATERIALIZED (SELECT node, node AS nc FROM dw), " +
-      (1 to 8).map(round2).mkString(", ") + ", " +
+      (1 to 8).map(louvainRoundSql("b", "wx", "dw", 4)).mkString(", ") + ", " +
       "labc2 AS MATERIALIZED (SELECT lab16.node, lab16.nc AS nc, blab8.nc AS nc2 " +
       "FROM lab16 JOIN blab8 ON lab16.nc = blab8.node)"
-  }
 
   /** Per-node triangle counts from an undirected unique-pair edge
     * list (u, v) with u < v. Degree-ordered orientation + adjacency-
@@ -1675,12 +1704,7 @@ object GraphOps extends QueryGroup {
         .select(col("node"),
           coalesce(col("cluster_id"), col("node")).as("comm"))
         .localCheckpoint(false)
-      val j = eDir0
-        .join(broadcast(lab.withColumnRenamed("node", "src")
-          .withColumnRenamed("comm", "sc")), Seq("src"))
-        .join(broadcast(lab.withColumnRenamed("node", "dst")
-          .withColumnRenamed("comm", "dc")), Seq("dst"))
-      val q = j.groupBy(col("sc").as("comm"))
+      val q = labelled(eDir0, lab).groupBy(col("sc").as("comm"))
         .agg(count(lit(1)).as("deg_sum"),
           sum(when(col("dc") === col("sc"), 1L).otherwise(0L))
             .as("internal2"))
@@ -1737,9 +1761,7 @@ object GraphOps extends QueryGroup {
         s"UNION SELECT $edges.dst, reach$i.r FROM $edges " +
         s"JOIN reach$i ON $edges.src = reach$i.v), " +
         s"lab$i AS (SELECT v AS node, min(r) AS comm FROM reach$i GROUP BY v), " +
-        s"jj$i AS (SELECT ls.comm AS sc, ld.comm AS dc FROM edir0 " +
-        s"JOIN lab$i ls ON edir0.src = ls.node " +
-        s"JOIN lab$i ld ON edir0.dst = ld.node), " +
+        s"jj$i AS (${labelledSql("edir0", s"lab$i", "comm")}), " +
         s"pc$i AS (SELECT sc, CAST(count(*) AS BIGINT) AS deg_sum, " +
         s"CAST(sum(CASE WHEN dc = sc THEN 1 ELSE 0 END) AS BIGINT) AS internal2 " +
         s"FROM jj$i GROUP BY 1), " +
@@ -2745,25 +2767,9 @@ object GraphOps extends QueryGroup {
           .localCheckpoint(false)
         val eDir = strong.select(col("u").as("src"), col("v").as("dst"))
           .unionAll(strong.select(col("v").as("src"), col("u").as("dst")))
-        val j = eDir
-          .join(broadcast(lab.withColumnRenamed("node", "src")
-            .withColumnRenamed("comm", "sc")), Seq("src"))
-          .join(broadcast(lab.withColumnRenamed("node", "dst")
-            .withColumnRenamed("comm", "dc")), Seq("dst"))
-        val tot = j.agg(count(lit(1)).as("t"))
-        j.groupBy(col("sc").as("comm"))
-          .agg(count(lit(1)).as("deg_sum"),
-            sum(when(col("dc") === col("sc"), 1L).otherwise(0L))
-              .as("internal2"),
-            countDistinct(col("src")).as("n_nodes"))
-          .crossJoin(broadcast(tot))
-          .select(col("comm"), col("n_nodes"), col("deg_sum"),
-            expr("internal2 div 2").as("internal_edges"),
-            round(col("internal2").cast("double") / col("t") -
-              (col("deg_sum").cast("double") / col("t")) *
-              (col("deg_sum").cast("double") / col("t")), 6)
-              .as("mod_term"),
-            lit(GirvanCutK).as("k_cut"))
+        val j = labelled(eDir, lab)
+        modularityTerms(j, j.agg(count(lit(1)).as("t")))
+          .withColumn("k_cut", lit(GirvanCutK))
           .orderBy("comm")
       },
       Some {
@@ -2789,15 +2795,10 @@ object GraphOps extends QueryGroup {
           "UNION SELECT re.dst, reach.r FROM re JOIN reach ON re.src = reach.v), " +
           "lab AS (SELECT v AS node, min(r) AS comm FROM reach GROUP BY v), " +
           "edir AS (SELECT u AS src, v AS dst FROM strong UNION ALL SELECT v, u FROM strong), " +
-          "j AS (SELECT ls.comm AS sc, ld.comm AS dc, edir.src FROM edir " +
-          "JOIN lab ls ON edir.src = ls.node JOIN lab ld ON edir.dst = ld.node), " +
-          "t AS (SELECT count(*) AS t FROM j) " +
-          "SELECT sc AS comm, count(DISTINCT src) AS n_nodes, count(*) AS deg_sum, " +
-          "CAST(sum(CASE WHEN dc = sc THEN 1 ELSE 0 END) AS BIGINT) // 2 AS internal_edges, " +
-          "round(CAST(sum(CASE WHEN dc = sc THEN 1 ELSE 0 END) AS DOUBLE) / any_value(t.t) - " +
-          "(CAST(count(*) AS DOUBLE) / any_value(t.t)) * (CAST(count(*) AS DOUBLE) / any_value(t.t)), 6) AS mod_term, " +
-          s"$GirvanCutK AS k_cut " +
-          "FROM j CROSS JOIN t GROUP BY sc ORDER BY comm"
+          s"j AS (${labelledSql("edir", "lab", "comm")}), " +
+          "t AS (SELECT count(*) AS t FROM j), " +
+          s"mt AS (${modularitySql("j", "t")}) " +
+          s"SELECT *, $GirvanCutK AS k_cut FROM mt ORDER BY comm"
       },
       scaleNote = "One divisive round prices: a bucketed-scan rollup " +
         "of the session Brandes sink (the expensive pass is NOT " +
@@ -3374,46 +3375,19 @@ object GraphOps extends QueryGroup {
     QueryDef(
       "graph_modularity",
       (spark, sf) => {
-        val e = edges(spark, sf)
-        val comm = Tables.customer(spark, sf)
-            .select((col("c_custkey") * 2).as("node"),
-              col("c_nationkey").as("comm"))
-          .unionAll(Tables.supplier(spark, sf)
-            .select((col("s_suppkey") * 2 + 1).as("node"),
-              col("s_nationkey").as("comm")))
-        val j = e
-          .join(broadcast(comm.withColumnRenamed("node", "src")
-            .withColumnRenamed("comm", "sc")), Seq("src"))
-          .join(broadcast(comm.withColumnRenamed("node", "dst")
-            .withColumnRenamed("comm", "dc")), Seq("dst"))
-        val tot = j.agg(count(lit(1)).as("t"))
-        j.groupBy(col("sc").as("nation"))
-          .agg(count(lit(1)).as("deg_sum"),
-            sum(when(col("dc") === col("sc"), 1L).otherwise(0L))
-              .as("internal2"),
-            countDistinct(col("src")).as("n_nodes"))
-          .crossJoin(broadcast(tot))
-          .select(col("nation"), col("n_nodes"), col("deg_sum"),
-            expr("internal2 div 2").as("internal_edges"),
-            round(col("internal2").cast("double") / col("t") -
-              (col("deg_sum").cast("double") / col("t")) *
-              (col("deg_sum").cast("double") / col("t")), 6)
-              .as("mod_term"))
+        val j = labelled(edges(spark, sf), nationComm(spark, sf))
+        modularityTerms(j, j.agg(count(lit(1)).as("t")))
+          .withColumnRenamed("comm", "nation")
           .orderBy("nation")
       },
       Some(s"WITH bp AS ($EdgesSql), " +
         "e AS (SELECT c AS src, s AS dst FROM bp UNION ALL SELECT s, c FROM bp), " +
-        "comm AS (SELECT c_custkey*2 AS node, c_nationkey AS comm FROM customer " +
-        "UNION ALL SELECT s_suppkey*2+1, s_nationkey FROM supplier), " +
-        "j AS (SELECT sc.comm AS sc, dc.comm AS dc, e.src FROM e " +
-        "JOIN comm sc ON e.src = sc.node JOIN comm dc ON e.dst = dc.node), " +
-        "t AS (SELECT count(*) AS t FROM j) " +
-        "SELECT sc AS nation, count(DISTINCT src) AS n_nodes, " +
-        "count(*) AS deg_sum, " +
-        "CAST(sum(CASE WHEN dc = sc THEN 1 ELSE 0 END) AS BIGINT) // 2 AS internal_edges, " +
-        "round(CAST(sum(CASE WHEN dc = sc THEN 1 ELSE 0 END) AS DOUBLE) / any_value(t.t) - " +
-        "(CAST(count(*) AS DOUBLE) / any_value(t.t)) * (CAST(count(*) AS DOUBLE) / any_value(t.t)), 6) AS mod_term " +
-        "FROM j CROSS JOIN t GROUP BY sc ORDER BY nation"),
+        s"comm AS ($NationCommSql), " +
+        s"j AS (${labelledSql("e", "comm", "comm")}), " +
+        "t AS (SELECT count(*) AS t FROM j), " +
+        s"mt AS (${modularitySql("j", "t")}) " +
+        "SELECT comm AS nation, n_nodes, deg_sum, internal_edges, mod_term " +
+        "FROM mt ORDER BY nation"),
       scaleNote = "The node→community map derives from DIM tables " +
         "(|customers|+|suppliers| rows), so both community joins " +
         "broadcast — the edge list is read once and never shuffled " +
@@ -3425,8 +3399,9 @@ object GraphOps extends QueryGroup {
         "bit-stable on any partitioning. Evaluating a DIFFERENT " +
         "partition (label_spread's output, components' labels) is " +
         "the same plan with the comm map swapped for that result — " +
-        "modularity-guided iteration (Louvain's inner loop) reuses " +
-        "this exact aggregate shape per move round."),
+        "graph_girvan_split and the Louvain round, sweep and " +
+        "coarsener each score their partition with this one rollup " +
+        "(modularityTerms), their own label map swapped in."),
 
     // Community CONDUCTANCE (r12) — modularity's complementary
     // quality metric, and the one cut-based community evaluation
@@ -3446,18 +3421,7 @@ object GraphOps extends QueryGroup {
     QueryDef(
       "graph_conductance",
       (spark, sf) => {
-        val e = edges(spark, sf)
-        val comm = Tables.customer(spark, sf)
-            .select((col("c_custkey") * 2).as("node"),
-              col("c_nationkey").as("comm"))
-          .unionAll(Tables.supplier(spark, sf)
-            .select((col("s_suppkey") * 2 + 1).as("node"),
-              col("s_nationkey").as("comm")))
-        val j = e
-          .join(broadcast(comm.withColumnRenamed("node", "src")
-            .withColumnRenamed("comm", "sc")), Seq("src"))
-          .join(broadcast(comm.withColumnRenamed("node", "dst")
-            .withColumnRenamed("comm", "dc")), Seq("dst"))
+        val j = labelled(edges(spark, sf), nationComm(spark, sf))
         val tot = j.agg(count(lit(1)).as("t"))
         val volMin = least(col("vol"), col("t") - col("vol"))
         j.groupBy(col("sc").as("nation"))
@@ -3475,10 +3439,8 @@ object GraphOps extends QueryGroup {
       },
       Some(s"WITH bp AS ($EdgesSql), " +
         "e AS (SELECT c AS src, s AS dst FROM bp UNION ALL SELECT s, c FROM bp), " +
-        "comm AS (SELECT c_custkey*2 AS node, c_nationkey AS comm FROM customer " +
-        "UNION ALL SELECT s_suppkey*2+1, s_nationkey FROM supplier), " +
-        "j AS (SELECT sc.comm AS sc, dc.comm AS dc, e.src FROM e " +
-        "JOIN comm sc ON e.src = sc.node JOIN comm dc ON e.dst = dc.node), " +
+        s"comm AS ($NationCommSql), " +
+        s"j AS (${labelledSql("e", "comm", "comm")}), " +
         "t AS (SELECT count(*) AS t FROM j), " +
         "p AS (SELECT sc AS nation, count(DISTINCT src) AS n_nodes, count(*) AS vol, " +
         "CAST(sum(CASE WHEN dc <> sc THEN 1 ELSE 0 END) AS BIGINT) AS cut_edges, " +
@@ -3534,101 +3496,20 @@ object GraphOps extends QueryGroup {
       "graph_louvain_round",
       (spark, sf) => {
         // r16 (guide §2.4): the edge list feeds FOUR subtrees (deg,
-        // tot, euc, the final rescoring join j2) — checkpoint once so
+        // tot, euc, the final rescoring join) — checkpoint once so
         // the lineitem⋈orders⋈distinct build runs once per
         // invocation, not per subtree.
         val e = edges(spark, sf).localCheckpoint(true)
-        val comm = Tables.customer(spark, sf)
-            .select((col("c_custkey") * 2).as("node"),
-              col("c_nationkey").as("cu"))
-          .unionAll(Tables.supplier(spark, sf)
-            .select((col("s_suppkey") * 2 + 1).as("node"),
-              col("s_nationkey").as("cu")))
         val deg = e.groupBy(col("src").as("node"))
           .agg(count(lit(1)).as("d"))
         val tot = e.agg(count(lit(1)).as("t"))
-        val dct = comm.join(deg, Seq("node"), "left")
-          .groupBy(col("cu").as("c"))
-          .agg(sum(coalesce(col("d"), lit(0L))).as("dc"))
-        val euc = e
-          .join(bcastNodeState(comm.select(col("node").as("dst"),
-            col("cu").as("c"))), Seq("dst"))
-          .groupBy(col("src").as("node"), col("c"))
-          .agg(count(lit(1)).as("e_uc"))
-        val cand = euc.unionByName(
-            deg.join(bcastNodeState(comm), Seq("node"))
-              .select(col("node"), col("cu").as("c"), lit(0L).as("e_uc")))
-          .groupBy("node", "c").agg(sum(col("e_uc")).as("e_uc"))
-        val scored = cand
-          .join(bcastNodeState(comm), Seq("node"))
-          .join(broadcast(dct), Seq("c"))
-          .join(deg, Seq("node"))
-          .crossJoin(broadcast(tot))
-          .withColumn("score", col("t") * col("e_uc") -
-            col("d") * (col("dc") -
-              when(col("c") === col("cu"), col("d")).otherwise(0L)))
-        val w = Window.partitionBy("node")
-          .orderBy(col("score").desc, col("c").asc)
-        val winner = scored.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1 && col("node") % 2 === 0 &&
-            pmod(expr("node div 2"), lit(8)) === 0)
-          .select(col("node"), col("c").as("nc0"))
-        val labels = comm.join(winner, Seq("node"), "left")
-          .select(col("node"), coalesce(col("nc0"), col("cu")).as("nc"),
-            col("cu"))
-        val j2 = e
-          .join(bcastNodeState(labels.select(col("node").as("src"),
-            col("nc").as("sc"))), Seq("src"))
-          .join(bcastNodeState(labels.select(col("node").as("dst"),
-            col("nc").as("dc2"))), Seq("dst"))
-        val movedIn = labels.filter(col("nc") =!= col("cu"))
-          .groupBy(col("nc").as("comm")).agg(count(lit(1)).as("mi"))
-        j2.groupBy(col("sc").as("comm"))
-          .agg(count(lit(1)).as("deg_sum"),
-            sum(when(col("dc2") === col("sc"), 1L).otherwise(0L))
-              .as("internal2"),
-            countDistinct(col("src")).as("n_nodes"))
-          .join(broadcast(movedIn), Seq("comm"), "left")
-          .crossJoin(broadcast(tot))
-          .select(col("comm"), col("n_nodes"), col("deg_sum"),
-            expr("internal2 div 2").as("internal_edges"),
-            round(col("internal2").cast("double") / col("t") -
-              (col("deg_sum").cast("double") / col("t")) *
-              (col("deg_sum").cast("double") / col("t")), 6)
-              .as("mod_term"),
-            coalesce(col("mi"), lit(0L)).as("n_moved_in"))
-          .orderBy("comm")
+        val lab = louvainMove(e.withColumn("w", lit(1L)), deg, tot,
+          nationComm(spark, sf).select(col("node"), col("comm").as("nc")),
+          0, 0, 8)
+        movedInReport(spark, sf, e, tot, lab).orderBy("comm")
       },
-      Some(s"WITH bp AS ($EdgesSql), " +
-        "e AS (SELECT c AS src, s AS dst FROM bp UNION ALL SELECT s, c FROM bp), " +
-        "comm AS (SELECT c_custkey*2 AS node, c_nationkey AS cu FROM customer " +
-        "UNION ALL SELECT s_suppkey*2+1, s_nationkey FROM supplier), " +
-        "deg AS (SELECT src AS node, count(*) AS d FROM e GROUP BY 1), " +
-        "tot AS (SELECT count(*) AS t FROM e), " +
-        "dct AS (SELECT cu AS c, CAST(sum(coalesce(d, 0)) AS BIGINT) AS dc " +
-        "FROM comm LEFT JOIN deg ON comm.node = deg.node GROUP BY 1), " +
-        "euc AS (SELECT e.src AS node, c2.cu AS c, count(*) AS e_uc " +
-        "FROM e JOIN comm c2 ON e.dst = c2.node GROUP BY 1, 2), " +
-        "cand AS (SELECT node, c, CAST(sum(e_uc) AS BIGINT) AS e_uc FROM (" +
-        "SELECT * FROM euc UNION ALL SELECT deg.node, comm.cu AS c, 0 AS e_uc " +
-        "FROM deg JOIN comm ON deg.node = comm.node) GROUP BY 1, 2), " +
-        "scored AS (SELECT cand.node, cand.c, " +
-        "t.t * cand.e_uc - deg.d * (dct.dc - CASE WHEN cand.c = comm.cu THEN deg.d ELSE 0 END) AS score " +
-        "FROM cand JOIN comm ON cand.node = comm.node " +
-        "JOIN dct ON cand.c = dct.c JOIN deg ON cand.node = deg.node CROSS JOIN tot t), " +
-        "win AS (SELECT node, c AS nc0 FROM (SELECT *, " +
-        "row_number() OVER (PARTITION BY node ORDER BY score DESC, c ASC) AS rn FROM scored) WHERE rn = 1 AND node % 2 = 0 AND ((node // 2) % 8) = 0), " +
-        "lab AS (SELECT comm.node, coalesce(win.nc0, comm.cu) AS nc, comm.cu " +
-        "FROM comm LEFT JOIN win ON comm.node = win.node), " +
-        "j2 AS (SELECT ls.nc AS sc, ld.nc AS dc2, e.src FROM e " +
-        "JOIN lab ls ON e.src = ls.node JOIN lab ld ON e.dst = ld.node), " +
-        "mi AS (SELECT nc AS comm, count(*) AS mi FROM lab WHERE nc <> cu GROUP BY 1), " +
-        "roll AS (SELECT sc AS comm, count(DISTINCT src) AS n_nodes, count(*) AS deg_sum, " +
-        "CAST(sum(CASE WHEN dc2 = sc THEN 1 ELSE 0 END) AS BIGINT) AS internal2 FROM j2 GROUP BY 1) " +
-        "SELECT roll.comm, n_nodes, deg_sum, internal2 // 2 AS internal_edges, " +
-        "round(CAST(internal2 AS DOUBLE) / t.t - (CAST(deg_sum AS DOUBLE)/t.t) * (CAST(deg_sum AS DOUBLE)/t.t), 6) AS mod_term, " +
-        "CAST(coalesce(mi.mi, 0) AS BIGINT) AS n_moved_in " +
-        "FROM roll LEFT JOIN mi ON roll.comm = mi.comm CROSS JOIN tot t ORDER BY roll.comm"),
+      Some(s"WITH $LouvainL1InputsSql, ${louvainRoundSql("", "e", "deg", 8)(1)}, " +
+        s"${movedInReportSql("lab1")} SELECT * FROM rep ORDER BY comm"),
       scaleNote = "Every join against node→community state " +
         "broadcasts (the map derives from DIM tables; past broadcast " +
         "size it co-partitions with the edge list on src/dst — the " +
@@ -3822,47 +3703,17 @@ object GraphOps extends QueryGroup {
     QueryDef(
       "graph_louvain_sweep",
       (spark, sf) => {
-        val (e, comm0, _, tot, lab) = louvainSweepState(spark, sf)
-        val j2 = e
-          .join(bcastNodeState(lab.select(col("node").as("src"),
-            col("nc").as("sc"))), Seq("src"))
-          .join(bcastNodeState(lab.select(col("node").as("dst"),
-            col("nc").as("dc2"))), Seq("dst"))
-        val movedIn = lab.join(comm0, Seq("node"))
-          .filter(col("nc") =!= col("cu"))
-          .groupBy(col("nc").as("comm")).agg(count(lit(1)).as("mi"))
-        j2.groupBy(col("sc").as("comm"))
-          .agg(count(lit(1)).as("deg_sum"),
-            sum(when(col("dc2") === col("sc"), 1L).otherwise(0L))
-              .as("internal2"),
-            countDistinct(col("src")).as("n_nodes"))
-          .join(broadcast(movedIn), Seq("comm"), "left")
-          .crossJoin(broadcast(tot))
-          .select(col("comm"), col("n_nodes"), col("deg_sum"),
-            expr("internal2 div 2").as("internal_edges"),
-            round(col("internal2").cast("double") / col("t") -
-              (col("deg_sum").cast("double") / col("t")) *
-              (col("deg_sum").cast("double") / col("t")), 6)
-              .as("mod_term"),
-            coalesce(col("mi"), lit(0L)).as("n_moved_in"),
-            lit(16).as("rounds"))
+        val e = edges(spark, sf).localCheckpoint(true)
+        val tot = e.agg(count(lit(1)).as("t"))
+        movedInReport(spark, sf, e, tot, louvainLabels(spark, sf))
+          .withColumn("rounds", lit(16))
           .orderBy("comm")
       },
-      Some {
-        s"WITH $louvainL1Sql, " +
-          "j2 AS (SELECT ls.nc AS sc, ld.nc AS dc2, e.src FROM e " +
-          "JOIN lab16 ls ON e.src = ls.node JOIN lab16 ld ON e.dst = ld.node), " +
-          "mi AS (SELECT lab16.nc AS comm, count(*) AS mi FROM lab16 " +
-          "JOIN comm ON lab16.node = comm.node WHERE lab16.nc <> comm.cu GROUP BY 1), " +
-          "roll AS (SELECT sc AS comm, count(DISTINCT src) AS n_nodes, count(*) AS deg_sum, " +
-          "CAST(sum(CASE WHEN dc2 = sc THEN 1 ELSE 0 END) AS BIGINT) AS internal2 FROM j2 GROUP BY 1) " +
-          "SELECT roll.comm, n_nodes, deg_sum, internal2 // 2 AS internal_edges, " +
-          "round(CAST(internal2 AS DOUBLE) / t.t - (CAST(deg_sum AS DOUBLE)/t.t) * (CAST(deg_sum AS DOUBLE)/t.t), 6) AS mod_term, " +
-          "CAST(coalesce(mi.mi, 0) AS BIGINT) AS n_moved_in, 16 AS rounds " +
-          "FROM roll LEFT JOIN mi ON roll.comm = mi.comm CROSS JOIN tot t ORDER BY roll.comm"
-      },
-      scaleNote = "Per round the plan is graph_louvain_round's " +
-        "exactly (broadcast/co-partitioned label joins, the argmax " +
+      Some(s"WITH $louvainL1Sql, ${movedInReportSql("lab16")} " +
+        "SELECT *, 16 AS rounds FROM rep ORDER BY comm"),
+      scaleNote = "Each round is one louvainMove, the plan " +
+        "graph_louvain_round runs once (broadcast/co-partitioned " +
+        "label joins, the argmax " +
         "window riding the candidate groupBy's src partitioning), " +
         "×16 with labels eagerly checkpointed between rounds so " +
         "lineage stays flat and each round's shuffle work is " +
@@ -3930,39 +3781,21 @@ object GraphOps extends QueryGroup {
         val merged = labc.select(col("nc"), col("nc2")).distinct()
           .groupBy(col("nc2").as("comm"))
           .agg(count(lit(1)).as("n_comms1"))
-        val j2 = e
-          .join(bcastNodeState(labc.select(col("node").as("src"),
-            col("nc2").as("sc"))), Seq("src"))
-          .join(bcastNodeState(labc.select(col("node").as("dst"),
-            col("nc2").as("dc2"))), Seq("dst"))
-        j2.groupBy(col("sc").as("comm"))
-          .agg(count(lit(1)).as("deg_sum"),
-            sum(when(col("dc2") === col("sc"), 1L).otherwise(0L))
-              .as("internal2"),
-            countDistinct(col("src")).as("n_nodes"))
+        modularityTerms(labelled(e,
+            labc.select(col("node"), col("nc2").as("comm"))), tot)
           .join(broadcast(merged), Seq("comm"))
-          .crossJoin(broadcast(tot))
           .select(col("comm"), col("n_nodes"), col("n_comms1"),
-            col("deg_sum"),
-            expr("internal2 div 2").as("internal_edges"),
-            round(col("internal2").cast("double") / col("t") -
-              (col("deg_sum").cast("double") / col("t")) *
-              (col("deg_sum").cast("double") / col("t")), 6)
-              .as("mod_term"),
+            col("deg_sum"), col("internal_edges"), col("mod_term"),
             lit(8).as("rounds2"))
           .orderBy("comm")
       },
       Some(s"WITH $louvainL2Sql, " +
         "mg AS (SELECT nc AS comm, count(*) AS n_comms1 FROM blab8 GROUP BY 1), " +
-        "j2 AS (SELECT ls.nc2 AS sc, ld.nc2 AS dc2, e.src FROM e " +
-        "JOIN labc2 ls ON e.src = ls.node JOIN labc2 ld ON e.dst = ld.node), " +
-        "roll AS (SELECT sc AS comm, count(DISTINCT src) AS n_nodes, count(*) AS deg_sum, " +
-        "CAST(sum(CASE WHEN dc2 = sc THEN 1 ELSE 0 END) AS BIGINT) AS internal2 FROM j2 GROUP BY 1) " +
-        "SELECT roll.comm, n_nodes, CAST(mg.n_comms1 AS BIGINT) AS n_comms1, deg_sum, " +
-        "internal2 // 2 AS internal_edges, " +
-        "round(CAST(internal2 AS DOUBLE) / t.t - (CAST(deg_sum AS DOUBLE)/t.t) * (CAST(deg_sum AS DOUBLE)/t.t), 6) AS mod_term, " +
-        "8 AS rounds2 " +
-        "FROM roll JOIN mg ON roll.comm = mg.comm CROSS JOIN tot t ORDER BY roll.comm"),
+        s"j2 AS (${labelledSql("e", "labc2", "nc2")}), " +
+        s"mt AS (${modularitySql("j2", "tot")}) " +
+        "SELECT mt.comm, n_nodes, CAST(mg.n_comms1 AS BIGINT) AS n_comms1, deg_sum, " +
+        "internal_edges, mod_term, 8 AS rounds2 " +
+        "FROM mt JOIN mg ON mt.comm = mg.comm ORDER BY mt.comm"),
       scaleNote = "The coarsening step is ONE groupBy over the " +
         "labeled edge list (the same two label joins the sweep's " +
         "rollup already does), and everything after it runs on a " +
@@ -4012,8 +3845,8 @@ object GraphOps extends QueryGroup {
         "GROUP BY nc ORDER BY nc"),
       scaleNote = "The sink moves the 16-round sweep from " +
         "every-family-query to once-per-session: each round is " +
-        "graph_louvain_round's plan (broadcast/co-partitioned label " +
-        "joins, integer argmax), and every consumer — the sweep " +
+        "one louvainMove (broadcast/co-partitioned label joins, " +
+        "integer argmax), and every consumer — the sweep " +
         "rollup, the coarsener (which previously re-ran ALL 16 " +
         "rounds inside its own build), deeper hierarchy levels, any " +
         "community-conditioned downstream op — drops to a bucketed " +

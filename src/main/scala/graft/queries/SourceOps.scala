@@ -92,20 +92,22 @@ object SourceOps extends QueryGroup {
     "87384008.xml" -> doc("87384008", Seq(
       train("134657", "POPI", "87393009", "R", "23/08/2026 06:55", None))))
 
-  /** Idempotently materialize the fixture; returns the directory. */
-  def ensureFixture(): String = synchronized {
-    val d = new java.io.File(FixtureDir)
-    if (!d.exists()) d.mkdirs()
-    Documents.foreach { case (name, content) =>
-      val f = new java.io.File(d, name)
-      // unconditional write: a stale file from an older revision (or
-      // anything else squatting in /tmp) would otherwise silently feed
-      // wrong XML into the oracled query — the files are tiny
-      // constants, so the overwrite is free
-      java.nio.file.Files.write(f.toPath, content.getBytes("UTF-8"))
+  /** Idempotently materialize a fixture: every (name, content) file
+    * under `dir` as UTF-8; returns `dir`. The write is unconditional:
+    * a stale file from an older revision (or anything else squatting
+    * in /tmp) would otherwise silently feed wrong input into the
+    * oracled query — the files are tiny constants, so the overwrite
+    * is free. */
+  def writeFixture(dir: String, files: Seq[(String, String)]): String =
+    synchronized {
+      val d = new java.io.File(dir)
+      d.mkdirs()
+      files.foreach { case (name, content) =>
+        java.nio.file.Files.write(new java.io.File(d, name).toPath,
+          content.getBytes("UTF-8"))
+      }
+      dir
     }
-    FixtureDir
-  }
 
   /** The same raw rows as a DuckDB VALUES table (the oracle's ground
     * truth for what the XML parse must produce). */
@@ -131,24 +133,12 @@ object SourceOps extends QueryGroup {
       """{"page":3,"station":"87758011","polled_at":"2026-08-23 06:00:00","records":[{"num":"221006","delay_min":0,"state":"ontime"},{"num":"165435","delay_min":3,"state":"late"}]}""",
       """{"page":4,"station":"87384008","polled_at":"2026-08-23 06:20:00","records":[]}""").mkString("", "\n", "\n"))
 
-  /** Idempotently materialize the JSONL fixture (unconditional write —
-    * same staleness rationale as [[ensureFixture]]). */
-  def ensureJsonlFixture(): String = synchronized {
-    val d = new java.io.File(JsonlFixtureDir)
-    if (!d.exists()) d.mkdirs()
-    JsonlDocuments.foreach { case (name, content) =>
-      java.nio.file.Files.write(new java.io.File(d, name).toPath,
-        content.getBytes("UTF-8"))
-    }
-    JsonlFixtureDir
-  }
-
   val QuarantineFixtureDir = "/tmp/graft_quarantine_fixture"
 
   /** Two JSONL files with three malformed lines planted among four
     * good ones — good lines AFTER bad ones prove per-line recovery.
     * The raw bad lines are restated verbatim in the oracle. */
-  private val QuarantineDocuments: Seq[(String, String)] = Seq(
+  private[graft] val QuarantineDocuments: Seq[(String, String)] = Seq(
     "q_a.jsonl" -> Seq(
       """{"page":1,"station":"87393009","num":"134657","delay_min":12}""",
       """{"page":2,"station":"87393009","num":"134659","delay_min":0}""",
@@ -158,16 +148,6 @@ object SourceOps extends QueryGroup {
       "garbage line not json",
       """{"page":5,"station":"87384008","num":"134683","delay_min":7}""",
       """{"page":6,"statio""").mkString("", "\n", "\n"))
-
-  def ensureQuarantineFixture(): String = synchronized {
-    val d = new java.io.File(QuarantineFixtureDir)
-    if (!d.exists()) d.mkdirs()
-    QuarantineDocuments.foreach { case (name, content) =>
-      java.nio.file.Files.write(new java.io.File(d, name).toPath,
-        content.getBytes("UTF-8"))
-    }
-    QuarantineFixtureDir
-  }
 
   val GtfsFixtureDir = "/tmp/graft_gtfs_fixture"
 
@@ -206,18 +186,6 @@ object SourceOps extends QueryGroup {
       "S_EXC,20170520,1",
       "S_WEEK,20170521,2",
       "S_EXC,20170527,1").mkString("", "\n", "\n"))
-
-  /** Idempotently materialize the GTFS bundle (unconditional write —
-    * same staleness rationale as [[ensureFixture]]). */
-  def ensureGtfsFixture(): String = synchronized {
-    val d = new java.io.File(GtfsFixtureDir)
-    if (!d.exists()) d.mkdirs()
-    GtfsFiles.foreach { case (name, content) =>
-      java.nio.file.Files.write(new java.io.File(d, name).toPath,
-        content.getBytes("UTF-8"))
-    }
-    GtfsFixtureDir
-  }
 
   /** DuckDB re-read of one bundle file with the same all-VARCHAR
     * discipline the Spark reader declares (GTFS is all-text by spec;
@@ -271,46 +239,26 @@ object SourceOps extends QueryGroup {
       "service_id,date,exception_type",
       "SVC_CD,20170520,1").mkString("", "\n", "\n"))
 
-  /** Idempotently materialize the dirty bundle (unconditional write —
-    * same staleness rationale as [[ensureFixture]]). */
-  def ensureGtfsDirtyFixture(): String = synchronized {
-    val d = new java.io.File(GtfsDirtyDir)
-    if (!d.exists()) d.mkdirs()
-    GtfsDirtyFiles.foreach { case (name, content) =>
-      java.nio.file.Files.write(new java.io.File(d, name).toPath,
-        content.getBytes("UTF-8"))
-    }
-    GtfsDirtyDir
-  }
-
   val FixedWidthDir = "/tmp/graft_fixedwidth_fixture"
 
   /** Fixed-width legacy export — layout station(8) · train(6,
     * left-aligned space-padded) · delay(4, RIGHT-aligned, signed) ·
     * status(10, left-aligned). Rows plant every parse edge: negative
     * delay, zero, a short train number with pad spaces, max padding. */
-  private val FixedWidthLines: String = Seq(
-    "87384008165109  12Retarde   ",
-    "87393009134657   0OnTime    ",
-    "87393009221004  -3Early     ",
-    "877580119241   105Retarde   ",
-    "87384008777100   7Supprime  ").mkString("", "\n", "\n")
-
-  /** Idempotently materialize the fixed-width fixture. */
-  def ensureFixedWidthFixture(): String = synchronized {
-    val d = new java.io.File(FixedWidthDir)
-    if (!d.exists()) d.mkdirs()
-    java.nio.file.Files.write(new java.io.File(d, "export.dat").toPath,
-      FixedWidthLines.getBytes("UTF-8"))
-    FixedWidthDir
-  }
+  private val FixedWidthFiles: Seq[(String, String)] = Seq(
+    "export.dat" -> Seq(
+      "87384008165109  12Retarde   ",
+      "87393009134657   0OnTime    ",
+      "87393009221004  -3Early     ",
+      "877580119241   105Retarde   ",
+      "87384008777100   7Supprime  ").mkString("", "\n", "\n"))
 
   val SchemaEvoDir = "/tmp/graft_schema_evo_fixture"
 
   /** Two parquet drops of the same feed with an evolved schema: drop=1
     * predates the `status` column, drop=2 carries it. Written through
     * the real writer every run (mode=overwrite — the stale-file
-    * rationale of [[ensureFixture]]), partition-style dirnames so
+    * rationale of [[writeFixture]]), partition-style dirnames so
     * discovery reconstructs `drop`. */
   def ensureSchemaEvoFixture(spark: SparkSession): String = synchronized {
     val session = spark
@@ -338,7 +286,7 @@ object SourceOps extends QueryGroup {
     QueryDef(
       "source_passages_board",
       (spark, _) => {
-        val dir = ensureFixture()
+        val dir = writeFixture(FixtureDir, Documents)
         val p = spark.read
           .format("graft.sources.dsv2.PassagesSource").load(dir)
         // the domain board rule (Transit.stationBoard) across every
@@ -365,7 +313,7 @@ object SourceOps extends QueryGroup {
     QueryDef(
       "source_api_jsonl",
       (spark, _) => {
-        val dir = ensureJsonlFixture()
+        val dir = writeFixture(JsonlFixtureDir, JsonlDocuments)
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
           "page INT, station STRING, polled_at STRING, " +
             "records ARRAY<STRUCT<num: STRING, delay_min: INT, state: STRING>>")
@@ -406,7 +354,7 @@ object SourceOps extends QueryGroup {
     QueryDef(
       "source_gtfs_csv",
       (spark, _) => {
-        val dir = ensureGtfsFixture()
+        val dir = writeFixture(GtfsFixtureDir, GtfsFiles)
         val b = graft.sources.GtfsCsv.readBundle(spark, dir)
         val exc = b("calendar_dates").groupBy("service_id")
           .agg(count(lit(1)).as("n_exceptions"))
@@ -467,7 +415,7 @@ object SourceOps extends QueryGroup {
     QueryDef(
       "gtfs_feed_validate",
       (spark, _) => {
-        val dir = ensureGtfsDirtyFixture()
+        val dir = writeFixture(GtfsDirtyDir, GtfsDirtyFiles)
         val b = graft.sources.GtfsCsv.readBundle(spark, dir)
         val trips = b("trips")
         val st = b("stop_times")
@@ -534,7 +482,7 @@ object SourceOps extends QueryGroup {
     QueryDef(
       "source_fixed_width",
       (spark, _) => {
-        val dir = ensureFixedWidthFixture()
+        val dir = writeFixture(FixedWidthDir, FixedWidthFiles)
         spark.read.text(dir)
           .select(
             substring(col("value"), 1, 8).as("station_id"),
@@ -665,7 +613,7 @@ object SourceOps extends QueryGroup {
     QueryDef(
       "source_quarantine",
       (spark, _) => {
-        val dir = ensureQuarantineFixture()
+        val dir = writeFixture(QuarantineFixtureDir, QuarantineDocuments)
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
           "page INT, station STRING, num STRING, delay_min INT, " +
             "_corrupt_record STRING")

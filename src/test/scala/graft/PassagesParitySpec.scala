@@ -80,7 +80,8 @@ class PassagesParitySpec extends SparkSpec {
   }
 
   test("XmlPassages.read matches the from_xml parse on the source_passages_board fixture") {
-    val dir = graft.queries.SourceOps.ensureFixture()
+    val dir = graft.queries.SourceOps.writeFixture(
+      graft.queries.SourceOps.FixtureDir, graft.queries.SourceOps.Documents)
     val got = tuples(XmlPassages.read(spark, dir, "2026-08-23", "06:00"))
     assert(got == tuples(oracle(spark, dir, "2026-08-23", "06:00")))
     assert(got.length == 6)

@@ -1451,7 +1451,8 @@ class StreamingSpec extends SparkSpec {
     // the SAME planted lines the batch source_quarantine fixture
     // ships, fed as two micro-batches with a bad line mid-batch —
     // the stream must neither die at it nor drop it
-    graft.queries.SourceOps.ensureQuarantineFixture()
+    graft.queries.SourceOps.writeFixture(graft.queries.SourceOps.QuarantineFixtureDir,
+      graft.queries.SourceOps.QuarantineDocuments)
     val lines = Seq(
       """{"page":1,"station":"87393009","num":"134657","delay_min":12}""",
       """{"page":2,"station":"87393009","num":"134659","delay_min":0}""",
