@@ -94,11 +94,6 @@ object AnnKmeans extends QueryGroup {
       update(vecs, assign(vecs, cents))
     }
 
-  /** Bucket count of the materialized k-means model — sink_kmeans_
-    * model's file-count gate literal (3 iters × K rows; 1 bucket —
-    * single-writer by construction). */
-  val KmeansModelBuckets = 1
-
   /** The Lloyd TRAINING HISTORY (iter 0..Iters, cid, centroid array,
     * cnorm2, per-cell assignment count + WCSS) materialized ONCE per
     * (session, sf) — r16, VERDICT r15 "next" #4: ann_kmeans re-ran
@@ -110,11 +105,10 @@ object AnnKmeans extends QueryGroup {
     * the serve path — one assignment pass + the recall probes
     * against the stored centroids. iter 0 is the seed with its
     * assignment's stats; per-cell WCSS sums are exact BIGINTs, so
-    * Σ wcss_c over an iter IS the iter's total WCSS bit-for-bit. */
-  def kmeansModel(spark: SparkSession, sf: String): DataFrame =
-    GraphOps.sessionSink(spark, sf, "sink_kmeans_model",
-      KmeansModelBuckets, "iter", Seq("iter", "cid"))(
-      kmeansModelBuild(spark, sf))
+    * Σ wcss_c over an iter IS the iter's total WCSS bit-for-bit.
+    * 3 iters × K rows in 1 bucket. */
+  val kmeansModel = Sink("sink_kmeans_model", 1, "iter",
+    Seq("iter", "cid"))(kmeansModelBuild)
 
   /** The raw training-history build (pre-sink) — the exact r15
     * ann_kmeans Lloyd chain, with each iter's centroids LEFT-joined
@@ -256,28 +250,23 @@ object AnnKmeans extends QueryGroup {
     // alive at the final iter, part-file count == the pinned bucket
     // literal) are booleans a correct build makes TRUE on any
     // partition layout.
-    QueryDef(
-      "sink_kmeans_model",
-      (spark, sf) => {
-        val m = kmeansModel(spark, sf)
-        val byIter = m.groupBy("iter")
-          .agg(sum(col("n_vec")).as("nv"), sum(col("wcss_c")).as("w"),
-            sum(when(col("n_vec") > 0, 1).otherwise(0)).as("live"))
-        byIter
-          .agg(max(when(col("iter") === 2, col("nv"))).as("nv2"),
-            min(col("nv")).as("nvmin"), max(col("nv")).as("nvmax"),
-            max(when(col("iter") === 0, col("w"))).as("w0"),
-            max(when(col("iter") === 2, col("w"))).as("w2"),
-            max(when(col("iter") === 2, col("live"))).as("live2"),
-            count(lit(1)).as("n_iters"))
-          .select(col("nv2").as("n_vectors"), col("n_iters"),
-            (col("nvmin") === col("nvmax")).as("assigned_closed"),
-            (col("w2") <= col("w0")).as("wcss_nonincreasing"),
-            (col("live2") === K).as("cells_live"))
-          .transform(SourceOps.partFileGate(spark, sf, "sink_kmeans_model"))
-      },
-      Some("SELECT count(*) AS n_vectors, 3 AS n_iters, TRUE AS assigned_closed, TRUE AS wcss_nonincreasing, TRUE AS cells_live, " +
-        s"$KmeansModelBuckets AS n_files FROM embeddings"),
+    kmeansModel.query(
+      // per-iter stats first, then the verdict over the iters
+      _.groupBy("iter")
+        .agg(sum(col("n_vec")).as("nv"), sum(col("wcss_c")).as("w"),
+          sum(when(col("n_vec") > 0, 1).otherwise(0)).as("live"))
+        .agg(max(when(col("iter") === 2, col("nv"))).as("nv2"),
+          min(col("nv")).as("nvmin"), max(col("nv")).as("nvmax"),
+          max(when(col("iter") === 0, col("w"))).as("w0"),
+          max(when(col("iter") === 2, col("w"))).as("w2"),
+          max(when(col("iter") === 2, col("live"))).as("live2"),
+          count(lit(1)).as("n_iters"))
+        .select(col("nv2").as("n_vectors"), col("n_iters"),
+          (col("nvmin") === col("nvmax")).as("assigned_closed"),
+          (col("w2") <= col("w0")).as("wcss_nonincreasing"),
+          (col("live2") === K).as("cells_live")),
+      "SELECT count(*) AS n_vectors, 3 AS n_iters, TRUE AS assigned_closed, TRUE AS wcss_nonincreasing, TRUE AS cells_live, " +
+        s"${kmeansModel.nFiles} FROM embeddings",
       scaleNote = "The sink is the FAISS index-build artifact: the " +
         "Lloyd chain (per round one broadcast-K nested loop + one " +
         "K×dims aggregate — corpus-linear, constant model state) " +

@@ -174,11 +174,6 @@ object AnnPq extends QueryGroup {
       .toDF("m", "cid", "cv", "cnorm2")
   }
 
-  /** Bucket count of the materialized PQ codebook — sink_pq_
-    * codebook's file-count gate literal (M×Kc rows; 1 bucket —
-    * single-writer by construction). */
-  val PqCodebookBuckets = 1
-
   /** The trained M×Kc CODEBOOK materialized ONCE per (session, sf)
     * — r16, VERDICT r15 "next" #4, the second half of the FAISS
     * build-vs-serve split: ann_pq re-ran the bounded-sample fetch
@@ -187,12 +182,12 @@ object AnnPq extends QueryGroup {
     * codebook is a pure function of (session, corpus). The sink is
     * the PQ index-build artifact; encode/ADC/re-rank are the serve
     * path and broadcast the stored 128-row relation exactly as they
-    * broadcast the locally-trained one. */
-  def pqCodebook(spark: SparkSession, sf: String): DataFrame =
-    GraphOps.sessionSink(spark, sf, "sink_pq_codebook",
-      PqCodebookBuckets, "m", Seq("m", "cid"))(
-      trainLocalBooks(spark,
-        subvecs(AnnKmeans.quantized(spark, sf).localCheckpoint(false))))
+    * broadcast the locally-trained one. M×Kc rows in 1 bucket. */
+  val pqCodebook = Sink("sink_pq_codebook", 1, "m",
+      Seq("m", "cid")) { (spark, sf) =>
+    trainLocalBooks(spark,
+      subvecs(AnnKmeans.quantized(spark, sf).localCheckpoint(false)))
+  }
 
   /** The IVFADC nprobe dial (coarse cells probed per query). */
   val IvfAdcNprobe = 3
@@ -425,9 +420,11 @@ object AnnPq extends QueryGroup {
     // codebook full at M×Kc rows — measured full at every SF, a
     // collapsed cell would shrink it — every codeword of subvector
     // width, and the part-file count == the pinned bucket literal)
-    // are booleans a correct build makes TRUE on any layout.
+    // are booleans a correct build makes TRUE on any layout. The
+    // vector count reads the corpus too, so this query is assembled
+    // from the sink's parts rather than by Sink.query.
     QueryDef(
-      "sink_pq_codebook",
+      pqCodebook.name,
       (spark, sf) => {
         val b = pqCodebook(spark, sf)
         val n = AnnKmeans.quantized(spark, sf)
@@ -440,10 +437,10 @@ object AnnPq extends QueryGroup {
           .select(col("n_vectors"), col("n_subspaces"),
             (col("n_codewords") === M * Kc).as("books_full"),
             (col("n_badwidth") === 0).as("dims_ok"))
-          .transform(SourceOps.partFileGate(spark, sf, "sink_pq_codebook"))
+          .transform(pqCodebook.gate(spark, sf))
       },
       Some(s"SELECT count(*) AS n_vectors, $M AS n_subspaces, TRUE AS books_full, TRUE AS dims_ok, " +
-        s"$PqCodebookBuckets AS n_files FROM embeddings"),
+        s"${pqCodebook.nFiles} FROM embeddings"),
       scaleNote = "The sink is the PQ index-build artifact: codebook " +
         "training is bounded-sample by design (TrainSample vectors " +
         "whatever the corpus — the FAISS practice), so the build " +

@@ -142,13 +142,9 @@ object CorpusOps extends QueryGroup {
         else "")
     }.mkString(", ")
 
-  /** Bucket-count literal for the materialized BPE training history —
-    * sink_bpe_history's file-count gate (17 rounds × |vocab| rows). */
-  val BpeHistoryBuckets = 4
-
   /** The FULL BPE training history (round 0..K, word, sym, f) —
     * every round's post-fixpoint symbol table, materialized ONCE per
-    * (session, sf) via sessionSink (r15, the walk-corpus pattern's
+    * (session, sf) as a [[Sink]] (r15, the walk-corpus pattern's
     * eighth application — found by the round's own bench: the three
     * deep-trainer consumers each re-ran the 16-round loop per
     * invocation, ~13 s/bench combined for one ~5 s train). Round 0
@@ -159,11 +155,9 @@ object CorpusOps extends QueryGroup {
     * argmax on the read path), the learning curve is a per-round
     * rollup, and the encode side joins round K. Bucketed by word,
     * sorted (word, round): the encode join and per-word trajectories
-    * ride the layout. */
-  private[graft] def bpeHistory(spark: org.apache.spark.sql.SparkSession,
-      sf: String): org.apache.spark.sql.DataFrame =
-    GraphOps.sessionSink(spark, sf, "sink_bpe_history",
-      BpeHistoryBuckets, "word", Seq("word", "round")) {
+    * ride the layout. 17 rounds × |vocab| rows in 4 buckets. */
+  private[graft] val bpeHistory = Sink("sink_bpe_history", 4, "word",
+      Seq("word", "round")) { (spark, sf) =>
       val wf = Tables.documents(spark, sf)
         .select(explode(split(col("text"), " ")).as("word"))
         .filter(length(col("word")) >= 2)
@@ -1418,20 +1412,15 @@ object CorpusOps extends QueryGroup {
     // (tokenizer_train_k's per-round argmax, tokenizer_apply_k's
     // encode join, tokenizer_merge_curve's rollup) are projections
     // of this table.
-    QueryDef(
-      "sink_bpe_history",
-      (spark, sf) => {
-        val h = bpeHistory(spark, sf)
-        h.groupBy("round")
-          .agg(count(lit(1)).as("n_words"),
-            sum(col("f")).as("f_total"),
-            sum(col("f") * size(split(col("sym"), " ")))
-              .as("n_tokens_bpe"),
-            sum(length(col("sym")).cast("long")).as("sym_len_checksum"))
-          .transform(SourceOps.partFileGate(spark, sf, "sink_bpe_history"))
-          .orderBy("round")
-      },
-      Some {
+    bpeHistory.query(
+      _.groupBy("round")
+        .agg(count(lit(1)).as("n_words"),
+          sum(col("f")).as("f_total"),
+          sum(col("f") * size(split(col("sym"), " ")))
+            .as("n_tokens_bpe"),
+          sum(length(col("sym")).cast("long")).as("sym_len_checksum"))
+        .orderBy("round"),
+      {
         val rolls = (0 to BpeTrainK).map { r =>
           val tbl = s"s${r + 1}"
           s"SELECT $r AS round, count(*) AS n_words, CAST(sum(f) AS BIGINT) AS f_total, " +
@@ -1442,7 +1431,7 @@ object CorpusOps extends QueryGroup {
           "wf AS MATERIALIZED (SELECT word, count(*) AS f FROM w WHERE length(word) >= 2 GROUP BY word), " +
           "s1 AS MATERIALIZED (SELECT word, trim(regexp_replace(word, '(.)', '\\1 ', 'g')) AS sym, f FROM wf), " +
           bpeChainSql(BpeTrainK, withFinalApply = true) + " " +
-          s"SELECT round, n_words, f_total, n_tokens_bpe, sym_len_checksum, $BpeHistoryBuckets AS n_files " +
+          s"SELECT round, n_words, f_total, n_tokens_bpe, sym_len_checksum, ${bpeHistory.nFiles} " +
           s"FROM ($rolls) ORDER BY round"
       },
       scaleNote = "The sink moves the 16-round trainer from " +

@@ -38,10 +38,6 @@ object NearDup extends QueryGroup {
   val Rows = 2 // minhashes per band
   val Bands: Int = NumHashes / Rows
 
-  /** Bucket count of the materialized corpus pair table —
-    * sink_neardup_pairs' file-count gate literal. */
-  val NearDupPairsBuckets = 4
-
   /** The VERIFIED τ=0.5 near-dup PAIR TABLE (id1 < id2, jac) over
     * the documents corpus, materialized ONCE per (session, sf) via
     * the session-sink path — r16, the sixth application of the
@@ -55,10 +51,10 @@ object NearDup extends QueryGroup {
     * between its candidate-generation and policy stages. Bucketed by
     * id1 so cluster resolvers and policy rollups read co-located
     * pairs. */
-  def corpusPairs(spark: SparkSession, sf: String): DataFrame =
-    GraphOps.sessionSink(spark, sf, "sink_neardup_pairs",
-      NearDupPairsBuckets, "id1", Seq("id1", "id2"))(
-      nearDupPairs(Tables.documents(spark, sf), 0.5))
+  val corpusPairs = Sink("sink_neardup_pairs", 4, "id1",
+      Seq("id1", "id2")) { (spark, sf) =>
+    nearDupPairs(Tables.documents(spark, sf), 0.5)
+  }
 
   /** Size-adaptive cluster resolution over the sinked corpus pair
     * table — the (docs, τ=0.5) [[clustersAuto]] call every
@@ -576,10 +572,6 @@ object NearDup extends QueryGroup {
     * Denominators count each doc's rare shingles (df-1 shingles kept:
     * discriminative, merely unshareable), so C is measured over the
     * same universe the join can see. */
-  /** Bucket-count literal for the two r16 pair-universe sinks —
-    * their file-count gates. */
-  val PairUniverseBuckets = 4
-
   /** The df-capped RARE-SHINGLE pair universe (id1, id2, ni, n1, n2)
     * on the xxhash64 basis, MATERIALIZED once per (session, sf) —
     * r16, guide §2.4: dedup_containment and dedup_lsh_scurve each
@@ -589,10 +581,8 @@ object NearDup extends QueryGroup {
     * vs S-curve sweep). ni = shared rare shingles, n1/n2 = each
     * side's rare-shingle count — every consumer statistic is a
     * projection of these three exact integers. */
-  private[graft] def shinglePairTable(spark: org.apache.spark.sql.SparkSession,
-      sf: String): DataFrame =
-    GraphOps.sessionSink(spark, sf, "sink_shingle_pairs",
-      PairUniverseBuckets, "id1", Seq("id1", "id2")) {
+  private[graft] val shinglePairTable = Sink("sink_shingle_pairs", 4,
+      "id1", Seq("id1", "id2")) { (spark, sf) =>
       val hs = shingleRows(Tables.documents(spark, sf)).distinct()
         .select(col("doc_id"), xxhash64(col("sh")).as("h"))
         .localCheckpoint(false)
@@ -619,10 +609,8 @@ object NearDup extends QueryGroup {
     * projections of (ni, n1, n2). The signature halves (min-wise vs
     * bit-majority) stay per-query — they are what each operator
     * measures. */
-  private[graft] def portablePairTable(spark: org.apache.spark.sql.SparkSession,
-      sf: String): DataFrame =
-    GraphOps.sessionSink(spark, sf, "sink_portable_pairs",
-      PairUniverseBuckets, "id1", Seq("id1", "id2")) {
+  private[graft] val portablePairTable = Sink("sink_portable_pairs", 4,
+      "id1", Seq("id1", "id2")) { (spark, sf) =>
       val sh = portableShingles(Tables.documents(spark, sf))
         .localCheckpoint(false)
       val okH = sh.groupBy("h").agg(count(lit(1)).as("df"))
@@ -706,24 +694,19 @@ object NearDup extends QueryGroup {
     // count vs the pinned bucket literal. The oracle replays the
     // exact sparse-shingle truth-pair chain, so a drifted band key,
     // hash family, or verify threshold fails here loudly.
-    QueryDef(
-      "sink_neardup_pairs",
-      (spark, sf) => {
-        val p = corpusPairs(spark, sf)
-        p.agg(count(lit(1)).as("n_pairs"),
-            sum(col("id1")).as("id1_checksum"),
-            sum(col("id2")).as("id2_checksum"),
-            sum(round(col("jac") * 10000, 0).cast("long"))
-              .as("jac_bp_total"))
-          .transform(SourceOps.partFileGate(spark, sf, "sink_neardup_pairs"))
-      },
-      Some(s"WITH $TruthPairCtes, " +
+    corpusPairs.query(
+      _.agg(count(lit(1)).as("n_pairs"),
+          sum(col("id1")).as("id1_checksum"),
+          sum(col("id2")).as("id2_checksum"),
+          sum(round(col("jac") * 10000, 0).cast("long"))
+            .as("jac_bp_total")),
+      s"WITH $TruthPairCtes, " +
         "pr AS (SELECT id1, id2, round(CAST(ni AS DOUBLE)/(n1+n2-ni), 4) AS jac " +
         "FROM p WHERE CAST(ni AS DOUBLE)/(n1+n2-ni) >= 0.5) " +
         "SELECT count(*) AS n_pairs, CAST(sum(id1) AS BIGINT) AS id1_checksum, " +
         "CAST(sum(id2) AS BIGINT) AS id2_checksum, " +
         "CAST(sum(CAST(round(jac * 10000, 0) AS BIGINT)) AS BIGINT) AS jac_bp_total, " +
-        s"$NearDupPairsBuckets AS n_files FROM pr"),
+        s"${corpusPairs.nFiles} FROM pr",
       scaleNote = "The sink moves the candidate chain (shingle scan " +
         "→ 64 minhash minima → banded self-join → exact verify) " +
         "from every-consumer to once-per-corpus-version: TEN " +
@@ -745,19 +728,14 @@ object NearDup extends QueryGroup {
     // (Σni, Σn1, Σn2), and the measured part-file count vs the
     // pinned bucket literal. The oracle replays the df/rare/pc/nr
     // chain both consumers' oracles already carry.
-    QueryDef(
-      "sink_shingle_pairs",
-      (spark, sf) => {
-        val p = shinglePairTable(spark, sf)
-        p.agg(count(lit(1)).as("n_pairs"),
-            sum(col("id1")).as("id1_checksum"),
-            sum(col("id2")).as("id2_checksum"),
-            sum(col("ni")).as("ni_total"),
-            sum(col("n1")).as("n1_total"),
-            sum(col("n2")).as("n2_total"))
-          .transform(SourceOps.partFileGate(spark, sf, "sink_shingle_pairs"))
-      },
-      Some(s"WITH $ShingleCtes, " +
+    shinglePairTable.query(
+      _.agg(count(lit(1)).as("n_pairs"),
+          sum(col("id1")).as("id1_checksum"),
+          sum(col("id2")).as("id2_checksum"),
+          sum(col("ni")).as("ni_total"),
+          sum(col("n1")).as("n1_total"),
+          sum(col("n2")).as("n2_total")),
+      s"WITH $ShingleCtes, " +
         "df AS (SELECT g, count(*) AS df FROM s GROUP BY 1), " +
         s"rare AS (SELECT s.doc_id, s.g FROM s JOIN df USING (g) WHERE df.df <= $ContainmentDfCap), " +
         "nr AS (SELECT doc_id, count(*) AS n_rare FROM rare GROUP BY 1), " +
@@ -765,8 +743,8 @@ object NearDup extends QueryGroup {
         "SELECT count(*) AS n_pairs, CAST(sum(id1) AS BIGINT) AS id1_checksum, " +
         "CAST(sum(id2) AS BIGINT) AS id2_checksum, CAST(sum(ni) AS BIGINT) AS ni_total, " +
         "CAST(sum(n1.n_rare) AS BIGINT) AS n1_total, CAST(sum(n2.n_rare) AS BIGINT) AS n2_total, " +
-        s"$PairUniverseBuckets AS n_files " +
-        "FROM pc JOIN nr n1 ON pc.id1 = n1.doc_id JOIN nr n2 ON pc.id2 = n2.doc_id"),
+        s"${shinglePairTable.nFiles} " +
+        "FROM pc JOIN nr n1 ON pc.id1 = n1.doc_id JOIN nr n2 ON pc.id2 = n2.doc_id",
       scaleNote = "sink_neardup_pairs' economics for the containment " +
         "family: the shingle scan → distinct → df-cap → inverted-" +
         "index self-join chain ran per consumer (dedup_containment " +
@@ -785,19 +763,14 @@ object NearDup extends QueryGroup {
     // identical df-capped candidate set AND the per-pair exact
     // intersections; the table (id1, id2, ni, n1, n2) is their
     // common truth, each keeps only its own signature half.
-    QueryDef(
-      "sink_portable_pairs",
-      (spark, sf) => {
-        val p = portablePairTable(spark, sf)
-        p.agg(count(lit(1)).as("n_pairs"),
-            sum(col("id1")).as("id1_checksum"),
-            sum(col("id2")).as("id2_checksum"),
-            sum(col("ni")).as("ni_total"),
-            sum(col("n1")).as("n1_total"),
-            sum(col("n2")).as("n2_total"))
-          .transform(SourceOps.partFileGate(spark, sf, "sink_portable_pairs"))
-      },
-      Some(s"WITH $PortableShingleSql, " +
+    portablePairTable.query(
+      _.agg(count(lit(1)).as("n_pairs"),
+          sum(col("id1")).as("id1_checksum"),
+          sum(col("id2")).as("id2_checksum"),
+          sum(col("ni")).as("ni_total"),
+          sum(col("n1")).as("n1_total"),
+          sum(col("n2")).as("n2_total")),
+      s"WITH $PortableShingleSql, " +
         s"okh AS (SELECT h FROM (SELECT h, count(*) AS df FROM s GROUP BY 1) WHERE df <= $MaxBucketDocs), " +
         "rare AS (SELECT s.doc_id, s.h FROM s JOIN okh USING (h)), " +
         "pc AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2 FROM rare a JOIN rare b ON a.h = b.h AND a.doc_id < b.doc_id), " +
@@ -806,8 +779,8 @@ object NearDup extends QueryGroup {
         "SELECT count(*) AS n_pairs, CAST(sum(pi.id1) AS BIGINT) AS id1_checksum, " +
         "CAST(sum(pi.id2) AS BIGINT) AS id2_checksum, CAST(sum(pi.ni) AS BIGINT) AS ni_total, " +
         "CAST(sum(n1.n) AS BIGINT) AS n1_total, CAST(sum(n2.n) AS BIGINT) AS n2_total, " +
-        s"$PairUniverseBuckets AS n_files " +
-        "FROM pi JOIN nsz n1 ON pi.id1 = n1.doc_id JOIN nsz n2 ON pi.id2 = n2.doc_id"),
+        s"${portablePairTable.nFiles} " +
+        "FROM pi JOIN nsz n1 ON pi.id1 = n1.doc_id JOIN nsz n2 ON pi.id2 = n2.doc_id",
       scaleNote = "The truth side of estimator accuracy is itself an " +
         "exact-dedup workload (df-capped inverted index + sorted-" +
         "array merge-walk intersections) and a pure function of the " +

@@ -1,0 +1,90 @@
+package graft.queries
+
+import graft.engine.QueryDef
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+
+/** A session sink: a table `build` MATERIALIZES once per (session, sf)
+  * as a bucketed + sorted lake table, read back by every consumer. The
+  * one declaration holds the sink's name, its layout and its build;
+  * the read-or-rebuild, the table and directory names, the part-file
+  * gate and the oracle's pinned `n_files` column all derive from it.
+  *
+  * The pre-write repartition on the bucket key uses the same murmur3
+  * pmod assignment as the bucket spec, so each bucket is single-writer
+  * and files = buckets exactly — the count [[query]] gates and its
+  * oracle pins ([[nFiles]]). Both halves of the existence check are
+  * guarded: a catalog hit whose directory was deleted mid-session (tmp
+  * cleaner, manual rm) is rebuilt instead of failing every consumer on
+  * a missing path, and the table and directory names embed the
+  * applicationId, so a fresh session at a changed fixture never serves
+  * a stale table. */
+final case class Sink(name: String, buckets: Int, bucketCol: String,
+    sortCols: Seq[String])(build: (SparkSession, String) => DataFrame) {
+
+  /** The session-unique sink directory ([[SourceOps.sinkDir]]). */
+  def dir(spark: SparkSession, sf: String): String =
+    SourceOps.sinkDir(spark, sf, name)
+
+  /** The session-unique catalog table name. */
+  private def table(spark: SparkSession, sf: String): String =
+    s"graft_${name}_" + (new java.io.File(sf).getName + "_" +
+      spark.sparkContext.applicationId).replaceAll("[^a-zA-Z0-9]", "_")
+
+  /** Part files in the sink directory, 0 when it is missing. */
+  def partFiles(spark: SparkSession, sf: String): Int =
+    Sink.countPartFiles(spark, dir(spark, sf))
+
+  /** The sink's table: built on first read in the session, or when its
+    * directory has lost its part files, then read back. */
+  def apply(spark: SparkSession, sf: String): DataFrame = {
+    val t = table(spark, sf)
+    if (!spark.catalog.tableExists(t) || partFiles(spark, sf) == 0) {
+      if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE `$t`")
+      build(spark, sf).repartition(buckets, col(bucketCol))
+        .write.mode("overwrite")
+        .bucketBy(buckets, bucketCol)
+        .sortBy(sortCols.head, sortCols.tail: _*)
+        .option("path", dir(spark, sf)).saveAsTable(t)
+    }
+    spark.table(t)
+  }
+
+  /** The oracle's side of the gate: the bucket count as `n_files`. */
+  val nFiles: String = s"$buckets AS n_files"
+
+  /** The layout gate: the frame plus an `n_files` column holding the
+    * sink's part-file count, listed once, when the gate is built (after
+    * the sink itself). */
+  def gate(spark: SparkSession, sf: String): DataFrame => DataFrame = {
+    val n = partFiles(spark, sf)
+    _.withColumn("n_files", lit(n))
+  }
+
+  /** The sink's own declared query, named after it: `rollup` over the
+    * sink's table, gated. `oracle` pins [[nFiles]], so a layout change
+    * fails the hash. */
+  def query(rollup: DataFrame => DataFrame, oracle: String,
+      scaleNote: String): QueryDef =
+    QueryDef(name,
+      (spark, sf) => rollup(apply(spark, sf)).transform(gate(spark, sf)),
+      Some(oracle), scaleNote)
+}
+
+object Sink {
+
+  /** Part-file count of a sink directory via the Hadoop FileSystem
+    * API (r17, VERDICT r16 #9): the java.io.File gates assumed a
+    * local filesystem — at 100 TB the sink dir lives on HDFS/S3 and
+    * a local listFiles() returns null. Path.getFileSystem resolves
+    * the scheme, so the same gate works on file://, hdfs:// and
+    * s3a:// alike. A missing dir counts 0 part files: the read then
+    * rebuilds, and the gate reports a wrong count instead of
+    * throwing. */
+  def countPartFiles(spark: SparkSession, dir: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) 0
+    else fs.listStatus(p).count(_.getPath.getName.startsWith("part-"))
+  }
+}

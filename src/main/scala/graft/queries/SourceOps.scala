@@ -30,38 +30,12 @@ object SourceOps extends QueryGroup {
     * corrupt each other's read-back. The applicationId component makes
     * each session a single writer by construction; specs that inspect
     * the written tree (LayoutSinkSpec, CompactionSinkSpec) recompute
-    * the same path from their own session. */
+    * the same path from their own session. Every session [[Sink]]
+    * lands under it too. */
   def sinkDir(spark: SparkSession, sf: String,
       name: String): String =
     s"/tmp/graft_${name}_" + new java.io.File(sf).getName +
       "_" + spark.sparkContext.applicationId
-
-  /** Part-file count of a sink directory via the Hadoop FileSystem
-    * API (r17, VERDICT r16 #9): the java.io.File gates assumed a
-    * local filesystem — at 100 TB the sink dir lives on HDFS/S3 and
-    * a local listFiles() returns null. Path.getFileSystem resolves
-    * the scheme, so the same gate works on file://, hdfs:// and
-    * s3a:// alike. A missing dir counts 0 part files, as sessionSink's
-    * dirOk reads it: the gate then reports a wrong count instead of
-    * throwing. */
-  def countPartFiles(spark: SparkSession,
-      dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p).count(_.getPath.getName.startsWith("part-"))
-  }
-
-  /** The sink layout gate every sink QueryDef applies with
-    * `.transform`: the frame plus an `n_files` column holding the
-    * part-file count of sink `op`'s directory, listed once, when the
-    * gate is built (after the sink itself). The oracles pin the
-    * count as a literal, so a layout change fails the hash. */
-  def partFileGate(spark: SparkSession, sf: String, op: String)
-      : DataFrame => DataFrame = {
-    val n = countPartFiles(spark, sinkDir(spark, sf, op))
-    _.withColumn("n_files", lit(n))
-  }
 
   val FixtureDir = "/tmp/graft_passages_fixture"
 

@@ -21,7 +21,7 @@ class AnnModelSinkSpec extends SparkSpec {
     val r = out.head
     assert(r.getBoolean(2) && r.getBoolean(3) && r.getBoolean(4),
       s"gate booleans not all true: $r")
-    assert(r.getInt(5) == queries.AnnKmeans.KmeansModelBuckets,
+    assert(r.getInt(5) == queries.AnnKmeans.kmeansModel.buckets,
       "part-file count != bucket count")
   }
 
@@ -47,7 +47,7 @@ class AnnModelSinkSpec extends SparkSpec {
     val r = out.head
     assert(r.getBoolean(2) && r.getBoolean(3),
       s"gate booleans not all true: $r")
-    assert(r.getInt(4) == queries.AnnPq.PqCodebookBuckets,
+    assert(r.getInt(4) == queries.AnnPq.pqCodebook.buckets,
       "part-file count != bucket count")
   }
 

@@ -29,7 +29,7 @@ class BackboneSinkSpec extends SparkSpec {
       .build(spark, sf).collect()
     assert(out.length == 1)
     val r = out(0)
-    assert(r.getAs[Int]("n_files") == queries.GraphOps.BackboneBuckets,
+    assert(r.getAs[Int]("n_files") == queries.GraphOps.backboneTable.buckets,
       "part-file count != bucket count")
     // the cut is exactly min(500, |pairs|) rows and every weight is
     // at least the max weight OUTSIDE the cut (the top-k property
@@ -43,6 +43,19 @@ class BackboneSinkSpec extends SparkSpec {
     assert(r.getAs[Long]("n_edges") == math.min(500L, nPairs))
     assert(r.getAs[Long]("m_min") >= 1L &&
       r.getAs[Long]("m_max") >= r.getAs[Long]("m_min"))
+  }
+
+  test("sink_backbone is rebuilt, same rows and one file per bucket, after its directory is deleted mid-session") {
+    val sink = queries.GraphOps.backboneTable
+    def rows = sink(spark, sf).orderBy("c", "s").collect().toSeq
+    val before = rows
+    val dir = new org.apache.hadoop.fs.Path(sink.dir(spark, sf))
+    assert(dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(dir, true), s"$dir was not there to delete")
+    assert(sink.partFiles(spark, sf) == 0)
+    assert(rows == before, "rebuilt sink rows differ")
+    assert(sink.partFiles(spark, sf) == sink.buckets,
+      "part-file count != bucket count after the rebuild")
   }
 
   test("graph_components off the sink matches a direct derivation from the raw rollup") {

@@ -35,7 +35,7 @@ class BpeHistorySinkSpec extends SparkSpec {
       .build(spark, sf).collect()
     assert(gate.length == queries.CorpusOps.BpeTrainK + 1)
     assert(gate.forall(_.getAs[Int]("n_files") ==
-      queries.CorpusOps.BpeHistoryBuckets), "part-file count != buckets")
+      queries.CorpusOps.bpeHistory.buckets), "part-file count != buckets")
     // the derived merge table equals the loop's driver-collected one
     val derived = engine.Registry.byName("tokenizer_train_k")
       .build(spark, sf).orderBy("round").collect()

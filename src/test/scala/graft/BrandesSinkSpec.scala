@@ -37,7 +37,7 @@ class BrandesSinkSpec extends SparkSpec {
       "rounds column must be the constant forward-wave depth")
     val out = engine.Registry.byName("sink_brandes_deps")
       .build(spark, sf).collect()
-    assert(out.forall(_.getInt(6) == queries.GraphOps.BrandesBuckets),
+    assert(out.forall(_.getInt(6) == queries.GraphOps.brandesDeps.buckets),
       "part-file count != bucket count — a bucket split across task " +
         "files or went missing")
   }
@@ -55,7 +55,7 @@ class BrandesSinkSpec extends SparkSpec {
     val gate = engine.Registry.byName("sink_ebc")
       .build(spark, sf).collect()
     assert(gate.length == 1)
-    assert(gate(0).getAs[Int]("n_files") == queries.GraphOps.BrandesBuckets,
+    assert(gate(0).getAs[Int]("n_files") == queries.GraphOps.ebcRollup.buckets,
       "part-file count != bucket count")
     // seed-row conservation: Σ n_seeds = the dep sink's contribution
     // row total (a dropped seed or level fails here loudly)

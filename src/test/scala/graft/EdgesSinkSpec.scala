@@ -31,7 +31,7 @@ class EdgesSinkSpec extends SparkSpec {
     val out = engine.Registry.byName("sink_edges").build(spark, sf).collect()
     assert(out.length == 1)
     val r = out(0)
-    assert(r.getAs[Int]("n_files") == queries.GraphOps.EdgeBuckets,
+    assert(r.getAs[Int]("n_files") == queries.GraphOps.edgesTable.buckets,
       "part-file count != bucket count")
     assert(r.getAs[Boolean]("symmetric"),
       "src/dst checksum symmetry violated — a direction was dropped")

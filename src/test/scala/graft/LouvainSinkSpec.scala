@@ -17,7 +17,7 @@ class LouvainSinkSpec extends SparkSpec {
     val out = engine.Registry.byName("sink_louvain_labels")
       .build(spark, sf).collect()
     assert(out.nonEmpty)
-    assert(out.forall(_.getInt(3) == queries.GraphOps.LouvainBuckets),
+    assert(out.forall(_.getInt(3) == queries.GraphOps.louvainLabels.buckets),
       "part-file count != bucket count")
     // membership accounting closes: Σ n_nodes = |V|
     val nV = lab.count()
@@ -44,7 +44,7 @@ class LouvainSinkSpec extends SparkSpec {
     val out = engine.Registry.byName("sink_louvain_l2")
       .build(spark, sf).collect()
     assert(out.nonEmpty)
-    assert(out.forall(_.getInt(5) == queries.GraphOps.LouvainL2Buckets),
+    assert(out.forall(_.getInt(5) == queries.GraphOps.louvainL2Labels.buckets),
       "part-file count != bucket count")
     // membership accounting closes on BOTH levels: Σ n_nodes = |labc|
     // and Σ n_l1 = |distinct level-1 comms in the contracted graph|

@@ -20,7 +20,7 @@ class NearDupSinkSpec extends SparkSpec {
       .build(spark, sf).collect()
     assert(out.length == 1)
     val r = out.head
-    assert(r.getInt(4) == queries.NearDup.NearDupPairsBuckets,
+    assert(r.getInt(4) == queries.NearDup.corpusPairs.buckets,
       "part-file count != bucket count")
     // pair mass closes: n_pairs equals the raw chain's count
     assert(r.getLong(0) == raw.count())

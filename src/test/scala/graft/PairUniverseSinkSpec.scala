@@ -31,7 +31,7 @@ class PairUniverseSinkSpec extends SparkSpec {
     val out = engine.Registry.byName("sink_shingle_pairs")
       .build(spark, sf).collect()
     assert(out.length == 1 && out(0).getAs[Int]("n_files") ==
-      queries.NearDup.PairUniverseBuckets)
+      queries.NearDup.shinglePairTable.buckets)
   }
 
   test("sink_portable_pairs: read-back equals the raw portable-basis truth chain") {

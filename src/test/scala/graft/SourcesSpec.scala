@@ -12,7 +12,7 @@ class SourcesSpec extends SparkSpec {
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
 
   test("countPartFiles reads a missing sink dir as 0 part files") {
-    assert(graft.queries.SourceOps.countPartFiles(spark, java.nio.file.Files
+    assert(graft.queries.Sink.countPartFiles(spark, java.nio.file.Files
       .createTempDirectory("sink-gone").resolve("missing").toString) == 0)
   }
 

@@ -25,7 +25,7 @@ class WalkCorpusSpec extends SparkSpec {
     val out = engine.Registry.byName("sink_walk_corpus")
       .build(spark, sf).collect()
     assert(out.length == 5, "expected one row per step 0..4")
-    assert(out.forall(_.getInt(4) == queries.GraphOps.WalkCorpusBuckets),
+    assert(out.forall(_.getInt(4) == queries.GraphOps.walkCorpus.buckets),
       "part-file count != bucket count — a bucket split across task " +
         "files or went missing")
   }
