@@ -95,6 +95,138 @@ object Analytics extends QueryGroup {
       .groupBy("user_id")
       .agg(min(col("ts")).as(outTs))
 
+  /** The daily count series `(event_type, day, <n>)`: events per type
+    * per calendar day, one map-side-combined agg — the input of every
+    * daily ts_* smoother, fit and test and of win_moving_median. */
+  def dailySeries(ev: DataFrame, n: String): DataFrame =
+    ev.groupBy(col("event_type"), col("ts").cast("date").as("day"))
+      .agg(count(lit(1)).as(n))
+
+  /** [[dailySeries]]'s oracle CTE; the caller writes `WITH` or `WITH RECURSIVE`. */
+  def dailySeriesSql(n: String): String =
+    s"daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS $n FROM events GROUP BY 1, 2)"
+
+  /** [[dailySeries]] plus its day index: `d0` = the type's first day, `x` =
+    * whole days since it (BIGINT) — the regressor of the trend fits. */
+  private def dayIndexed(daily: DataFrame): DataFrame =
+    daily.join(daily.groupBy("event_type").agg(min(col("day")).as("d0")),
+        "event_type")
+      .withColumn("x", datediff(col("day"), col("d0")).cast("long"))
+
+  /** [[dayIndexed]]'s oracle CTEs `d0` and `pts(event_type, x, y)`
+    * over `daily(event_type, day, y)`. */
+  private val DayIndexSql: String =
+    "d0 AS (SELECT event_type, min(day) AS d0 FROM daily GROUP BY 1), " +
+      "pts AS (SELECT d.event_type, CAST(date_diff('day', x.d0, d.day) AS BIGINT) AS x, y " +
+      "FROM daily d JOIN d0 x ON d.event_type = x.event_type)"
+
+  /** Pearson r of the lag pairs `(n, prev)` per `keys` group — `k`
+    * pairs, every moment an exact BIGINT sum, the double touching only
+    * the final (num, var_a, var_b) triple; a zero-variance side gives
+    * NULL. Emits `keys, k, <r>` ordered by `keys`. */
+  private def lagPearson(pairs: DataFrame, r: String, keys: String*): DataFrame = {
+    val g = pairs.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("k"),
+        sum(col("n")).as("sx"), sum(col("prev")).as("sy"),
+        sum(col("n") * col("prev")).as("sxy"),
+        sum(col("n") * col("n")).as("sxx"),
+        sum(col("prev") * col("prev")).as("syy"))
+    val va = (col("k") * col("sxx") - col("sx") * col("sx")).cast("double")
+    val vb = (col("k") * col("syy") - col("sy") * col("sy")).cast("double")
+    val num = (col("k") * col("sxy") - col("sx") * col("sy")).cast("double")
+    g.select(keys.map(col) :+ col("k") :+
+        when(va > 0 && vb > 0, round(num / sqrt(va * vb), 4)).as(r): _*)
+      .orderBy(keys.map(col): _*)
+  }
+
+  /** [[lagPearson]]'s oracle tail over a CTE `p(keys…, n, prev)`. */
+  private def lagPearsonSql(r: String, keys: String*): String = {
+    val ks = keys.mkString(", ")
+    s"g AS (SELECT $ks, count(*) AS k, CAST(sum(n) AS BIGINT) AS sx, CAST(sum(prev) AS BIGINT) AS sy, " +
+      "CAST(sum(n*prev) AS BIGINT) AS sxy, CAST(sum(n*n) AS BIGINT) AS sxx, CAST(sum(prev*prev) AS BIGINT) AS syy " +
+      s"FROM p WHERE prev IS NOT NULL GROUP BY ${keys.indices.map(_ + 1).mkString(", ")}) " +
+      s"SELECT $ks, k, CASE WHEN k*sxx - sx*sx > 0 AND k*syy - sy*sy > 0 " +
+      "THEN round(CAST(k*sxy - sx*sy AS DOUBLE) / sqrt(CAST(k*sxx - sx*sx AS DOUBLE) * CAST(k*syy - sy*sy AS DOUBLE)), 4) " +
+      s"END AS $r FROM g ORDER BY $ks"
+  }
+
+  /** The moment triple `(n, sv, svv)` = count, Σv, Σv² of an integer
+    * metric `v`: associative BIGINT sums, bit-stable on any
+    * partitioning — what every mean-metric A/B readout composes from. */
+  private val VMoments: Seq[Column] = Seq(count(lit(1)).as("n"),
+    sum(col("v")).as("sv"), sum(col("v") * col("v")).as("svv"))
+  private val VMomentsSql: String =
+    "count(*) AS n, CAST(sum(v) AS BIGINT) AS sv, CAST(sum(v*v) AS BIGINT) AS svv"
+
+  /** Per-arm purchase moments `(variant, n, sv, svv)`: arm = user_id
+    * % 2, v = the purchase value in whole cents. Batch readouts pivot
+    * it with [[twoArms]]; `Streams.powerMoments` is this aggregate
+    * over the stream. */
+  def armMoments(ev: DataFrame): DataFrame =
+    ev.filter(col("event_type") === "purchase")
+      .select((col("user_id") % 2).as("variant"),
+        floor(col("value") * 100).cast("long").as("v"))
+      .groupBy("variant").agg(VMoments.head, VMoments.tail: _*)
+
+  /** [[twoArms]]'s cells (variant, moment, column): variant 0's
+    * moments get suffix 1, variant 1's suffix 2. */
+  private val ArmCells: Seq[(Int, String, String)] = for {
+    (v, i) <- Seq(0 -> 1, 1 -> 2); m <- Seq("n", "sv", "svv")
+  } yield (v, m, s"$m$i")
+
+  /** [[armMoments]] on one row: `n1, sv1, svv1, n2, sv2, svv2`. */
+  private def twoArms(ev: DataFrame): DataFrame = {
+    val cells = ArmCells.map { case (v, m, c) =>
+      sum(when(col("variant") === v, col(m))).as(c)
+    }
+    armMoments(ev).agg(cells.head, cells.tail: _*)
+  }
+
+  /** [[twoArms]]'s oracle CTEs `ev`, `per` and `one`. */
+  private val TwoArmsSql: String =
+    "ev AS (SELECT user_id % 2 AS variant, CAST(floor(value*100) AS BIGINT) AS v FROM events WHERE event_type = 'purchase'), " +
+      s"per AS (SELECT variant, $VMomentsSql FROM ev GROUP BY 1), " +
+      "one AS (SELECT " + ArmCells.map { case (v, m, c) =>
+        s"CAST(sum(CASE WHEN variant = $v THEN $m END) AS BIGINT) AS $c"
+      }.mkString(", ") + " FROM per)"
+
+  /** Exposure: each user's first view `t0`, plus the caller's arm
+    * column `<arm>` = user_id % `k`. */
+  private def exposed(ev: DataFrame, arm: String, k: Int): DataFrame =
+    ev.filter(col("event_type") === "view")
+      .groupBy(col("user_id")).agg(min(col("ts")).as("t0"))
+      .withColumn(arm, col("user_id") % k)
+
+  /** [[exposed]]'s oracle CTE `exposed(user_id, t0, <arm>)`. */
+  private def exposedSql(arm: String, k: Int): String =
+    s"exposed AS (SELECT user_id, min(ts) AS t0, user_id % $k AS $arm FROM events WHERE event_type = 'view' GROUP BY user_id)"
+
+  /** Per arm `(<arm>, n, x)`: n exposed users, x of them converted — a
+    * purchase within 24 h of exposure (the windowed contract
+    * funnel_steps uses — an unwindowed "ever purchased" saturates to
+    * rate 1.0 on any long-lived user base and degenerates the test:
+    * se = 0). */
+  private def conversions(ev: DataFrame, arm: String, k: Int): DataFrame = {
+    val ex = exposed(ev, arm, k)
+    val conv = ev.filter(col("event_type") === "purchase")
+      .join(ex.select("user_id", "t0"), Seq("user_id"))
+      .filter(col("ts") >= col("t0") &&
+        col("ts") <= col("t0") + expr("INTERVAL 24 HOUR"))
+      .select(col("user_id")).distinct().withColumn("c", lit(1L))
+    ex.join(conv, Seq("user_id"), "left")
+      .groupBy(arm)
+      .agg(count(lit(1)).as("n"),
+        sum(coalesce(col("c"), lit(0L))).as("x"))
+  }
+
+  /** [[conversions]]' oracle CTEs `exposed`, `conv` and `per`. */
+  private def conversionsSql(arm: String, k: Int): String =
+    exposedSql(arm, k) + ", " +
+      "conv AS (SELECT DISTINCT p.user_id FROM events p JOIN exposed e ON p.user_id = e.user_id " +
+      "AND p.ts >= e.t0 AND p.ts <= e.t0 + INTERVAL 24 HOUR WHERE p.event_type = 'purchase'), " +
+      s"per AS (SELECT e.$arm, count(*) AS n, CAST(sum(CASE WHEN c.user_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS x " +
+      "FROM exposed e LEFT JOIN conv c ON e.user_id = c.user_id GROUP BY 1)"
+
   /** 4-bit popcount of the coalition bitmask `cset`, written as
     * portable arithmetic (Spark div / DuckDB // on the same shifts)
     * so both engines count identically — attribution_shapley's
@@ -445,9 +577,7 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ts_ewma",
       (spark, sf) => {
-        val daily = Tables.loadEvents(spark, sf)
-          .groupBy(col("event_type"), col("ts").cast("date").as("day"))
-          .agg(count(lit(1)).as("n"))
+        val daily = dailySeries(Tables.loadEvents(spark, sf), "n")
         val w = Window.partitionBy("event_type").orderBy("day")
         val terms = (0 to 7).map { k =>
           val x = if (k == 0) col("n") else lag(col("n"), k).over(w)
@@ -470,8 +600,7 @@ object Analytics extends QueryGroup {
         val denSql = "128 + " +
           (1 to 7).map(k => s"(CASE WHEN l$k IS NULL THEN 0 ELSE ${1L << (7 - k)} END)")
             .mkString(" + ")
-        "WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n " +
-          "FROM events GROUP BY 1, 2), " +
+        s"WITH ${dailySeriesSql("n")}, " +
           s"l AS (SELECT event_type, day, n, $lagDefs FROM daily " +
           "WINDOW w AS (PARTITION BY event_type ORDER BY day)) " +
           s"SELECT event_type, CAST(day AS VARCHAR) AS day, n, round(CAST($numSql AS DOUBLE) / ($denSql), 4) AS ewma " +
@@ -501,36 +630,15 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ts_autocorr",
       (spark, sf) => {
-        val daily = Tables.loadEvents(spark, sf)
-          .groupBy(col("event_type"), col("ts").cast("date").as("day"))
-          .agg(count(lit(1)).as("n"))
+        val daily = dailySeries(Tables.loadEvents(spark, sf), "n")
         val w = Window.partitionBy("event_type").orderBy("day")
-        val g = daily
+        lagPearson(daily
           .withColumn("prev", lag(col("n"), 1).over(w))
-          .filter(col("prev").isNotNull)
-          .groupBy("event_type")
-          .agg(
-            count(lit(1)).as("k"),
-            sum(col("n")).as("sx"),
-            sum(col("prev")).as("sy"),
-            sum(col("n") * col("prev")).as("sxy"),
-            sum(col("n") * col("n")).as("sxx"),
-            sum(col("prev") * col("prev")).as("syy"))
-        val va = (col("k") * col("sxx") - col("sx") * col("sx")).cast("double")
-        val vb = (col("k") * col("syy") - col("sy") * col("sy")).cast("double")
-        val num = (col("k") * col("sxy") - col("sx") * col("sy")).cast("double")
-        g.select(col("event_type"), col("k"),
-            when(va > 0 && vb > 0, round(num / sqrt(va * vb), 4)).as("r1"))
-          .orderBy("event_type")
+          .filter(col("prev").isNotNull), "r1", "event_type")
       },
-      Some("WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n FROM events GROUP BY 1, 2), " +
+      Some(s"WITH ${dailySeriesSql("n")}, " +
         "p AS (SELECT event_type, n, lag(n, 1) OVER (PARTITION BY event_type ORDER BY day) AS prev FROM daily), " +
-        "g AS (SELECT event_type, count(*) AS k, CAST(sum(n) AS BIGINT) AS sx, CAST(sum(prev) AS BIGINT) AS sy, " +
-        "CAST(sum(n*prev) AS BIGINT) AS sxy, CAST(sum(n*n) AS BIGINT) AS sxx, CAST(sum(prev*prev) AS BIGINT) AS syy " +
-        "FROM p WHERE prev IS NOT NULL GROUP BY 1) " +
-        "SELECT event_type, k, CASE WHEN k*sxx - sx*sx > 0 AND k*syy - sy*sy > 0 " +
-        "THEN round(CAST(k*sxy - sx*sy AS DOUBLE) / sqrt(CAST(k*sxx - sx*sx AS DOUBLE) * CAST(k*syy - sy*sy AS DOUBLE)), 4) END AS r1 " +
-        "FROM g ORDER BY event_type"),
+        lagPearsonSql("r1", "event_type")),
       scaleNote = "The raw log collapses to |types|×|days| rows in one " +
         "map-side-combined agg; the lag window and the moment sums " +
         "ride the SAME event_type exchange (one shuffle total), and " +
@@ -555,9 +663,7 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ts_acf",
       (spark, sf) => {
-        val daily = Tables.loadEvents(spark, sf)
-          .groupBy(col("event_type"), col("ts").cast("date").as("day"))
-          .agg(count(lit(1)).as("n"))
+        val daily = dailySeries(Tables.loadEvents(spark, sf), "n")
         val w = Window.partitionBy("event_type").orderBy("day")
         val withLags = (1 to 7).foldLeft(daily) { (d, l) =>
           d.withColumn(s"p$l", lag(col("n"), l).over(w))
@@ -566,30 +672,14 @@ object Analytics extends QueryGroup {
             expr("stack(7, 1, p1, 2, p2, 3, p3, 4, p4, 5, p5, 6, p6, " +
               "7, p7) AS (lag, prev)"))
           .filter(col("prev").isNotNull)
-        val g = pairs.groupBy("event_type", "lag")
-          .agg(count(lit(1)).as("k"),
-            sum(col("n")).as("sx"), sum(col("prev")).as("sy"),
-            sum(col("n") * col("prev")).as("sxy"),
-            sum(col("n") * col("n")).as("sxx"),
-            sum(col("prev") * col("prev")).as("syy"))
-        val va = (col("k") * col("sxx") - col("sx") * col("sx")).cast("double")
-        val vb = (col("k") * col("syy") - col("sy") * col("sy")).cast("double")
-        val num = (col("k") * col("sxy") - col("sx") * col("sy")).cast("double")
-        g.select(col("event_type"), col("lag"), col("k"),
-            when(va > 0 && vb > 0, round(num / sqrt(va * vb), 4)).as("r"))
-          .orderBy("event_type", "lag")
+        lagPearson(pairs, "r", "event_type", "lag")
       },
-      Some("WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n FROM events GROUP BY 1, 2), " +
+      Some(s"WITH ${dailySeriesSql("n")}, " +
         "p AS (" + (1 to 7).map(l =>
           s"SELECT event_type, n, $l AS lag, lag(n, $l) OVER " +
           "(PARTITION BY event_type ORDER BY day) AS prev FROM daily")
           .mkString(" UNION ALL ") + "), " +
-        "g AS (SELECT event_type, lag, count(*) AS k, CAST(sum(n) AS BIGINT) AS sx, CAST(sum(prev) AS BIGINT) AS sy, " +
-        "CAST(sum(n*prev) AS BIGINT) AS sxy, CAST(sum(n*n) AS BIGINT) AS sxx, CAST(sum(prev*prev) AS BIGINT) AS syy " +
-        "FROM p WHERE prev IS NOT NULL GROUP BY 1, 2) " +
-        "SELECT event_type, lag, k, CASE WHEN k*sxx - sx*sx > 0 AND k*syy - sy*sy > 0 " +
-        "THEN round(CAST(k*sxy - sx*sy AS DOUBLE) / sqrt(CAST(k*sxx - sx*sx AS DOUBLE) * CAST(k*syy - sy*sy AS DOUBLE)), 4) END AS r " +
-        "FROM g ORDER BY event_type, lag"),
+        lagPearsonSql("r", "event_type", "lag")),
       scaleNote = "ts_autocorr's economics × 7 lags at the cost of " +
         "×1: the log collapses to |types|×|days| rows map-side, ONE " +
         "window pass materializes all seven lag columns (the frame " +
@@ -1458,13 +1548,8 @@ object Analytics extends QueryGroup {
       (spark, sf) => {
         val session = spark
         import session.implicits._
-        val daily = Tables.loadEvents(spark, sf)
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("y"))
-        val d0 = daily.groupBy("event_type")
-          .agg(min(col("day")).as("d0"))
-        val pts = daily.join(d0, "event_type")
-          .withColumn("x", datediff(col("day"), col("d0")).cast("long"))
+        val daily = dailySeries(Tables.loadEvents(spark, sf), "y")
+        val pts = dayIndexed(daily)
         val s = pts.groupBy("event_type").agg(
           count(lit(1)).as("n"), sum(col("x")).as("sx"),
           sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
@@ -1487,9 +1572,7 @@ object Analytics extends QueryGroup {
               .as("forecast"))
           .orderBy("event_type", "h")
       },
-      Some("WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS y FROM events GROUP BY 1, 2), " +
-        "d0 AS (SELECT event_type, min(day) AS d0 FROM daily GROUP BY 1), " +
-        "pts AS (SELECT d.event_type, CAST(date_diff('day', x.d0, d.day) AS BIGINT) AS x, y FROM daily d JOIN d0 x ON d.event_type = x.event_type), " +
+      Some(s"WITH ${dailySeriesSql("y")}, $DayIndexSql, " +
         "s AS (SELECT event_type, count(*) AS n, sum(x) AS sx, sum(y) AS sy, sum(x*y) AS sxy, sum(x*x) AS sxx, max(x) AS mx FROM pts GROUP BY 1), " +
         "fit AS (SELECT *, CAST(n*sxy - sx*sy AS DOUBLE) / nullif(CAST(n*sxx - sx*sx AS DOUBLE), 0) AS slope FROM s), " +
         "fi AS (SELECT *, (CAST(sy AS DOUBLE) - slope * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE) AS intercept FROM fit) " +
@@ -1524,9 +1607,7 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ts_ar1",
       (spark, sf) => {
-        val daily = Tables.loadEvents(spark, sf)
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("y"))
+        val daily = dailySeries(Tables.loadEvents(spark, sf), "y")
         val pairs = daily.select(col("event_type"), col("day"),
             col("y").as("yt"))
           .join(daily.select(col("event_type"),
@@ -1556,7 +1637,7 @@ object Analytics extends QueryGroup {
             (abs(phi) < 1.0).as("stationary"))
           .orderBy("event_type")
       },
-      Some("WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS y FROM events GROUP BY 1, 2), " +
+      Some(s"WITH ${dailySeriesSql("y")}, " +
         "pairs AS (SELECT a.event_type, a.y AS yt, b.y AS ym1 FROM daily a " +
         "JOIN daily b ON a.event_type = b.event_type AND a.day = b.day + INTERVAL 1 DAY), " +
         "s AS (SELECT event_type, count(*) AS n, sum(ym1) AS sx, sum(yt) AS sy, " +
@@ -1604,15 +1685,8 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ts_theil_sen",
       (spark, sf) => {
-        val daily = Tables.loadEvents(spark, sf)
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("y"))
-        val d0 = daily.groupBy("event_type")
-          .agg(min(col("day")).as("d0"))
-        val pts = daily.join(d0, "event_type")
-          .select(col("event_type"),
-            datediff(col("day"), col("d0")).cast("long").as("x"),
-            col("y"))
+        val daily = dailySeries(Tables.loadEvents(spark, sf), "y")
+        val pts = dayIndexed(daily).select(col("event_type"), col("x"), col("y"))
         val l = pts.select(col("event_type"), col("x").as("xa"),
           col("y").as("ya"))
         val r = pts.select(col("event_type"), col("x").as("xb"),
@@ -1645,9 +1719,7 @@ object Analytics extends QueryGroup {
                 col("sx") * col("sx")), lit(0.0)), 4).as("ols_bp"))
           .orderBy("event_type")
       },
-      Some("WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS y FROM events GROUP BY 1, 2), " +
-        "d0 AS (SELECT event_type, min(day) AS d0 FROM daily GROUP BY 1), " +
-        "pts AS (SELECT d.event_type, CAST(date_diff('day', x.d0, d.day) AS BIGINT) AS x, y FROM daily d JOIN d0 x ON d.event_type = x.event_type), " +
+      Some(s"WITH ${dailySeriesSql("y")}, $DayIndexSql, " +
         "pr AS (SELECT a.event_type, ((b.y - a.y) * 10000) // (b.x - a.x) AS slope_q " +
         "FROM pts a JOIN pts b ON a.event_type = b.event_type AND a.x < b.x), " +
         "rk AS (SELECT event_type, slope_q, row_number() OVER (PARTITION BY event_type ORDER BY slope_q) AS rn, " +
@@ -1694,15 +1766,8 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ts_mann_kendall",
       (spark, sf) => {
-        val daily = Tables.loadEvents(spark, sf)
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("y"))
-        val d0 = daily.groupBy("event_type")
-          .agg(min(col("day")).as("d0"))
-        val pts = daily.join(d0, "event_type")
-          .select(col("event_type"),
-            datediff(col("day"), col("d0")).cast("long").as("x"),
-            col("y"))
+        val daily = dailySeries(Tables.loadEvents(spark, sf), "y")
+        val pts = dayIndexed(daily).select(col("event_type"), col("x"), col("y"))
         val l = pts.select(col("event_type"), col("x").as("xa"),
           col("y").as("ya"))
         val r = pts.select(col("event_type"), col("x").as("xb"),
@@ -1741,9 +1806,7 @@ object Analytics extends QueryGroup {
               .as("trending"))
           .orderBy("event_type")
       },
-      Some("WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS y FROM events GROUP BY 1, 2), " +
-        "d0 AS (SELECT event_type, min(day) AS d0 FROM daily GROUP BY 1), " +
-        "pts AS (SELECT d.event_type, CAST(date_diff('day', x.d0, d.day) AS BIGINT) AS x, y FROM daily d JOIN d0 x ON d.event_type = x.event_type), " +
+      Some(s"WITH ${dailySeriesSql("y")}, $DayIndexSql, " +
         "pr AS (SELECT a.event_type, CASE WHEN b.y > a.y THEN 1 WHEN b.y < a.y THEN -1 ELSE 0 END AS sgn " +
         "FROM pts a JOIN pts b ON a.event_type = b.event_type AND a.x < b.x), " +
         "ps AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_pairs, CAST(sum(sgn) AS BIGINT) AS s_stat, " +
@@ -1796,9 +1859,7 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ts_forecast_backtest",
       (spark, sf) => {
-        val daily = Tables.loadEvents(spark, sf)
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("y"))
+        val daily = dailySeries(Tables.loadEvents(spark, sf), "y")
         val wAll = Window.partitionBy("event_type").orderBy("day")
         val wCum = Window.partitionBy("event_type").orderBy("day")
           .rowsBetween(Window.unboundedPreceding, 0)
@@ -1849,7 +1910,7 @@ object Analytics extends QueryGroup {
             max(abs(col("err_bp"))).as("max_abs_err_bp"))
           .orderBy("event_type", "model")
       },
-      Some("WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS y FROM events GROUP BY 1, 2), " +
+      Some(s"WITH ${dailySeriesSql("y")}, " +
         "dx AS (SELECT event_type, day, y, " +
         "CAST(date_diff('day', min(day) OVER (PARTITION BY event_type), day) AS BIGINT) AS x FROM daily), " +
         "base AS (SELECT event_type, day, y, x, " +
@@ -2284,23 +2345,7 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ab_test_zscore",
       (spark, sf) => {
-        val ev = Tables.loadEvents(spark, sf)
-        // exposure anchor = first view; conversion = a purchase within
-        // 24 h of it (the windowed contract funnel_steps uses — an
-        // unwindowed "ever purchased" saturates to rate 1.0 on any
-        // long-lived user base and degenerates the test: se = 0)
-        val exposed = ev.filter(col("event_type") === "view")
-          .groupBy(col("user_id")).agg(min(col("ts")).as("t0"))
-          .withColumn("variant", col("user_id") % 2)
-        val conv = ev.filter(col("event_type") === "purchase")
-          .join(exposed.select("user_id", "t0"), Seq("user_id"))
-          .filter(col("ts") >= col("t0") &&
-            col("ts") <= col("t0") + expr("INTERVAL 24 HOUR"))
-          .select(col("user_id")).distinct().withColumn("c", lit(1L))
-        val per = exposed.join(conv, Seq("user_id"), "left")
-          .groupBy("variant")
-          .agg(count(lit(1)).as("n"),
-            sum(coalesce(col("c"), lit(0L))).as("x"))
+        val per = conversions(Tables.loadEvents(spark, sf), "variant", 2)
         val one = per.agg(
           sum(when(col("variant") === 0, col("n"))).as("n_a"),
           sum(when(col("variant") === 0, col("x"))).as("x_a"),
@@ -2325,9 +2370,7 @@ object Analytics extends QueryGroup {
           z.as("z_score"),
           coalesce(abs(z) > 1.96, lit(false)).as("significant"))
       },
-      Some("WITH exposed AS (SELECT user_id, min(ts) AS t0, user_id % 2 AS variant FROM events WHERE event_type = 'view' GROUP BY user_id), " +
-        "conv AS (SELECT DISTINCT p.user_id FROM events p JOIN exposed e ON p.user_id = e.user_id AND p.ts >= e.t0 AND p.ts <= e.t0 + INTERVAL 24 HOUR WHERE p.event_type = 'purchase'), " +
-        "per AS (SELECT e.variant, count(*) AS n, CAST(sum(CASE WHEN c.user_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS x FROM exposed e LEFT JOIN conv c ON e.user_id = c.user_id GROUP BY 1), " +
+      Some(s"WITH ${conversionsSql("variant", 2)}, " +
         "o AS (SELECT CAST(sum(CASE WHEN variant = 0 THEN n END) AS BIGINT) AS n_a, CAST(sum(CASE WHEN variant = 0 THEN x END) AS BIGINT) AS x_a, " +
         "CAST(sum(CASE WHEN variant = 1 THEN n END) AS BIGINT) AS n_b, CAST(sum(CASE WHEN variant = 1 THEN x END) AS BIGINT) AS x_b FROM per), " +
         "s AS (SELECT n_a, x_a, n_b, x_b, CAST(x_a AS DOUBLE)/CAST(n_a AS DOUBLE) AS ra, CAST(x_b AS DOUBLE)/CAST(n_b AS DOUBLE) AS rb, " +
@@ -2560,8 +2603,7 @@ object Analytics extends QueryGroup {
         val cells = ev.crossJoin(broadcast(mid))
           .withColumn("p", when(col("us") < col("mid_us"), 0L).otherwise(1L))
           .groupBy("g", "p")
-          .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
-            sum(col("v") * col("v")).as("svv"))
+          .agg(VMoments.head, VMoments.tail: _*)
         def cell(g: Int, p: Int, c: String) =
           sum(when(col("g") === g && col("p") === p, col(c)))
         val one = cells.agg(
@@ -2601,7 +2643,7 @@ object Analytics extends QueryGroup {
       },
       Some("WITH ev AS (SELECT user_id % 2 AS g, epoch_us(ts) AS us, CAST(floor(value*100) AS BIGINT) AS v FROM events WHERE event_type = 'purchase'), " +
         "mid AS (SELECT (min(us) + max(us)) // 2 AS mid_us FROM ev), " +
-        "cl AS (SELECT g, CASE WHEN us < mid_us THEN 0 ELSE 1 END AS p, count(*) AS n, CAST(sum(v) AS BIGINT) AS sv, CAST(sum(v*v) AS BIGINT) AS svv FROM ev CROSS JOIN mid GROUP BY 1, 2), " +
+        s"cl AS (SELECT g, CASE WHEN us < mid_us THEN 0 ELSE 1 END AS p, $VMomentsSql FROM ev CROSS JOIN mid GROUP BY 1, 2), " +
         "one AS (SELECT " +
         "CAST(sum(CASE WHEN g = 0 AND p = 0 THEN n END) AS BIGINT) AS n_a_pre, CAST(sum(CASE WHEN g = 0 AND p = 0 THEN sv END) AS BIGINT) AS sv_a_pre, CAST(sum(CASE WHEN g = 0 AND p = 0 THEN svv END) AS BIGINT) AS q_a_pre, " +
         "CAST(sum(CASE WHEN g = 0 AND p = 1 THEN n END) AS BIGINT) AS n_a_post, CAST(sum(CASE WHEN g = 0 AND p = 1 THEN sv END) AS BIGINT) AS sv_a_post, CAST(sum(CASE WHEN g = 0 AND p = 1 THEN svv END) AS BIGINT) AS q_a_post, " +
@@ -2640,20 +2682,7 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ab_test_welch",
       (spark, sf) => {
-        val per = Tables.loadEvents(spark, sf)
-          .filter(col("event_type") === "purchase")
-          .select((col("user_id") % 2).as("variant"),
-            floor(col("value") * 100).cast("long").as("v"))
-          .groupBy("variant")
-          .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
-            sum(col("v") * col("v")).as("svv"))
-        val one = per.agg(
-          sum(when(col("variant") === 0, col("n"))).as("n1"),
-          sum(when(col("variant") === 0, col("sv"))).as("sv1"),
-          sum(when(col("variant") === 0, col("svv"))).as("svv1"),
-          sum(when(col("variant") === 1, col("n"))).as("n2"),
-          sum(when(col("variant") === 1, col("sv"))).as("sv2"),
-          sum(when(col("variant") === 1, col("svv"))).as("svv2"))
+        val one = twoArms(Tables.loadEvents(spark, sf))
         val m1 = col("sv1").cast("double") / col("n1").cast("double")
         val m2 = col("sv2").cast("double") / col("n2").cast("double")
         val s21 = (col("n1") * col("svv1") - col("sv1") * col("sv1"))
@@ -2680,10 +2709,7 @@ object Analytics extends QueryGroup {
             coalesce(when(ok, abs(t) > lit(1.96)), lit(false))
               .as("significant"))
       },
-      Some("WITH ev AS (SELECT user_id % 2 AS variant, CAST(floor(value*100) AS BIGINT) AS v FROM events WHERE event_type = 'purchase'), " +
-        "per AS (SELECT variant, count(*) AS n, CAST(sum(v) AS BIGINT) AS sv, CAST(sum(v*v) AS BIGINT) AS svv FROM ev GROUP BY 1), " +
-        "one AS (SELECT CAST(sum(CASE WHEN variant = 0 THEN n END) AS BIGINT) AS n1, CAST(sum(CASE WHEN variant = 0 THEN sv END) AS BIGINT) AS sv1, CAST(sum(CASE WHEN variant = 0 THEN svv END) AS BIGINT) AS svv1, " +
-        "CAST(sum(CASE WHEN variant = 1 THEN n END) AS BIGINT) AS n2, CAST(sum(CASE WHEN variant = 1 THEN sv END) AS BIGINT) AS sv2, CAST(sum(CASE WHEN variant = 1 THEN svv END) AS BIGINT) AS svv2 FROM per), " +
+      Some(s"WITH $TwoArmsSql, " +
         "f AS (SELECT *, CAST(sv1 AS DOUBLE)/CAST(n1 AS DOUBLE) AS m1, CAST(sv2 AS DOUBLE)/CAST(n2 AS DOUBLE) AS m2, " +
         "CAST(n1*svv1 - sv1*sv1 AS DOUBLE)/CAST(n1*(n1-1) AS DOUBLE) AS s21, " +
         "CAST(n2*svv2 - sv2*sv2 AS DOUBLE)/CAST(n2*(n2-1) AS DOUBLE) AS s22 FROM one), " +
@@ -2733,20 +2759,7 @@ object Analytics extends QueryGroup {
       (spark, sf) => {
         val session = spark
         import session.implicits._
-        val per = Tables.loadEvents(spark, sf)
-          .filter(col("event_type") === "purchase")
-          .select((col("user_id") % 2).as("variant"),
-            floor(col("value") * 100).cast("long").as("v"))
-          .groupBy("variant")
-          .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
-            sum(col("v") * col("v")).as("svv"))
-        val one = per.agg(
-          sum(when(col("variant") === 0, col("n"))).as("n1"),
-          sum(when(col("variant") === 0, col("sv"))).as("sv1"),
-          sum(when(col("variant") === 0, col("svv"))).as("svv1"),
-          sum(when(col("variant") === 1, col("n"))).as("n2"),
-          sum(when(col("variant") === 1, col("sv"))).as("sv2"),
-          sum(when(col("variant") === 1, col("svv"))).as("svv2"))
+        val one = twoArms(Tables.loadEvents(spark, sf))
         def seM(n: String, sv: String, svv: String) =
           floor(sqrt((col(n) * col(svv) - col(sv) * col(sv)).cast("double") /
             (col(n) * (col(n) - 1)).cast("double") /
@@ -2778,10 +2791,7 @@ object Analytics extends QueryGroup {
       },
       Some {
         val values = BayesZMicro.map(z => s"($z)").mkString(", ")
-        "WITH ev AS (SELECT user_id % 2 AS variant, CAST(floor(value*100) AS BIGINT) AS v FROM events WHERE event_type = 'purchase'), " +
-          "per AS (SELECT variant, count(*) AS n, CAST(sum(v) AS BIGINT) AS sv, CAST(sum(v*v) AS BIGINT) AS svv FROM ev GROUP BY 1), " +
-          "one AS (SELECT CAST(sum(CASE WHEN variant = 0 THEN n END) AS BIGINT) AS n1, CAST(sum(CASE WHEN variant = 0 THEN sv END) AS BIGINT) AS sv1, CAST(sum(CASE WHEN variant = 0 THEN svv END) AS BIGINT) AS svv1, " +
-          "CAST(sum(CASE WHEN variant = 1 THEN n END) AS BIGINT) AS n2, CAST(sum(CASE WHEN variant = 1 THEN sv END) AS BIGINT) AS sv2, CAST(sum(CASE WHEN variant = 1 THEN svv END) AS BIGINT) AS svv2 FROM per), " +
+        s"WITH $TwoArmsSql, " +
           "f AS (SELECT *, (sv1 * 1000000) // n1 AS m1, (sv2 * 1000000) // n2 AS m2, " +
           "CASE WHEN n1 > 1 AND n2 > 1 THEN CAST(floor(sqrt(CAST(n1*svv1 - sv1*sv1 AS DOUBLE)/CAST(n1*(n1-1) AS DOUBLE)/CAST(n1 AS DOUBLE)) * 1000000.0) AS BIGINT) END AS se1, " +
           "CASE WHEN n1 > 1 AND n2 > 1 THEN CAST(floor(sqrt(CAST(n2*svv2 - sv2*sv2 AS DOUBLE)/CAST(n2*(n2-1) AS DOUBLE)/CAST(n2 AS DOUBLE)) * 1000000.0) AS BIGINT) END AS se2 FROM one), " +
@@ -2934,12 +2944,11 @@ object Analytics extends QueryGroup {
       (spark, sf) => {
         val daily = Tables.loadEvents(spark, sf)
           .filter(col("event_type") === "purchase")
-          .groupBy(to_date(col("ts")).as("day"),
-            (col("user_id") % 2).as("variant"))
-          .agg(count(lit(1)).as("n"),
-            sum(floor(col("value") * 100).cast("long")).as("sv"),
-            sum(floor(col("value") * 100).cast("long") *
-              floor(col("value") * 100).cast("long")).as("svv"))
+          .select(to_date(col("ts")).as("day"),
+            (col("user_id") % 2).as("variant"),
+            floor(col("value") * 100).cast("long").as("v"))
+          .groupBy("day", "variant")
+          .agg(VMoments.head, VMoments.tail: _*)
         def arm(v: Int, c: String) =
           sum(when(col("variant") === v, col(c)).otherwise(0L)).as(s"$c$v")
         val grid = daily.groupBy("day")
@@ -2980,7 +2989,7 @@ object Analytics extends QueryGroup {
           .orderBy("day")
       },
       Some("WITH ev AS (SELECT CAST(ts AS DATE) AS day, user_id % 2 AS variant, CAST(floor(value*100) AS BIGINT) AS v FROM events WHERE event_type = 'purchase'), " +
-        "daily AS (SELECT day, variant, count(*) AS n, CAST(sum(v) AS BIGINT) AS sv, CAST(sum(v*v) AS BIGINT) AS svv FROM ev GROUP BY 1, 2), " +
+        s"daily AS (SELECT day, variant, $VMomentsSql FROM ev GROUP BY 1, 2), " +
         "grid AS (SELECT day, " +
         "CAST(sum(CASE WHEN variant = 0 THEN n ELSE 0 END) AS BIGINT) AS n0, CAST(sum(CASE WHEN variant = 0 THEN sv ELSE 0 END) AS BIGINT) AS sv0, CAST(sum(CASE WHEN variant = 0 THEN svv ELSE 0 END) AS BIGINT) AS svv0, " +
         "CAST(sum(CASE WHEN variant = 1 THEN n ELSE 0 END) AS BIGINT) AS n1, CAST(sum(CASE WHEN variant = 1 THEN sv ELSE 0 END) AS BIGINT) AS sv1, CAST(sum(CASE WHEN variant = 1 THEN svv ELSE 0 END) AS BIGINT) AS svv1 FROM daily GROUP BY 1), " +
@@ -3033,20 +3042,7 @@ object Analytics extends QueryGroup {
       (spark, sf) => {
         val session = spark
         import session.implicits._
-        val per = Tables.loadEvents(spark, sf)
-          .filter(col("event_type") === "purchase")
-          .select((col("user_id") % 2).as("variant"),
-            floor(col("value") * 100).cast("long").as("v"))
-          .groupBy("variant")
-          .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
-            sum(col("v") * col("v")).as("svv"))
-        val one = per.agg(
-          sum(when(col("variant") === 0, col("n"))).as("n1"),
-          sum(when(col("variant") === 0, col("sv"))).as("sv1"),
-          sum(when(col("variant") === 0, col("svv"))).as("svv1"),
-          sum(when(col("variant") === 1, col("n"))).as("n2"),
-          sum(when(col("variant") === 1, col("sv"))).as("sv2"),
-          sum(when(col("variant") === 1, col("svv"))).as("svv2"))
+        val one = twoArms(Tables.loadEvents(spark, sf))
         val powers = Seq((80, 0.8416), (90, 1.2816), (95, 1.6449))
           .toDF("power_pct", "zb")
         def d(c: Column) = c.cast("double")
@@ -3071,10 +3067,7 @@ object Analytics extends QueryGroup {
             ceil(nNeed).cast("long").as("n_per_arm_for_5pct"))
           .orderBy("power_pct")
       },
-      Some("WITH ev AS (SELECT user_id % 2 AS variant, CAST(floor(value*100) AS BIGINT) AS v FROM events WHERE event_type = 'purchase'), " +
-        "per AS (SELECT variant, count(*) AS n, CAST(sum(v) AS BIGINT) AS sv, CAST(sum(v*v) AS BIGINT) AS svv FROM ev GROUP BY 1), " +
-        "one AS (SELECT CAST(sum(CASE WHEN variant = 0 THEN n END) AS BIGINT) AS n1, CAST(sum(CASE WHEN variant = 0 THEN sv END) AS BIGINT) AS sv1, CAST(sum(CASE WHEN variant = 0 THEN svv END) AS BIGINT) AS svv1, " +
-        "CAST(sum(CASE WHEN variant = 1 THEN n END) AS BIGINT) AS n2, CAST(sum(CASE WHEN variant = 1 THEN sv END) AS BIGINT) AS sv2, CAST(sum(CASE WHEN variant = 1 THEN svv END) AS BIGINT) AS svv2 FROM per), " +
+      Some(s"WITH $TwoArmsSql, " +
         "pw AS (SELECT * FROM (VALUES (80, 0.8416), (90, 1.2816), (95, 1.6449)) AS t(power_pct, zb)), " +
         "f AS (SELECT *, CAST((n1+n2)*(svv1+svv2) - (sv1+sv2)*(sv1+sv2) AS DOUBLE)/CAST((n1+n2)*(n1+n2-1) AS DOUBLE) AS s2p, " +
         "CAST(sv1 AS DOUBLE)/CAST(n1 AS DOUBLE) AS m1 FROM one CROSS JOIN pw), " +
@@ -3245,9 +3238,7 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ts_holt_linear",
       (spark, sf) => {
-        val daily = Tables.loadEvents(spark, sf)
-          .groupBy(col("event_type"), col("ts").cast("date").as("day"))
-          .agg(count(lit(1)).as("n"))
+        val daily = dailySeries(Tables.loadEvents(spark, sf), "n")
         val A = "x.n * 1000000 + 4 * (element_at(out, -1).l + element_at(out, -1).b)"
         val LP = s"CASE WHEN size(out) = 0 THEN x.n * 1000000 " +
           s"ELSE (($A) - pmod($A, 5)) div 5 END"
@@ -3272,7 +3263,7 @@ object Analytics extends QueryGroup {
         val LPd = s"(($An) - ((($An) % 5) + 5) % 5) // 5"
         val Bd = s"($LPd) - h.l + 4 * h.b"
         val BPd = s"(($Bd) - ((($Bd) % 5) + 5) % 5) // 5"
-        "WITH RECURSIVE daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n FROM events GROUP BY 1, 2), " +
+        s"WITH RECURSIVE ${dailySeriesSql("n")}, " +
           "s AS (SELECT event_type, day, n, row_number() OVER (PARTITION BY event_type ORDER BY day) AS i FROM daily), " +
           "h(event_type, i, day, n, l, b) AS (" +
           "SELECT event_type, i, day, n, n * 1000000, CAST(0 AS BIGINT) FROM s WHERE i = 1 " +
@@ -3318,9 +3309,7 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ts_holt_winters",
       (spark, sf) => {
-        val daily = Tables.loadEvents(spark, sf)
-          .groupBy(col("event_type"), col("ts").cast("date").as("day"))
-          .agg(count(lit(1)).as("n"))
+        val daily = dailySeries(Tables.loadEvents(spark, sf), "n")
         val SP = "CASE WHEN size(out) >= 7 THEN element_at(out, -7).s " +
           "ELSE CAST(0 AS BIGINT) END"
         val A = s"x.n * 1000000 - ($SP) + " +
@@ -3361,7 +3350,7 @@ object Analytics extends QueryGroup {
         val Sn = s"s.n * 1000000 - ($LPd) + 4 * ($SPd)"
         val SVd = s"(($Sn) - (((($Sn) % 5) + 5) % 5)) // 5"
         val Fd = s"($LPd) + ($BPd) + h.seas[2]"
-        "WITH RECURSIVE daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n FROM events GROUP BY 1, 2), " +
+        s"WITH RECURSIVE ${dailySeriesSql("n")}, " +
           "s AS (SELECT event_type, day, n, row_number() OVER (PARTITION BY event_type ORDER BY day) AS i FROM daily), " +
           "h(event_type, i, day, n, l, b, sv, fv, seas) AS (" +
           "SELECT event_type, i, day, n, n * 1000000, CAST(0 AS BIGINT), CAST(0 AS BIGINT), n * 1000000, " +
@@ -3466,19 +3455,7 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ab_test_chi2",
       (spark, sf) => {
-        val ev = Tables.loadEvents(spark, sf)
-        val exposed = ev.filter(col("event_type") === "view")
-          .groupBy(col("user_id")).agg(min(col("ts")).as("t0"))
-          .withColumn("v", col("user_id") % 3)
-        val conv = ev.filter(col("event_type") === "purchase")
-          .join(exposed.select("user_id", "t0"), Seq("user_id"))
-          .filter(col("ts") >= col("t0") &&
-            col("ts") <= col("t0") + expr("INTERVAL 24 HOUR"))
-          .select(col("user_id")).distinct().withColumn("c", lit(1L))
-        val per = exposed.join(conv, Seq("user_id"), "left")
-          .groupBy("v")
-          .agg(count(lit(1)).as("n"),
-            sum(coalesce(col("c"), lit(0L))).as("x"))
+        val per = conversions(Tables.loadEvents(spark, sf), "v", 3)
         val one = per.agg(
           sum(when(col("v") === 0, col("n"))).as("n0"),
           sum(when(col("v") === 0, col("x"))).as("x0"),
@@ -3504,9 +3481,7 @@ object Analytics extends QueryGroup {
           col("n2"), col("x2"), chi2.as("chi2"), lit(2).as("df"),
           coalesce(chi2 > lit(5.9915), lit(false)).as("significant"))
       },
-      Some("WITH exposed AS (SELECT user_id, min(ts) AS t0, user_id % 3 AS v FROM events WHERE event_type = 'view' GROUP BY user_id), " +
-        "conv AS (SELECT DISTINCT p.user_id FROM events p JOIN exposed e ON p.user_id = e.user_id AND p.ts >= e.t0 AND p.ts <= e.t0 + INTERVAL 24 HOUR WHERE p.event_type = 'purchase'), " +
-        "per AS (SELECT e.v, count(*) AS n, CAST(sum(CASE WHEN c.user_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS x FROM exposed e LEFT JOIN conv c ON e.user_id = c.user_id GROUP BY 1), " +
+      Some(s"WITH ${conversionsSql("v", 3)}, " +
         "o AS (SELECT CAST(sum(CASE WHEN v = 0 THEN n END) AS BIGINT) AS n0, CAST(sum(CASE WHEN v = 0 THEN x END) AS BIGINT) AS x0, " +
         "CAST(sum(CASE WHEN v = 1 THEN n END) AS BIGINT) AS n1, CAST(sum(CASE WHEN v = 1 THEN x END) AS BIGINT) AS x1, " +
         "CAST(sum(CASE WHEN v = 2 THEN n END) AS BIGINT) AS n2, CAST(sum(CASE WHEN v = 2 THEN x END) AS BIGINT) AS x2 FROM per), " +
@@ -3630,10 +3605,7 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ab_test_srm",
       (spark, sf) => {
-        val per = Tables.loadEvents(spark, sf)
-          .filter(col("event_type") === "view")
-          .groupBy(col("user_id")).agg(min(col("ts")).as("t0"))
-          .withColumn("v", col("user_id") % 3)
+        val per = exposed(Tables.loadEvents(spark, sf), "v", 3)
           .groupBy("v").agg(count(lit(1)).as("n"))
         val one = per.agg(
           sum(when(col("v") === 0, col("n"))).as("n0"),
@@ -3655,7 +3627,7 @@ object Analytics extends QueryGroup {
           chiWrong.as("chi2_misdeclared"),
           (chiWrong > lit(13.8155)).as("srm_detected_misdeclared"))
       },
-      Some("WITH exposed AS (SELECT user_id, min(ts) AS t0, user_id % 3 AS v FROM events WHERE event_type = 'view' GROUP BY user_id), " +
+      Some(s"WITH ${exposedSql("v", 3)}, " +
         "per AS (SELECT v, count(*) AS n FROM exposed GROUP BY 1), " +
         "o AS (SELECT CAST(sum(CASE WHEN v = 0 THEN n END) AS BIGINT) AS n0, CAST(sum(CASE WHEN v = 1 THEN n END) AS BIGINT) AS n1, CAST(sum(CASE WHEN v = 2 THEN n END) AS BIGINT) AS n2 FROM per), " +
         "f AS (SELECT *, CAST(n0 + n1 + n2 AS DOUBLE) AS nn FROM o), " +

@@ -425,8 +425,7 @@ object AnnPq extends QueryGroup {
     // from the sink's parts rather than by Sink.query.
     QueryDef(
       pqCodebook.name,
-      (spark, sf) => {
-        val b = pqCodebook(spark, sf)
+      (spark, sf) => pqCodebook.gated(spark, sf) { b =>
         val n = AnnKmeans.quantized(spark, sf)
           .agg(count(lit(1)).as("n_vectors"))
         b.agg(countDistinct(col("m")).as("n_subspaces"),
@@ -437,7 +436,6 @@ object AnnPq extends QueryGroup {
           .select(col("n_vectors"), col("n_subspaces"),
             (col("n_codewords") === M * Kc).as("books_full"),
             (col("n_badwidth") === 0).as("dims_ok"))
-          .transform(pqCodebook.gate(spark, sf))
       },
       Some(s"SELECT count(*) AS n_vectors, $M AS n_subspaces, TRUE AS books_full, TRUE AS dims_ok, " +
         s"${pqCodebook.nFiles} FROM embeddings"),

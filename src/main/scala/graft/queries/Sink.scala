@@ -37,28 +37,36 @@ final case class Sink(name: String, buckets: Int, bucketCol: String,
 
   /** The sink's table: built on first read in the session, or when its
     * directory has lost its part files, then read back. */
-  def apply(spark: SparkSession, sf: String): DataFrame = {
+  def apply(spark: SparkSession, sf: String): DataFrame = read(spark, sf)._1
+
+  /** [[apply]] plus the part-file count, listed once: the count that
+    * found the table intact, else one count after the rebuild. */
+  private def read(spark: SparkSession, sf: String): (DataFrame, Int) = {
     val t = table(spark, sf)
-    if (!spark.catalog.tableExists(t) || partFiles(spark, sf) == 0) {
-      if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE `$t`")
+    val exists = spark.catalog.tableExists(t)
+    val listed = if (exists) partFiles(spark, sf) else 0
+    val n = if (listed > 0) listed else {
+      if (exists) spark.sql(s"DROP TABLE `$t`")
       build(spark, sf).repartition(buckets, col(bucketCol))
         .write.mode("overwrite")
         .bucketBy(buckets, bucketCol)
         .sortBy(sortCols.head, sortCols.tail: _*)
         .option("path", dir(spark, sf)).saveAsTable(t)
+      partFiles(spark, sf)
     }
-    spark.table(t)
+    (spark.table(t), n)
   }
 
   /** The oracle's side of the gate: the bucket count as `n_files`. */
   val nFiles: String = s"$buckets AS n_files"
 
-  /** The layout gate: the frame plus an `n_files` column holding the
-    * sink's part-file count, listed once, when the gate is built (after
-    * the sink itself). */
-  def gate(spark: SparkSession, sf: String): DataFrame => DataFrame = {
-    val n = partFiles(spark, sf)
-    _.withColumn("n_files", lit(n))
+  /** The layout gate: `rollup` over the sink's table plus an `n_files`
+    * column holding the sink's part-file count, from the same listing
+    * that decided whether to rebuild. */
+  def gated(spark: SparkSession, sf: String)(
+      rollup: DataFrame => DataFrame): DataFrame = {
+    val (t, n) = read(spark, sf)
+    rollup(t).withColumn("n_files", lit(n))
   }
 
   /** The sink's own declared query, named after it: `rollup` over the
@@ -66,8 +74,7 @@ final case class Sink(name: String, buckets: Int, bucketCol: String,
     * fails the hash. */
   def query(rollup: DataFrame => DataFrame, oracle: String,
       scaleNote: String): QueryDef =
-    QueryDef(name,
-      (spark, sf) => rollup(apply(spark, sf)).transform(gate(spark, sf)),
+    QueryDef(name, (spark, sf) => gated(spark, sf)(rollup),
       Some(oracle), scaleNote)
 }
 

@@ -150,6 +150,39 @@ object TextVector extends QueryGroup {
   private val PercMarginSql: String =
     s"mg AS (SELECT doc_id, CASE WHEN y = 1 THEN 1 ELSE 0 END AS y01, ${PercSqlDot("c")} AS margin FROM f CROSS JOIN ct)"
 
+  /** The per-language Flesch report over `(lang, text)` documents:
+    * per doc three exact integer counts and the reading-ease score
+    * floor-quantized to centi-units, then one BIGINT rollup per lang —
+    * text_readability's body and, over a stream, stream_readability's
+    * complete-mode aggregate. */
+  def readabilityReport(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val w = size(split(col("text"), " "))
+    val y = size(regexp_extract_all(lower(col("text")),
+      lit("[aeiouy]+"), lit(0)))
+    val s = greatest(size(regexp_extract_all(col("text"),
+      lit("[.!?]+"), lit(0))), lit(1))
+    val flesch = lit(206.835) -
+      lit(1.015) * (w.cast("double") / s.cast("double")) -
+      lit(84.6) * (y.cast("double") / w.cast("double"))
+    docs.select(col("lang"), w.cast("long").as("w"), y.cast("long").as("y"),
+        floor(flesch * lit(100.0)).cast("long").as("centi"))
+      .groupBy("lang")
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("w")).as("total_words"),
+        sum(col("y")).as("sy"),
+        sum(col("centi")).as("sc"),
+        sum(when(col("centi") >= 6000, 1L).otherwise(0L)).as("n_easy"),
+        sum(when(col("centi") < 3000, 1L).otherwise(0L)).as("n_difficult"))
+      .select(col("lang"), col("n_docs"), col("total_words"),
+        round(col("sy").cast("double") / col("total_words").cast("double"), 4)
+          .as("syllables_per_word"),
+        round(col("sc").cast("double") /
+          (col("n_docs").cast("double") * lit(100.0)), 4)
+          .as("avg_flesch"),
+        col("n_easy"), col("n_difficult"))
+  }
+
   def defs: Seq[QueryDef] = Seq(
 
     // #52 — tokenize + explode + count: the word-frequency core of
@@ -959,35 +992,8 @@ object TextVector extends QueryGroup {
     // (difficult) cutoffs.
     QueryDef(
       "text_readability",
-      (spark, sf) => {
-        val w = size(split(col("text"), " "))
-        val y = size(regexp_extract_all(lower(col("text")),
-          lit("[aeiouy]+"), lit(0)))
-        val s = greatest(size(regexp_extract_all(col("text"),
-          lit("[.!?]+"), lit(0))), lit(1))
-        val flesch = lit(206.835) -
-          lit(1.015) * (w.cast("double") / s.cast("double")) -
-          lit(84.6) * (y.cast("double") / w.cast("double"))
-        Tables.documents(spark, sf)
-          .select(col("lang"), w.cast("long").as("w"),
-            y.cast("long").as("y"),
-            floor(flesch * lit(100.0)).cast("long").as("centi"))
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("w")).as("total_words"),
-            sum(col("y")).as("sy"),
-            sum(col("centi")).as("sc"),
-            sum(when(col("centi") >= 6000, 1L).otherwise(0L)).as("n_easy"),
-            sum(when(col("centi") < 3000, 1L).otherwise(0L)).as("n_difficult"))
-          .select(col("lang"), col("n_docs"), col("total_words"),
-            round(col("sy").cast("double") / col("total_words").cast("double"), 4)
-              .as("syllables_per_word"),
-            round(col("sc").cast("double") /
-              (col("n_docs").cast("double") * lit(100.0)), 4)
-              .as("avg_flesch"),
-            col("n_easy"), col("n_difficult"))
-          .orderBy("lang")
-      },
+      (spark, sf) =>
+        readabilityReport(Tables.documents(spark, sf)).orderBy("lang"),
       Some("WITH d AS (SELECT lang, CAST(len(string_split(text, ' ')) AS BIGINT) AS w, " +
         "CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT) AS y, " +
         "CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS BIGINT) AS s FROM documents), " +

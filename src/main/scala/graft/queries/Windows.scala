@@ -290,9 +290,7 @@ object Windows extends QueryGroup {
     QueryDef(
       "win_moving_median",
       (spark, sf) => {
-        val daily = Tables.loadEvents(spark, sf)
-          .groupBy(col("event_type"), col("ts").cast("date").as("day"))
-          .agg(count(lit(1)).as("n"))
+        val daily = Analytics.dailySeries(Tables.loadEvents(spark, sf), "n")
         val w = Window.partitionBy("event_type").orderBy("day")
           .rowsBetween(-6, Window.currentRow)
         daily
@@ -305,7 +303,7 @@ object Windows extends QueryGroup {
             col("n"), col("med2").as("med2_7d"))
           .orderBy("event_type", "day")
       },
-      Some("WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n FROM events GROUP BY 1, 2) " +
+      Some(s"WITH ${Analytics.dailySeriesSql("n")} " +
         "SELECT event_type, CAST(day AS VARCHAR) AS day, n, " +
         "CAST(2 * median(n) OVER (PARTITION BY event_type ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT) AS med2_7d " +
         "FROM daily ORDER BY event_type, day"),

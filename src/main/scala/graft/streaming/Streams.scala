@@ -342,6 +342,12 @@ object Streams {
           }
           for (e <- evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))) {
             val b = (e.ts.getTime / hourMs) * hourMs
+            // a later batch carrying an hour older than the open one
+            // would close the open hour early and enter both into the
+            // 24-bucket history twice — fail loudly instead (see ewma)
+            if (st.bucket != Long.MinValue && b < st.bucket)
+              throw new IllegalStateException(
+                s"stream_anomaly replay-order violation: hour $b after open hour ${st.bucket}")
             if (b != st.bucket) {
               finalize()
               st = AnomalyState(b, 0L, st.hist)
@@ -477,7 +483,6 @@ object Streams {
   def holt(events: Dataset[Event]): Dataset[HoltRow] = {
     import events.sparkSession.implicits._
     val dayMs = 86400L * 1000
-    def d5(v: Long): Long = { val r = ((v % 5) + 5) % 5; (v - r) / 5 }
     localFs(events)
       .groupByKey(_.event_type)
       .flatMapGroupsWithState(OutputMode.Append,
@@ -491,8 +496,8 @@ object Streams {
             val (l, b) =
               if (!st.started) (x, 0L)
               else {
-                val lp = d5(x + 4 * (st.l + st.b))
-                (lp, d5(lp - st.l + 4 * st.b))
+                val lp = Math.floorDiv(x + 4 * (st.l + st.b), 5L)
+                (lp, Math.floorDiv(lp - st.l + 4 * st.b, 5L))
               }
             out += HoltRow(typ,
               java.time.LocalDate.ofEpochDay(st.day).toString, st.n,
@@ -537,7 +542,6 @@ object Streams {
   def holtWinters(events: Dataset[Event]): Dataset[HwRow] = {
     import events.sparkSession.implicits._
     val dayMs = 86400L * 1000
-    def d5(v: Long): Long = { val r = ((v % 5) + 5) % 5; (v - r) / 5 }
     localFs(events)
       .groupByKey(_.event_type)
       .flatMapGroupsWithState(OutputMode.Append,
@@ -554,9 +558,9 @@ object Streams {
             val (l, b, sv) =
               if (!st.started) (x, 0L, 0L)
               else {
-                val lp = d5(x - sp + 4 * (st.l + st.b))
-                val bp = d5(lp - st.l + 4 * st.b)
-                (lp, bp, d5(x - lp + 4 * sp))
+                val lp = Math.floorDiv(x - sp + 4 * (st.l + st.b), 5L)
+                val bp = Math.floorDiv(lp - st.l + 4 * st.b, 5L)
+                (lp, bp, Math.floorDiv(x - lp + 4 * sp, 5L))
               }
             out += HwRow(typ,
               java.time.LocalDate.ofEpochDay(st.day).toString, st.n,
@@ -1103,33 +1107,8 @@ object Streams {
     * report (parity-proven). This is the ingest-quality panel that
     * runs next to stream_quality_gate: the gate drops documents,
     * this watches the quality DISTRIBUTION drift per language. */
-  def readability(docs: Dataset[LangDoc]): DataFrame = {
-    val w = size(split(col("text"), " "))
-    val y = size(regexp_extract_all(lower(col("text")),
-      lit("[aeiouy]+"), lit(0)))
-    val s = greatest(size(regexp_extract_all(col("text"),
-      lit("[.!?]+"), lit(0))), lit(1))
-    val flesch = lit(206.835) -
-      lit(1.015) * (w.cast("double") / s.cast("double")) -
-      lit(84.6) * (y.cast("double") / w.cast("double"))
-    localFs(docs).toDF()
-      .select(col("lang"), w.cast("long").as("w"), y.cast("long").as("y"),
-        floor(flesch * lit(100.0)).cast("long").as("centi"))
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("w")).as("total_words"),
-        sum(col("y")).as("sy"),
-        sum(col("centi")).as("sc"),
-        sum(when(col("centi") >= 6000, 1L).otherwise(0L)).as("n_easy"),
-        sum(when(col("centi") < 3000, 1L).otherwise(0L)).as("n_difficult"))
-      .select(col("lang"), col("n_docs"), col("total_words"),
-        round(col("sy").cast("double") / col("total_words").cast("double"), 4)
-          .as("syllables_per_word"),
-        round(col("sc").cast("double") /
-          (col("n_docs").cast("double") * lit(100.0)), 4)
-          .as("avg_flesch"),
-        col("n_easy"), col("n_difficult"))
-  }
+  def readability(docs: Dataset[LangDoc]): DataFrame =
+    graft.queries.TextVector.readabilityReport(localFs(docs).toDF())
 
   /** Live feed-freshness panel — dq_freshness' streaming twin
     * (stream_freshness, r12), and the form freshness monitoring
@@ -1391,13 +1370,7 @@ object Streams {
     * EXACTLY the batch op's moment aggregate, so the parity test
     * recomposes the batch MDE bit-for-bit from the streamed cells. */
   def powerMoments(events: Dataset[Event]): DataFrame =
-    localFs(events).toDF()
-      .filter(col("event_type") === "purchase")
-      .select((col("user_id") % 2).as("variant"),
-        floor(col("value") * 100).cast("long").as("v"))
-      .groupBy("variant")
-      .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
-        sum(col("v") * col("v")).as("svv"))
+    graft.queries.Analytics.armMoments(localFs(events).toDF())
 
   /** Live target-encoder refresh — the streaming form of
     * feat_target_encode: the train/val split is a pure hash of the

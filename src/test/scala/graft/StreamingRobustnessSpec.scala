@@ -433,4 +433,43 @@ class StreamingRobustnessSpec extends SparkSpec {
         "reversed replay changed the near-dup pair set")
     } finally q.stop()
   }
+
+  test("every day/hour stream fold fails loudly on a batch older than its open bucket (replay-order violation)") {
+    val s = spark
+    import s.implicits._
+    import graft.streaming.Streams
+    import Streams.Event
+    type Fold = org.apache.spark.sql.Dataset[Event] => org.apache.spark.sql.Dataset[_]
+    val folds: Seq[(String, Fold)] = Seq(
+      "stream_anomaly" -> (Streams.anomaly(_)),
+      "stream_ewma" -> (Streams.ewma(_)),
+      "stream_holt" -> (Streams.holt(_)),
+      "stream_holt_winters" -> (Streams.holtWinters(_)),
+      "stream_calendar_gaps" -> (Streams.calendarGaps(_)),
+      "stream_trend" -> (Streams.trend(_)))
+    def ev(id: Long, t: String) = Event(id, java.sql.Timestamp.valueOf(t), 1L, "view", 1.0)
+    for (((name, fold), i) <- folds.zipWithIndex) {
+      val mem = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[Event](70 + i, spark, None)
+      val q = fold(mem.toDS()).writeStream.format("memory")
+        .queryName(s"replay_order_$i").outputMode("append").start()
+      try {
+        // ordered: two hours of one day, then the next day opens
+        mem.addData(ev(1, "2024-01-02 10:00:00"), ev(2, "2024-01-02 11:00:00"),
+          ev(3, "2024-01-03 09:00:00"))
+        q.processAllAvailable()
+        // a later batch carrying a day (and hour) older than the open one
+        mem.addData(ev(4, "2024-01-02 12:00:00"))
+        val e = withClue(s"$name: ") {
+          intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+            q.processAllAvailable()
+          }
+        }
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
+        assert(msgs.exists(_.contains("replay-order violation")),
+          s"$name: no replay-order violation in ${msgs.map(_.take(200))}")
+      } finally q.stop()
+    }
+  }
 }
