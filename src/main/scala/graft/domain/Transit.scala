@@ -56,7 +56,9 @@ object Transit {
   /** Services active on `day` (yyyymmdd): weekday-regime rows within
     * their validity range, plus exception_type=1 additions, minus
     * exception_type=2 removals. Day-of-week is resolved driver-side
-    * (the day is a parameter, not data). */
+    * (the day is a parameter, not data). One flagged union, one
+    * groupBy: a service is active when some row adds it and none
+    * removes it. */
   def activeServices(calendar: DataFrame, calendarDates: DataFrame,
       day: String): DataFrame = {
     val dowCol = LocalDate.parse(day, Yyyymmdd).getDayOfWeek
@@ -64,65 +66,52 @@ object Transit {
     val regular = calendar
       .filter(col(dowCol) === 1 &&
         col("start_date") <= day && col("end_date") >= day)
+      .select(col("service_id"), lit(true).as("add"), lit(false).as("rm"))
+    val exceptions = calendarDates
+      .filter(col("date") === day)
+      .select(col("service_id"), (col("exception_type") === 1).as("add"),
+        // a null service_id is never removed: null equals no removal
+        (col("exception_type") === 2 && col("service_id").isNotNull).as("rm"))
+    regular.union(exceptions)
+      .groupBy("service_id")
+      .agg(max("add").as("add"), max("rm").as("rm"))
+      .filter(col("add") && !col("rm"))
       .select("service_id")
-    val added = calendarDates
-      .filter(col("date") === day && col("exception_type") === 1)
-      .select("service_id")
-    val removed = calendarDates
-      .filter(col("date") === day && col("exception_type") === 2)
-      .select("service_id")
-    regular.union(added).distinct()
-      .join(removed, Seq("service_id"), "left_anti")
   }
 
   /** EP1 — match each passage to its scheduled stop call on `day`.
-    * Fuzzy join: train number is a substring of trip_id; station joins
+    * Fuzzy match: train number is a substring of trip_id; station joins
     * on embedded UIC-7; only services active that day participate.
     * Ambiguous train numbers (>1 candidate trip) are left UNMATCHED
     * (null schedule columns), like unmatched numbers — the reference's
     * unique-match policy, kept deterministic.
     *
-    * Shape: inner contains-join generates candidates with the SMALL
-    * side (the per-day passage batch) broadcast — broadcasting the
-    * schedule would ship the big side; then unique candidates
-    * left-join back onto passages by FULL passage identity (all
-    * passage columns, so two polling cycles that report identical
-    * expected times still match independently), which also restores
-    * unmatched and ambiguous rows with null schedule columns. */
+    * Shape: the day's active schedule becomes one call array per
+    * station (UIC-7) — |stations| rows, bounded by the timetable —
+    * which is broadcast; every passage row left-joins its station's
+    * array on that equi key, so the passages never shuffle and each
+    * row (two polling cycles that report identical rows included) is
+    * matched on its own. Per row, `hit` keeps the calls whose trip_id
+    * contains the number. Uniqueness is of TRIP, not of calls: a loop
+    * trip calling twice at one station still matches, on its lowest
+    * (stop_sequence, departure_secs) call, nulls first. */
   def matchPassages(passages: DataFrame, ext: DataFrame,
       active: DataFrame, day: String): DataFrame = {
-    val sched = ext.join(active, "service_id")
-    val passageKey = passages.columns.toSeq
-    val candidates = sched
-      .join(broadcast(passages),
-        col("trip_id").contains(col("num")) &&
-          uic7(col("station_id")) === regexp_extract(col("stop_id"), "([0-9]{7})", 1),
-        "inner")
-    // unique-match policy: ambiguity is uniqueness of TRIP, not of
-    // candidate rows — a loop route where one trip calls twice at the
-    // same station yields 2 candidate rows for 1 trip_id and must
-    // still match (r2 advice). Per passage row (full identity incl.
-    // request time): count distinct trips; if exactly one, keep the
-    // deterministic stop call (min stop_sequence).
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(passageKey.map(col): _*)
-    val counted = candidates
-      .withColumn("n_trips", size(collect_set(col("trip_id")).over(w)))
-    // rename join-side keys (uniq descends from passages — unqualified
-    // columns would be ambiguous in the self-join)
-    val uniq = counted
-      .filter(col("n_trips") === 1)
-      .withColumn("call_rn", row_number().over(
-        w.orderBy(col("stop_sequence").asc, col("departure_secs").asc)))
-      .filter(col("call_rn") === 1)
-      .select(passageKey.map(k => col(k).as(s"u_$k")) ++
-        Seq(col("trip_id"), col("service_id"),
-          col("stop_sequence"), col("departure_secs")): _*)
-    // null-safe equality: etat is legitimately null on on-time trains
-    val cond = passageKey.map(k => col(k) <=> col(s"u_$k")).reduce(_ && _)
-    passages.join(uniq, cond, "left")
-      .select(passageKey.map(col) ++ Seq(col("trip_id"),
-        col("service_id"), col("stop_sequence"), col("departure_secs")): _*)
+    val calls = ext.join(active, "service_id")
+      .groupBy(regexp_extract(col("stop_id"), "([0-9]{7})", 1).as("station7"))
+      .agg(collect_list(struct(col("stop_sequence"), col("departure_secs"),
+        col("trip_id"), col("service_id"))).as("calls"))
+    val passageCols = passages.columns.toSeq.map(col)
+    val schedCols = Seq("trip_id", "service_id", "stop_sequence", "departure_secs")
+    // one projection per step, so `hit` and `call` are each computed
+    // once per row rather than once per reference
+    passages.join(broadcast(calls), uic7(col("station_id")) === col("station7"), "left")
+      .select(passageCols :+
+        filter(col("calls"), c => c("trip_id").contains(col("num"))).as("hit"): _*)
+      .select(passageCols :+ when(
+        size(array_distinct(transform(col("hit"), _("trip_id")))) === 1,
+        array_min(col("hit"))).as("call"): _*)
+      .select(passageCols ++ schedCols.map(f => col("call")(f).as(f)): _*)
   }
 
   /** Scheduled wall-clock timestamp of a stop call on service day

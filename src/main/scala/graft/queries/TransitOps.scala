@@ -341,14 +341,17 @@ object TransitOps extends QueryGroup {
       (spark, _) =>
         boardLatestDf(spark).orderBy("station_id", "expected_ts", "num"),
       Some(boardOracle),
-      scaleNote = "The per-day passage batch is the SMALL side " +
-        "(|stations|×|trains|×|polling cycles| — a few million rows " +
-        "for a national network) and is broadcast into the contains-" +
-        "join against the big denormalized schedule, which never " +
-        "moves; candidate fan-out is bounded by trips-per-(number, " +
-        "station), a physical constant. The unique-match window " +
-        "partitions by passage identity (pre-shuffled by the " +
-        "candidate join's key already), the latest-state fold is an " +
+      scaleNote = "The day's active schedule folds into one call " +
+        "array per station (UIC-7): |stations| rows, bounded by the " +
+        "timetable, never by polling volume. That array side is " +
+        "broadcast and every passage row (|stations|×|trains|×|polling " +
+        "cycles| — a few million rows for a national network) left-" +
+        "joins its station's array on the equi key, so the passage " +
+        "batch never shuffles. The contains filter, the unique-trip " +
+        "test and the first-call pick are array functions on the row " +
+        "— no window, no identity join-back — and the candidate " +
+        "fan-out is bounded by trips-per-(number, station), a " +
+        "physical constant. The latest-state fold is an " +
         "associative struct-max groupBy that combines map-side across " +
         "polling files, and the board output is |day×station×train|-" +
         "bounded. At a year of history, service_day becomes the " +
@@ -664,7 +667,7 @@ object TransitOps extends QueryGroup {
         "pairs — |stations|×|trips-per-station| rows, bounded by the " +
         "physical network, never by polling volume — so the coverage " +
         "join is dimension-sized whatever the feed rate; the matched " +
-        "side reuses delay_board's broadcast contains-join (the " +
+        "side reuses delay_board's per-station call-array match (the " +
         "expensive part is shared, not repeated, when both run in one " +
         "DAG). At a year of history the group key becomes (service_" +
         "day, station7) and the rollup stays one map-side-combined " +

@@ -72,12 +72,14 @@ object GtfsCsv {
   * station ids and the request day and time. */
 object XmlPassages {
   def read(spark: SparkSession, dir: String, requestDay: String,
-      requestTime: String): DataFrame =
-    spark.read.format("graft.sources.dsv2.PassagesSource").load(dir)
-      .withColumn("station_id", Gtfs.uic8(graft.domain.Transit.uic7(col("station_id"))))
-      .withColumn("request_day", lit(requestDay))
-      .withColumn("request_time", lit(requestTime))
-      .withColumn("day_train_num", concat(lit(requestDay.replace("-", "") + "_"), col("num")))
+      requestTime: String): DataFrame = {
+    val raw = spark.read.format("graft.sources.dsv2.PassagesSource").load(dir)
+    raw.select(raw.columns.toSeq.map {
+      case "station_id" => Gtfs.uic8(graft.domain.Transit.uic7(col("station_id"))).as("station_id")
+      case c => col(c)
+    } ++ Seq(lit(requestDay).as("request_day"), lit(requestTime).as("request_time"),
+      concat(lit(requestDay.replace("-", "") + "_"), col("num")).as("day_train_num")): _*)
+  }
 }
 
 /** JSON documents (the Mongo-store analog): explicit schema, ingested

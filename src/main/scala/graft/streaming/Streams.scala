@@ -341,7 +341,7 @@ object Streams {
               (st.hist :+ (st.bucket, st.n)).takeRight(24))
           }
           for (e <- evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))) {
-            val b = (e.ts.getTime / hourMs) * hourMs
+            val b = Math.floorDiv(e.ts.getTime, hourMs) * hourMs
             // a later batch carrying an hour older than the open one
             // would close the open hour early and enter both into the
             // 24-bucket history twice — fail loudly instead (see ewma)

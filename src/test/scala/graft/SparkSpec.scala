@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import graft.engine.LocalSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -63,4 +69,29 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sf: String = TestSession.sf
+
+  /** Spark jobs started by `body` on this thread. A marker job run
+    * after it flushes the asynchronous listener bus, so every job of
+    * `body` has been seen when the count is read. */
+  protected def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"jobs-of-${System.nanoTime()}"
+    val groups = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(tag, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$tag-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30.seconds.toNanos
+      while (!groups.contains(s"$tag-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(s"$tag-marker"), "listener bus did not deliver the marker job")
+      groups.asScala.count(_ == tag)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -472,4 +472,33 @@ class StreamingRobustnessSpec extends SparkSpec {
       } finally q.stop()
     }
   }
+
+  test("stream_anomaly buckets a pre-1970 event into its own hour, as batch date_trunc does") {
+    val s = spark
+    import s.implicits._
+    import graft.streaming.Streams
+    import Streams.Event
+    // hourly events at :30 from 1969-12-30 23:30 to 1970-01-01 00:30
+    // UTC: 25 closed hours fill the 24-hour history, so the hour of
+    // the 1969-12-31 23:30 event is the one row emitted
+    val t0 = java.time.Instant.parse("1969-12-30T23:30:00Z").toEpochMilli
+    val evs = (0 until 26).map(k =>
+      Event(k.toLong, new java.sql.Timestamp(t0 + k * 3600000L), 1L, "view", 1.0))
+    val late = evs(24).ts
+    assert(late.toInstant.toString == "1969-12-31T23:30:00Z")
+    val truncated = spark.range(1).select(date_trunc("hour", lit(late)))
+      .head().getTimestamp(0).getTime
+    assert(truncated == -3600000L)
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[Event](80, spark, None)
+    val q = Streams.anomaly(mem.toDS()).writeStream.format("memory")
+      .queryName("anomaly_pre_epoch").outputMode("append").start()
+    try {
+      mem.addData(evs: _*)
+      q.processAllAvailable()
+      val rows = spark.table("anomaly_pre_epoch").collect()
+      assert(rows.map(r => (r.getTimestamp(0).getTime, r.getLong(1))).toSeq ==
+        Seq((truncated, 1L)))
+    } finally q.stop()
+  }
 }

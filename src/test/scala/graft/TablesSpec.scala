@@ -2,13 +2,12 @@ package graft
 
 import java.lang.ref.WeakReference
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
+import java.util.concurrent.{Executors, TimeUnit}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.col
@@ -17,31 +16,6 @@ import graft.engine.Tables
 /** `Tables.load` resolves each path once per session: later loads start
   * no Spark job, yet behave like a fresh `spark.read.parquet`. */
 class TablesSpec extends SparkSpec {
-
-  /** Spark jobs started by `body` on this thread. A marker job run
-    * after it flushes the asynchronous listener bus, so every job of
-    * `body` has been seen when the count is read. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"tables-spec-${System.nanoTime()}"
-    val groups = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(groups.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(tag, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$tag-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30.seconds.toNanos
-      while (!groups.contains(s"$tag-marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains(s"$tag-marker"), "listener bus did not deliver the marker job")
-      groups.asScala.count(_ == tag)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def relationOf(df: DataFrame): HadoopFsRelation =
     df.queryExecution.analyzed.collectFirst {
