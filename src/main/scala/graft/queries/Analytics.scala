@@ -120,6 +120,42 @@ object Analytics extends QueryGroup {
       "pts AS (SELECT d.event_type, CAST(date_diff('day', x.d0, d.day) AS BIGINT) AS x, y " +
       "FROM daily d JOIN d0 x ON d.event_type = x.event_type)"
 
+  /** Floor division by 5 of a BIGINT SQL expression, spelled with pmod
+    * so the floor holds for negative values too — the Holt keys'
+    * α = β = γ = 1/5 step. */
+  private def floorDiv5(v: String): String = s"(($v) - pmod($v, 5)) div 5"
+
+  /** The Holt keys' level and trend steps `(l, b)` as `aggregate()`
+    * lambda text over `out` (the steps so far) and `x` (the day):
+    * `l = x.n·1e6` and `b = 0` on the first day, else `levelNum /₅`
+    * and `((l − l') + 4b') /₅` over the previous step. */
+  private def holtLevelTrend(levelNum: String): (String, String) = {
+    val l = s"CASE WHEN size(out) = 0 THEN x.n * 1000000 " +
+      s"ELSE ${floorDiv5(levelNum)} END"
+    val b = s"($l) - element_at(out, -1).l + 4 * element_at(out, -1).b"
+    (l, s"CASE WHEN size(out) = 0 THEN CAST(0 AS BIGINT) " +
+      s"ELSE ${floorDiv5(b)} END")
+  }
+
+  /** The Holt keys' Spark fold: per type, the day-sorted daily counts
+    * folded by one `aggregate()` that appends each day's BIGINT
+    * `fields` (named lambda texts, `l` and `b` first), exploded back to
+    * one row per day with the level and trend plus `more` columns. */
+  private def holtFold(spark: org.apache.spark.sql.SparkSession, sf: String,
+      fields: Seq[(String, String)], more: Column*): DataFrame =
+    dailySeries(Tables.loadEvents(spark, sf), "n").groupBy("event_type")
+      .agg(array_sort(collect_list(struct(col("day"), col("n")))).as("xs"))
+      .select(col("event_type"), explode(expr(
+        "aggregate(xs, " +
+          "CAST(array() AS ARRAY<STRUCT<day: DATE, n: BIGINT, " +
+          fields.map(f => s"${f._1}: BIGINT").mkString(", ") + ">>), " +
+          "(out, x) -> array_append(out, named_struct('day', x.day, 'n', x.n, " +
+          fields.map { case (k, v) => s"'$k', $v" }.mkString(", ") + ")))")).as("h"))
+      .select(Seq(col("event_type"),
+        col("h.day").cast("string").as("day"), col("h.n").as("n"),
+        col("h.l").as("level_micro"), col("h.b").as("trend_micro")) ++ more: _*)
+      .orderBy("event_type", "day")
+
   /** Pearson r of the lag pairs `(n, prev)` per `keys` group — `k`
     * pairs, every moment an exact BIGINT sum, the double touching only
     * the final (num, var_a, var_b) triple; a zero-variance side gives
@@ -3238,25 +3274,10 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ts_holt_linear",
       (spark, sf) => {
-        val daily = dailySeries(Tables.loadEvents(spark, sf), "n")
-        val A = "x.n * 1000000 + 4 * (element_at(out, -1).l + element_at(out, -1).b)"
-        val LP = s"CASE WHEN size(out) = 0 THEN x.n * 1000000 " +
-          s"ELSE (($A) - pmod($A, 5)) div 5 END"
-        val B = s"($LP) - element_at(out, -1).l + 4 * element_at(out, -1).b"
-        val BP = s"CASE WHEN size(out) = 0 THEN CAST(0 AS BIGINT) " +
-          s"ELSE (($B) - pmod($B, 5)) div 5 END"
-        daily.groupBy("event_type")
-          .agg(array_sort(collect_list(struct(col("day"), col("n")))).as("xs"))
-          .select(col("event_type"), explode(expr(
-            "aggregate(xs, " +
-              "CAST(array() AS ARRAY<STRUCT<day: DATE, n: BIGINT, l: BIGINT, b: BIGINT>>), " +
-              s"(out, x) -> array_append(out, named_struct(" +
-              s"'day', x.day, 'n', x.n, 'l', $LP, 'b', $BP)))")).as("h"))
-          .select(col("event_type"),
-            col("h.day").cast("string").as("day"), col("h.n").as("n"),
-            col("h.l").as("level_micro"), col("h.b").as("trend_micro"),
-            (col("h.l") + col("h.b")).as("forecast_micro"))
-          .orderBy("event_type", "day")
+        val (lp, bp) = holtLevelTrend(
+          "x.n * 1000000 + 4 * (element_at(out, -1).l + element_at(out, -1).b)")
+        holtFold(spark, sf, Seq("l" -> lp, "b" -> bp),
+          (col("h.l") + col("h.b")).as("forecast_micro"))
       },
       Some {
         val An = "s.n * 1000000 + 4 * (h.l + h.b)"
@@ -3309,37 +3330,17 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ts_holt_winters",
       (spark, sf) => {
-        val daily = dailySeries(Tables.loadEvents(spark, sf), "n")
         val SP = "CASE WHEN size(out) >= 7 THEN element_at(out, -7).s " +
           "ELSE CAST(0 AS BIGINT) END"
-        val A = s"x.n * 1000000 - ($SP) + " +
-          "4 * (element_at(out, -1).l + element_at(out, -1).b)"
-        val LP = s"CASE WHEN size(out) = 0 THEN x.n * 1000000 " +
-          s"ELSE (($A) - pmod($A, 5)) div 5 END"
-        val B = s"($LP) - element_at(out, -1).l + 4 * element_at(out, -1).b"
-        val BP = s"CASE WHEN size(out) = 0 THEN CAST(0 AS BIGINT) " +
-          s"ELSE (($B) - pmod($B, 5)) div 5 END"
-        val S = s"x.n * 1000000 - ($LP) + 4 * ($SP)"
+        val (lp, bp) = holtLevelTrend(s"x.n * 1000000 - ($SP) + " +
+          "4 * (element_at(out, -1).l + element_at(out, -1).b)")
         val SV = s"CASE WHEN size(out) = 0 THEN CAST(0 AS BIGINT) " +
-          s"ELSE (($S) - pmod($S, 5)) div 5 END"
+          s"ELSE ${floorDiv5(s"x.n * 1000000 - ($lp) + 4 * ($SP)")} END"
         val SN = "CASE WHEN size(out) >= 6 THEN element_at(out, -6).s " +
           "ELSE CAST(0 AS BIGINT) END"
-        val F = s"($LP) + ($BP) + ($SN)"
-        daily.groupBy("event_type")
-          .agg(array_sort(collect_list(struct(col("day"), col("n")))).as("xs"))
-          .select(col("event_type"), explode(expr(
-            "aggregate(xs, " +
-              "CAST(array() AS ARRAY<STRUCT<day: DATE, n: BIGINT, " +
-              "l: BIGINT, b: BIGINT, s: BIGINT, f: BIGINT>>), " +
-              s"(out, x) -> array_append(out, named_struct(" +
-              s"'day', x.day, 'n', x.n, 'l', $LP, 'b', $BP, " +
-              s"'s', $SV, 'f', $F)))")).as("h"))
-          .select(col("event_type"),
-            col("h.day").cast("string").as("day"), col("h.n").as("n"),
-            col("h.l").as("level_micro"), col("h.b").as("trend_micro"),
-            col("h.s").as("seasonal_micro"),
-            col("h.f").as("forecast_micro"))
-          .orderBy("event_type", "day")
+        holtFold(spark, sf,
+          Seq("l" -> lp, "b" -> bp, "s" -> SV, "f" -> s"($lp) + ($bp) + ($SN)"),
+          col("h.s").as("seasonal_micro"), col("h.f").as("forecast_micro"))
       },
       Some {
         val SPd = "h.seas[1]"

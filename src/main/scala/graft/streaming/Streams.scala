@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -296,7 +296,60 @@ object Streams {
       }
   }
 
-  case class AnomalyState(bucket: Long, n: Long, hist: Seq[(Long, Long)])
+  private val HourMs = 3600L * 1000
+  private val DayMs = 24 * HourMs
+
+  private def isoDay(day: Long): String =
+    java.time.LocalDate.ofEpochDay(day).toString
+
+  /** One key's state in [[bucketFold]]: the open bucket (units since
+    * the epoch; `Long.MinValue` before the key's first event) and the
+    * operator's carried state. */
+  case class Bucket[S](open: Long, carry: S)
+
+  /** The ordered bucket fold behind the hour/day monitors — the
+    * arbitrary-state fold Structured Streaming gives
+    * flatMapGroupsWithState, written once. Per key, each micro-batch's
+    * events are replayed in (ts, event_id) order and cut into
+    * `unitMs` buckets by floor division, so a pre-1970 event lands in
+    * its own bucket as batch `date_trunc` puts it. Events of the open
+    * bucket fold into the carried state through `add`; the first event
+    * of a later bucket closes it through `close`, which gets the key
+    * and the closed bucket and returns the new carried state and at
+    * most one output row. The last open bucket emits only when a later
+    * event arrives, so batch parity is over closed buckets. The
+    * ordered-replay contract is enforced, not assumed: an event older
+    * than the open bucket would reopen a closed bucket or close the
+    * open one early, silently corrupting every later close, so it
+    * throws instead. */
+  private def bucketFold[K, S, U](events: Dataset[Event], name: String,
+      unitMs: Long)(key: Event => K)(carry0: S)(add: (S, Event) => S)(
+      close: (K, Long, S) => (S, Option[U]))(implicit kEnc: Encoder[K],
+      sEnc: Encoder[Bucket[S]], uEnc: Encoder[U]): Dataset[U] =
+    localFs(events)
+      .groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.NoTimeout) {
+        (k: K, evs: Iterator[Event], state: GroupState[Bucket[S]]) =>
+          var st = state.getOption.getOrElse(Bucket(Long.MinValue, carry0))
+          val out = Seq.newBuilder[U]
+          for (e <- evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))) {
+            val b = Math.floorDiv(e.ts.getTime, unitMs)
+            if (st.open == Long.MinValue) st = Bucket(b, st.carry)
+            else if (b < st.open)
+              throw new IllegalStateException(s"$name replay-order violation " +
+                s"for key '$k': bucket $b after open bucket ${st.open}")
+            else if (b > st.open) {
+              val (carry, row) = close(k, st.open, st.carry)
+              out ++= row
+              st = Bucket(b, carry)
+            }
+            st = Bucket(st.open, add(st.carry, e))
+          }
+          state.update(st)
+          out.result().iterator
+      }
+
   case class AnomalyRow(bucket: java.sql.Timestamp, n: Long,
       z: Option[Double], is_anomaly: Boolean)
 
@@ -304,59 +357,33 @@ object Streams {
     * ts_anomaly: hourly event counts scored by a trailing-24-BUCKET
     * z (rows, not wall hours — exactly the batch rowsBetween(-24,-1)
     * frame, so gap hours are skipped in both engines). One global
-    * key holds O(24) state: the open hour's count plus the last 24
-    * finalized (bucket, n) pairs — timeline-sized state, not
-    * data-sized, mirroring the batch plan whose window input is
-    * |hours| rows. An hour finalizes when the ordered replay crosses
-    * its boundary (stream_funnel's ordered-ingest assumption); the
-    * final open hour emits only when a later event arrives — batch
-    * parity is over finalized hours (proven in StreamingSpec).
+    * key carries O(24) state: the open hour's count plus the last 24
+    * closed counts — timeline-sized state, not data-sized, mirroring
+    * the batch plan whose window input is |hours| rows. An hour closes
+    * when the ordered replay crosses its boundary ([[bucketFold]]);
+    * batch parity is over closed hours (proven in StreamingSpec).
     * Integer s/ss accumulate in the fold, so the float z is the
     * IDENTICAL one-expression computation the batch engine runs. */
   def anomaly(events: Dataset[Event]): Dataset[AnomalyRow] = {
     import events.sparkSession.implicits._
-    val hourMs = 3600L * 1000
-    localFs(events)
-      .groupByKey(_ => 0)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (_: Int, evs: Iterator[Event], state: GroupState[AnomalyState]) =>
-          var st = state.getOption.getOrElse(AnomalyState(Long.MinValue, 0L, Nil))
-          val out = Seq.newBuilder[AnomalyRow]
-          def finalize(): Unit = if (st.bucket != Long.MinValue) {
-            if (st.hist.size == 24) {
-              val s = st.hist.map(_._2).sum
-              val ss = st.hist.map(h => h._2 * h._2).sum
-              val mean = s.toDouble / 24
-              val variance = (ss.toDouble - s.toDouble * s.toDouble / 24) / 24
-              val z = if (variance > 0)
-                Some(BigDecimal((st.n.toDouble - mean) / math.sqrt(variance))
-                  .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
-              else None
-              out += AnomalyRow(new java.sql.Timestamp(st.bucket), st.n, z,
-                variance > 0 &&
-                  math.abs(st.n.toDouble - mean) > 3 * math.sqrt(variance))
-            }
-            st = AnomalyState(Long.MinValue, 0L,
-              (st.hist :+ (st.bucket, st.n)).takeRight(24))
-          }
-          for (e <- evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))) {
-            val b = Math.floorDiv(e.ts.getTime, hourMs) * hourMs
-            // a later batch carrying an hour older than the open one
-            // would close the open hour early and enter both into the
-            // 24-bucket history twice — fail loudly instead (see ewma)
-            if (st.bucket != Long.MinValue && b < st.bucket)
-              throw new IllegalStateException(
-                s"stream_anomaly replay-order violation: hour $b after open hour ${st.bucket}")
-            if (b != st.bucket) {
-              finalize()
-              st = AnomalyState(b, 0L, st.hist)
-            }
-            st = AnomalyState(st.bucket, st.n + 1, st.hist)
-          }
-          state.update(st)
-          out.result().iterator
+    bucketFold(events, "stream_anomaly", HourMs)(_ => 0)(
+        (0L, Seq.empty[Long])) {
+      case ((n, hist), _) => (n + 1, hist)
+    } { case (_, hour, (n, hist)) =>
+      val row = if (hist.size < 24) None else {
+        val s = hist.sum
+        val ss = hist.map(h => h * h).sum
+        val mean = s.toDouble / 24
+        val variance = (ss.toDouble - s.toDouble * s.toDouble / 24) / 24
+        val z = if (variance > 0)
+          Some(BigDecimal((n.toDouble - mean) / math.sqrt(variance))
+            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+        else None
+        Some(AnomalyRow(new java.sql.Timestamp(hour * HourMs), n, z,
+          variance > 0 && math.abs(n.toDouble - mean) > 3 * math.sqrt(variance)))
       }
+      ((0L, (hist :+ n).takeRight(24)), row)
+    }
   }
 
   case class RetentionState(cohortDay: Long, mask: Long)
@@ -366,9 +393,10 @@ object Streams {
   /** Streaming cohort retention — the stateful twin of batch
     * retention_cohort. Keyed by user; per-user state is EXACTLY two
     * longs however long the stream runs: the cohort day (epoch days
-    * of the first event seen) and a 64-day seen-offset bitmask. A
-    * (user, day_offset) pair emits a +1 delta row the FIRST time it
-    * appears and never again — so `sum(delta)` per (cohort, offset)
+    * of the first event seen, floored like batch `date_trunc`) and a
+    * 64-day seen-offset bitmask. A (user, day_offset) pair emits a +1
+    * delta row the FIRST time it appears and never again — so
+    * `sum(delta)` per (cohort, offset)
     * downstream equals the batch matrix's `countDistinct(user_id)`
     * exactly (each user contributes at most one to each cell, proven
     * in StreamingSpec under ordered replay). Offsets ≥ 64 are outside
@@ -379,7 +407,6 @@ object Streams {
     * first-event semantics as batch min(ts). */
   def retention(events: Dataset[Event]): Dataset[RetentionDelta] = {
     import events.sparkSession.implicits._
-    val dayMs = 86400L * 1000
     localFs(events)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
@@ -388,13 +415,13 @@ object Streams {
           val out = Seq.newBuilder[RetentionDelta]
           var st = state.getOption.orNull
           for (e <- evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))) {
-            val day = e.ts.getTime / dayMs
+            val day = Math.floorDiv(e.ts.getTime, DayMs)
             if (st == null) st = RetentionState(day, 0L)
             val off = day - st.cohortDay
             if (off >= 0 && off < 64 && ((st.mask >> off) & 1L) == 0L) {
               st = RetentionState(st.cohortDay, st.mask | (1L << off))
               out += RetentionDelta(
-                new java.sql.Timestamp(st.cohortDay * dayMs), off, 1L)
+                new java.sql.Timestamp(st.cohortDay * DayMs), off, 1L)
             }
           }
           if (st != null) state.update(st)
@@ -402,189 +429,101 @@ object Streams {
       }
   }
 
-  case class EwmaState(day: Long, n: Long, hist: Seq[(Long, Long)])
   case class EwmaRow(event_type: String, day: String, n: Long, ewma: Double)
 
   /** Streaming EWMA of daily counts per type — the stateful twin of
     * batch ts_ewma, and the ring-buffer pattern its scaleNote
     * promises: per-type state is the open day's count plus the last
-    * ≤7 finalized (day, n) pairs — O(8) longs per key however long
-    * the stream runs. A day finalizes when a later day's event
-    * arrives for that type (ordered-replay contract, stream_anomaly's
-    * shape); the finalized day's EWMA uses the SAME halving integer
-    * weights over the same row-lag semantics as the batch window
-    * (only days present in the data occupy lag slots), with exact
-    * BIGINT numerator/denominator and one final rounded division —
-    * so finalized rows are bit-equal to batch (StreamingSpec). */
+    * ≤7 closed day counts — O(8) longs per key however long the
+    * stream runs. A day closes when a later day's event arrives for
+    * that type ([[bucketFold]]); the closed day's EWMA uses the SAME
+    * halving integer weights over the same row-lag semantics as the
+    * batch window (only days present in the data occupy lag slots),
+    * with exact BIGINT numerator/denominator and one final rounded
+    * division — so closed-day rows are bit-equal to batch
+    * (StreamingSpec). */
   def ewma(events: Dataset[Event]): Dataset[EwmaRow] = {
     import events.sparkSession.implicits._
-    val dayMs = 86400L * 1000
-    localFs(events)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (typ: String, evs: Iterator[Event], state: GroupState[EwmaState]) =>
-          var st = state.getOption.getOrElse(EwmaState(Long.MinValue, 0L, Nil))
-          val out = Seq.newBuilder[EwmaRow]
-          def finalizeDay(): Unit = if (st.day != Long.MinValue) {
-            // lag k = k-th most recent finalized day, weight 2^(7-k);
-            // the open day itself carries 128 — exactly the batch terms
-            var num = st.n * 128L
-            var den = 128L
-            for (((_, nk), idx) <- st.hist.reverse.take(7).zipWithIndex) {
-              val wgt = 1L << (7 - (idx + 1))
-              num += nk * wgt
-              den += wgt
-            }
-            val e = BigDecimal(num.toDouble / den)
-              .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-            out += EwmaRow(typ,
-              java.time.LocalDate.ofEpochDay(st.day).toString, st.n, e)
-            st = EwmaState(Long.MinValue, 0L,
-              (st.hist :+ ((st.day, st.n))).takeRight(7))
-          }
-          for (e <- evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))) {
-            val d = Math.floorDiv(e.ts.getTime, dayMs)
-            // ordered-replay contract is ENFORCED, not just documented:
-            // a micro-batch delivering a day older than the open day
-            // (i.e. at or before a finalized one) would silently append
-            // days to hist out of order and bit-corrupt every later
-            // finalized EWMA — fail loudly instead
-            if (st.day != Long.MinValue && d < st.day)
-              throw new IllegalStateException(
-                s"stream_ewma replay-order violation for '$typ': day $d after open day ${st.day}")
-            if (d != st.day) {
-              finalizeDay()
-              st = EwmaState(d, 0L, st.hist)
-            }
-            st = EwmaState(st.day, st.n + 1, st.hist)
-          }
-          state.update(st)
-          out.result().iterator
+    bucketFold(events, "stream_ewma", DayMs)(_.event_type)(
+        (0L, Seq.empty[Long])) {
+      case ((n, hist), _) => (n + 1, hist)
+    } { case (typ, day, (n, hist)) =>
+      // lag k = k-th most recent closed day, weight 2^(7-k); the
+      // closing day itself carries 128 — exactly the batch terms
+      var num = n * 128L
+      var den = 128L
+      for ((nk, idx) <- hist.reverse.take(7).zipWithIndex) {
+        val wgt = 1L << (7 - (idx + 1))
+        num += nk * wgt
+        den += wgt
       }
+      val e = BigDecimal(num.toDouble / den)
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+      ((0L, (hist :+ n).takeRight(7)), Some(EwmaRow(typ, isoDay(day), n, e)))
+    }
   }
 
-  case class HoltState(day: Long, n: Long, l: Long, b: Long,
-      started: Boolean)
   case class HoltRow(event_type: String, day: String, n: Long,
       level_micro: Long, trend_micro: Long, forecast_micro: Long)
 
   /** Streaming Holt linear smoothing — the twin of batch
     * ts_holt_linear and the form its scaleNote names for unbounded
     * series: per-type state is the open day's count plus the (level,
-    * trend) pair — O(1) FOREVER, where ewma's ring buffer is O(8)
-    * and a windowed recompute would be O(history). Each day close
-    * advances the recursion one step in the identical integer
-    * micro-unit arithmetic (the same explicit floor division, so
-    * stream and batch agree bit-for-bit through negative trends) and
-    * emits the finalized (level, trend, forecast) row. Ordered-replay
-    * contract enforced like stream_ewma: a day older than the open
-    * day throws instead of silently corrupting every later step. */
+    * trend) pair once a day has closed — O(1) FOREVER, where ewma's
+    * ring buffer is O(8) and a windowed recompute would be
+    * O(history). Each day close advances the recursion one step in
+    * the identical integer micro-unit arithmetic (the same explicit
+    * floor division, so stream and batch agree bit-for-bit through
+    * negative trends) and emits the closed day's (level, trend,
+    * forecast) row. */
   def holt(events: Dataset[Event]): Dataset[HoltRow] = {
     import events.sparkSession.implicits._
-    val dayMs = 86400L * 1000
-    localFs(events)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (typ: String, evs: Iterator[Event], state: GroupState[HoltState]) =>
-          var st = state.getOption
-            .getOrElse(HoltState(Long.MinValue, 0L, 0L, 0L, started = false))
-          val out = Seq.newBuilder[HoltRow]
-          def finalizeDay(): Unit = if (st.day != Long.MinValue) {
-            val x = st.n * 1000000L
-            val (l, b) =
-              if (!st.started) (x, 0L)
-              else {
-                val lp = Math.floorDiv(x + 4 * (st.l + st.b), 5L)
-                (lp, Math.floorDiv(lp - st.l + 4 * st.b, 5L))
-              }
-            out += HoltRow(typ,
-              java.time.LocalDate.ofEpochDay(st.day).toString, st.n,
-              l, b, l + b)
-            st = HoltState(Long.MinValue, 0L, l, b, started = true)
-          }
-          for (e <- evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))) {
-            val d = Math.floorDiv(e.ts.getTime, dayMs)
-            if (st.day != Long.MinValue && d < st.day)
-              throw new IllegalStateException(
-                s"stream_holt replay-order violation for '$typ': day $d after open day ${st.day}")
-            if (d != st.day) {
-              finalizeDay()
-              st = st.copy(day = d, n = 0L)
-            }
-            st = st.copy(n = st.n + 1)
-          }
-          state.update(st)
-          out.result().iterator
+    bucketFold(events, "stream_holt", DayMs)(_.event_type)(
+        (0L, Option.empty[(Long, Long)])) {
+      case ((n, lb), _) => (n + 1, lb)
+    } { case (typ, day, (n, lb)) =>
+      val x = n * 1000000L
+      val (l, b) = lb.fold((x, 0L)) { case (l0, b0) =>
+        val lp = Math.floorDiv(x + 4 * (l0 + b0), 5L)
+        (lp, Math.floorDiv(lp - l0 + 4 * b0, 5L))
       }
+      ((0L, Some((l, b))), Some(HoltRow(typ, isoDay(day), n, l, b, l + b)))
+    }
   }
 
-  case class HwState(day: Long, n: Long, l: Long, b: Long,
-      seas: Seq[Long], started: Boolean)
   case class HwRow(event_type: String, day: String, n: Long,
       level_micro: Long, trend_micro: Long, seasonal_micro: Long,
       forecast_micro: Long)
 
   /** Streaming Holt-Winters — the twin of batch ts_holt_winters and
     * the O(period) live form its scaleNote names: per-type state is
-    * the open day's count, the (level, trend) pair, and the rotating
-    * 7-slot seasonal window — exactly the state the batch fold
-    * carries, so the recursion advances in the IDENTICAL integer
-    * micro-unit arithmetic (same explicit floor division through
-    * negative trends and seasonals) and stream agrees with batch
-    * bit-for-bit on every finalized day. The forecast emitted at day
-    * close is the true one-step-ahead l + b + s_{t−6}, read from the
-    * window BEFORE rotation — the live anomaly baseline a monitor
-    * compares tomorrow's count against. Ordered-replay contract as
-    * stream_holt: an out-of-order day throws rather than silently
-    * corrupting every later step. */
+    * the open day's count, the (level, trend) pair once a day has
+    * closed, and the rotating 7-slot seasonal window — exactly the
+    * state the batch fold carries, so the recursion advances in the
+    * IDENTICAL integer micro-unit arithmetic (same explicit floor
+    * division through negative trends and seasonals) and stream
+    * agrees with batch bit-for-bit on every closed day. The forecast
+    * emitted at day close is the true one-step-ahead l + b + s_{t−6},
+    * read from the window BEFORE rotation — the live anomaly baseline
+    * a monitor compares tomorrow's count against. */
   def holtWinters(events: Dataset[Event]): Dataset[HwRow] = {
     import events.sparkSession.implicits._
-    val dayMs = 86400L * 1000
-    localFs(events)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (typ: String, evs: Iterator[Event], state: GroupState[HwState]) =>
-          var st = state.getOption.getOrElse(
-            HwState(Long.MinValue, 0L, 0L, 0L, Seq.fill(7)(0L),
-              started = false))
-          val out = Seq.newBuilder[HwRow]
-          def finalizeDay(): Unit = if (st.day != Long.MinValue) {
-            val x = st.n * 1000000L
-            val sp = st.seas.head // s_{t-7}
-            val sn = st.seas(1)   // s_{t-6}: next day's seasonal
-            val (l, b, sv) =
-              if (!st.started) (x, 0L, 0L)
-              else {
-                val lp = Math.floorDiv(x - sp + 4 * (st.l + st.b), 5L)
-                val bp = Math.floorDiv(lp - st.l + 4 * st.b, 5L)
-                (lp, bp, Math.floorDiv(x - lp + 4 * sp, 5L))
-              }
-            out += HwRow(typ,
-              java.time.LocalDate.ofEpochDay(st.day).toString, st.n,
-              l, b, sv, l + b + sn)
-            st = HwState(Long.MinValue, 0L, l, b,
-              st.seas.tail :+ sv, started = true)
-          }
-          for (e <- evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))) {
-            val d = Math.floorDiv(e.ts.getTime, dayMs)
-            if (st.day != Long.MinValue && d < st.day)
-              throw new IllegalStateException(
-                s"stream_holt_winters replay-order violation for " +
-                  s"'$typ': day $d after open day ${st.day}")
-            if (d != st.day) {
-              finalizeDay()
-              st = st.copy(day = d, n = 0L)
-            }
-            st = st.copy(n = st.n + 1)
-          }
-          state.update(st)
-          out.result().iterator
+    bucketFold(events, "stream_holt_winters", DayMs)(_.event_type)(
+        (0L, Option.empty[(Long, Long)], Seq.fill(7)(0L))) {
+      case ((n, lb, seas), _) => (n + 1, lb, seas)
+    } { case (typ, day, (n, lb, seas)) =>
+      val x = n * 1000000L
+      val sp = seas.head // s_{t-7}
+      val sn = seas(1)   // s_{t-6}: next day's seasonal
+      val (l, b, sv) = lb.fold((x, 0L, 0L)) { case (l0, b0) =>
+        val lp = Math.floorDiv(x - sp + 4 * (l0 + b0), 5L)
+        val bp = Math.floorDiv(lp - l0 + 4 * b0, 5L)
+        (lp, bp, Math.floorDiv(x - lp + 4 * sp, 5L))
       }
+      ((0L, Some((l, b)), seas.tail :+ sv),
+        Some(HwRow(typ, isoDay(day), n, l, b, sv, l + b + sn)))
+    }
   }
-
   case class IslandState(start: Long, end: Long, n: Long, emitted: Long)
   case class IslandRow(user_id: Long, island_id: Long, start_sec: Long,
       end_sec: Long, dur_sec: Long, n_intervals: Long)
@@ -635,54 +574,29 @@ object Streams {
       }
   }
 
-  case class GapState(day: Long, hourMask: Long, n: Long)
   case class GapRow(event_type: String, day: String, hours_observed: Long,
       n_events: Long, hours_missing: Long, has_gap: Boolean)
 
   /** Streaming missed-poll monitor — the twin of batch
-    * ts_calendar_gaps its scaleNote promises. Per-type state is an
-    * open (day, 24-bit hour-presence mask, count) triple — O(1)
-    * however long the stream runs; a day finalizes when a later day's
-    * event arrives for that type (ordered-replay contract), emitting
-    * the SAME (observed, missing, alarm) row the batch rollup
-    * computes. The hour mask is the agg_bitmap_presence idea at
-    * stream granularity: presence is a bit_or, popcount is the
-    * distinct-hour count, and the gap alarm is mask ≠ full. */
+    * ts_calendar_gaps its scaleNote promises. Per-type state is the
+    * open day's (24-bit hour-presence mask, count) pair — O(1)
+    * however long the stream runs; a day closes when a later day's
+    * event arrives for that type ([[bucketFold]]), emitting the SAME
+    * (observed, missing, alarm) row the batch rollup computes. The
+    * hour mask is the agg_bitmap_presence idea at stream granularity:
+    * presence is a bit_or, popcount is the distinct-hour count, and
+    * the gap alarm is mask ≠ full. */
   def calendarGaps(events: Dataset[Event]): Dataset[GapRow] = {
     import events.sparkSession.implicits._
-    val hourMs = 3600L * 1000
-    localFs(events)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (typ: String, evs: Iterator[Event], state: GroupState[GapState]) =>
-          var st = state.getOption.getOrElse(GapState(Long.MinValue, 0L, 0L))
-          val out = Seq.newBuilder[GapRow]
-          def finalizeDay(): Unit = if (st.day != Long.MinValue) {
-            val observed = java.lang.Long.bitCount(st.hourMask).toLong
-            out += GapRow(typ,
-              java.time.LocalDate.ofEpochDay(st.day).toString,
-              observed, st.n, 24L - observed, observed < 24)
-            st = GapState(Long.MinValue, 0L, 0L)
-          }
-          for (e <- evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))) {
-            val hour = Math.floorDiv(e.ts.getTime, hourMs)
-            val day = Math.floorDiv(hour, 24L)
-            // enforce the ordered-replay contract (see ewma): a day at
-            // or before the open one after finalization would re-emit
-            // that day with a fresh mask — a silent duplicate row
-            if (st.day != Long.MinValue && day < st.day)
-              throw new IllegalStateException(
-                s"stream_calendar_gaps replay-order violation for '$typ': day $day after open day ${st.day}")
-            if (day != st.day) {
-              finalizeDay()
-              st = GapState(day, 0L, 0L)
-            }
-            st = GapState(st.day, st.hourMask | (1L << (hour - day * 24)), st.n + 1)
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    bucketFold(events, "stream_calendar_gaps", DayMs)(_.event_type)((0L, 0L)) {
+      case ((mask, n), e) =>
+        val hour = Math.floorMod(Math.floorDiv(e.ts.getTime, HourMs), 24L)
+        (mask | (1L << hour), n + 1)
+    } { case (typ, day, (mask, n)) =>
+      val observed = java.lang.Long.bitCount(mask).toLong
+      ((0L, 0L), Some(GapRow(typ, isoDay(day), observed, n,
+        24L - observed, observed < 24)))
+    }
   }
 
   /** Stream ⋈ static dimension — the schedule-enrichment join
@@ -959,63 +873,36 @@ object Streams {
       }
   }
 
-  case class TrendState(d0: Long, openDay: Long, openCount: Long,
-      n: Long, sx: Long, sy: Long, sxy: Long, sxx: Long)
   case class TrendRow(event_type: String, day_closed: String,
       n_days: Long, slope: Double, intercept: Double)
 
   /** Streaming trend fit — the twin of batch ts_linear_forecast: per
-    * type the state is the OPEN day's count plus the five exact
-    * integer OLS moments over closed days (n, Σx, Σy, Σxy, Σx²) —
-    * O(1) whatever the stream length, and the moments are the same
-    * mergeable partials the batch op aggregates, so each day close
-    * updates the fit in constant time and the emitted (slope,
-    * intercept) after day D is bit-equal to the batch fit over days
-    * ≤ D (StreamingSpec pins this against a batch recomputation).
-    * Replay-order violations throw (the ewma/calendarGaps rule) —
-    * a finalized day can never silently reopen. */
+    * type the state is the OPEN day's count, the first closed day d0,
+    * and the five exact integer OLS moments over closed days (n, Σx,
+    * Σy, Σxy, Σx², with x = day − d0) — O(1) whatever the stream
+    * length, and the moments are the same mergeable partials the
+    * batch op aggregates, so each day close ([[bucketFold]]) updates
+    * the fit in constant time and the emitted (slope, intercept)
+    * after day D is bit-equal to the batch fit over days ≤ D
+    * (StreamingSpec pins this against a batch recomputation). */
   def trend(events: Dataset[Event]): Dataset[TrendRow] = {
     import events.sparkSession.implicits._
-    def fit(st: TrendState): (Double, Double) = {
-      val den = st.n * st.sxx - st.sx * st.sx
-      if (den == 0) (Double.NaN, Double.NaN)
-      else {
-        val slope = (st.n * st.sxy - st.sx * st.sy).toDouble / den.toDouble
-        val icept = (st.sy.toDouble - slope * st.sx.toDouble) / st.n.toDouble
-        (slope, icept)
+    bucketFold(events, "stream_trend", DayMs)(_.event_type)(
+        (0L, 0L, 0L, 0L, 0L, 0L, 0L)) {
+      case ((y, d0, n, sx, sy, sxy, sxx), _) => (y + 1, d0, n, sx, sy, sxy, sxx)
+    } { case (t, day, (y, d0Seen, n0, sx0, sy0, sxy0, sxx0)) =>
+      val d0 = if (n0 == 0) day else d0Seen
+      val x = day - d0
+      val (n, sx, sy, sxy, sxx) =
+        (n0 + 1, sx0 + x, sy0 + y, sxy0 + x * y, sxx0 + x * x)
+      val den = n * sxx - sx * sx
+      val row = if (den == 0) None else {
+        val slope = (n * sxy - sx * sy).toDouble / den.toDouble
+        val icept = (sy.toDouble - slope * sx.toDouble) / n.toDouble
+        Some(TrendRow(t, isoDay(day), n, slope, icept))
       }
+      ((0L, d0, n, sx, sy, sxy, sxx), row)
     }
-    localFs(events)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (t: String, evs: Iterator[Event], state: GroupState[TrendState]) =>
-          val out = Seq.newBuilder[TrendRow]
-          var st = state.getOption.orNull
-          for (e <- evs.toSeq.sortBy(x => (x.ts.getTime, x.event_id))) {
-            val day = Math.floorDiv(e.ts.getTime, 86400000L)
-            if (st == null)
-              st = TrendState(day, day, 1L, 0L, 0L, 0L, 0L, 0L)
-            else if (day == st.openDay)
-              st = st.copy(openCount = st.openCount + 1)
-            else if (day > st.openDay) {
-              val closedDay = st.openDay
-              val x = closedDay - st.d0
-              val y = st.openCount
-              st = TrendState(st.d0, day, 1L, st.n + 1, st.sx + x,
-                st.sy + y, st.sxy + x * y, st.sxx + x * x)
-              val (slope, icept) = fit(st)
-              if (!slope.isNaN)
-                out += TrendRow(t,
-                  java.time.LocalDate.ofEpochDay(closedDay).toString,
-                  st.n, slope, icept)
-            } else
-              throw new IllegalStateException(
-                s"replay-order violation for $t: day $day < open ${st.openDay}")
-          }
-          state.update(st)
-          out.result().iterator
-      }
   }
 
   case class Doc(doc_id: Long, text: String)

@@ -473,32 +473,108 @@ class StreamingRobustnessSpec extends SparkSpec {
     }
   }
 
-  test("stream_anomaly buckets a pre-1970 event into its own hour, as batch date_trunc does") {
+  test("stream_anomaly, stream_retention and the day folds bucket pre-1970 events into their own hour or day, as batch date_trunc does") {
     val s = spark
     import s.implicits._
+    import org.apache.spark.sql.{DataFrame, Dataset}
     import graft.streaming.Streams
     import Streams.Event
-    // hourly events at :30 from 1969-12-30 23:30 to 1970-01-01 00:30
-    // UTC: 25 closed hours fill the 24-hour history, so the hour of
-    // the 1969-12-31 23:30 event is the one row emitted
+    // hourly events at :30 UTC from 1969-12-30 23:30 to 1970-01-01
+    // 00:30: one on 1969-12-30, 24 on 1969-12-31, one on 1970-01-01
     val t0 = java.time.Instant.parse("1969-12-30T23:30:00Z").toEpochMilli
     val evs = (0 until 26).map(k =>
       Event(k.toLong, new java.sql.Timestamp(t0 + k * 3600000L), 1L, "view", 1.0))
-    val late = evs(24).ts
-    assert(late.toInstant.toString == "1969-12-31T23:30:00Z")
-    val truncated = spark.range(1).select(date_trunc("hour", lit(late)))
-      .head().getTimestamp(0).getTime
-    assert(truncated == -3600000L)
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Event](80, spark, None)
-    val q = Streams.anomaly(mem.toDS()).writeStream.format("memory")
-      .queryName("anomaly_pre_epoch").outputMode("append").start()
-    try {
-      mem.addData(evs: _*)
-      q.processAllAvailable()
-      val rows = spark.table("anomaly_pre_epoch").collect()
-      assert(rows.map(r => (r.getTimestamp(0).getTime, r.getLong(1))).toSeq ==
-        Seq((truncated, 1L)))
-    } finally q.stop()
+    def truncated(unit: String, ts: java.sql.Timestamp) = spark.range(1)
+      .select(date_trunc(unit, lit(ts)).cast("long")).head().getLong(0)
+    assert(evs(24).ts.toInstant.toString == "1969-12-31T23:30:00Z")
+    assert(truncated("hour", evs(24).ts) == -3600L)
+    assert(truncated("day", evs(24).ts) == -86400L)
+    assert(truncated("day", evs(0).ts) == -172800L)
+    type Fold = Dataset[Event] => DataFrame
+    def dayN(f: Dataset[Event] => Dataset[_], n: String): Fold =
+      ds => f(ds).select(col("day"), col(n))
+    val closedDays = Seq[(Any, Any)](("1969-12-30", 1L), ("1969-12-31", 24L))
+    // (fold, its bucket and count/offset columns, rows expected)
+    val cases: Seq[(String, Fold, Seq[(Any, Any)])] = Seq(
+      // 25 closed hours fill the 24-hour history once: one row
+      ("stream_anomaly", ds => Streams.anomaly(ds)
+        .select(col("bucket").cast("long"), col("n")), Seq((-3600L, 1L))),
+      // one cohort, 1969-12-30, seen on day offsets 0, 1 and 2
+      ("stream_retention", ds => Streams.retention(ds)
+        .select(col("cohort").cast("long"), col("day_offset")),
+        Seq((-172800L, 0L), (-172800L, 1L), (-172800L, 2L))),
+      ("stream_ewma", dayN(Streams.ewma, "n"), closedDays),
+      ("stream_holt", dayN(Streams.holt, "n"), closedDays),
+      ("stream_holt_winters", dayN(Streams.holtWinters, "n"), closedDays),
+      ("stream_calendar_gaps", dayN(Streams.calendarGaps, "n_events"), closedDays),
+      // the fit needs two closed days: counts 1, 24 give slope 23
+      ("stream_trend", ds => Streams.trend(ds)
+        .select(col("day_closed"), col("slope")), Seq(("1969-12-31", 23.0))))
+    for (((name, fold, want), i) <- cases.zipWithIndex) {
+      val mem = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[Event](80 + i, spark, None)
+      val q = fold(mem.toDS()).writeStream.format("memory")
+        .queryName(s"pre_epoch_$i").outputMode("append").start()
+      try {
+        mem.addData(evs: _*)
+        q.processAllAvailable()
+        val got = spark.table(s"pre_epoch_$i").collect()
+          .map(r => (r.get(0), r.get(1))).toSeq
+        assert(got.sortBy(_.toString) == want.sortBy(_.toString), s"$name")
+      } finally q.stop()
+    }
+  }
+
+  test("the six hour/day stream folds resume from checkpoint with the rows of an uninterrupted run") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.{DataFrame, Dataset}
+    import graft.streaming.Streams
+    import Streams.Event
+    type Fold = Dataset[Event] => DataFrame
+    val folds: Seq[(String, Fold)] = Seq(
+      "stream_anomaly" -> (Streams.anomaly(_).toDF()),
+      "stream_ewma" -> (Streams.ewma(_).toDF()),
+      "stream_holt" -> (Streams.holt(_).toDF()),
+      "stream_holt_winters" -> (Streams.holtWinters(_).toDF()),
+      "stream_calendar_gaps" -> (Streams.calendarGaps(_).toDF()),
+      "stream_trend" -> (Streams.trend(_).toDF()))
+    // hours 0..96 from 2024-01-01 00:10 UTC, hour h carrying
+    // 1 + (7h mod 5) events, every fourth a click: four full days and
+    // one event of day five; the restart falls at 2024-01-03 12:00,
+    // so day 3 (and hour 60) is open across it
+    val base = java.time.Instant.parse("2024-01-01T00:10:00Z").toEpochMilli
+    val evs = (0 to 96).flatMap(h => Seq.fill(1 + (7 * h) % 5)(h)).zipWithIndex
+      .map { case (h, i) => Event(i.toLong,
+        new java.sql.Timestamp(base + h * 3600000L + i * 1000L), 1L,
+        if (i % 4 == 0) "click" else "view", 1.0) }
+    val (before, after) = evs.partition(_.ts.getTime < base + 60 * 3600000L)
+    val src = Files.createTempDirectory("fold-src").toString
+    before.toDS().write.parquet(s"$src/slice0")
+    val schema = implicitly[org.apache.spark.sql.Encoder[Event]].schema
+    def run(fold: Fold, ckpt: String): Seq[String] = {
+      val emitted = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val q = fold(spark.readStream.schema(schema).parquet(s"$src/slice*").as[Event])
+        .writeStream
+        .foreachBatch((b: DataFrame, _: Long) =>
+          b.collect().foreach(r => emitted.add(r.toString)))
+        .option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      emitted.asScala.toSeq
+    }
+    def freshCkpt() = Files.createTempDirectory("fold-ckpt").toString
+    val ckpts = folds.map(_ => freshCkpt())
+    val firstRuns = folds.zip(ckpts).map { case ((_, fold), c) => run(fold, c) }
+    // while the queries are down, the rest of the replay lands
+    after.toDS().write.parquet(s"$src/slice1")
+    for ((((name, fold), ckpt), first) <- folds.zip(ckpts).zip(firstRuns)) {
+      val resumed = first ++ run(fold, ckpt)
+      val whole = run(fold, freshCkpt())
+      assert(first.nonEmpty && resumed.size > first.size,
+        s"$name: the restart must fall between emitted rows")
+      assert(resumed.sorted == whole.sorted,
+        s"$name: restarted run differs from an uninterrupted one")
+    }
   }
 }
