@@ -124,7 +124,9 @@ object Transit {
   }
 
   /** delay = observed (mode=R) − scheduled, in seconds; cancellations
-    * (`etat = 'Supprimé'`) flagged, not dropped.
+    * (`etat = 'Supprimé'`) flagged, not dropped. Both times are floored
+    * to whole epoch seconds (`unix_seconds`; `unix_timestamp` would
+    * round a pre-1970 sub-second time toward zero).
     *
     * UTC-session requirement (asserted): [[graft.sources.dsv2.PassagesSource]]
     * reads the feed's wall-clock times in the SESSION time zone
@@ -141,7 +143,7 @@ object Transit {
       .filter(col("mode") === "R" && col("departure_secs").isNotNull)
       .withColumn("scheduled_ts", scheduledTs(day, col("departure_secs")))
       .withColumn("delay_sec",
-        unix_timestamp(col("expected_ts")) - unix_timestamp(col("scheduled_ts")))
+        unix_seconds(col("expected_ts")) - unix_seconds(col("scheduled_ts")))
       .withColumn("cancelled", coalesce(col("etat") === "Supprimé", lit(false)))
   }
 

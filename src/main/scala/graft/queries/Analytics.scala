@@ -109,8 +109,7 @@ object Analytics extends QueryGroup {
   /** [[dailySeries]] plus its day index: `d0` = the type's first day, `x` =
     * whole days since it (BIGINT) — the regressor of the trend fits. */
   private def dayIndexed(daily: DataFrame): DataFrame =
-    daily.join(daily.groupBy("event_type").agg(min(col("day")).as("d0")),
-        "event_type")
+    daily.withColumn("d0", min(col("day")).over(Window.partitionBy("event_type")))
       .withColumn("x", datediff(col("day"), col("d0")).cast("long"))
 
   /** [[dayIndexed]]'s oracle CTEs `d0` and `pts(event_type, x, y)`
@@ -203,6 +202,42 @@ object Analytics extends QueryGroup {
       .select((col("user_id") % 2).as("variant"),
         floor(col("value") * 100).cast("long").as("v"))
       .groupBy("variant").agg(VMoments.head, VMoments.tail: _*)
+
+  /** ab_bootstrap_ci's base rows `(event_id, v)`: each purchase with its
+    * value in whole cents. */
+  def purchaseCents(ev: DataFrame): DataFrame =
+    ev.filter(col("event_type") === "purchase")
+      .select(col("event_id"),
+        floor(col("value") * 100).cast("long").as("v"))
+
+  /** The B = 64 Poisson-bootstrap resamples `(b, swv, sw, m_micro)` of
+    * [[purchaseCents]] rows, drawn as ab_bootstrap_ci's comment states;
+    * ab_bootstrap_ci ranks these means, and `Streams.bootstrapMeans` is
+    * this aggregate over the stream. */
+  def poissonMeans(base: DataFrame): DataFrame = {
+    val u16 = conv(substring(md5(concat(lit("graftb:"),
+      col("event_id").cast("string"), lit(":"),
+      col("b").cast("string"))), 1, 4), 16, 10).cast("long")
+    val weight = when(col("u16") < 24109, 0L)
+      .when(col("u16") < 48218, 1L).when(col("u16") < 60273, 2L)
+      .when(col("u16") < 64291, 3L).when(col("u16") < 65296, 4L)
+      .when(col("u16") < 65497, 5L).when(col("u16") < 65530, 6L)
+      .otherwise(7L)
+    base
+      .withColumn("b", explode(sequence(lit(0L), lit(63L))))
+      .withColumn("u16", u16)
+      .withColumn("w", weight)
+      .groupBy("b")
+      .agg(sum(col("w") * col("v")).as("swv"), sum(col("w")).as("sw"))
+      .withColumn("m_micro", expr("(swv * 1000000) div sw"))
+  }
+
+  /** ts_cusum's per-(feed, day) counter `(event_type, day, n)`, the
+    * day a `date_trunc` timestamp; `Streams.cusumDaily` is this
+    * aggregate over the stream. */
+  def cusumCounts(ev: DataFrame): DataFrame =
+    ev.groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
+      .agg(count(lit(1)).as("n"))
 
   /** [[twoArms]]'s cells (variant, moment, column): variant 0's
     * moments get suffix 1, variant 1's suffix 2. */
@@ -1899,10 +1934,7 @@ object Analytics extends QueryGroup {
         val wAll = Window.partitionBy("event_type").orderBy("day")
         val wCum = Window.partitionBy("event_type").orderBy("day")
           .rowsBetween(Window.unboundedPreceding, 0)
-        val base = daily
-          .withColumn("d0", min(col("day")).over(
-            Window.partitionBy("event_type")))
-          .withColumn("x", datediff(col("day"), col("d0")).cast("long"))
+        val base = dayIndexed(daily)
           .withColumn("yl", lag(col("y"), 1).over(wAll))
           .withColumn("xn", lead(col("x"), 1).over(wAll))
           .withColumn("yn", lead(col("y"), 1).over(wAll))
@@ -2250,10 +2282,7 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ts_cusum",
       (spark, sf) => {
-        val d = Tables.loadEvents(spark, sf)
-          .groupBy(col("event_type"),
-            date_trunc("day", col("ts")).as("day"))
-          .agg(count(lit(1)).as("n"))
+        val d = cusumCounts(Tables.loadEvents(spark, sf))
         val stats = d.groupBy("event_type")
           .agg(sum(col("n")).as("tot"), count(lit(1)).as("nd"))
           .select(col("event_type"),
@@ -3528,27 +3557,10 @@ object Analytics extends QueryGroup {
     QueryDef(
       "ab_bootstrap_ci",
       (spark, sf) => {
-        val base = Tables.loadEvents(spark, sf)
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id"),
-            floor(col("value") * 100).cast("long").as("v"))
+        val base = purchaseCents(Tables.loadEvents(spark, sf))
         val tot = base.agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
           .withColumn("mean_micro", expr("(sv * 1000000) div n"))
-        val w16 = conv(substring(md5(concat(lit("graftb:"),
-          col("event_id").cast("string"), lit(":"),
-          col("b").cast("string"))), 1, 4), 16, 10).cast("long")
-        val weight = when(col("u16") < 24109, 0L)
-          .when(col("u16") < 48218, 1L).when(col("u16") < 60273, 2L)
-          .when(col("u16") < 64291, 3L).when(col("u16") < 65296, 4L)
-          .when(col("u16") < 65497, 5L).when(col("u16") < 65530, 6L)
-          .otherwise(7L)
-        val means = base
-          .withColumn("b", explode(sequence(lit(0L), lit(63L))))
-          .withColumn("u16", w16)
-          .withColumn("w", weight)
-          .groupBy("b")
-          .agg(sum(col("w") * col("v")).as("swv"), sum(col("w")).as("sw"))
-          .withColumn("m_micro", expr("(swv * 1000000) div sw"))
+        val means = poissonMeans(base)
         val ord = Window.orderBy(col("m_micro"), col("b"))
         val ranked = means.withColumn("rn", row_number().over(ord))
         val ci = ranked.agg(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.{Dsl, QueryDef, QueryGroup, Tables}
@@ -22,6 +22,46 @@ import graft.engine.{Dsl, QueryDef, QueryGroup, Tables}
   *    arithmetic step is written in the same order in both engines.
   */
 object CorpusOps extends QueryGroup {
+
+  /** The tokenizer family's words: `text` split on single spaces as
+    * `word`, beside the `keep` columns, keeping words of 2+ chars (a
+    * 1-char word has no adjacent pair to count or merge). */
+  private[graft] def trainWords(docs: DataFrame, keep: String*): DataFrame =
+    docs.select(keep.map(col) :+ explode(split(col("text"), " ")).as("word"): _*)
+      .filter(length(col("word")) >= 2)
+
+  /** The distinct-word frequency table `(word, f)` BPE trains on. */
+  private def wordFreq(docs: DataFrame): DataFrame =
+    trainWords(docs).groupBy("word").agg(count(lit(1)).as("f"))
+
+  /** Per-language word counts `(lang, word, fl)`. */
+  private def langWordFreq(docs: DataFrame): DataFrame =
+    trainWords(docs, "lang").groupBy("lang", "word").agg(count(lit(1)).as("fl"))
+
+  /** A word spelled as space-separated characters: the round-0 BPE
+    * symbol string, and the encode of a word no merge applies to. */
+  private[graft] def spelled(word: Column): Column =
+    trim(regexp_replace(word, "(.)", "$1 "))
+
+  /** The adjacent 2-char substrings of `word` as an array. `sequence(1,
+    * n)` counts DOWN when n < 1, so `word` must have 2+ chars
+    * ([[trainWords]]). */
+  private[graft] def charPairs: Column =
+    expr("transform(sequence(1, length(word)-1), i -> substring(word, i, 2))")
+
+  /** The per-language encode audit of `(lang, word, fl)` weights
+    * against a `(word, sym)` symbol table: word types, char tokens,
+    * BPE tokens and their ratio, ordered by lang. */
+  private def encodeRollup(wl: DataFrame, sym: DataFrame): DataFrame =
+    wl.join(sym.select("word", "sym"), "word")
+      .groupBy("lang")
+      .agg(count(lit(1)).as("n_word_types"),
+        sum(col("fl") * length(col("word"))).as("n_tokens_char"),
+        sum(col("fl") * size(split(col("sym"), " "))).as("n_tokens_bpe"))
+      .withColumn("compression",
+        round(col("n_tokens_char").cast("double") /
+          col("n_tokens_bpe").cast("double"), 4))
+      .orderBy("lang")
 
   /** One unrolled BPE training round in DuckDB SQL: sN (symbol table,
     * carrying `word` as the row key) → pN (weighted adjacent pairs) →
@@ -62,8 +102,7 @@ object CorpusOps extends QueryGroup {
   private[graft] def bpeTrain(wf: org.apache.spark.sql.DataFrame, nRounds: Int,
       onRound: (Int, org.apache.spark.sql.DataFrame) => Unit = (_, _) => ())
       : (Seq[(Int, String, String, Long)], org.apache.spark.sql.DataFrame) = {
-    var sym = wf.select(col("word"),
-      trim(regexp_replace(col("word"), "(.)", "$1 ")).as("sym"), col("f"))
+    var sym = wf.select(col("word"), spelled(col("word")).as("sym"), col("f"))
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     for (r <- 1 to nRounds) {
       val ws = split(col("sym"), " ")
@@ -158,15 +197,10 @@ object CorpusOps extends QueryGroup {
     * ride the layout. 17 rounds × |vocab| rows in 4 buckets. */
   private[graft] val bpeHistory = Sink("sink_bpe_history", 4, "word",
       Seq("word", "round")) { (spark, sf) =>
-      val wf = Tables.documents(spark, sf)
-        .select(explode(split(col("text"), " ")).as("word"))
-        .filter(length(col("word")) >= 2)
-        .groupBy("word").agg(count(lit(1)).as("f"))
+      val wf = wordFreq(Tables.documents(spark, sf))
       def snap(df: org.apache.spark.sql.DataFrame, r: Int) = df
         .select(lit(r).as("round"), col("word"), col("sym"), col("f"))
-      val s1 = wf.select(col("word"),
-        trim(regexp_replace(col("word"), "(.)", "$1 ")).as("sym"),
-        col("f"))
+      val s1 = wf.select(col("word"), spelled(col("word")).as("sym"), col("f"))
       val buf = Seq.newBuilder[org.apache.spark.sql.DataFrame]
       buf += snap(s1, 0)
       bpeTrain(wf, BpeTrainK, (r, sym) => buf += snap(sym, r))
@@ -241,6 +275,12 @@ object CorpusOps extends QueryGroup {
     * corpus_dsir's build, factored (r14) so sample_dsir composes the
     * SAME frozen integer weights into its resampling draw. See the
     * corpus_dsir QueryDef comment for the model. */
+  /** A token's DSIR hash bucket in [0, 64): md5 hex chars 9-16 as a
+    * number, mod 64 — the same bin on both engines, and in the
+    * streaming scorer. */
+  private[graft] def dsirBucket(w: Column): Column =
+    conv(substring(md5(w), 9, 8), 16, 10).cast("long") % 64
+
   /** Per-(doc, lang, bucket) hashed token counts — the shared
     * feature table under corpus_dsir, sample_dsir, and
     * quality_lm_perplexity (64 md5 bins, identical on both
@@ -250,9 +290,7 @@ object CorpusOps extends QueryGroup {
     Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"),
         explode(split(col("text"), " ")).as("w"))
-      .select(col("doc_id"), col("lang"),
-        (conv(substring(md5(col("w")), 9, 8), 16, 10).cast("long")
-          % 64).as("b"))
+      .select(col("doc_id"), col("lang"), dsirBucket(col("w")).as("b"))
       .groupBy("doc_id", "lang", "b")
       .agg(count(lit(1)).as("c"))
 
@@ -922,15 +960,8 @@ object CorpusOps extends QueryGroup {
     QueryDef(
       "tokenizer_pair_counts",
       (spark, sf) => {
-        val wf = Tables.documents(spark, sf)
-          .select(explode(split(col("text"), " ")).as("word"))
-          .filter(length(col("word")) >= 2)
-          .groupBy("word").agg(count(lit(1)).as("f"))
-        // sequence(1, n) DECREASES when n < 1 (Spark semantics) — the
-        // length≥2 filter above is what makes the bound safe
-        wf.select(explode(expr(
-            "transform(sequence(1, length(word)-1), i -> substring(word, i, 2))"))
-            .as("pair"), col("f"))
+        wordFreq(Tables.documents(spark, sf))
+          .select(explode(charPairs).as("pair"), col("f"))
           .groupBy("pair").agg(sum(col("f")).as("cnt"))
           .orderBy(col("cnt").desc, col("pair").asc)
           .limit(50)
@@ -1124,11 +1155,7 @@ object CorpusOps extends QueryGroup {
       (spark, sf) => {
         val session = spark
         import session.implicits._
-        val wf = Tables.documents(spark, sf)
-          .select(explode(split(col("text"), " ")).as("word"))
-          .filter(length(col("word")) >= 2)
-          .groupBy("word").agg(count(lit(1)).as("f"))
-        bpeTrain(wf, 3)._1
+        bpeTrain(wordFreq(Tables.documents(spark, sf)), 3)._1
           .toDF("round", "pair", "merged", "cnt")
           .orderBy("round")
       },
@@ -1171,22 +1198,9 @@ object CorpusOps extends QueryGroup {
     QueryDef(
       "tokenizer_apply",
       (spark, sf) => {
-        val docs = Tables.documents(spark, sf)
-        val wl = docs
-          .select(col("lang"), explode(split(col("text"), " ")).as("word"))
-          .filter(length(col("word")) >= 2)
-          .groupBy("lang", "word").agg(count(lit(1)).as("fl"))
+        val wl = langWordFreq(Tables.documents(spark, sf))
         val wf = wl.groupBy("word").agg(sum(col("fl")).as("f"))
-        val (_, sym) = bpeTrain(wf, 3)
-        wl.join(sym.select("word", "sym"), "word")
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_word_types"),
-            sum(col("fl") * length(col("word"))).as("n_tokens_char"),
-            sum(col("fl") * size(split(col("sym"), " "))).as("n_tokens_bpe"))
-          .withColumn("compression",
-            round(col("n_tokens_char").cast("double") /
-              col("n_tokens_bpe").cast("double"), 4))
-          .orderBy("lang")
+        encodeRollup(wl, bpeTrain(wf, 3)._2)
       },
       Some {
         "WITH RECURSIVE w AS (SELECT lang, unnest(string_split(text, ' ')) AS word FROM documents), " +
@@ -1300,22 +1314,8 @@ object CorpusOps extends QueryGroup {
       // final symbol table is the identical fixpoint state, and the
       // hash gate proves the rollup unchanged.
       (spark, sf) => {
-        val docs = Tables.documents(spark, sf)
-        val wl = docs
-          .select(col("lang"), explode(split(col("text"), " ")).as("word"))
-          .filter(length(col("word")) >= 2)
-          .groupBy("lang", "word").agg(count(lit(1)).as("fl"))
-        val sym = bpeHistory(spark, sf)
-          .filter(col("round") === BpeTrainK)
-        wl.join(sym.select("word", "sym"), "word")
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_word_types"),
-            sum(col("fl") * length(col("word"))).as("n_tokens_char"),
-            sum(col("fl") * size(split(col("sym"), " "))).as("n_tokens_bpe"))
-          .withColumn("compression",
-            round(col("n_tokens_char").cast("double") /
-              col("n_tokens_bpe").cast("double"), 4))
-          .orderBy("lang")
+        encodeRollup(langWordFreq(Tables.documents(spark, sf)),
+          bpeHistory(spark, sf).filter(col("round") === BpeTrainK))
       },
       Some {
         val last = s"s${BpeTrainK + 1}"

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.{Dsl, QueryDef, QueryGroup, Tables}
@@ -44,6 +45,27 @@ object PipelineOps extends QueryGroup {
     PsiBinEdges.zipWithIndex
       .map { case (e, i) => s"WHEN value < $e THEN $i" }
       .mkString("CASE ", " ", s" ELSE ${PsiBinEdges.size} END")
+
+  /** feat_target_encode's per-event rows `(category, cents, is_train)`:
+    * the train/val split is the md5-u16 of the salted event id, 80/20,
+    * so membership never depends on order or batch boundaries. */
+  private[graft] def targetEncodeRows(ev: DataFrame): DataFrame =
+    ev.select(concat(col("event_type"), lit("_"),
+        pmod(col("user_id"), lit(4))).as("category"),
+      floor(col("value") * 100).cast("long").as("cents"),
+      (conv(substring(md5(concat(lit("graftte:"),
+        col("event_id").cast("string"))), 1, 4), 16, 10)
+        .cast("long") % 10 < 8).as("is_train"))
+
+  /** Per-category `(n_train, s_train, n_val, s_val)` over
+    * [[targetEncodeRows]] — feat_target_encode's rollup and, over a
+    * stream, stream_target_encode's complete-mode aggregate. */
+  private[graft] def targetEncodeSums(rows: DataFrame): DataFrame =
+    rows.groupBy("category")
+      .agg(sum(when(col("is_train"), 1L).otherwise(0L)).as("n_train"),
+        sum(when(col("is_train"), col("cents")).otherwise(0L)).as("s_train"),
+        sum(when(!col("is_train"), 1L).otherwise(0L)).as("n_val"),
+        sum(when(!col("is_train"), col("cents")).otherwise(0L)).as("s_val"))
 
   /** The published per-feed freshness SLA manifest (r13, VERDICT r12
     * #4 — stated literals, corpus_mix_kl_target's ReleaseMixPpm
@@ -1162,20 +1184,8 @@ object PipelineOps extends QueryGroup {
     QueryDef(
       "feat_target_encode",
       (spark, sf) => {
-        val ev = Tables.loadEvents(spark, sf)
-          .select(concat(col("event_type"), lit("_"),
-              pmod(col("user_id"), lit(4))).as("category"),
-            floor(col("value") * 100).cast("long").as("cents"),
-            (conv(substring(md5(concat(lit("graftte:"),
-              col("event_id").cast("string"))), 1, 4), 16, 10)
-              .cast("long") % 10 < 8).as("is_train"))
-        val per = ev.groupBy("category")
-          .agg(sum(when(col("is_train"), 1L).otherwise(0L)).as("n_train"),
-            sum(when(col("is_train"), col("cents")).otherwise(0L))
-              .as("s_train"),
-            sum(when(!col("is_train"), 1L).otherwise(0L)).as("n_val"),
-            sum(when(!col("is_train"), col("cents")).otherwise(0L))
-              .as("s_val"))
+        val ev = targetEncodeRows(Tables.loadEvents(spark, sf))
+        val per = targetEncodeSums(ev)
         val prior = ev.filter(col("is_train"))
           .agg(sum(col("cents")).as("gs"), count(lit(1)).as("gn"))
         def d(c: org.apache.spark.sql.Column) = c.cast("double")

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.{QueryDef, QueryGroup, Tables}
@@ -26,7 +27,20 @@ object QualityOps extends QueryGroup {
   /** Gopher-style stopword list, restricted to words the synthetic
     * corpus actually contains (the full list would be all-zero
     * counts here; the rule shape is identical). */
-  private val StopWords = Seq("the", "a", "of", "in", "to")
+  private[graft] val StopWords = Seq("the", "a", "of", "in", "to")
+
+  /** The five Gopher rule flags over per-document counts `n_words`,
+    * `n_word_chars`, `n_stop` and `max_word_cnt`: quality_gopher_rules
+    * and its stream gate both apply these. */
+  private[graft] def gopherRules(counts: DataFrame): DataFrame =
+    counts
+      .withColumn("r_len", col("n_words").between(50, 100000))
+      .withColumn("r_mwl", lit(3) * col("n_words") <= col("n_word_chars") &&
+        col("n_word_chars") <= lit(10) * col("n_words"))
+      .withColumn("r_stop", col("n_stop") >= 2)
+      .withColumn("r_rep", lit(5) * col("max_word_cnt") <= col("n_words"))
+      .withColumn("keep",
+        col("r_len") && col("r_mwl") && col("r_stop") && col("r_rep"))
 
   /** rank_ndcg's discount table: floor(1e6 · 1/log2(r+1)) for ranks
     * 1..10 — STATED literals computed once offline (ln 2/ln(r+1)),
@@ -102,19 +116,12 @@ object QualityOps extends QueryGroup {
         val wc = Tables.documents(spark, sf)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
           .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-        wc.groupBy("doc_id").agg(
+        gopherRules(wc.groupBy("doc_id").agg(
             sum(col("c")).as("n_words"),
             sum(col("c") * length(col("w"))).as("n_word_chars"),
             sum(when(col("w").isin(StopWords: _*), col("c"))
               .otherwise(0L)).as("n_stop"),
-            max(col("c")).as("max_word_cnt"))
-          .withColumn("r_len", col("n_words").between(50, 100000))
-          .withColumn("r_mwl", lit(3) * col("n_words") <= col("n_word_chars") &&
-            col("n_word_chars") <= lit(10) * col("n_words"))
-          .withColumn("r_stop", col("n_stop") >= 2)
-          .withColumn("r_rep", lit(5) * col("max_word_cnt") <= col("n_words"))
-          .withColumn("keep",
-            col("r_len") && col("r_mwl") && col("r_stop") && col("r_rep"))
+            max(col("c")).as("max_word_cnt")))
           .orderBy("doc_id")
       },
       Some("WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents), " +

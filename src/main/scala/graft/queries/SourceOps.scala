@@ -123,6 +123,16 @@ object SourceOps extends QueryGroup {
       """{"page":5,"station":"87384008","num":"134683","delay_min":7}""",
       """{"page":6,"statio""").mkString("", "\n", "\n"))
 
+  /** The quarantine feed's line schema. `_corrupt_record` is in it
+    * because a PERMISSIVE parse yields a row of nulls (not a NULL row)
+    * for a malformed line; that column is the reliable malformed
+    * signal, for source_quarantine's reader and its stream's
+    * `from_json` alike. */
+  private[graft] val QuarantineSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "page INT, station STRING, num STRING, delay_min INT, " +
+        "_corrupt_record STRING")
+
   val GtfsFixtureDir = "/tmp/graft_gtfs_fixture"
 
   /** A complete 5-table GTFS bundle as the spec ships it: all-text
@@ -588,10 +598,7 @@ object SourceOps extends QueryGroup {
       "source_quarantine",
       (spark, _) => {
         val dir = writeFixture(QuarantineFixtureDir, QuarantineDocuments)
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          "page INT, station STRING, num STRING, delay_min INT, " +
-            "_corrupt_record STRING")
-        spark.read.schema(schema)
+        spark.read.schema(QuarantineSchema)
           .option("mode", "PERMISSIVE")
           .option("columnNameOfCorruptRecord", "_corrupt_record")
           .json(dir)

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.{Dsl, QueryDef, QueryGroup, Tables}
@@ -181,6 +182,31 @@ object TextVector extends QueryGroup {
           (col("n_docs").cast("double") * lit(100.0)), 4)
           .as("avg_flesch"),
         col("n_easy"), col("n_difficult"))
+  }
+
+  /** The per-source code-routing sums over `(source, n_chars, text)`
+    * documents: per doc a code-symbol count (literal, non-regex
+    * replace — the same builtin DuckDB runs) and a keyword-token
+    * count, `is_code` = keywords ≥ 2 AND symbols ≥ 1% of chars, then
+    * `(n_docs, n_code, total_keywords, total_symbols)` per source —
+    * text_code_detect's body and, over a stream, stream_code_route's
+    * complete-mode aggregate. */
+  def codeRouteSums(docs: DataFrame): DataFrame = {
+    val syms = Seq("{", "}", "(", ")", ";", "=").map(s =>
+        length(col("text")) - length(expr(s"replace(text, '$s', '')")))
+      .reduce(_ + _).cast("long")
+    val kw = array(Seq("def", "return", "import", "class", "void",
+      "func", "var", "const").map(lit): _*)
+    docs.select(col("source"), col("n_chars"), syms.as("syms"),
+        size(filter(split(col("text"), " "),
+          t => array_contains(kw, t))).cast("long").as("kws"))
+      .withColumn("is_code", col("kws") >= 2 &&
+        col("syms") * 100 >= greatest(col("n_chars"), lit(1L)))
+      .groupBy("source")
+      .agg(count(lit(1)).as("n_docs"),
+        sum(when(col("is_code"), 1L).otherwise(0L)).as("n_code"),
+        sum(col("kws")).as("total_keywords"),
+        sum(col("syms")).as("total_symbols"))
   }
 
   def defs: Seq[QueryDef] = Seq(
@@ -1037,31 +1063,10 @@ object TextVector extends QueryGroup {
     // weights); the per-doc flag is the same expression pre-rollup.
     QueryDef(
       "text_code_detect",
-      (spark, sf) => {
-        // literal (non-regex) replace, the same builtin DuckDB runs
-        def symCount: org.apache.spark.sql.Column =
-          Seq("{", "}", "(", ")", ";", "=").map(s =>
-            length(col("text")) - length(expr(s"replace(text, '$s', '')")))
-            .reduce(_ + _).cast("long")
-        val kw = array(Seq("def", "return", "import", "class", "void",
-          "func", "var", "const").map(lit): _*)
-        val d = Tables.documents(spark, sf)
-          .select(col("source"), col("n_chars"),
-            symCount.as("syms"),
-            size(filter(split(col("text"), " "),
-              t => array_contains(kw, t))).cast("long").as("kws"))
-          .withColumn("is_code", col("kws") >= 2 &&
-            col("syms") * 100 >= greatest(col("n_chars"), lit(1L)))
-        d.groupBy("source")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(when(col("is_code"), 1L).otherwise(0L)).as("n_code"),
-            sum(col("kws")).as("total_keywords"),
-            sum(col("syms")).as("total_symbols"))
-          .select(col("source"), col("n_docs"), col("n_code"),
-            col("total_keywords"), col("total_symbols"),
-            expr("(n_code * 10000) div n_docs").as("code_rate_bp"))
-          .orderBy("source")
-      },
+      (spark, sf) =>
+        codeRouteSums(Tables.documents(spark, sf))
+          .withColumn("code_rate_bp", expr("(n_code * 10000) div n_docs"))
+          .orderBy("source"),
       Some("WITH d AS (SELECT source, n_chars, " +
         "CAST(length(text) - length(replace(text, '{', '')) + length(text) - length(replace(text, '}', '')) + " +
         "length(text) - length(replace(text, '(', '')) + length(text) - length(replace(text, ')', '')) + " +

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.queries.{Analytics, CorpusOps, PipelineOps, QualityOps, SourceOps, TextVector}
 
 /** Structured Streaming operators — SURVEY.md §2.3.
   *
@@ -642,7 +643,8 @@ object Streams {
     * trip → the cycle is discarded; the surviving match is the
     * deterministic (stop_sequence, departure_secs) minimum; only
     * observed (mode=R) cycles reach the board; delay arithmetic
-    * mirrors Transit.computeDelays exactly (UTC service-day start +
+    * mirrors Transit.computeDelays exactly (epoch seconds floored, as
+    * unix_timestamp floors them; UTC service-day start +
     * departure_secs, truncating /60 for minutes — all delays are
     * minute-multiples in the parity fixture). A board row is emitted
     * only when the key's latest state CHANGES (Update mode), so
@@ -681,7 +683,7 @@ object Streams {
                   val dayStart = java.time.LocalDate.parse(c.request_day)
                     .atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
                   val schedSec = dayStart + c.departure_secs
-                  val delay = c.expected_ts.getTime / 1000L - schedSec
+                  val delay = Math.floorDiv(c.expected_ts.getTime, 1000L) - schedSec
                   Some(BoardRow(station, dtn, c.num, c.miss, c.term,
                     c.trip_id, c.expected_ts,
                     new java.sql.Timestamp(schedSec * 1000L),
@@ -910,7 +912,8 @@ object Streams {
   /** Streaming Gopher-style quality gate — the stateless live twin of
     * batch quality_gopher_rules, and the posture an ingest stream
     * needs: every arriving document is gated IN the micro-batch, with
-    * the identical per-rule flags, before anything stateful (dedup
+    * the batch op's own rule flags and stopword list
+    * ([[QualityOps.gopherRules]]), before anything stateful (dedup
     * indexes, upsert stores) sees it. Map-only: the per-doc counts
     * come from HOF folds over the split array (the batch op's
     * explode+groupBy computes the same values through a shuffle —
@@ -921,13 +924,13 @@ object Streams {
     * never of arrival or partition order. */
   def qualityGate(docs: Dataset[Doc]): DataFrame = {
     val ws = split(col("text"), " ")
-    localFs(docs).toDF()
+    QualityOps.gopherRules(localFs(docs).toDF()
       .select(col("doc_id"), ws.as("ws"))
       .withColumn("n_words", size(col("ws")).cast("long"))
       .withColumn("n_word_chars",
         expr("aggregate(ws, 0L, (a, w) -> a + length(w))"))
-      .withColumn("n_stop", expr(
-        "size(filter(ws, w -> w IN ('the','a','of','in','to')))").cast("long"))
+      .withColumn("n_stop", size(filter(col("ws"),
+        _.isin(QualityOps.StopWords: _*))).cast("long"))
       .withColumn("max_word_cnt", expr(
         "aggregate(array_sort(ws), " +
           "named_struct('prev', CAST(NULL AS STRING), 'run', 0L, 'best', 0L), " +
@@ -936,14 +939,7 @@ object Streams {
           "'run', IF(acc.prev <=> w, acc.run + 1L, 1L), " +
           "'best', greatest(acc.best, IF(acc.prev <=> w, acc.run + 1L, 1L))), " +
           "acc -> acc.best)"))
-      .withColumn("r_len", col("n_words").between(50, 100000))
-      .withColumn("r_mwl", lit(3) * col("n_words") <= col("n_word_chars") &&
-        col("n_word_chars") <= lit(10) * col("n_words"))
-      .withColumn("r_stop", col("n_stop") >= 2)
-      .withColumn("r_rep", lit(5) * col("max_word_cnt") <= col("n_words"))
-      .withColumn("keep",
-        col("r_len") && col("r_mwl") && col("r_stop") && col("r_rep"))
-      .drop("ws")
+      .drop("ws"))
   }
 
   case class SourceDoc(doc_id: Long, source: String, text: String,
@@ -953,32 +949,17 @@ object Streams {
     * text_code_detect, and the stage order matters: routing is the
     * FIRST decision a mixed ingest stream makes (code and prose go
     * to different dedup/quality/tokenizer paths), so it has to run
-    * on the stream, not in the nightly batch. Both features are the
-    * batch op's exactly (keyword IN-list over split tokens, literal
-    * replace symbol counts — scalar codegen inside the micro-batch,
-    * no state per doc), and the panel keeps per-source conditional
-    * counts in one complete-mode aggregate; the routing rate per
-    * source recomposes from the emitted integers. Because the flag
+    * on the stream, not in the nightly batch. The panel IS the batch
+    * op's per-source rollup ([[TextVector.codeRouteSums]]: keyword
+    * count over split tokens, literal replace symbol counts — scalar
+    * codegen inside the micro-batch, no state per doc) as one
+    * complete-mode aggregate; the routing rate per source recomposes
+    * from the emitted integers. Because the flag
     * is a pure function of the document, stream and batch CANNOT
     * disagree on any doc — the parity test proves the panel equals
     * the batch report after replay. */
-  def codeRoute(docs: Dataset[SourceDoc]): DataFrame = {
-    val syms = Seq("{", "}", "(", ")", ";", "=").map(s =>
-      length(col("text")) - length(expr(s"replace(text, '$s', '')")))
-      .reduce(_ + _).cast("long")
-    localFs(docs).toDF()
-      .select(col("source"), col("n_chars"), syms.as("syms"),
-        expr("CAST(size(filter(split(text, ' '), t -> t IN " +
-          "('def','return','import','class','void','func','var','const'))) AS BIGINT)")
-          .as("kws"))
-      .withColumn("is_code", col("kws") >= 2 &&
-        col("syms") * 100 >= greatest(col("n_chars"), lit(1L)))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("is_code"), 1L).otherwise(0L)).as("n_code"),
-        sum(col("kws")).as("total_keywords"),
-        sum(col("syms")).as("total_symbols"))
-  }
+  def codeRoute(docs: Dataset[SourceDoc]): DataFrame =
+    TextVector.codeRouteSums(localFs(docs).toDF())
 
   case class LangDoc(doc_id: Long, lang: String, text: String)
 
@@ -995,7 +976,7 @@ object Streams {
     * runs next to stream_quality_gate: the gate drops documents,
     * this watches the quality DISTRIBUTION drift per language. */
   def readability(docs: Dataset[LangDoc]): DataFrame =
-    graft.queries.TextVector.readabilityReport(localFs(docs).toDF())
+    TextVector.readabilityReport(localFs(docs).toDF())
 
   /** Live feed-freshness panel — dq_freshness' streaming twin
     * (stream_freshness, r12), and the form freshness monitoring
@@ -1093,7 +1074,7 @@ object Streams {
     * arriving doc is scored STATELESSLY with one aggregate() HOF
     * over its tokens (the exact integer dot product of bucket counts
     * with frozen micro-nat weights — no explode, no per-doc state,
-    * same md5-bucket lambda as the batch op), and the panel keeps
+    * the batch op's own [[CorpusOps.dsirBucket]]), and the panel keeps
     * per (lang, selected) doc/token/logw counters in one
     * complete-mode aggregate: ≤ 2·|langs| rows of three BIGINTs.
     * Per-doc scores being pure functions of (text, frozen model),
@@ -1106,14 +1087,12 @@ object Streams {
     val wmap = map_from_arrays(
       array(keys.map(lit(_)): _*),
       array(keys.map(k => lit(wMicro(k))): _*))
-    val bucket = (w: org.apache.spark.sql.Column) =>
-      conv(substring(md5(w), 9, 8), 16, 10).cast("long") % 64
     localFs(docs).toDF()
       .select(col("lang"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"),
         aggregate(split(col("text"), " "), lit(0L),
           (acc, w) => acc +
-            coalesce(element_at(wmap, bucket(w)), lit(0L)))
+            coalesce(element_at(wmap, CorpusOps.dsirBucket(w)), lit(0L)))
           .as("logw_micro"))
       .withColumn("selected", col("logw_micro") > 0L)
       .groupBy("lang", "selected")
@@ -1142,12 +1121,8 @@ object Streams {
     * that reformulation top-50-limited and symbol-keyed; rounds ≥ 2
     * need the merged symbol state and are the batch trainer's job. */
   def pairCounts(docs: Dataset[LangDoc]): DataFrame =
-    localFs(docs).toDF()
-      .select(explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, length(word)-1), i -> substring(word, i, 2))"))
-        .as("pair"))
+    CorpusOps.trainWords(localFs(docs).toDF())
+      .select(explode(CorpusOps.charPairs).as("pair"))
       .groupBy("pair").agg(count(lit(1)).as("cnt"))
 
   /** Live BPE ENCODE panel (stream_bpe_apply, r16 — VERDICT r15
@@ -1174,14 +1149,11 @@ object Streams {
     * conservation + the planted-OOV fallback proven in
     * StreamingSpec. */
   def bpeApply(docs: Dataset[LangDoc], vocab: DataFrame): DataFrame =
-    localFs(docs).toDF()
-      .select(col("lang"), explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) >= 2)
+    CorpusOps.trainWords(localFs(docs).toDF(), "lang")
       .join(vocab.select(col("word"), col("sym")), Seq("word"), "left")
       .select(col("lang"), col("sym").isNull.as("oov"),
         length(col("word")).cast("long").as("chars"),
-        size(split(coalesce(col("sym"),
-          trim(regexp_replace(col("word"), "(.)", "$1 "))), " "))
+        size(split(coalesce(col("sym"), CorpusOps.spelled(col("word"))), " "))
           .cast("long").as("toks"))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_words"),
@@ -1206,7 +1178,7 @@ object Streams {
   def psiCounts(events: Dataset[Event]): DataFrame =
     localFs(events).toDF()
       .select(col("event_type"),
-        expr(graft.queries.PipelineOps.PsiBinCase).cast("long").as("bin"))
+        expr(PipelineOps.PsiBinCase).cast("long").as("bin"))
       .groupBy("event_type", "bin")
       .agg(count(lit(1)).as("n"))
 
@@ -1221,10 +1193,7 @@ object Streams {
     * (every chart cell and alarm bit) proven in StreamingSpec after
     * full replay, with mid-replay count conservation pinned. */
   def cusumDaily(events: Dataset[Event]): DataFrame =
-    localFs(events).toDF()
-      .groupBy(col("event_type"),
-        date_trunc("day", col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
+    Analytics.cusumCounts(localFs(events).toDF())
 
   /** Streaming sample-ratio-mismatch panel — the live form of batch
     * ab_test_srm, which is the check that RUNS continuously by
@@ -1257,7 +1226,7 @@ object Streams {
     * EXACTLY the batch op's moment aggregate, so the parity test
     * recomposes the batch MDE bit-for-bit from the streamed cells. */
   def powerMoments(events: Dataset[Event]): DataFrame =
-    graft.queries.Analytics.armMoments(localFs(events).toDF())
+    Analytics.armMoments(localFs(events).toDF())
 
   /** Live target-encoder refresh — the streaming form of
     * feat_target_encode: the train/val split is a pure hash of the
@@ -1270,51 +1239,23 @@ object Streams {
     * Σn_train over the rows), so a model server can refresh its
     * encoding table from the panel without a batch job. */
   def targetEncodeMoments(events: Dataset[Event]): DataFrame =
-    localFs(events).toDF()
-      .select(concat(col("event_type"), lit("_"),
-          pmod(col("user_id"), lit(4))).as("category"),
-        floor(col("value") * 100).cast("long").as("cents"),
-        (conv(substring(md5(concat(lit("graftte:"),
-          col("event_id").cast("string"))), 1, 4), 16, 10)
-          .cast("long") % 10 < 8).as("is_train"))
-      .groupBy("category")
-      .agg(sum(when(col("is_train"), 1L).otherwise(0L)).as("n_train"),
-        sum(when(col("is_train"), col("cents")).otherwise(0L)).as("s_train"),
-        sum(when(!col("is_train"), 1L).otherwise(0L)).as("n_val"),
-        sum(when(!col("is_train"), col("cents")).otherwise(0L)).as("s_val"))
+    PipelineOps.targetEncodeSums(
+      PipelineOps.targetEncodeRows(localFs(events).toDF()))
 
   /** Streaming Poisson bootstrap — the live form of ab_bootstrap_ci,
     * and the reason the Poisson form wins in production: each
     * arriving purchase draws its 64 resample weights LOCALLY (the
-    * same md5-u16 → Poisson(1) inverse-CDF as the batch op — a pure
-    * function of (event_id, b), so replay and batch agree bit-for-
-    * bit), and the running state is just 64 (Σw·v, Σw) BIGINT pairs
-    * in a complete-mode aggregate. Every batch emits the 64 exact
-    * integer resample means; the CI is the 4th/61st order statistic
-    * of the emitted table — which a dashboard (or the parity test)
-    * computes from 64 rows. A classical multinomial bootstrap cannot
-    * stream at all: it needs n before it draws. */
-  def bootstrapMeans(events: Dataset[Event]): DataFrame = {
-    val u16 = conv(substring(md5(concat(lit("graftb:"),
-      col("event_id").cast("string"), lit(":"),
-      col("b").cast("string"))), 1, 4), 16, 10).cast("long")
-    val weight = when(col("u16") < 24109, 0L)
-      .when(col("u16") < 48218, 1L).when(col("u16") < 60273, 2L)
-      .when(col("u16") < 64291, 3L).when(col("u16") < 65296, 4L)
-      .when(col("u16") < 65497, 5L).when(col("u16") < 65530, 6L)
-      .otherwise(7L)
-    localFs(events).toDF()
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id"),
-        floor(col("value") * 100).cast("long").as("v"))
-      .withColumn("b", explode(sequence(lit(0L), lit(63L))))
-      .withColumn("u16", u16)
-      .withColumn("w", weight)
-      .groupBy("b")
-      .agg(sum(col("w") * col("v")).as("swv"), sum(col("w")).as("sw"))
-      .select(col("b"), col("swv"), col("sw"),
-        expr("(swv * 1000000) div sw").as("m_micro"))
-  }
+    * batch op's own md5-u16 → Poisson(1) inverse-CDF,
+    * [[Analytics.poissonMeans]] — a pure function of (event_id, b), so
+    * replay and batch agree bit-for-bit), and the running state is
+    * just 64 (Σw·v, Σw) BIGINT pairs in a complete-mode aggregate.
+    * Every batch emits the 64 exact integer resample means; the CI is
+    * the 4th/61st order statistic of the emitted table — which a
+    * dashboard (or the parity test) computes from 64 rows. A classical
+    * multinomial bootstrap cannot stream at all: it needs n before it
+    * draws. */
+  def bootstrapMeans(events: Dataset[Event]): DataFrame =
+    Analytics.poissonMeans(Analytics.purchaseCents(localFs(events).toDF()))
 
   case class BandRow(band_key: Long, doc_id: Long, toks: Array[Long])
   case class BandBucket(ids: Seq[Long], toks: Seq[Seq[Long]],
@@ -1505,16 +1446,12 @@ object Streams {
     * routed totals equal the batch operator's on the same planted
     * fixture lines. */
   def quarantine(lines: DataFrame): DataFrame = {
-    // _corrupt_record in the from_json schema: PERMISSIVE mode yields
-    // a row of nulls (not a NULL struct) for malformed input, so a
-    // bare r IS NULL check misses — the corrupt column is the
-    // reliable malformed signal (same contract as the batch reader)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "page INT, station STRING, num STRING, delay_min INT, " +
-        "_corrupt_record STRING")
+    // a malformed line parses to a row of nulls, not a NULL struct:
+    // the corrupt-record column is what flags it
     val bad = col("r").isNull || col("r._corrupt_record").isNotNull
     localFs(lines)
-      .select(col("line"), from_json(col("line"), schema).as("r"))
+      .select(col("line"),
+        from_json(col("line"), SourceOps.QuarantineSchema).as("r"))
       .select(
         when(bad, lit("quarantine")).otherwise(lit("ok")).as("kind"),
         when(!bad, col("r.page")).as("page"),

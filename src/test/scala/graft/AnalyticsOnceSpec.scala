@@ -21,7 +21,8 @@ class AnalyticsOnceSpec extends AnyFunSuite {
         """(col\("ts"\)\.cast\("date"\)|to_date\(col\("ts"\)\))\.as\("day"\)\)""" +
         """\s*\.agg\(count\(lit\(1\)\)"""),
       "SQL daily series" -> Pattern.quote("CAST(ts AS DATE) AS day, count(*) AS"),
-      "Spark day index" -> Pattern.quote("""agg(min(col("day")).as("d0"))"""),
+      // the aggregate-and-join form and the window form alike
+      "Spark day index" -> """min\(col\("day"\)\)\s*\.(as\("d0"\)|over\()""",
       "SQL day index" -> Pattern.quote("min(day) AS d0"),
       "Spark arm moments" -> Pattern.quote("""sum(col("v") * col("v"))"""),
       "SQL arm moments" -> Pattern.quote("sum(v*v) AS BIGINT) AS svv"),

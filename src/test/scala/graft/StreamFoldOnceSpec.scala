@@ -42,13 +42,10 @@ class StreamFoldOnceSpec extends AnyFunSuite {
     val walk = Files.walk(dir)
     val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
-    // delayBoard's delay seconds are exempt: its expected times are
-    // live transit clocks, never before 1970
-    val exempt = Set("delayBoard")
     val hits = for {
       p <- files
       (name, body) <- members(Files.readString(p))
-      if !exempt(name) && """getTime(\(\))?\s*/""".r.findFirstIn(body).isDefined
+      if """getTime(\(\))?\s*/""".r.findFirstIn(body).isDefined
     } yield s"${p.getFileName}:$name"
     assert(hits.isEmpty, s"use Math.floorDiv: ${hits.mkString(", ")}")
   }

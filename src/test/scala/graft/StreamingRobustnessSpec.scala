@@ -525,6 +525,37 @@ class StreamingRobustnessSpec extends SparkSpec {
     }
   }
 
+  test("stream_delay_board and batch computeDelays floor a pre-1970 sub-second expected time to the same delay seconds") {
+    val s = spark
+    import s.implicits._
+    import graft.streaming.Streams
+    // a mode-R passage expected at 1969-12-31 23:59:59.500 UTC, matched
+    // to the call with departure_secs 86399 (23:59:59) on that service
+    // day: floored, the expected time is 23:59:59 and the delay is 0
+    val expected = java.sql.Timestamp.from(
+      java.time.Instant.parse("1969-12-31T23:59:59.500Z"))
+    val batch = graft.domain.Transit.computeDelays(
+        Seq((expected, "R", Option.empty[String], 86399L))
+          .toDF("expected_ts", "mode", "etat", "departure_secs"), "19691231")
+      .select(col("delay_sec")).as[Long].collect().toSeq
+    assert(batch == Seq(0L), "computeDelays must floor 23:59:59.500 to 23:59:59")
+    val sched = Seq(("T134657", "8739300", 1, 86399L))
+      .toDF("trip_id", "station7", "stop_sequence", "departure_secs")
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[Streams.Passage](92, spark, None)
+    val q = Streams.delayBoard(mem.toDS(), sched).writeStream
+      .format("memory").queryName("pre_epoch_board")
+      .outputMode("update").start()
+    try {
+      mem.addData(Streams.Passage("87393009", "134657", "MISS", "TERM",
+        expected, "R", null, "1969-12-31", "23:50", "1969-12-31_134657"))
+      q.processAllAvailable()
+      val streamed = spark.table("pre_epoch_board")
+        .select(col("delay_sec")).as[Long].collect().toSeq
+      assert(streamed == batch, "stream and batch delay_sec differ")
+    } finally q.stop()
+  }
+
   test("the six hour/day stream folds resume from checkpoint with the rows of an uninterrupted run") {
     val s = spark
     import s.implicits._
