@@ -17,9 +17,11 @@ import graft.functions.Gtfs
   *    regime from `calendar` plus added/removed `calendar_dates`
   *    exceptions [P extract_schedule.py];
   *  - EP1 `matchPassages`: real-time passage ↔ scheduled trip via the
-  *    train-number-substring-of-trip_id fuzzy join, restricted to
+  *    train-number-substring-of-trip_id fuzzy match, restricted to
   *    services active that day, unique-match policy
-  *    [P match_ids.py `get_trip_ids_from_day_train_nums`];
+  *    [P match_ids.py `get_trip_ids_from_day_train_nums`]: one
+  *    `pickCall` rule over a broadcast `callIndex` of the day's calls,
+  *    the same rule the live board (`Streams.delayBoard`) applies;
   *  - `computeDelays`: delay = observed − scheduled passage time, with
   *    GTFS past-midnight (`25:xx:xx`) times resolved on the service
   *    day [P match_ids.py, utils_misc.py DateConverter];
@@ -79,39 +81,93 @@ object Transit {
       .select("service_id")
   }
 
+  /** One stop call of the day's active schedule: the candidate a
+    * passage resolves to. `service_id` is null where the schedule
+    * carries none (the live board's static side). */
+  case class Call(stop_sequence: Option[Int], departure_secs: Option[Long],
+      trip_id: String, service_id: String)
+
+  /** The most calls [[callIndex]] collects to the driver. The day's
+    * active schedule of a national network is ~10^5 calls; a million
+    * is ~100 MB on the driver and in each executor's broadcast copy. */
+  val CallIndexBound = 1000000
+
+  /** The day's active calls, one array per UIC-7 station, each sorted
+    * by (stop_sequence, departure_secs, trip_id, service_id), nulls
+    * first. `calls` carries `station7`, `trip_id`, `stop_sequence`,
+    * `departure_secs` and optionally `service_id`. The collect is
+    * bounded: past `bound` rows it fails, naming the bound, rather
+    * than pull an unbounded schedule onto the driver. */
+  def callIndex(calls: DataFrame, bound: Int = CallIndexBound): Map[String, Array[Call]] = {
+    val service =
+      if (calls.columns.contains("service_id")) col("service_id") else lit(null).cast("string")
+    val rows = calls
+      .select(col("station7"), col("trip_id"), service,
+        col("stop_sequence").cast("int"), col("departure_secs").cast("long"))
+      // one partition, so the bounded collect is one job (a limit over
+      // several partitions scans them in rounds, a job each)
+      .coalesce(1).limit(bound + 1).collect()
+    require(rows.length <= bound,
+      s"callIndex: the day's schedule exceeds $bound calls")
+    val order = Ordering.by((c: Call) =>
+      (c.stop_sequence, c.departure_secs, Option(c.trip_id), Option(c.service_id)))
+    rows.toSeq
+      .map(r => r.getString(0) -> Call(
+        Option.when(!r.isNullAt(3))(r.getInt(3)), Option.when(!r.isNullAt(4))(r.getLong(4)),
+        r.getString(1), r.getString(2)))
+      .groupMap(_._1)(_._2)
+      .map { case (station, cs) => station -> cs.sorted(order).toArray }
+  }
+
+  /** The passage-match rule, shared by [[matchPassages]] and the live
+    * board (`Streams.delayBoard`). The calls at the passage's station
+    * (its UIC-7) whose trip_id contains the train number are its hits;
+    * it matches when the hits belong to exactly one trip, on their
+    * first call in the index's order. Uniqueness is of TRIP, not of
+    * calls: a loop trip calling twice at one station still matches. A
+    * null number or station matches nothing; an empty number is a
+    * substring of every trip id, so it matches only where one trip
+    * calls. */
+  def pickCall(index: Map[String, Array[Call]], stationId: String,
+      num: String): Option[Call] =
+    if (stationId == null || num == null) None
+    else index.get(stationId.take(7)).flatMap { calls =>
+      val hits = calls.iterator.filter(c => c.trip_id != null && c.trip_id.contains(num))
+      if (!hits.hasNext) None
+      else {
+        val first = hits.next()
+        if (hits.forall(_.trip_id == first.trip_id)) Some(first) else None
+      }
+    }
+
   /** EP1 — match each passage to its scheduled stop call on `day`.
-    * Fuzzy match: train number is a substring of trip_id; station joins
-    * on embedded UIC-7; only services active that day participate.
-    * Ambiguous train numbers (>1 candidate trip) are left UNMATCHED
-    * (null schedule columns), like unmatched numbers — the reference's
-    * unique-match policy, kept deterministic.
+    * Fuzzy match: train number is a substring of trip_id; station
+    * matches on embedded UIC-7; only services active that day
+    * participate. Ambiguous train numbers (>1 candidate trip) are left
+    * UNMATCHED (null schedule columns), like unmatched numbers — the
+    * reference's unique-match policy, kept deterministic.
     *
-    * Shape: the day's active schedule becomes one call array per
-    * station (UIC-7) — |stations| rows, bounded by the timetable —
-    * which is broadcast; every passage row left-joins its station's
-    * array on that equi key, so the passages never shuffle and each
+    * Shape: the day's active schedule is collected once into
+    * [[callIndex]] (|calls| rows, bounded by the timetable and by
+    * [[CallIndexBound]]) and broadcast; one UDF applies [[pickCall]] to
+    * every passage row, so the passages never shuffle or join and each
     * row (two polling cycles that report identical rows included) is
-    * matched on its own. Per row, `hit` keeps the calls whose trip_id
-    * contains the number. Uniqueness is of TRIP, not of calls: a loop
-    * trip calling twice at one station still matches, on its lowest
-    * (stop_sequence, departure_secs) call, nulls first. */
+    * matched on its own. The index is built when this is called: two
+    * jobs (the calendar join's broadcast and the bounded collect). */
   def matchPassages(passages: DataFrame, ext: DataFrame,
       active: DataFrame, day: String): DataFrame = {
-    val calls = ext.join(active, "service_id")
-      .groupBy(regexp_extract(col("stop_id"), "([0-9]{7})", 1).as("station7"))
-      .agg(collect_list(struct(col("stop_sequence"), col("departure_secs"),
-        col("trip_id"), col("service_id"))).as("calls"))
+    val index = passages.sparkSession.sparkContext.broadcast(callIndex(
+      ext.join(active, "service_id").select(
+        regexp_extract(col("stop_id"), "([0-9]{7})", 1).as("station7"),
+        col("trip_id"), col("service_id"), col("stop_sequence"), col("departure_secs"))))
+    val pick = udf((station: String, num: String) => pickCall(index.value, station, num))
     val passageCols = passages.columns.toSeq.map(col)
-    val schedCols = Seq("trip_id", "service_id", "stop_sequence", "departure_secs")
-    // one projection per step, so `hit` and `call` are each computed
-    // once per row rather than once per reference
-    passages.join(broadcast(calls), uic7(col("station_id")) === col("station7"), "left")
-      .select(passageCols :+
-        filter(col("calls"), c => c("trip_id").contains(col("num"))).as("hit"): _*)
-      .select(passageCols :+ when(
-        size(array_distinct(transform(col("hit"), _("trip_id")))) === 1,
-        array_min(col("hit"))).as("call"): _*)
-      .select(passageCols ++ schedCols.map(f => col("call")(f).as(f)): _*)
+    // one projection holds the UDF, so it runs once per row rather
+    // than once per extracted field
+    passages
+      .select(passageCols :+ pick(col("station_id"), col("num")).as("call"): _*)
+      .select(passageCols ++ Seq("trip_id", "service_id", "stop_sequence", "departure_secs")
+        .map(f => col("call")(f).cast(ext.schema(f).dataType).as(f)): _*)
   }
 
   /** Scheduled wall-clock timestamp of a stop call on service day

@@ -103,6 +103,7 @@ object CorpusOps extends QueryGroup {
       onRound: (Int, org.apache.spark.sql.DataFrame) => Unit = (_, _) => ())
       : (Seq[(Int, String, String, Long)], org.apache.spark.sql.DataFrame) = {
     var sym = wf.select(col("word"), spelled(col("word")).as("sym"), col("f"))
+    onRound(0, sym)
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     for (r <- 1 to nRounds) {
       val ws = split(col("sym"), " ")
@@ -131,8 +132,8 @@ object CorpusOps extends QueryGroup {
             lit(s" $bp "), lit(s" $bm "))).as("sym"), col("f"))
           .localCheckpoint(false)
       }._1
-      // post-fixpoint hook: tokenizer_merge_curve snapshots each
-      // round's symbol table for its token-count rollup (a plan
+      // post-fixpoint hook (round 0 is the character baseline, above):
+      // sink_bpe_history snapshots each round's symbol table (a plan
       // reference, not an action — nothing runs unless consumed)
       onRound(r, sym)
     }
@@ -200,9 +201,7 @@ object CorpusOps extends QueryGroup {
       val wf = wordFreq(Tables.documents(spark, sf))
       def snap(df: org.apache.spark.sql.DataFrame, r: Int) = df
         .select(lit(r).as("round"), col("word"), col("sym"), col("f"))
-      val s1 = wf.select(col("word"), spelled(col("word")).as("sym"), col("f"))
       val buf = Seq.newBuilder[org.apache.spark.sql.DataFrame]
-      buf += snap(s1, 0)
       bpeTrain(wf, BpeTrainK, (r, sym) => buf += snap(sym, r))
       buf.result().reduce(_.unionByName(_))
     }

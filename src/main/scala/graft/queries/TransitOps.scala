@@ -193,7 +193,8 @@ object TransitOps extends QueryGroup {
 
   /** Fixture schedule, denormalized and calendar-filtered to BoardDay
     * (trip_id, embedded UIC-7, stop_sequence, departure_secs) — the
-    * static dimension the streaming board joins each micro-batch. */
+    * static side the live board collects into its call index once
+    * per query. */
   private[graft] def boardScheduleDf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
     val (trips, stopTimes, stops, cal, cd) = boardGtfsDfs(spark)
     val ext = Transit.stopTimesExt(trips, stopTimes, stops)
@@ -341,17 +342,20 @@ object TransitOps extends QueryGroup {
       (spark, _) =>
         boardLatestDf(spark).orderBy("station_id", "expected_ts", "num"),
       Some(boardOracle),
-      scaleNote = "The day's active schedule folds into one call " +
-        "array per station (UIC-7): |stations| rows, bounded by the " +
-        "timetable, never by polling volume. That array side is " +
-        "broadcast and every passage row (|stations|×|trains|×|polling " +
-        "cycles| — a few million rows for a national network) left-" +
-        "joins its station's array on the equi key, so the passage " +
-        "batch never shuffles. The contains filter, the unique-trip " +
-        "test and the first-call pick are array functions on the row " +
-        "— no window, no identity join-back — and the candidate " +
-        "fan-out is bounded by trips-per-(number, station), a " +
-        "physical constant. The latest-state fold is an " +
+      scaleNote = "The day's active schedule is collected once into " +
+        "a call index, one sorted call array per station (UIC-7): " +
+        "|calls| rows, bounded by the timetable (Transit.CallIndexBound, " +
+        "a million calls, fails loudly past it), never by polling " +
+        "volume. The index is broadcast and one UDF resolves every " +
+        "passage row (|stations|×|trains|×|polling cycles| — a few " +
+        "million rows for a national network) against its station's " +
+        "array with Transit.pickCall, the same rule the live board " +
+        "runs, so the passage batch is neither joined nor shuffled. " +
+        "The contains filter, the unique-trip test and the first-call " +
+        "pick are one pass over the station's calls — no window, no " +
+        "identity join-back — and the candidate fan-out is bounded by " +
+        "trips-per-(number, station), a physical constant. The " +
+        "latest-state fold is an " +
         "associative struct-max groupBy that combines map-side across " +
         "polling files, and the board output is |day×station×train|-" +
         "bounded. At a year of history, service_day becomes the " +
@@ -827,11 +831,11 @@ object TransitOps extends QueryGroup {
         val w = Window.partitionBy("station_id")
           .orderBy(col("scheduled_ts").asc, col("num").asc)
         b.withColumn("sched_gap",
-            unix_timestamp(col("scheduled_ts")) -
-              unix_timestamp(lag(col("scheduled_ts"), 1).over(w)))
+            unix_seconds(col("scheduled_ts")) -
+              unix_seconds(lag(col("scheduled_ts"), 1).over(w)))
           .withColumn("actual_gap",
-            unix_timestamp(col("expected_ts")) -
-              unix_timestamp(lag(col("expected_ts"), 1).over(w)))
+            unix_seconds(col("expected_ts")) -
+              unix_seconds(lag(col("expected_ts"), 1).over(w)))
           .filter(col("sched_gap").isNotNull)
           .withColumn("dev", col("actual_gap") - col("sched_gap"))
           .groupBy("station_id")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.queries.{Analytics, CorpusOps, PipelineOps, QualityOps, SourceOps, TextVector}
+import graft.domain.Transit
 
 /** Structured Streaming operators — SURVEY.md §2.3.
   *
@@ -612,13 +613,6 @@ object Streams {
       etat: String, request_day: String, request_time: String,
       day_train_num: String)
 
-  /** A passage with its schedule match candidate attached. */
-  case class PassageCand(station_id: String, num: String, miss: String,
-      term: String, expected_ts: java.sql.Timestamp, mode: String,
-      etat: String, request_day: String, request_time: String,
-      day_train_num: String, trip_id: String, stop_sequence: Int,
-      departure_secs: Long)
-
   /** One live board entry — the streaming twin of a batch delay_board
     * output row, plus the request_time that versioned it. */
   case class BoardRow(station_id: String, day_train_num: String,
@@ -633,69 +627,45 @@ object Streams {
     * and upserted into the keyed store [P extract_api.py
     * operate_one_cycle · utils_dynamo.py]).
     *
-    * Shape: stream ⋈ static fuzzy contains-join against the broadcast
-    * denormalized schedule (stateless per micro-batch — joinStatic's
-    * shape with the non-equi condition the trip match needs), then
-    * flatMapGroupsWithState keyed by (station, day_train_num) folds
-    * cycles into latest-state board rows (stream_last_state's shape).
-    * Inside the group fn, candidates regroup by FULL passage identity
-    * and apply the batch unique-TRIP policy: >1 distinct candidate
-    * trip → the cycle is discarded; the surviving match is the
-    * deterministic (stop_sequence, departure_secs) minimum; only
-    * observed (mode=R) cycles reach the board; delay arithmetic
-    * mirrors Transit.computeDelays exactly (epoch seconds floored, as
-    * unix_timestamp floors them; UTC service-day start +
-    * departure_secs, truncating /60 for minutes — all delays are
-    * minute-multiples in the parity fixture). A board row is emitted
-    * only when the key's latest state CHANGES (Update mode), so
-    * re-polls with no news are silent — per-key state is ONE row
-    * however long the feed runs. */
+    * Shape: `sched` (`trip_id`, `station7`, `stop_sequence`,
+    * `departure_secs`) is collected into [[Transit.callIndex]] and
+    * broadcast once, when this is called; a micro-batch is one job —
+    * scan, shuffle by (station, day_train_num), and a
+    * flatMapGroupsWithState that folds cycles into latest-state board
+    * rows (stream_last_state's shape). Inside the group fn each
+    * passage resolves with [[Transit.pickCall]], the batch match's own
+    * rule (unique trip, first call); only observed (mode=R) cycles
+    * with a scheduled departure reach the board; delay arithmetic
+    * mirrors Transit.computeDelays exactly (epoch seconds floored;
+    * UTC service-day start + departure_secs, truncating /60 for
+    * minutes — all delays are minute-multiples in the parity
+    * fixture). A board row is emitted only when the key's latest state
+    * CHANGES (Update mode), so re-polls with no news are silent —
+    * per-key state is ONE row however long the feed runs. */
   def delayBoard(passages: Dataset[Passage], sched: DataFrame): Dataset[BoardRow] = {
     import passages.sparkSession.implicits._
-    val cand = localFs(passages).toDF()
-      .join(broadcast(sched),
-        col("trip_id").contains(col("num")) &&
-          col("station7") === substring(col("station_id"), 1, 7),
-        "inner")
-      .select(col("station_id"), col("num"), col("miss"), col("term"),
-        col("expected_ts"), col("mode"), col("etat"), col("request_day"),
-        col("request_time"), col("day_train_num"), col("trip_id"),
-        col("stop_sequence").cast("int").as("stop_sequence"),
-        col("departure_secs").cast("long").as("departure_secs"))
-      .as[PassageCand]
-    cand
-      .groupByKey(c => (c.station_id, c.day_train_num))
+    val calls = passages.sparkSession.sparkContext.broadcast(Transit.callIndex(sched))
+    localFs(passages)
+      .groupByKey(p => (p.station_id, p.day_train_num))
       .flatMapGroupsWithState(OutputMode.Update,
         GroupStateTimeout.NoTimeout) {
-        (key: (String, String), it: Iterator[PassageCand],
+        (key: (String, String), it: Iterator[Passage],
             state: GroupState[BoardRow]) =>
           val (station, dtn) = key
-          val resolved = it.toSeq
-            .groupBy(c => (c.request_time, c.expected_ts.getTime, c.mode,
-              Option(c.etat), c.num, c.miss, c.term, c.request_day))
-            .toSeq.flatMap { case (_, cs) =>
-              val trips = cs.map(_.trip_id).distinct
-              if (trips.size != 1) None // ambiguous → off the board
-              else {
-                val c = cs.minBy(x => (x.stop_sequence, x.departure_secs))
-                if (c.mode != "R") None // forecast cycles never board
-                else {
-                  val dayStart = java.time.LocalDate.parse(c.request_day)
-                    .atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
-                  val schedSec = dayStart + c.departure_secs
-                  val delay = Math.floorDiv(c.expected_ts.getTime, 1000L) - schedSec
-                  Some(BoardRow(station, dtn, c.num, c.miss, c.term,
-                    c.trip_id, c.expected_ts,
-                    new java.sql.Timestamp(schedSec * 1000L),
-                    delay, delay / 60L, c.etat == "Supprimé",
-                    c.request_time))
-                }
-              }
-            }
-          val all = state.getOption.toSeq ++ resolved
-          if (all.isEmpty) Iterator.empty
+          val resolved = it.filter(_.mode == "R") // forecast cycles never board
+            .flatMap(p => Transit.pickCall(calls.value, p.station_id, p.num)
+              .flatMap(c => c.departure_secs.map { dep =>
+                val dayStart = java.time.LocalDate.parse(p.request_day)
+                  .atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
+                val schedSec = dayStart + dep
+                val delay = Math.floorDiv(p.expected_ts.getTime, 1000L) - schedSec
+                BoardRow(station, dtn, p.num, p.miss, p.term, c.trip_id,
+                  p.expected_ts, new java.sql.Timestamp(schedSec * 1000L),
+                  delay, delay / 60L, p.etat == "Supprimé", p.request_time)
+              })).toSeq
+          if (resolved.isEmpty) Iterator.empty // no news: state untouched
           else {
-            val latest = all.maxBy(_.request_time)
+            val latest = (state.getOption.toSeq ++ resolved).maxBy(_.request_time)
             // content-based change detection: a re-poll that moved only
             // the version stamp (request_time) is NOT news — the board
             // stays silent, exactly like the keyed-store upsert whose

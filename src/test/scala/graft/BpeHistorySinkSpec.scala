@@ -22,12 +22,16 @@ class BpeHistorySinkSpec extends SparkSpec {
       org.apache.spark.sql.DataFrame]()
     def snap(df: org.apache.spark.sql.DataFrame, r: Int) = df
       .select(lit(r).as("round"), col("word"), col("sym"), col("f"))
-    expected += snap(wf.select(col("word"),
-      trim(regexp_replace(col("word"), "(.)", "$1 ")).as("sym"),
-      col("f")), 0)
     val (merges, _) = queries.CorpusOps.bpeTrain(wf,
       queries.CorpusOps.BpeTrainK,
       (r, sym) => expected += snap(sym, r))
+    // the hook's round 0 is the character baseline, rounds 1..K follow
+    assert(expected.length == queries.CorpusOps.BpeTrainK + 1)
+    val base = snap(wf.select(col("word"),
+      trim(regexp_replace(col("word"), "(.)", "$1 ")).as("sym"),
+      col("f")), 0)
+    assert(base.exceptAll(expected.head).isEmpty && expected.head.exceptAll(base).isEmpty,
+      "round 0 is not the character baseline")
     val want = expected.reduce(_.unionByName(_))
     assert(h.exceptAll(want).isEmpty && want.exceptAll(h).isEmpty,
       "materialized history diverges from a fresh training loop")

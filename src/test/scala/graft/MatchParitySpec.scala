@@ -1,12 +1,13 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.domain.Transit
 
-/** `Transit.matchPassages` (one call array per station) and
+/** `Transit.matchPassages` (one call index, one UDF) and
   * `Transit.activeServices` (one flagged groupBy) return the same rows
   * as the window + identity join-back match and the union / distinct /
   * anti-join calendar they replaced, kept here as the test oracles only;
@@ -182,17 +183,33 @@ class MatchParitySpec extends SparkSpec with TransitFixtures {
   private def nodeNames(df: DataFrame): Seq[String] =
     Plans.collect(df.queryExecution.executedPlan) { case p => p.nodeName }
 
-  test("matchPassages(...).localCheckpoint() runs 4 Spark jobs and no Window") {
+  test("matchPassages(...) and its localCheckpoint() run 3 Spark jobs and one UDF") {
     val p = passages.localCheckpoint()
     val e = ext.localCheckpoint()
     val a = active.localCheckpoint()
-    val m = Transit.matchPassages(p, e, a, Day)
-    assert(jobsOf(m.localCheckpoint()) === 4)
+    // the call index is built when the match is called (the calendar
+    // join's broadcast and the bounded collect), then one scan
+    var m: DataFrame = null
+    assert(jobsOf { m = Transit.matchPassages(p, e, a, Day); m.localCheckpoint() } === 3)
     assert(!nodeNames(m).exists(_.contains("Window")), nodeNames(m))
+    // the match is evaluated once per row, not once per extracted field
+    val optimized = m.queryExecution.optimizedPlan
+    val udfs = optimized.flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
+    assert(udfs.size === 1, optimized.treeString)
     // the probe sees a Window where there is one
     val old = oracleMatch(p, e, a)
     old.localCheckpoint()
     assert(nodeNames(old).exists(_.contains("Window")))
+  }
+
+  test("callIndex fails loudly, naming its bound, past the bound") {
+    val calls = ext.join(active, "service_id").select(
+      regexp_extract(col("stop_id"), "([0-9]{7})", 1).as("station7"),
+      col("trip_id"), col("service_id"), col("stop_sequence"), col("departure_secs"))
+    val n = calls.count().toInt
+    assert(Transit.callIndex(calls, n).values.map(_.length).sum == n)
+    val err = intercept[IllegalArgumentException](Transit.callIndex(calls, n - 1))
+    assert(err.getMessage.contains(s"exceeds ${n - 1} calls"), err.getMessage)
   }
 
   test("activeServices(...).localCheckpoint() runs 2 Spark jobs") {

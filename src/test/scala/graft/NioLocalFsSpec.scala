@@ -20,41 +20,7 @@ import Streams.{BoardRow, Passage}
   * board runs without starting a child process, keeps Hadoop's
   * local-filesystem semantics, and still recovers from its
   * checkpoint. */
-class NioLocalFsSpec extends SparkSpec {
-
-  private val BoardCols = Seq("station_id", "num", "miss", "term", "trip_id",
-    "expected_ts", "scheduled_ts", "delay_sec", "delay_min", "cancelled")
-
-  /** The batch delay_board fixture as polling cycles, in request-time
-    * order (11 cycles). */
-  private def cycles(): Seq[Seq[Passage]] =
-    graft.queries.TransitOps.boardPassagesDf(spark).collect().toSeq
-      .map(r => Passage(
-        r.getAs[String]("station_id"), r.getAs[String]("num"),
-        r.getAs[String]("miss"), r.getAs[String]("term"),
-        r.getAs[java.sql.Timestamp]("expected_ts"), r.getAs[String]("mode"),
-        r.getAs[String]("etat"), r.getAs[String]("request_day"),
-        r.getAs[String]("request_time"), r.getAs[String]("day_train_num")))
-      .groupBy(p => (p.request_day, p.request_time)).toSeq
-      .sortBy(_._1).map(_._2)
-
-  private def sched() = graft.queries.TransitOps.boardScheduleDf(spark)
-    .localCheckpoint(true)
-
-  /** Latest emitted row per board key, on the batch board's columns. */
-  private def finalBoard(emitted: Seq[BoardRow]) = {
-    val s = spark
-    import s.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("station_id", "day_train_num")
-      .orderBy(col("request_time").desc)
-    emitted.toDS().toDF()
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(BoardCols.map(col): _*)
-  }
-
-  private def batchBoard() = graft.engine.Registry.byName("delay_board")
-    .build(spark, sf).select(BoardCols.map(col): _*)
+class NioLocalFsSpec extends SparkSpec with TransitFixtures {
 
   /** Commands of the child processes that Hadoop code started while
     * `body` ran. Spark's own probes and deferred cleanups (`getconf
@@ -116,14 +82,14 @@ class NioLocalFsSpec extends SparkSpec {
     import s.implicits._
     val ckpt = Files.createTempDirectory("fork-ckpt")
     val mem = MemoryStream[Passage](101, spark, None)
-    val board = Streams.delayBoard(mem.toDS(), sched())
+    val board = Streams.delayBoard(mem.toDS(), boardSched())
     var batches = 0
     val forks = hadoopForks {
       val q = board.writeStream.format("memory").queryName("t_fork_board")
         .option("checkpointLocation", ckpt.toUri.toString)
         .outputMode("update").start()
       try {
-        cycles().foreach { c => mem.addData(c: _*); q.processAllAvailable() }
+        boardCycles().foreach { c => mem.addData(c: _*); q.processAllAvailable() }
         batches = q.recentProgress.count(_.numInputRows > 0)
       } finally q.stop()
     }
@@ -205,12 +171,12 @@ class NioLocalFsSpec extends SparkSpec {
     import s.implicits._
     val src = Files.createTempDirectory("board-src").toString
     val ckpt = Files.createTempDirectory("board-ckpt").toString
-    val cs = cycles()
+    val cs = boardCycles()
     // stop right before the late train's no-news 12:05 re-poll: it stays
     // silent after the restart only if the board state was recovered
     val k = cs.indexWhere(_.exists(_.request_time == "12:05"))
     assert(k > 0 && k < cs.size - 1)
-    val sch = sched()
+    val sch = boardSched()
     val schema = Encoders.product[Passage].schema
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[BoardRow]()
     def start() = Streams.delayBoard(

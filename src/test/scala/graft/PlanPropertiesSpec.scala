@@ -43,17 +43,13 @@ class PlanPropertiesSpec extends SparkSpec {
     assert(plan("tfidf_keywords").contains("WindowGroupLimit"))
   }
 
-  test("delay_board's fuzzy match is an equi-anchored broadcast join (no cartesian, no loop join)") {
+  test("delay_board's fuzzy match runs per passage row, with no join or cartesian") {
     val p = plan("delay_board")
-    // Catalyst extracts the UIC-7 station equality out of the
-    // (contains ∧ station-match) condition and anchors a
-    // BroadcastHashJoin on it, leaving the train-number contains as a
-    // post-join filter — strictly better than the nested loop the
-    // non-equi condition naively implies, and the passage batch is
-    // the broadcast side
-    assert(p.contains("BroadcastHashJoin"), p.take(1200))
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-      p.take(1200))
+    // the day's calls are a broadcast index the match UDF reads
+    // (Transit.callIndex / pickCall), so the passage batch is neither
+    // joined nor shuffled before the latest-state fold (over this
+    // local fixture the optimizer even folds the match into the scan)
+    assert(!p.contains("Join") && !p.contains("CartesianProduct"), p.take(1200))
     // the latest-cycle fold is the associative struct-max, not a
     // window sort over polling history
     assert(p.contains("partial_max"), p.take(1200))

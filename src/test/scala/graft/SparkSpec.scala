@@ -70,28 +70,37 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sf: String = TestSession.sf
 
-  /** Spark jobs started by `body` on this thread. A marker job run
-    * after it flushes the asynchronous listener bus, so every job of
-    * `body` has been seen when the count is read. */
+  /** Spark jobs started by `body` on this thread. */
   protected def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
     val tag = s"jobs-of-${System.nanoTime()}"
-    val groups = new ConcurrentLinkedQueue[String]
+    jobGroupsDuring {
+      sc.setJobGroup(tag, "counted")
+      try body finally sc.clearJobGroup()
+    }.count(_ == tag)
+  }
+
+  /** The job group (`spark.jobGroup.id`, null outside any group) of
+    * every Spark job that started while `body` ran, on any thread. A
+    * marker job run after it flushes the asynchronous listener bus, so
+    * every job of `body` has been seen when the groups are read. */
+  protected def jobGroupsDuring(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val marker = s"jobs-marker-${System.nanoTime()}"
+    val groups = new ConcurrentLinkedQueue[Option[String]]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(groups.add)
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))))
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(tag, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$tag-marker", "marker")
+      body
+      sc.setJobGroup(marker, "marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 30.seconds.toNanos
-      while (!groups.contains(s"$tag-marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains(s"$tag-marker"), "listener bus did not deliver the marker job")
-      groups.asScala.count(_ == tag)
+      while (!groups.contains(Some(marker)) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(Some(marker)), "listener bus did not deliver the marker job")
+      groups.asScala.toSeq.filterNot(_.contains(marker)).map(_.orNull)
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * replay-order violation fails here, as does a truncating
   * `getTime /` division anywhere in graft.streaming (it puts a
   * pre-1970 event in the bucket after its own; batch `date_trunc`
-  * floors). */
+  * floors), or a truncating `unix_timestamp(` in the transit domain
+  * and TransitOps. */
 class StreamFoldOnceSpec extends AnyFunSuite {
 
   private val dir = Paths.get("src/main/scala/graft/streaming")
@@ -48,5 +49,18 @@ class StreamFoldOnceSpec extends AnyFunSuite {
       if """getTime(\(\))?\s*/""".r.findFirstIn(body).isDefined
     } yield s"${p.getFileName}:$name"
     assert(hits.isEmpty, s"use Math.floorDiv: ${hits.mkString(", ")}")
+  }
+
+  test("the transit domain and TransitOps convert times with unix_seconds, never unix_timestamp") {
+    // Spark's unix_timestamp truncates a pre-1970 sub-second time toward
+    // zero; unix_seconds floors it, as the stream board does
+    val domain = Paths.get("src/main/scala/graft/domain")
+    val ops = Paths.get("src/main/scala/graft/queries/TransitOps.scala")
+    assert(Files.isDirectory(domain) && Files.isRegularFile(ops))
+    val walk = Files.walk(domain)
+    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val hits = (ops :: files).filter(p => Files.readString(p).contains("unix_timestamp("))
+    assert(hits.isEmpty, s"use unix_seconds: ${hits.map(_.getFileName).mkString(", ")}")
   }
 }

@@ -1,7 +1,11 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import graft.domain.Transit
+import graft.streaming.Streams
 
 /** The FIXTURES.md §2 GTFS and passage fixtures of the Transilien
   * domain: a weekday and an exception-only service, a past-midnight
@@ -102,4 +106,46 @@ trait TransitFixtures { this: SparkSpec =>
   }
 
   protected lazy val ext = Transit.stopTimesExt(trips, stopTimes, stops)
+
+  // --- the batch delay_board fixture as a live feed ---
+
+  /** The columns a live board row shares with a batch delay_board row. */
+  protected val BoardCols = Seq("station_id", "num", "miss", "term", "trip_id",
+    "expected_ts", "scheduled_ts", "delay_sec", "delay_min", "cancelled")
+
+  /** Passage rows of the fixture layout as the live board's input. */
+  protected def livePassages(df: DataFrame): Seq[Streams.Passage] =
+    df.collect().toSeq.map(r => Streams.Passage(
+      r.getAs[String]("station_id"), r.getAs[String]("num"),
+      r.getAs[String]("miss"), r.getAs[String]("term"),
+      r.getAs[Timestamp]("expected_ts"), r.getAs[String]("mode"),
+      r.getAs[String]("etat"), r.getAs[String]("request_day"),
+      r.getAs[String]("request_time"), r.getAs[String]("day_train_num")))
+
+  /** The batch delay_board fixture as polling cycles, in request-time
+    * order (11 cycles). */
+  protected def boardCycles(): Seq[Seq[Streams.Passage]] =
+    livePassages(graft.queries.TransitOps.boardPassagesDf(s))
+      .groupBy(p => (p.request_day, p.request_time)).toSeq
+      .sortBy(_._1).map(_._2)
+
+  /** The delay_board fixture's static side, as the live board takes it. */
+  protected def boardSched(): DataFrame = graft.queries.TransitOps.boardScheduleDf(s)
+    .localCheckpoint(true)
+
+  /** Latest emitted row per board key, on the batch board's columns. */
+  protected def finalBoard(emitted: Seq[Streams.BoardRow]): DataFrame = {
+    val sp = s; import sp.implicits._
+    val w = Window.partitionBy("station_id", "day_train_num")
+      .orderBy(col("request_time").desc)
+    emitted.toDS().toDF()
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .select(BoardCols.map(col): _*)
+  }
+
+  protected def batchBoard(): DataFrame = graft.engine.Registry.byName("delay_board")
+    .build(s, sf).select(BoardCols.map(col): _*)
+
+  protected def assertSameRows(a: DataFrame, b: DataFrame, what: String): Unit =
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, what)
 }
